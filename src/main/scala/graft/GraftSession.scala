@@ -16,8 +16,8 @@ object GraftSession {
     * 16→42.7 s with identical code), and scratch data is by definition
     * re-derivable — RAM-backed is the correct tier for it. On a real
     * cluster this maps to local NVMe/ramdisk per executor, configured the
-    * same way. Overridable via SPARK_GRAFT_SCRATCH (the disk-vs-tmpfs A/B
-    * probe runs with SPARK_GRAFT_SCRATCH=/tmp/graft_scratch_disk).
+    * same way. Overridable via SPARK_GRAFT_SCRATCH (a disk-backed dir for a
+    * disk-vs-tmpfs A/B, or a per-run dir).
     * The DuckDB oracle dump stays at /tmp/graft_oracle — driver contract,
     * not scratch.
     */
@@ -75,26 +75,9 @@ object GraftSession {
   }
 
   def get(master: String, shufflePartitions: Int = 32): SparkSession = {
-    val b = builder(master, shufflePartitions)
-    // experiment hook (ScalingBench/IncProbe latency attribution): AQE stays
-    // the product default — its skew-join splitting is load-bearing at scale
-    sys.env.get("SPARK_GRAFT_AQE").foreach(v =>
-      b.config("spark.sql.adaptive.enabled", (v != "0").toString))
-    val s = b.getOrCreate()
+    val s = builder(master, shufflePartitions).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
-  }
-
-  /** Ensure graft_* SQL functions exist on a session we did not create (the
-    * driver's Verify/Bench sessions are built without extensions).
-    */
-  def ensureFunctions(spark: SparkSession): Unit = synchronized {
-    if (!spark.catalog.functionExists("graft_hash64")) {
-      // Re-register through the public extensions hook is not possible on a
-      // live session; fall back to the column API (no SQL names needed) —
-      // every internal pipeline uses graft.functions.gf, not SQL strings.
-      ()
-    }
   }
 
   /** Table loader for the driver-provided testdata directory — memoized per
@@ -102,7 +85,7 @@ object GraftSession {
     * CALL time, so a 46-query bench session re-reading `documents.parquet`
     * from dozens of query bodies would pay dozens of tiny driver jobs for
     * the same immutable file (pure scheduling latency under load; the
-    * IncProbe job-site dump is where this showed up for the snapshot
+    * incremental path's per-snapshot job sites showed it for the snapshot
     * store). The memo holds analyzed logical plans only — no pinned blocks,
     * a few KB per (session, table).
     */

@@ -33,14 +33,14 @@ object PlanDump {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     dump("pushdown + pruning (filtered projection on documents)",
       docs.filter(col("lang") === "en").select(col("doc_id"), length(col("text"))))
-    dump("features: shingles → minhash (one codegen'd projection)",
-      graft.dedup.MinHashLSH.features(docs, graft.dedup.DedupConfig()))
     dump("exact-dup election (single exchange, window min)",
       graft.dedup.ExactDedup.assignments(docs))
-    dump("LSH candidates (band keys → bucket agg → capped pairs → distinct)",
-      graft.dedup.MinHashLSH.candidatePairs(
-        graft.dedup.MinHashLSH.features(docs, graft.dedup.DedupConfig()),
-        graft.dedup.DedupConfig()))
+    dump("LSH candidates (band keys → bucket agg → capped pairs → distinct)", {
+      val cfg = graft.dedup.DedupConfig()
+      graft.dedup.MinHashLSH.pairsFromKeyRows(
+        graft.dedup.MinHashLSH.bandKeyRows(graft.dedup.MinHashLSH.featuresFused(docs, cfg), cfg),
+        cfg)
+    })
     dump("fused features: shingles + minhash + simhash in ONE tokenization pass",
       graft.dedup.MinHashLSH.featuresFused(docs, graft.dedup.DedupConfig()))
     dump("bounded bucket pairs (stats agg + same-key join; hot keys stream star edges)",

@@ -79,11 +79,9 @@ object ScalingBench {
         .config("spark.executor.extraClassPath",
           new java.io.File("target/scala-2.13/classes").getAbsolutePath)
     }
-    // optional AQE toggle for replan-latency experiments
-    sys.env.get("SPARK_GRAFT_AQE").foreach(v =>
-      builder.config("spark.sql.adaptive.enabled", (v != "0").toString))
     // experiment hook: arbitrary configs "k=v;k2=v2" (e.g. shuffle
-    // compression off for single-host loopback cluster runs)
+    // compression off for single-host loopback cluster runs, or
+    // spark.sql.adaptive.enabled=false for replan-latency experiments)
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       builder.config(k.trim, v.trim)

@@ -206,19 +206,32 @@ object SparkEntry {
     pagesCorpus(s, dir) // the dump every build reads — create once, serial
     docs(s, dir); emb(s, dir); lineitem(s, dir) // prime schema inference
     Seq("customer", "orders", "events").foreach(GraftSession.table(s, dir, _))
-    val builds = prepBuilds(s, dir)
+    runBuildsConcurrently(s, prepBuilds(s, dir))
+  }
+
+  /** Runs the named builds from a 4-thread pool, each under the job
+    * description `session_prep: <name>`. Results are taken in completion
+    * order, so the FIRST build to fail — not the first in submission order
+    * — ends the wait: the remaining builds are cancelled (`shutdownNow`
+    * interrupts the running ones, drops the queued ones) and the build's
+    * own exception is rethrown, not the `ExecutionException` wrapper.
+    */
+  private[graft] def runBuildsConcurrently(s: SparkSession,
+                                           builds: Seq[(String, () => Any)]): Unit = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     try {
-      val futs = builds.map { case (name, build) =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            s.sparkContext.setJobDescription(s"session_prep: $name")
-            try build() finally s.sparkContext.setJobDescription(null)
-          }
+      val done = new java.util.concurrent.ExecutorCompletionService[Unit](pool)
+      builds.foreach { case (name, build) =>
+        done.submit(() => {
+          s.sparkContext.setJobDescription(s"session_prep: $name")
+          try build() finally s.sparkContext.setJobDescription(null)
         })
       }
-      futs.foreach(_.get()) // propagate the first failure
-    } finally pool.shutdown()
+      builds.foreach { _ =>
+        try done.take().get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }
+    } finally pool.shutdownNow()
   }
 
   /** The individual prep builds, named (dev decomposition — PrepProbe).
@@ -280,7 +293,7 @@ object SparkEntry {
     }
 
   /** Release a session's shared caches (ADVICE r5 #4): closes a pending
-    * pipeline — a one-consumer session (ad-hoc QueryProbe, partial verify)
+    * pipeline — a one-consumer session (a single ad-hoc query, partial verify)
     * otherwise keeps its ~10⁸ B of persisted frames pinned for the session's
     * lifetime waiting for the second named consumer — and forgets the
     * memoized small frames so a long-lived session can rebuild fresh.
@@ -502,8 +515,7 @@ object SparkEntry {
 
   /** The incremental query's two deterministic snapshots: snap0 = first n
     * docs; snap1 = n + n/10 docs with every 37th pre-existing doc revised.
-    * Shared by the driver query and IncProbe so the probe always profiles
-    * the benched workload. DERIVED from the session's corpus dump — a
+    * DERIVED from the session's corpus dump — a
     * PagesGen row is a pure function of doc_id, so the first m ≤ pagesN
     * rows of the dump ARE the m-doc corpus; no second generation pass.
     */
@@ -1301,7 +1313,7 @@ object SparkEntry {
   /** Shared by pages_neardup_pairs and its streaming twin — identical
     * contract (all rep pairs with exact J ≥ τ), identical oracle.
     */
-  private lazy val nearDupPairsOracle: String =
+  private lazy val neardupPairsOracle: String =
     s"""WITH p AS (SELECT doc_id, ${toksSql("text")} AS toks FROM $pagesGlob),
        |a0 AS (SELECT doc_id, toks,
        |         min(doc_id) OVER (PARTITION BY array_to_string(toks, ' ')) AS rep FROM p),
@@ -1334,8 +1346,8 @@ object SparkEntry {
     "pages_exact_dedup" ->
       s"""WITH p AS (SELECT doc_id, ${ntSql("text")} AS nt FROM $pagesGlob)
          |SELECT doc_id, min(doc_id) OVER (PARTITION BY nt) AS rep FROM p""".stripMargin,
-    "pages_neardup_pairs" -> nearDupPairsOracle,
-    "pages_stream_neardup_pairs" -> nearDupPairsOracle,
+    "pages_neardup_pairs" -> neardupPairsOracle,
+    "pages_stream_neardup_pairs" -> neardupPairsOracle,
     "pages_neardup_clusters" -> nearDupClustersOracle,
     "pages_stream_neardup_clusters" -> nearDupClustersOracle,
     // pure-SQL replay of the tree leaf labeling (chunk size 1, two steps):

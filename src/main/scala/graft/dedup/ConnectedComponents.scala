@@ -20,6 +20,8 @@ object ConnectedComponents {
 
   /** @param edges two columns `a`, `b` (undirected pairs, any orientation)
     * @return (id, comp) for every id in `edges`; comp = min id of component.
+    * @throws IllegalStateException if `maxIter` rounds end unconverged — a
+    *         partial star forest would give wrong cluster ids silently.
     */
   def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 25): DataFrame = {
     // canonical orientation: u > v
@@ -29,6 +31,7 @@ object ConnectedComponents {
       .distinct()
       .localCheckpoint(true)
     var sig = checksum(e)
+    val nEdges = sig._1
 
     var converged = e.isEmpty
     var iter = 0
@@ -55,6 +58,8 @@ object ConnectedComponents {
       e = small
       iter += 1
     }
+    if (!converged) throw new IllegalStateException(
+      s"ConnectedComponents.run did not converge in $iter rounds over $nEdges edges")
     // star forest: (member, root); roots appear only as v
     val members = e.select(col("u").as("id"), col("v").as("comp"))
     val roots = e.select(col("v").as("id")).distinct().withColumn("comp", col("id"))

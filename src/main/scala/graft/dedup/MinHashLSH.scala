@@ -11,34 +11,15 @@ import graft.functions.gf
   * elsewhere" generalizes to "Jaccard ≥ τ elsewhere".
   *
   * Scale shape (10¹²-doc design):
-  *   - one narrow features table (doc_id, sh, sig) — computed in one codegen'd
-  *     projection pass, no shuffle;
-  *   - band explosion shuffles (band, bandHash, doc_id) triples only (24 B a
-  *     row, not documents);
+  *   - one narrow features table (doc_id, sh, sig, sim64) — computed in one
+  *     codegen'd projection pass, no shuffle;
+  *   - band explosion shuffles (key, doc_id) rows only (16 B a row, not
+  *     documents);
   *   - bucket groups emit pairs bounded by `maxBucket` (star edges beyond) —
   *     boilerplate-hot buckets cost O(bucket), never O(bucket²);
-  *   - candidate pairs deduped, then verified with a cheap signature-agreement
-  *     estimate before the exact shingle-set Jaccard is evaluated (the exact
-  *     compare runs only on rows surviving the estimate — Catalyst `If` is
-  *     lazy per row).
+  *   - candidate pairs deduped, then verified by exact shingle-set Jaccard.
   */
 object MinHashLSH {
-
-  /** (doc_id, sh, sig): distinct sorted shingle hashes + MinHash signature.
-    * Empty docs (no shingles) are excluded — they are exact dups of each
-    * other and are handled by ExactDedup.
-    */
-  def features(docs: DataFrame, cfg: DedupConfig,
-               idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    docs
-      // equivalent to size(shingles) > 0, but cheap and scan-pushable —
-      // filtering on size(sh) would get pushed through the projection by
-      // Catalyst and recompute the shingle kernel twice per row
-      .filter(length(trim(col(textCol))) > 0)
-      .select(
-        col(idCol).as("doc_id"),
-        gf.shingles(col(textCol), cfg.shingleK).as("sh")) // kernel normalizes
-      .withColumn("sig", gf.minhash(col("sh"), cfg.numPerm, cfg.seed))
 
   /** (doc_id, sh, sig, sim64) in ONE tokenization pass — the pipeline's
     * feature table (a separate simhash pass would rescan and re-tokenize
@@ -95,14 +76,18 @@ object MinHashLSH {
     // the r6 form exchanged the full stream twice (once into the partial
     // agg, once for the join probe side) and scanned the feature subtree
     // twice to feed them. The window's hash partitioning on the key also
-    // feeds smallPairs' groupBy exchange-free, so the whole kernel costs
-    // exactly one full-stream shuffle. Flood bound: WindowExec buffers one
-    // KEY GROUP at a time in a spillable row array (heap use capped by the
-    // spill threshold, a 10⁸-row boilerplate key costs sequential disk,
-    // never executor memory) — the hot path stays one-row-in/≤one-out after
-    // it, and collect_set still only runs behind the cnt ≤ maxBucket filter.
+    // feeds smallPairs' groupBy exchange-free. The committed plan still
+    // shows two Exchanges (one under each union branch); AQE's stage reuse
+    // runs them as one full-stream shuffle at run time. Flood bound:
+    // WindowExec buffers one KEY GROUP at a time in a spillable row array
+    // (heap use capped by the spill threshold, a 10⁸-row boilerplate key
+    // costs sequential disk, never executor memory) — the hot path stays
+    // one-row-in/≤one-out after it, and collect_set still only runs behind
+    // the cnt ≤ maxBucket filter.
     val w = org.apache.spark.sql.expressions.Window.partitionBy(k: _*)
-    val joined = keyRows
+    // a window partition groups all null keys together; an equi-join never
+    // matches them, so they must not form a bucket
+    val joined = keyRows.filter(k.map(_.isNotNull).reduce(_ && _))
       .withColumn("mn", min(col("e")).over(w))
       .withColumn("cnt", count(lit(1)).over(w))
       .filter(col("cnt") > 1)
@@ -306,10 +291,6 @@ object MinHashLSH {
       .filter(col("a") =!= col("b"))
       .distinct()
 
-  /** Candidate pairs (a < b) from LSH band buckets. */
-  def candidatePairs(features: DataFrame, cfg: DedupConfig): DataFrame =
-    pairsFromKeyRows(bandKeyRows(features, cfg), cfg)
-
   /** Verified near-dup pairs: (a, b, jac) with exact Jaccard >= cfg.tau.
     * Ships ONLY the int shingle sets through the pair joins — the exact
     * sorted-merge intersection on two ~300-int arrays is cheaper than
@@ -325,12 +306,5 @@ object MinHashLSH {
       .withColumn("jac", gf.jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jac") >= cfg.tau)
       .select(col("a"), col("b"), col("jac"))
-  }
-
-  /** Full LSH pass: docs → verified near-dup pairs. */
-  def nearDupPairs(docs: DataFrame, cfg: DedupConfig,
-                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val feats = features(docs, cfg, idCol, textCol)
-    verifiedPairs(feats, candidatePairs(feats, cfg), cfg)
   }
 }

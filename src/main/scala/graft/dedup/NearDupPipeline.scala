@@ -39,8 +39,7 @@ object NearDupPipeline {
   }
 
   def run(spark: SparkSession, docs: DataFrame, cfg: DedupConfig = DedupConfig(),
-          idCol: String = "doc_id", textCol: String = "text",
-          useSimhash: Boolean = true): Result = {
+          idCol: String = "doc_id", textCol: String = "text"): Result = {
 
     // 1. exact collapse — skew guard + work reduction for every later stage
     val exact = ExactDedup.assignments(docs, idCol, textCol)
@@ -57,11 +56,8 @@ object NearDupPipeline {
     // aggregation: one shuffle + one distinct for all candidate generation.
     val feats = MinHashLSH.featuresFused(reps, cfg, idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val keyRows =
-      if (useSimhash)
-        MinHashLSH.bandKeyRows(feats, cfg).union(
-          SimHashDedup.keyRows(feats.select(col("doc_id"), col("sim64")), cfg))
-      else MinHashLSH.bandKeyRows(feats, cfg)
+    val keyRows = MinHashLSH.bandKeyRows(feats, cfg).union(
+      SimHashDedup.keyRows(feats.select(col("doc_id"), col("sim64")), cfg))
     val cand = MinHashLSH.pairsFromKeyRows(keyRows, cfg)
 
     // 4. one verifier for all candidate sources

@@ -46,10 +46,5 @@ object SimHashDedup {
     cand.join(fa, "a").join(fb, "b")
       .filter(gf.hamming(col("sim_a"), col("sim_b")) <= cfg.simhashMaxHamming)
       .select(col("a"), col("b"))
-  }
-
-  /** Full pass: docs → Hamming-ball candidate pairs (a < b, distinct). */
-  def hammingPairs(docs: DataFrame, cfg: DedupConfig,
-                   idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    candidatePairs(fingerprints(docs, idCol, textCol), cfg)
+   }
 }

@@ -98,7 +98,7 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     // schema travels with the snapshot (Iceberg keeps it in table metadata):
     // read() supplies it explicitly, so no committed snapshot ever pays a
     // parquet schema-inference JOB — at toy scale those listing jobs were
-    // ~25% of the incremental path's job count (IncProbe job sites), and at
+    // ~25% of the incremental path's job count (by job call site), and at
     // scale a footer-sampling job per read is pure waste. asNullable:
     // the writer may relax nullability; a nullable reader schema is always
     // safe to project.

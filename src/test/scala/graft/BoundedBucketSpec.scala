@@ -51,6 +51,15 @@ class BoundedBucketSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("rows with a null key emit no pairs") {
+    import spark.implicits._
+    val rows = Seq[(Option[Long], Long)]((None, 1L), (None, 2L), (None, 3L),
+      (Some(5L), 4L), (Some(5L), 6L)).toDF("key", "e")
+    val pairs = MinHashLSH.boundedBucketPairs(rows, Seq("key"), maxBucket = 64)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs == Set((4L, 6L)))
+  }
+
   test("randomized: bounded PROBE kernel matches a naive new-vs-all reference") {
     import spark.implicits._
     val rnd = new scala.util.Random(17)

@@ -67,6 +67,16 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
     edges.unpersist()
   }
 
+  test("star rounds throw when maxIter ends unconverged") {
+    import spark.implicits._
+    val edges = (1L until 20L).map(i => (i, i + 1)).toDF("a", "b")
+    val e = intercept[IllegalStateException](ConnectedComponents.run(spark, edges, maxIter = 1))
+    assert(e.getMessage.contains("1 rounds") && e.getMessage.contains("19 edges"))
+    val got = ConnectedComponents.run(spark, edges)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == (1L to 20L).map(_ -> 1L).toMap)
+  }
+
   test("empty edge set → all singletons") {
     val got = runCC(Seq.empty, Seq(5L, 6L))
     assert(got == Map(5L -> 5L, 6L -> 6L))

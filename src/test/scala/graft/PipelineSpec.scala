@@ -112,7 +112,8 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     val near = base.replace("tok3 ", "tok999 ")
     val far = (0 until 400).map(i => s"z$i").mkString(" ")
     val df = Seq((1L, base), (2L, near), (3L, far)).toDF("doc_id", "text")
-    val pairs = SimHashDedup.hammingPairs(df, cfg).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val pairs = SimHashDedup.candidatePairs(SimHashDedup.fingerprints(df), cfg)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)))
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
   }

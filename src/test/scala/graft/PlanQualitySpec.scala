@@ -62,14 +62,14 @@ class PlanQualitySpec extends AnyFunSuite with SparkTestBase {
 
   test("graft expressions run inside WholeStageCodegen in the features plan") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val feats = graft.dedup.MinHashLSH.features(docs, graft.dedup.DedupConfig())
+    val feats = graft.dedup.MinHashLSH.featuresFused(docs, graft.dedup.DedupConfig())
     val wsc = feats.queryExecution.executedPlan.collect {
       case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
     }
     assert(wsc.nonEmpty, s"no codegen span:\n${feats.queryExecution.executedPlan}")
     val codegenStr = wsc.map(_.toString).mkString
-    assert(codegenStr.contains("shingles") && codegenStr.contains("minhashsig"),
-      "shingle/minhash expressions fell out of the codegen span")
+    assert(codegenStr.contains("featurestruct"),
+      "the fused shingle/minhash/simhash expression fell out of the codegen span")
   }
 
   test("prefix_scan: the full-table window is partitioned; only the tiny per-chunk total table may use a global window") {

@@ -2,14 +2,16 @@
 # Alternating A/B bench: the only trustworthy regression signal on this host
 # (weather swings exceed 3x; see CLAUDE.md r6 notes). Builds a worktree of
 # the given sha, then alternates spark-submit Bench runs of A=<sha> and
-# B=HEAD, printing per-run totals and the min/median per side.
+# B=HEAD, swapping which side runs first in every other pair (a fixed order
+# biases a drifting host), and prints per-run totals and the min/median per
+# side.
 #
 # Usage: tools/ab_bench.sh <baseline-sha> [pairs=3] [sfDir] [cpus]
 set -u
 SHA="${1:?usage: ab_bench.sh <baseline-sha> [pairs] [sfDir] [cpus]}"
 PAIRS="${2:-3}"
 SFDIR="${3:-/root/testdata/sf0.1}"
-CPUS="${4:-32}"
+CPUS="${4:-$(nproc)}"
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 WT="/tmp/ab_wt_$SHA"
 export SPARK_SCALA_VERSION=2.13 SPARK_GRAFT_SF_DIR="$SFDIR" SPARK_GRAFT_CPUS="$CPUS"
@@ -31,9 +33,10 @@ except Exception: print("FAIL")'
 }
 
 A=(); B=()
+run_a() { a=$(run "$JAR_A"); echo "pair $i  A($SHA) total=$a  load=$(cut -d' ' -f1 </proc/loadavg)"; }
+run_b() { b=$(run "$JAR_B"); echo "pair $i  B(HEAD) total=$b  load=$(cut -d' ' -f1 </proc/loadavg)"; }
 for i in $(seq 1 "$PAIRS"); do
-  a=$(run "$JAR_A"); echo "pair $i  A($SHA) total=$a  load=$(cut -d' ' -f1 </proc/loadavg)"
-  b=$(run "$JAR_B"); echo "pair $i  B(HEAD) total=$b  load=$(cut -d' ' -f1 </proc/loadavg)"
+  if [ $((i % 2)) -eq 1 ]; then run_a; run_b; else run_b; run_a; fi
   A+=("$a"); B+=("$b")
 done
 python3 - "${A[*]}" "${B[*]}" <<'PY'
