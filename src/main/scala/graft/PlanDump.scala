@@ -7,21 +7,31 @@ import org.apache.spark.sql.functions._
 /** Dev tool: dump formatted physical plans of the load-bearing queries to
   * PLANS.md (the evidence trail for the plan-shape claims in
   * ARCHITECTURE.md; structural assertions live in PlanQualitySpec).
+  *
+  * Usage: `PlanDump [sfDir] [outFile]` — `sfDir` defaults to the sf0.001
+  * testdata directory, `outFile` to `PLANS.md` in the working directory.
+  * The session is `local[nproc]`.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.get("local[8]", 8)
+    val nproc = Runtime.getRuntime.availableProcessors()
+    val spark = GraftSession.get(s"local[$nproc]", nproc)
+    // the default input; args(0) overrides it
     val sfDir = "/root/testdata/sf0.001"
+    val dataDir = args.lift(0).getOrElse(sfDir)
+    val outFile = Paths.get(args.lift(1).getOrElse("PLANS.md"))
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of the load-bearing queries\n\n")
-    sb.append("Generated by `graft.PlanDump` (round 7). Things to check:\n")
+    sb.append("Generated by `graft.PlanDump`. Things to check:\n")
     sb.append("`PushedFilters`/`ReadSchema` on scans, `WholeStageCodegen` spans\n")
     sb.append("around the graft expressions, broadcast vs shuffle joins, single\n")
     sb.append("exchange in the exact election, the bounded bucket-pair kernel\n")
-    sb.append("(r7: per-key stats as WINDOW aggregates over ONE exchange of the\n")
-    sb.append("probe stream; collect_set still only behind the cnt <= maxBucket\n")
-    sb.append("filter), the partitioned two-pass prefix scan, and the bounded\n")
-    sb.append("incremental probe (one tagged exchange, no unbounded join).\n")
+    sb.append("(r7 window form: per-key stats as WINDOW aggregates, no join; the\n")
+    sb.append("plan shows an Exchange under each union branch, which AQE stage\n")
+    sb.append("reuse runs as one shuffle of the probe stream; collect_set still\n")
+    sb.append("only behind the cnt <= maxBucket filter), the partitioned two-pass\n")
+    sb.append("prefix scan, and the bounded incremental probe (one tagged\n")
+    sb.append("exchange, no unbounded join).\n")
 
     def dump(title: String, df: org.apache.spark.sql.DataFrame): Unit = {
       sb.append(s"\n## $title\n\n```\n")
@@ -30,7 +40,7 @@ object PlanDump {
       sb.append("\n```\n")
     }
 
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val docs = spark.read.parquet(s"$dataDir/documents.parquet")
     dump("pushdown + pruning (filtered projection on documents)",
       docs.filter(col("lang") === "en").select(col("doc_id"), length(col("text"))))
     dump("exact-dup election (single exchange, window min)",
@@ -43,19 +53,20 @@ object PlanDump {
     })
     dump("fused features: shingles + minhash + simhash in ONE tokenization pass",
       graft.dedup.MinHashLSH.featuresFused(docs, graft.dedup.DedupConfig()))
-    dump("bounded bucket pairs (stats agg + same-key join; hot keys stream star edges)",
+    dump("bounded bucket pairs (window stats, no join; one Exchange per union " +
+      "branch, run as one shuffle by AQE stage reuse; hot keys stream star edges)",
       graft.dedup.MinHashLSH.boundedBucketPairs(
         docs.select(pmod(col("doc_id"), lit(50)).as("key"), col("doc_id").as("e")),
         Seq("key"), 64))
     dump("exact ANN top-k (broadcast query side; the driver query serves a " +
       "session-memoized checkpoint of this plan)",
       graft.sim.Ann.exactTopK(
-        spark.read.parquet(s"$sfDir/embeddings.parquet"), 0L until 20L, 5))
+        spark.read.parquet(s"$dataDir/embeddings.parquet"), 0L until 20L, 5))
     dump("prefix_scan (two-pass: partitioned local windows + broadcast chunk offsets)",
-      SparkEntry.queries("prefix_scan")(spark, sfDir))
+      SparkEntry.queries("prefix_scan")(spark, dataDir))
     dump("SRP threshold pairs (emb_cosine_pairs at bench scale — bucketed, never O(n²))",
       graft.sim.Ann.srpThresholdPairs(
-        spark.read.parquet(s"$sfDir/embeddings.parquet"), tau = 0.4))
+        spark.read.parquet(s"$dataDir/embeddings.parquet"), tau = 0.4))
     dump("bounded incremental probe (new-vs-accumulated, hot keys stream star edges)",
       graft.dedup.MinHashLSH.boundedProbePairs(
         docs.select(pmod(col("doc_id"), lit(50)).as("key"), col("doc_id").as("e"))
@@ -65,13 +76,13 @@ object PlanDump {
         Seq("key"), 64))
 
     dump("query-restricted SRP-LSH topk (r4: qid filter BEFORE the cosine re-rank joins)",
-      graft.sim.Ann.lshTopK(spark.read.parquet(s"$sfDir/embeddings.parquet"),
+      graft.sim.Ann.lshTopK(spark.read.parquet(s"$dataDir/embeddings.parquet"),
         k = 5, bits = graft.sim.Ann.PinnedLsh.bits,
         tables = graft.sim.Ann.PinnedLsh.tables,
         seed = graft.sim.Ann.PinnedLsh.seed, queryIds = 0L until 20L))
 
     dump("query-restricted IVF topk (r5: isInCollection qid restriction pushed into the probe scan)",
-      graft.sim.Ann.ivfTopK(spark.read.parquet(s"$sfDir/embeddings.parquet"),
+      graft.sim.Ann.ivfTopK(spark.read.parquet(s"$dataDir/embeddings.parquet"),
         k = 5, nCells = graft.sim.Ann.PinnedIvf.nCells,
         nProbe = graft.sim.Ann.PinnedIvf.nProbe, queryIds = 0L until 20L))
 
@@ -102,9 +113,8 @@ object PlanDump {
           col("f.sig").as("sig"), col("f.sim64").as("sim64"))
     })
 
-    Files.write(Paths.get("/root/repo/PLANS.md"),
-      sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(s"[plandump] wrote ${sb.length} chars")
+    Files.write(outFile, sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    println(s"[plandump] wrote ${sb.length} chars to $outFile")
     spark.stop()
   }
 }

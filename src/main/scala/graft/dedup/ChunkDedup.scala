@@ -1,7 +1,10 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.charset.StandardCharsets
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import graft.functions.gf
 
 /** Reference-semantics incremental chunk deduplication — the Spark rebuild of
@@ -25,10 +28,12 @@ import graft.functions.gf
   * checkpoint from stored first-occurrence bytes + shift metadata via joins
   * against prior reconstructions (§2.8: per-step left-anti fall-through).
   *
-  * Scale note: the level sweep is O(log n) shuffles of geometrically
-  * shrinking node sets; the distinct map is partitioned by digest and grows
-  * with distinct content only. At web scale the per-leaf tables dominate and
-  * partition freely; nothing is collected to the driver.
+  * Scale note: up to Chain.LOCAL_SWEEP_MAX chunks a checkpoint collects
+  * only its 16-byte leaf digests to the driver. Beyond it the level sweep is
+  * O(log n) shuffles of geometrically shrinking node sets; the distinct map
+  * is partitioned by digest and grows with distinct content only. At web
+  * scale the per-leaf tables dominate and partition freely; nothing is
+  * collected to the driver.
   */
 object ChunkDedup {
 
@@ -209,31 +214,164 @@ object ChunkDedup {
   }
 
   object Chain {
-    /** Checkpoints up to this many chunks use the in-memory forest sweep with
-      * batched map probes; larger ones use the per-level DataFrame sweep.
-      * Driver footprint at the bound (honest boxed arithmetic, the
-      * IncrementalDedup.LOCAL_PROBE_MAX_CONTENTS convention): the sweep
-      * collects the labeled leaves — Rows of (Long node, 16-B digest,
-      * label) ≈ 100 B boxed — plus the SHIFT-leaf source triples, so 2²⁰
-      * leaves ≈ 100–150 MB transient on the 8 g driver heap. Chunk CONTENT
-      * is never collected (commits pull it distributed), which is what lets
-      * this bound sit 16× above SERIAL_MAX.
+    /** Checkpoints up to this many chunks take ONE driver pass each (one
+      * digest job, one distinct-map probe, one insert); larger ones use the
+      * per-level DataFrame sweep. Driver footprint at the bound: the
+      * collected (pos, digest) Rows (≈ 90 B boxed each, ≈ 95 MB transient),
+      * the retained previous-checkpoint leaf digests (16 B × n = 16 MB),
+      * the full Merkle tree's 2n−1 16-byte slots (32 MB transient), and the
+      * probe frame of ≤ 2n−1 (node, digest) rows (≈ 100 MB transient) —
+      * a few hundred MB on the 8 g driver heap. Chunk CONTENT is never
+      * collected (the FIRST rows and the commits stay distributed), which
+      * is what lets this bound sit 256× above SERIAL_MAX.
       */
     final val LOCAL_SWEEP_MAX: Long = 1L << 20
 
     /** Chains up to this many chunks run fully serial on the driver (the
       * reference's own in-memory single-device mode): one collect per
-      * checkpoint instead of ~18 eager toy-scale Spark jobs. Since r6 this
-      * includes STORE-BACKED chains — the serial path commits the same
-      * chunk_first/chunk_shift tables (driver-built frames, identical
-      * schema + manifest metadata incl. the full-buffer MD5), so a
-      * checkpoint costs 1 collect + 2 commit writes; commit/restart parity
-      * with the forced Spark path is spec-gated alongside the three-way
-      * label parity (serial / local-sweep / distributed). Driver footprint
-      * at the bound: 2¹² chunks of content collected — the input buffer
-      * itself, KBs to a few MB.
+      * checkpoint. Since r6 this includes STORE-BACKED chains — the serial
+      * path commits the same chunk_first/chunk_shift tables (identical
+      * schema + manifest metadata incl. the full-buffer MD5) straight from
+      * the driver (SnapshotStore.commitLocal), so a checkpoint costs one
+      * collect and zero write jobs; commit/restart parity with the Spark
+      * paths is spec-gated alongside the three-way label parity (serial /
+      * local-sweep / distributed). Driver footprint at the bound: 2¹²
+      * chunks of content collected — the input buffer itself, KBs to a few
+      * MB.
       */
     final val SERIAL_MAX: Long = 1L << 12
+
+    /** A 128-bit digest as a hashable map key. */
+    private[dedup] type Digest = scala.collection.immutable.ArraySeq[Byte]
+    private[dedup] def key(d: Array[Byte]): Digest =
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(d)
+
+    /** A copy of 16-byte slot `i` of a flat digest array. */
+    private[graft] def slot(digests: Array[Byte], i: Int): Array[Byte] =
+      java.util.Arrays.copyOfRange(digests, 16 * i, 16 * i + 16)
+
+    /** Leaf position of each collected row, gated: the positions must be a
+      * permutation of 0..n−1 — a duplicated + missing position would pass a
+      * count check and silently mislabel.
+      */
+    private[dedup] def leafIndex(positions: Array[Long], n: Int): Array[Int] = {
+      require(positions.length == n, s"expected $n chunks, got ${positions.length}")
+      val seen = new java.util.BitSet(n)
+      positions.map { p =>
+        require(p >= 0 && p < n && !seen.get(p.toInt), s"chunk positions are " +
+          s"not a permutation of 0..${n - 1}: pos $p is repeated or out of range")
+        seen.set(p.toInt)
+        p.toInt
+      }
+    }
+
+    /** The full Merkle tree of one checkpoint as one flat array of 2n−1
+      * 16-byte slots — the reference's flat tree (kokkos_merkle_tree.hpp:
+      * 16-33): node u in slot u, leaf p in slot n−1+p, internal =
+      * murmur128(left ‖ right). Children 2u+1 and 2u+2 are adjacent slots,
+      * so each parent hashes one 32-byte window in place. Correct for ragged
+      * heaps (every internal node has both children).
+      */
+    private[graft] def merkleTree(leafDigests: Array[Byte]): Array[Byte] = {
+      val n = leafDigests.length / 16
+      val tree = new Array[Byte](16 * (2 * n - 1))
+      System.arraycopy(leafDigests, 0, tree, 16 * (n - 1), leafDigests.length)
+      var u = n - 2
+      while (u >= 0) {
+        val h = graft.functions.Impl.murmur128(tree, 16 * (2 * u + 1), 32, 0L)
+        var i = 0
+        while (i < 8) { // murmur128Digest's layout: h1 LE ‖ h2 LE
+          tree(16 * u + i) = (h(0) >>> (8 * i)).toByte
+          tree(16 * u + 8 + i) = (h(1) >>> (8 * i)).toByte
+          i += 1
+        }
+        u -= 1
+      }
+      tree
+    }
+
+    private[dedup] val firstSchema = StructType(Seq(
+      StructField("pos", LongType), StructField("chunk", StringType)))
+    private[dedup] val shiftSchema = StructType(Seq(StructField("node", LongType),
+      StructField("src_chkpt", IntegerType), StructField("src_node", LongType)))
+
+    /** Leaf `p` is FIXED: same digest as the previous checkpoint at the same
+      * position (tree_approach.cpp:326-327); `prev` is null at checkpoint 0.
+      */
+    private[dedup] def isFixed(leaves: Array[Byte], prev: Array[Byte], p: Int): Boolean =
+      prev != null &&
+        java.util.Arrays.equals(leaves, 16 * p, 16 * p + 16, prev, 16 * p, 16 * p + 16)
+
+    /** One checkpoint's driver-side resolution. */
+    private[dedup] final case class Resolved(
+        labels: Array[String],     // per position: FIRST / FIXED / SHIFT
+        srcOf: Array[(Int, Long)], // per SHIFT position: (src_chkpt, src_node)
+        counts: Map[String, Long], // region roots per label
+        regionSizes: Vector[(String, Long)],
+        shiftRegions: Seq[Row])    // the committed shift section
+
+    /** The driver pass shared by the serial and local-sweep paths, in the
+      * reference's order (tree_approach.cpp:325-477). They differ only in
+      * where the distinct map lives: `known(p)` is the map entry of
+      * non-FIXED leaf p's digest (J1; whether this checkpoint's own inserts
+      * show there does not matter — a fresh duplicate resolves to its
+      * winner either way), `lookup(node, digest)` reads the map including
+      * this checkpoint's inserts, and `insert` adds an absent entry.
+      *   1. leaves: FIXED ([[isFixed]]); else SHIFT onto the `known` entry;
+      *      else fresh: the lowest position of each fresh digest wins FIRST
+      *      (J2 atomic_min) and is inserted, and its other positions SHIFT
+      *      onto it;
+      *   2. the FIRST forest's internals are inserted if absent, lowest node
+      *      first (:372-404);
+      *   3. a SHIFT-candidate internal coalesces iff the map holds its
+      *      digest, and inherits that entry as its source (:413-477).
+      * `leaves` holds the 16-byte leaf digests by position. The shift
+      * section has one (node, src_chkpt, src_node) row per SHIFT region
+      * ROOT — a SHIFT leaf or coalesced internal whose parent did not
+      * coalesce (:593-622).
+      */
+    private[dedup] def resolve(cid: Int, leaves: Array[Byte], prev: Array[Byte],
+                               known: Int => Option[(Int, Long)],
+                               lookup: (Long, Digest) => Option[(Int, Long)],
+                               insert: (Digest, (Int, Long)) => Unit): Resolved = {
+      val n = leaves.length / 16
+      val leafBase = n - 1L
+      val labels = new Array[String](n)
+      val srcOf = new Array[(Int, Long)](n)
+      val winner = scala.collection.mutable.HashMap.empty[Digest, (Int, Long)]
+      for (p <- 0 until n) {
+        if (isFixed(leaves, prev, p)) labels(p) = FIXED
+        else {
+          val d = key(slot(leaves, p))
+          known(p).orElse(winner.get(d)) match {
+            case Some(src) => labels(p) = SHIFT; srcOf(p) = src
+            case None =>
+              labels(p) = FIRST
+              winner(d) = (cid, leafBase + p)
+              insert(d, winner(d))
+          }
+        }
+      }
+      val leafEntries = Array.tabulate(n)(p => (leafBase + p, slot(leaves, p), labels(p)))
+      val (firstInt, fixedInt, shiftCand) = localForests(leafEntries)
+      firstInt.sortBy(_._1).foreach { case (u, d) =>
+        if (lookup(u, key(d)).isEmpty) insert(key(d), (cid, u))
+      }
+      val shiftIntSrc = shiftCand.iterator
+        .flatMap { case (u, d) => lookup(u, key(d)).map(u -> _) }.toMap
+      val sizes = regionRootSizes(leafEntries, firstInt, fixedInt, shiftCand,
+        shiftIntSrc.keySet, n)
+      val shiftLeafSrc = (0 until n).iterator.collect {
+        case p if labels(p) == SHIFT => (leafBase + p, srcOf(p))
+      }
+      Resolved(labels, srcOf,
+        sizes.groupBy(_._1).map { case (l, v) => l -> v.size.toLong },
+        sizes,
+        (shiftLeafSrc ++ shiftIntSrc.iterator).collect {
+          case (u, (sc, sn)) if u == 0 || !shiftIntSrc.contains((u - 1) / 2) =>
+            Row(u, sc, sn)
+        }.toSeq)
+    }
 
     /** Build the three uniform-label forests in memory. Returns the internal
       * nodes of (first, fixed, shift-candidate) forests as (node, digest).
@@ -267,7 +405,6 @@ object ChunkDedup {
       }
       (forest(FIRST), forest(FIXED), forest(SHIFT))
     }
-
     /** One entry per region ROOT: (label, region size in leaves). A node is
       * a region root iff it is not absorbed by a coalescing parent
       * (FIRST/FIXED: parent in the forest; SHIFT: parent's digest present in
@@ -300,20 +437,6 @@ object ChunkDedup {
         roots(FIXED, fixedInt, fixedSet.contains) ++
         roots(SHIFT, shiftCand, presentShift.contains)
     }
-
-    /** Region-root counts per label (derived from [[regionRootSizes]] — one
-      * source of truth for what a region root is).
-      */
-    def regionCounts(leaves: Array[(Long, Array[Byte], String)],
-                     firstInt: Vector[(Long, Array[Byte])],
-                     fixedInt: Vector[(Long, Array[Byte])],
-                     shiftCand: Vector[(Long, Array[Byte])],
-                     presentShift: Set[Long]): Map[String, Long] = {
-      val nLeaves = leaves.length.toLong
-      regionRootSizes(leaves, firstInt, fixedInt, shiftCand, presentShift,
-        nLeaves)
-        .groupBy(_._1).map { case (l, v) => l -> v.size.toLong }
-    }
   }
 
   /** Stateful dedup over a chain of checkpoints (all with the same chunk
@@ -337,153 +460,208 @@ object ChunkDedup {
 
     /** digest → first occurrence (chkpt, node); accumulates across chkpts. */
     private var distinctMap: DataFrame = _
-    /** previous checkpoint's leaves (node, digest) for the FIXED probe. */
+    /** previous checkpoint's leaves (node, digest): the distributed path's
+      * FIXED probe. */
     private var prevTree: DataFrame = _
+    /** previous checkpoint's leaf digests, 16-byte slots by position: the
+      * driver paths' FIXED probe. */
+    private var prevLeaves: Array[Byte] = _
     private var curId: Int = -1
     private val results = scala.collection.mutable.ArrayBuffer.empty[ChkptResult]
-    /** accumulated reconstructions used by restart(): (chkpt, pos, chunk). */
-    private var reconAll: DataFrame = _
+    /** one reconstruction (pos, chunk) per checkpoint, for restart(). */
+    private val recons = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
     // serial-mode state (toy chains, store-backed or not: one driver map per
-    // structure; commits go through driver-built frames — Chain.SERIAL_MAX)
+    // structure; commits are driver-direct — Chain.SERIAL_MAX)
     private val serialMode = numChunks <= serialMax
-    private type SDigest = scala.collection.immutable.ArraySeq[Byte]
-    private def skey(d: Array[Byte]): SDigest =
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(d)
-    private val sDistinct = scala.collection.mutable.LinkedHashMap.empty[SDigest, (Int, Long)]
-    private var sPrev: Array[Array[Byte]] = _
+    private val sDistinct =
+      scala.collection.mutable.LinkedHashMap.empty[Chain.Digest, (Int, Long)]
     private val sRecon = scala.collection.mutable.ArrayBuffer.empty[Array[String]]
 
     def history: Seq[ChkptResult] = results.toSeq
 
     /** Process the next checkpoint; chunks = (pos: Long, chunk: String). */
     def checkpoint(chunks: DataFrame): ChkptResult =
-      if (serialMode) serialCheckpoint(chunks) else sparkCheckpoint(chunks)
+      if (serialMode) serialCheckpoint(chunks)
+      else if (nLeaves <= localSweepMax) localSweepCheckpoint(chunks)
+      else distributedCheckpoint(chunks)
+
+    private def firstMeta(fullMd5: String): Map[String, String] =
+      Map("num_chunks" -> numChunks.toString, "full_md5" -> fullMd5)
 
     /** Serial path: identical semantics, one collect, zero shuffles — the
-      * reference's in-memory single-device execution. Region counting and
-      * forest building REUSE the exact local kernels the Spark fast path
-      * collects into (Chain.localForests / regionCounts), so the only
-      * serial-specific logic is leaf labeling + the distinct-map probes.
+      * reference's in-memory single-device execution. It shares the
+      * local-sweep path's driver pass ([[Chain.resolve]]); only the distinct
+      * map differs — here it is a driver map.
       */
     private def serialCheckpoint(chunks: DataFrame): ChkptResult = {
       curId += 1
       val cid = curId
-      val rows = chunks.select(col("pos"), col("chunk")).collect()
-        .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-      require(rows.length == numChunks, s"expected $numChunks chunks, got ${rows.length}")
-      // positions must be a permutation of 0..n-1 — a duplicated+missing pos
-      // would pass the count check and silently mislabel (the distributed
-      // path has the matching cardinality gate)
-      for (i <- rows.indices)
-        require(rows(i)._1 == i, s"chunk positions are not a permutation of " +
-          s"0..${numChunks - 1}: index $i holds pos ${rows(i)._1}")
-      val chunkStrs = rows.map(_._2)
-      val digests = chunkStrs.map(s => graft.functions.Impl.murmur128Digest(
-        s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
       val n = numChunks.toInt
+      val rows = chunks.select(col("pos"), col("chunk")).collect()
+      val chunkStrs = new Array[String](n)
+      Chain.leafIndex(rows.map(_.getLong(0)), n).iterator.zip(rows.iterator)
+        .foreach { case (p, r) => chunkStrs(p) = r.getString(1) }
+      val leaves = new Array[Byte](16 * n)
+      for (p <- 0 until n)
+        System.arraycopy(graft.functions.Impl.murmur128Digest(
+          chunkStrs(p).getBytes(StandardCharsets.UTF_8)), 0, leaves, 16 * p, 16)
 
-      // ---- leaf labeling (FIXED → global SHIFT → fresh election) ----------
-      val labels = new Array[String](n)
-      val srcOf = new Array[(Int, Long)](n) // per SHIFT leaf: (src_chkpt, src_node)
-      val freshByDigest = scala.collection.mutable.LinkedHashMap
-        .empty[SDigest, scala.collection.mutable.ArrayBuffer[Int]]
-      for (pos <- 0 until n) {
-        val d = skey(digests(pos))
-        if (sPrev != null && java.util.Arrays.equals(sPrev(pos), digests(pos))) {
-          labels(pos) = FIXED
-        } else sDistinct.get(d) match {
-          case Some(src) => labels(pos) = SHIFT; srcOf(pos) = src
-          case None =>
-            freshByDigest.getOrElseUpdate(d,
-              scala.collection.mutable.ArrayBuffer.empty) += pos
-        }
-      }
-      for ((d, positions) <- freshByDigest) {
-        val win = positions.min // lowest node wins (J2 atomic_min)
-        labels(win) = FIRST
-        for (p <- positions if p != win) {
-          labels(p) = SHIFT; srcOf(p) = (cid, leafBase + win)
-        }
-        sDistinct.put(d, (cid, leafBase + win)) // insert-if-absent: d is absent
-      }
-
-      // ---- forests + region counts (shared local kernels) ------------------
-      val leafEntries = Array.tabulate(n)(pos =>
-        ((leafBase + pos).toLong, digests(pos), labels(pos)))
-      val (firstInt, fixedInt, shiftCand) = Chain.localForests(leafEntries)
-      firstInt.foreach { case (node, d) =>
-        val k = skey(d)
-        if (!sDistinct.contains(k)) sDistinct.put(k, (cid, node))
-      }
-      // internal SHIFT candidates present in the map, WITH their map sources
-      // (region roots inherit the map entry — same probe the Spark local
-      // branch batches through shiftIntSrc)
-      val shiftIntSrc: Map[Long, (Int, Long)] = shiftCand.iterator.flatMap {
-        case (node, d) => sDistinct.get(skey(d)).map(node -> _)
-      }.toMap
-      val presentShift = shiftIntSrc.keySet
-      val counts = Chain.regionCounts(leafEntries, firstInt, fixedInt,
-        shiftCand, presentShift)
+      val r = Chain.resolve(cid, leaves, prevLeaves,
+        p => sDistinct.get(Chain.key(Chain.slot(leaves, p))),
+        (_, d) => sDistinct.get(d), (d, src) => sDistinct.put(d, src))
+      import r.{labels, srcOf}
 
       // ---- outputs (tiny local DataFrames; no jobs until consumed) ---------
       import spark.implicits._
       val labelDf = (0 until n).map(p => ((leafBase + p).toLong, labels(p)))
         .toDF("node", "label")
-      val firstDf = (0 until n).collect {
+      val firstRows = (0 until n).collect {
         case p if labels(p) == FIRST => (p.toLong, chunkStrs(p))
-      }.toDF("pos", "chunk")
+      }
       val shiftDf = (0 until n).collect {
         case p if labels(p) == SHIFT =>
           (p.toLong, srcOf(p)._1, srcOf(p)._2 - leafBase)
       }.toDF("pos", "src_chkpt", "src_pos")
 
       val res = ChkptResult(cid, labelDf,
-        counts.getOrElse(FIRST, 0L), counts.getOrElse(SHIFT, 0L),
-        firstDf, shiftDf,
-        Chain.regionRootSizes(leafEntries, firstInt, fixedInt, shiftCand,
-          presentShift, numChunks))
+        r.counts.getOrElse(FIRST, 0L), r.counts.getOrElse(SHIFT, 0L),
+        firstRows.toDF("pos", "chunk"), shiftDf, r.regionSizes)
       results += res
 
       // durable incremental checkpoint — the same two file sections, schema
-      // and manifest metadata as the Spark path (restartFromStore is
-      // path-agnostic): region-compacted shift table = SHIFT leaves + map-hit
-      // internals whose parent is NOT itself a map-hit internal, each with
-      // its source. Whole checkpoint = 1 input collect + 2 commit writes
-      // instead of the Spark path's ~18 eager toy-scale jobs (parity +
-      // job-count spec-gated).
+      // and manifest metadata as the Spark paths (restartFromStore is
+      // path-agnostic), written driver-direct: every row is already here,
+      // so the whole checkpoint is one input collect and zero write jobs
+      // (parity + job count spec-gated)
       store.foreach { st =>
-        @inline def parent(u: Long): Long = (u - 1) / 2
-        val leafRegions = (0 until n).iterator.collect {
-          case p if labels(p) == SHIFT => ((leafBase + p).toLong, srcOf(p))
-        }.collect {
-          case (u, (sc, sn)) if u == 0 || !presentShift.contains(parent(u)) =>
-            (u, sc, sn)
-        }
-        val intRegions = shiftIntSrc.iterator.collect {
-          case (u, (sc, sn)) if u == 0 || !presentShift.contains(parent(u)) =>
-            (u, sc, sn)
-        }
         if (!st.isCommitted("chunk_first", cid)) {
           // driver-side full-buffer MD5 — byte-identical to fullBufferMd5's
           // UTF-8 concat in position order
           val md = java.security.MessageDigest.getInstance("MD5")
-          chunkStrs.foreach(c =>
-            md.update(c.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-          st.commit("chunk_first", cid, firstDf,
-            Map("num_chunks" -> numChunks.toString,
-              "full_md5" -> md.digest().map("%02x".format(_)).mkString))
+          chunkStrs.foreach(c => md.update(c.getBytes(StandardCharsets.UTF_8)))
+          st.commitLocal("chunk_first", cid, Chain.firstSchema,
+            firstRows.map { case (p, c) => Row(p, c) },
+            firstMeta(md.digest().map("%02x".format(_)).mkString))
         }
-        st.commit("chunk_shift", cid,
-          (leafRegions ++ intRegions).toSeq.toDF("node", "src_chkpt", "src_node"))
+        st.commitLocal("chunk_shift", cid, Chain.shiftSchema, r.shiftRegions)
       }
 
       sRecon += chunkStrs
-      sPrev = digests
+      prevLeaves = leaves
       res
     }
 
-    private def sparkCheckpoint(chunks: DataFrame): ChkptResult = {
+    /** Local-sweep path (SERIAL_MAX < n ≤ LOCAL_SWEEP_MAX): ONE driver pass
+      * per checkpoint. One job collects the leaf digests (never the
+      * content); the driver builds the full Merkle tree and runs the serial
+      * path's pass ([[Chain.resolve]]), answering every distinct-map
+      * question from ONE probe — the non-FIXED leaves plus every internal, since
+      * Merkle digests do not depend on labels — and ONE insert. The other
+      * jobs are the outputs: the per-leaf frame, the FIRST rows, the
+      * reconstruction and the chunk_first commit (chunk_shift is written
+      * driver-direct).
+      */
+    private def localSweepCheckpoint(chunks: DataFrame): ChkptResult = {
+      curId += 1
+      val cid = curId
+      val n = numChunks.toInt
+      val rows = chunks.select(col("pos"), gf.murmur128(col("chunk"))).collect()
+      val leaves = new Array[Byte](16 * n)
+      Chain.leafIndex(rows.map(_.getLong(0)), n).iterator.zip(rows.iterator)
+        .foreach { case (p, r) =>
+          System.arraycopy(r.getAs[Array[Byte]](1), 0, leaves, 16 * p, 16)
+        }
+      val tree = Chain.merkleTree(leaves)
+
+      // ---- one probe of the map as it stood before this checkpoint ---------
+      // hits by node (≤ 2n−1 rows: map digests are unique)
+      val hitChkpt = Array.fill(2 * n - 1)(-1)
+      val hitNode = new Array[Long](2 * n - 1)
+      if (distinctMap != null) {
+        import spark.implicits._
+        (0 until 2 * n - 1).iterator
+          .filter(u => u < leafBase || !Chain.isFixed(leaves, prevLeaves, u - leafBase.toInt))
+          .map(u => (u.toLong, Chain.slot(tree, u))).toSeq
+          .toDF("node", "digest")
+          .join(distinctMap, "digest")
+          .select("node", "src_chkpt", "src_node").collect()
+          .foreach { r =>
+            val u = r.getLong(0).toInt
+            hitChkpt(u) = r.getInt(1); hitNode(u) = r.getLong(2)
+          }
+      }
+      def oldHit(u: Long): Option[(Int, Long)] =
+        if (hitChkpt(u.toInt) < 0) None else Some((hitChkpt(u.toInt), hitNode(u.toInt)))
+
+      // ---- driver resolution: the old map's hits + this checkpoint's inserts
+      val inserts = scala.collection.mutable.LinkedHashMap.empty[Chain.Digest, (Int, Long)]
+      val r = Chain.resolve(cid, leaves, prevLeaves, p => oldHit(leafBase + p),
+        (u, d) => oldHit(u).orElse(inserts.get(d)), (d, src) => inserts.put(d, src))
+      import r.{labels, srcOf}
+
+      // ---- one insert --------------------------------------------------------
+      if (inserts.nonEmpty) {
+        import spark.implicits._
+        val fresh = inserts.iterator.map { case (d, (c, u)) => (d.toArray, c, u) }
+          .toSeq.toDF("digest", "src_chkpt", "src_node")
+        distinctMap = (if (distinctMap == null) fresh else distinctMap.union(fresh))
+          .localCheckpoint(true)
+      }
+
+      // ---- outputs -------------------------------------------------------------
+      // one checkpointed per-leaf frame: every position's label and claim
+      // (FIRST → itself, FIXED → same position of cid−1, SHIFT → its
+      // source), so history pins no driver collection
+      val perLeaf = {
+        import spark.implicits._
+        (0 until n).map { p =>
+          labels(p) match {
+            case FIRST => (p.toLong, FIRST, cid, p.toLong)
+            case FIXED => (p.toLong, FIXED, cid - 1, p.toLong)
+            case _ => (p.toLong, SHIFT, srcOf(p)._1, srcOf(p)._2 - leafBase)
+          }
+        }.toDF("pos", "label", "src_chkpt", "src_pos").localCheckpoint(true)
+      }
+      val firstPos = new java.util.BitSet(n)
+      for (p <- 0 until n if labels(p) == FIRST) firstPos.set(p)
+      val isFirst = udf((p: Long) => firstPos.get(p.toInt))
+      val storedFirst = chunks.filter(isFirst(col("pos")))
+        .select(col("pos"), col("chunk")).localCheckpoint(true)
+      recons += reconstruct(cid, perLeaf.select("pos", "src_chkpt", "src_pos"),
+        storedFirst, (0 until n).iterator.collect {
+          case p if labels(p) == SHIFT => srcOf(p)._1
+          case p if labels(p) == FIXED => cid - 1
+        }.toSet)
+
+      val res = ChkptResult(
+        chkptId = cid,
+        labels = perLeaf.select((col("pos") + leafBase).as("node"), col("label")),
+        numFirstOcur = r.counts.getOrElse(FIRST, 0L),
+        numShiftDupl = r.counts.getOrElse(SHIFT, 0L),
+        firstLeaves = storedFirst,
+        shiftLeafMap = perLeaf.filter(col("label") === SHIFT)
+          .select("pos", "src_chkpt", "src_pos"),
+        regionSizes = r.regionSizes)
+      results += res
+
+      store.foreach { st =>
+        if (!st.isCommitted("chunk_first", cid))
+          st.commit("chunk_first", cid, storedFirst, firstMeta(fullBufferMd5(chunks)),
+            approxRows = Some(firstPos.cardinality().toLong))
+        st.commitLocal("chunk_shift", cid, Chain.shiftSchema, r.shiftRegions)
+      }
+      prevLeaves = leaves
+      res
+    }
+
+    /** Distributed path (n > localSweepMax): Spark labeling and per-level
+      * THIN sweeps — log₂(n) shuffles of geometrically shrinking live
+      * frontiers; total materialized volume is O(leaves), not
+      * O(nodes · log n). Used when one checkpoint's chunk count exceeds
+      * driver-collectable size.
+      */
+    private def distributedCheckpoint(chunks: DataFrame): ChkptResult = {
       curId += 1
       val cid = curId
       val leaves = chunks
@@ -530,14 +708,13 @@ object ChunkDedup {
         .localCheckpoint(true)
       // SHIFT leaves with their sources — the shift sweep's frontier (region
       // compaction needs each region ROOT's source, so sources ride along).
-      // Plan only — materialized by the paths that consume it.
-      def shiftLeaves: DataFrame = shiftedGlobal
+      val shiftLeaves = shiftedGlobal
         .select(col("node"), col("digest"), col("src_chkpt").cast("int").as("src_chkpt"),
           col("src_node"))
         .union(shiftedLocal.select(col("node"), col("digest"),
           col("src_chkpt").cast("int").as("src_chkpt"), col("src_node")))
       // leaf-level labels are the public per-chunk classification — captured
-      // BEFORE the sweeps so both execution paths emit identical labels (the
+      // BEFORE the sweeps so all execution paths emit identical labels (the
       // sweeps absorb nodes into regions, which only the counts report)
       val leafLabels = st.select("node", "label")
 
@@ -553,12 +730,10 @@ object ChunkDedup {
         * (absorbed children drop out, unpaired nodes retire to a small
         * root accumulator), so total materialized volume is O(label leaves)
         * instead of O(all nodes · log n).
-        * @param accept parents → subset that actually coalesces
         * @param onParents side effect before absorption (map insertion)
         * @return number of region roots for this label
         */
       def thinSweep(label: String,
-                    accept: DataFrame => DataFrame,
                     onParents: DataFrame => Unit): Long = {
         var frontier = st.filter(col("label") === label)
           .select(col("node"), col("digest")).localCheckpoint(true)
@@ -581,7 +756,7 @@ object ChunkDedup {
             .filter(col("cnt") === 2)
             .select(col("parent").as("node"),
               gf.murmur128(concat(col("dl"), col("dr"))).as("digest"))
-          val parents = accept(paired).select(col("node"), col("digest"))
+          val parents = paired.select(col("node"), col("digest"))
             .localCheckpoint(true)
           onParents(parents)
           val absorbed = parents.select((col("node") * 2 + 1).as("node"))
@@ -640,75 +815,12 @@ object ChunkDedup {
         rootsAcc.union(frontier.select(srcCols: _*)).localCheckpoint(true)
       }
 
-      // shiftRegions: Some(region table) when it will be committed or when
-      // the distributed sweep produced it anyway; None on the storeless
-      // local fast path (golden harnesses skip the extra collect)
-      val (counts, shiftRegions, regionSizes) =
-        if (nLeaves <= localSweepMax) {
-          // ---- fast path: in-memory sweeps, batched map probes -------------
-          // The forests are a per-checkpoint tree computation; only the
-          // distinct-map interactions are global. Collect the labeled leaves
-          // (≤ 2²⁰ × 16 B), build all three forests locally, then do ONE
-          // batched map insert (FIRST internals) and ONE batched probe (SHIFT
-          // internal candidates) — 3 Spark jobs instead of 3·log n shuffles.
-          val leafEntries = st.collect().map(r =>
-            (r.getLong(0), r.getAs[Array[Byte]](1), r.getString(2)))
-          val (firstInt, fixedInt, shiftCand) = Chain.localForests(leafEntries)
-
-          // reference order: full first forest inserted before dup probing
-          if (firstInt.nonEmpty) {
-            import spark.implicits._
-            insertIntoMap(firstInt.toSeq.toDF("node", "digest")
-              .select(col("digest"), lit(cid).as("src_chkpt"), col("node").as("src_node")))
-          }
-          // batched probe WITH sources (region roots need them)
-          val shiftIntSrc: Map[Long, (Int, Long)] =
-            if (shiftCand.isEmpty) Map.empty
-            else {
-              import spark.implicits._
-              shiftCand.toSeq.toDF("node", "digest")
-                .join(mapOrEmpty(), Seq("digest"))
-                .select("node", "src_chkpt", "src_node").collect()
-                .map(r => r.getLong(0) -> ((r.getInt(1), r.getLong(2)))).toMap
-            }
-          val presentShift = shiftIntSrc.keySet
-          // region table only when a store will commit it — storeless chains
-          // (golden harnesses) skip the extra leaf-source collect
-          val regionsDf: Option[DataFrame] =
-            if (store.isEmpty) None
-            else Some {
-              @inline def parent(u: Long): Long = (u - 1) / 2
-              val leafSrc = shiftLeaves
-                .select("node", "src_chkpt", "src_node").collect()
-                .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-              val regionRows =
-                leafSrc.iterator.filter { case (u, _, _) =>
-                  u == 0 || !presentShift.contains(parent(u))
-                } ++
-                shiftIntSrc.iterator.collect {
-                  case (u, (sc, sn)) if u == 0 || !presentShift.contains(parent(u)) =>
-                    (u, sc, sn)
-                }
-              import spark.implicits._
-              regionRows.toSeq.toDF("node", "src_chkpt", "src_node")
-            }
-          (Chain.regionCounts(leafEntries, firstInt, fixedInt, shiftCand, presentShift),
-            regionsDf,
-            Chain.regionRootSizes(leafEntries, firstInt, fixedInt, shiftCand,
-              presentShift, numChunks))
-        } else {
-          // ---- distributed path: per-level THIN sweeps ----------------------
-          // log₂(n) shuffles of geometrically shrinking live frontiers; total
-          // materialized volume is O(leaves), not O(nodes · log n). Used when
-          // one checkpoint's chunk count exceeds driver-collectable size.
-          val fo = thinSweep(FIRST, identity, parents =>
-            insertIntoMap(parents.select(col("digest"), lit(cid).as("src_chkpt"),
-              col("node").as("src_node"))))
-          val fx = thinSweep(FIXED, identity, _ => ())
-          val regionsDf = thinSweepShift()
-          (Map(FIRST -> fo, FIXED -> fx, SHIFT -> regionsDf.count()),
-            Some(regionsDf), Nil)
-        }
+      val fo = thinSweep(FIRST, parents =>
+        insertIntoMap(parents.select(col("digest"), lit(cid).as("src_chkpt"),
+          col("node").as("src_node"))))
+      val fx = thinSweep(FIXED, _ => ())
+      val shiftRegions = thinSweepShift()
+      val counts = Map(FIRST -> fo, FIXED -> fx, SHIFT -> shiftRegions.count())
 
       // ---- outputs ----------------------------------------------------------
       val shiftLeafMap = shiftedGlobal.select(col("pos"), col("src_chkpt"),
@@ -725,7 +837,7 @@ object ChunkDedup {
         numShiftDupl = counts.getOrElse(SHIFT, 0L),
         firstLeaves = storedFirst,
         shiftLeafMap = shiftLeafMap,
-        regionSizes = regionSizes)
+        regionSizes = Nil)
       results += res
 
       // durable incremental checkpoint: the two file sections restart needs.
@@ -747,7 +859,7 @@ object ChunkDedup {
         // (commit() itself is a no-op then)
         if (!st.isCommitted("chunk_first", cid))
           st.commit("chunk_first", cid, storedFirst,
-            Map("num_chunks" -> numChunks.toString,
+            firstMeta(
               // full-buffer MD5 of the checkpoint content (reference:
               // restart_chkpt_files.cpp:104-108 hashes the restarted buffer
               // and compares) — restartFromStore recomputes and verifies.
@@ -756,13 +868,21 @@ object ChunkDedup {
               // a Merkle-style digest — the per-leaf murmur128 tree above IS
               // that digest, so the full-buffer MD5 stays a reference-fidelity
               // extra, not the scale path.
-              "full_md5" -> fullBufferMd5(chunks)))
-        st.commit("chunk_shift", cid, shiftRegions.get)
+              fullBufferMd5(chunks)))
+        st.commit("chunk_shift", cid, shiftRegions)
       }
 
-      // reconstruct this checkpoint into reconAll (restart support)
-      val recon = reconstructCurrent(cid, storedFirst, shiftLeafMap)
-      reconAll = (if (reconAll == null) recon else reconAll.union(recon)).localCheckpoint(true)
+      // every position's claim: FIRST → itself, FIXED → same position of
+      // cid−1, SHIFT → its source; the referenced checkpoints are one tiny
+      // distinct collect
+      val claims = firstLeavesDf.select(col("pos"), lit(cid).as("src_chkpt"),
+          col("pos").as("src_pos"))
+        .union(fixedLeaves.select(col("pos"), lit(cid - 1).as("src_chkpt"),
+          col("pos").as("src_pos")))
+        .union(shiftLeafMap)
+      recons += reconstruct(cid, claims, storedFirst,
+        res.referencedCheckpoints.collect().map(_.getInt(0)).toSet ++
+          (if (cid > 0) Set(cid - 1) else Set.empty[Int]))
 
       // the FIXED probe only ever compares leaves at equal positions
       // (tree_approach.cpp:326-327); FIXED parents re-derive bottom-up.
@@ -770,31 +890,20 @@ object ChunkDedup {
       res
     }
 
-    /** Rebuild checkpoint `cid` from ONLY incremental outputs + prior recons. */
-    private def reconstructCurrent(cid: Int, storedFirst: DataFrame,
-                                   shiftLeafMap: DataFrame): DataFrame = {
-      val first = storedFirst.select(lit(cid).as("chkpt"), col("pos"), col("chunk"))
-      val shifted =
-        if (reconAll == null) shiftLeafMap // chkpt 0: may self-reference
-          .join(storedFirst.select(col("pos").as("src_pos"), col("chunk")), Seq("src_pos"))
-          .select(lit(cid).as("chkpt"), col("pos"), col("chunk"))
-        else {
-          val selfSrc = shiftLeafMap.filter(col("src_chkpt") === cid)
-            .join(storedFirst.select(col("pos").as("src_pos"), col("chunk")), Seq("src_pos"))
-            .select(lit(cid).as("chkpt"), col("pos"), col("chunk"))
-          val priorSrc = shiftLeafMap.filter(col("src_chkpt") =!= cid)
-            .join(reconAll.select(col("chkpt").as("src_chkpt"), col("pos").as("src_pos"),
-              col("chunk")), Seq("src_chkpt", "src_pos"))
-            .select(lit(cid).as("chkpt"), col("pos"), col("chunk"))
-          selfSrc.union(priorSrc)
-        }
-      val explicitPos = first.select("pos").union(shifted.select("pos"))
-      val fixed =
-        if (reconAll == null) first.limit(0)
-        else reconAll.filter(col("chkpt") === cid - 1)
-          .join(explicitPos, Seq("pos"), "left_anti")
-          .select(lit(cid).as("chkpt"), col("pos"), col("chunk"))
-      first.union(shifted).union(fixed)
+    /** Reconstruction of checkpoint `cid`: every position's claim (pos,
+      * src_chkpt, src_pos) joined against `storedFirst` (claims on `cid`
+      * itself) and the reconstructions of the checkpoints the claims
+      * reference (`refs`) — O(n · |refs|) per checkpoint, never the whole
+      * chain.
+      */
+    private def reconstruct(cid: Int, claims: DataFrame, storedFirst: DataFrame,
+                            refs: Set[Int]): DataFrame = {
+      def tagged(c: Int, df: DataFrame): DataFrame =
+        df.select(lit(c).as("src_chkpt"), col("pos").as("src_pos"), col("chunk"))
+      val sources = (refs - cid).toSeq.sorted
+        .foldLeft(tagged(cid, storedFirst))((acc, c) => acc.union(tagged(c, recons(c))))
+      claims.join(sources, Seq("src_chkpt", "src_pos"))
+        .select("pos", "chunk").localCheckpoint(true)
     }
 
     /** Restart: full chunk content of checkpoint `cid` (pos, chunk). */
@@ -803,7 +912,7 @@ object ChunkDedup {
         import spark.implicits._
         sRecon(cid).zipWithIndex.map { case (c, p) => (p.toLong, c) }
           .toSeq.toDF("pos", "chunk")
-      } else reconAll.filter(col("chkpt") === cid).select("pos", "chunk")
+      } else recons(cid)
 
     private def mapOrEmpty(): DataFrame =
       if (distinctMap == null) {

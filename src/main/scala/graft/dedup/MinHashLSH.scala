@@ -47,13 +47,13 @@ object MinHashLSH {
     * `keyRows` must have columns `keyCols :+ "e"` (element; any orderable
     * type). Two-phase:
     *
-    *   1. per-key stats (min element + count) — a pure partial+final hash
-    *      aggregate, O(1) state per key, never a per-key array;
-    *   2. join the stats back (same key ⇒ the shuffle partitioning is
-    *      reused): keys with count ≤ maxBucket aggregate their (bounded)
-    *      member list and emit all pairs; HOT keys emit star edges
-    *      (min, member) straight from the joined rows — one row in, ≤ one
-    *      pair out, no aggregation buffer at all.
+    *   1. per-key stats (min element + count) as WINDOW aggregates over the
+    *      key's hash partitioning — no stats aggregate joined back;
+    *   2. keys with count ≤ maxBucket aggregate their (bounded) member list
+    *      and emit all pairs (the window's partitioning feeds that groupBy
+    *      exchange-free); HOT keys emit star edges (min, member) straight
+    *      from the windowed rows — one row in, ≤ one pair out, no
+    *      aggregation buffer at all.
     *
     * A boilerplate flood of 10⁸ rows on one key therefore costs a streaming
     * pass, not a 10⁸-element ObjectHashAggregate buffer; connectivity (what

@@ -360,3 +360,157 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
           s"path ${spkJobs(cid)} — not halved")
   }
 }
+
+class ChunkDedupLocalSweepSpec extends AnyFunSuite with SparkTestBase {
+
+  /** Jobs each `chain.checkpoint` call runs, listener-counted. */
+  private def jobsPerCheckpoint(chain: ChunkDedup.Chain,
+                                steps: Seq[org.apache.spark.sql.DataFrame]): Seq[Int] = {
+    val jobCounter = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobCounter.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try steps.map { chunks =>
+      org.apache.spark.sql.graftx.Bridge.drainListenerBus(spark.sparkContext)
+      val before = jobCounter.get()
+      chain.checkpoint(chunks)
+      org.apache.spark.sql.graftx.Bridge.drainListenerBus(spark.sparkContext)
+      jobCounter.get() - before
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** `k` checkpoints of `n` chunks of `width` letters a–d (few distinct
+    * chunks ⇒ in-checkpoint duplicates); each later one swaps two aligned
+    * blocks of n/16 chunks, from step 4 on copies a block of checkpoint 0
+    * to another block (a shift onto an older checkpoint), and rewrites ~3%
+    * of the chunks with fresh uppercase content.
+    */
+  private def chain(n: Int, k: Int, width: Int, seed: Int): Seq[Seq[String]] = {
+    val rnd = new scala.util.Random(seed)
+    def word(base: Char, letters: Int) =
+      Seq.fill(width)((base + rnd.nextInt(letters)).toChar).mkString
+    val cur = Array.fill(n)(word('a', 4))
+    val first = cur.toSeq
+    val blk = math.max(1, n / 16)
+    (0 until k).map { step =>
+      if (step > 0) {
+        val nb = n / blk
+        def otherBlock(b: Int) = (b + 1 + rnd.nextInt(nb - 1)) % nb
+        val b1 = rnd.nextInt(nb); val b2 = otherBlock(b1)
+        val tmp = cur.slice(b1 * blk, b1 * blk + blk)
+        Array.copy(cur, b2 * blk, cur, b1 * blk, blk)
+        Array.copy(tmp, 0, cur, b2 * blk, blk)
+        if (step >= 4) {
+          val b = rnd.nextInt(nb)
+          Array.copy(first.toArray, otherBlock(b) * blk, cur, b * blk, blk)
+        }
+        for (i <- 0 until n if rnd.nextDouble() < 0.03) cur(i) = word('A', 26)
+      }
+      cur.toSeq
+    }
+  }
+
+  private def frame(chunks: Seq[String]) = {
+    import spark.implicits._
+    chunks.zipWithIndex.map { case (c, p) => (p.toLong, c) }.toDF("pos", "chunk")
+  }
+
+  private def restarted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().sortBy(_.getLong(0)).map(_.getString(1)).toSeq
+
+  test("full Merkle tree: every forest internal localForests builds is a slot of it, on any labeling") {
+    val rnd = new scala.util.Random(5)
+    val labels = Seq(ChunkDedup.FIRST, ChunkDedup.FIXED, ChunkDedup.SHIFT)
+    for (n <- Seq(1, 2, 5, 8, 11, 96, 1000)) {
+      // few distinct chunks ⇒ deep uniform-label subtrees
+      val leafDigests = Array.fill(n)(graft.functions.Impl.murmur128Digest(
+        Array[Byte](rnd.nextInt(3).toByte)))
+      val tree = ChunkDedup.Chain.merkleTree(leafDigests.flatten)
+      assert(tree.length == 16 * (2 * n - 1))
+      for (p <- 0 until n)
+        assert(ChunkDedup.Chain.slot(tree, n - 1 + p).toSeq == leafDigests(p).toSeq)
+      for (uniform <- Seq(false, true)) {
+        // random labels, then one label everywhere: the whole tree is a forest
+        val leaves = Array.tabulate(n)(p => ((n - 1 + p).toLong, leafDigests(p),
+          if (uniform) ChunkDedup.FIRST else labels(rnd.nextInt(3))))
+        val (fi, fx, sh) = ChunkDedup.Chain.localForests(leaves)
+        for ((u, d) <- fi ++ fx ++ sh)
+          assert(ChunkDedup.Chain.slot(tree, u.toInt).toSeq == d.toSeq, s"n=$n node $u")
+        if (uniform)
+          assert(fi.map(_._1).sorted == (0L until n - 1L), s"n=$n full forest")
+      }
+    }
+  }
+
+  test("local-sweep checkpoint job bound: <= 12 jobs at checkpoint 0, <= 20 after (4608 chunks, store-backed)") {
+    // just above SERIAL_MAX: block swaps, fresh chunks and in-checkpoint
+    // duplicates exercise every label; the single driver pass keeps each
+    // checkpoint to one digest job, one probe, one insert plus its outputs
+    val n = 4608
+    assert(n > ChunkDedup.Chain.SERIAL_MAX)
+    val steps = chain(n, 3, 2, 17)
+    val root = java.nio.file.Files.createTempDirectory("graft_jobbound").toString
+    val store = new graft.state.SnapshotStore(spark, root)
+    val c = new ChunkDedup.Chain(spark, n.toLong, store = Some(store))
+    val jobs = jobsPerCheckpoint(c, steps.map(frame))
+    assert(jobs(0) <= 12, s"checkpoint 0 ran ${jobs(0)} jobs")
+    for (cid <- 1 until steps.length)
+      assert(jobs(cid) <= 20, s"checkpoint $cid ran ${jobs(cid)} jobs")
+    val r = c.history.last
+    assert(r.numFirstOcur > 0 && r.numShiftDupl > 0)
+    assert(restarted(c.restart(2)) == steps(2))
+    assert(restarted(ChunkDedup.restartFromStore(spark, store, 2)) == steps(2))
+  }
+
+  test("committed-store parity: serial, local-sweep and distributed paths commit identical tables and manifest meta") {
+    val n = 96 // ragged
+    val steps = chain(n, 3, 1, 29)
+    def build(name: String, localSweepMax: Long, serialMax: Long) = {
+      val root = java.nio.file.Files.createTempDirectory(s"graft_parity_$name").toString
+      val store = new graft.state.SnapshotStore(spark, root)
+      val c = new ChunkDedup.Chain(spark, n.toLong, localSweepMax = localSweepMax,
+        store = Some(store), serialMax = serialMax)
+      steps.foreach(s => c.checkpoint(frame(s)))
+      name -> store
+    }
+    val stores = Seq(
+      build("serial", ChunkDedup.Chain.LOCAL_SWEEP_MAX, ChunkDedup.Chain.SERIAL_MAX),
+      build("localsweep", ChunkDedup.Chain.LOCAL_SWEEP_MAX, 0L),
+      build("distributed", 0L, 0L))
+    for (cid <- steps.indices) {
+      def rows(st: graft.state.SnapshotStore, t: String) =
+        st.read(t, cid).collect().map(_.toSeq).toSet
+      def meta(st: graft.state.SnapshotStore, k: String) =
+        (s""""$k":\\s*"([^"]+)"""").r
+          .findFirstMatchIn(st.manifestJson("chunk_first", cid)).map(_.group(1))
+      val (_, base) = stores.head
+      assert(rows(base, "chunk_shift").nonEmpty || cid == 0)
+      for ((name, st) <- stores.tail) {
+        for (t <- Seq("chunk_first", "chunk_shift"))
+          assert(rows(st, t) == rows(base, t), s"$name $t $cid differs from serial")
+        for (k <- Seq("num_chunks", "full_md5"))
+          assert(meta(base, k).nonEmpty && meta(st, k) == meta(base, k),
+            s"$name manifest $k $cid differs from serial")
+      }
+    }
+  }
+
+  test("in-session restart: a 6-checkpoint chain restarts every checkpoint byte-exactly on both Spark paths") {
+    val n = 48 // ragged
+    val steps = chain(n, 6, 2, 41)
+    for ((name, localSweepMax) <- Seq(
+        "localsweep" -> ChunkDedup.Chain.LOCAL_SWEEP_MAX, "distributed" -> 0L)) {
+      val c = new ChunkDedup.Chain(spark, n.toLong, localSweepMax = localSweepMax,
+        serialMax = 0L)
+      steps.foreach(s => c.checkpoint(frame(s)))
+      // checkpoint 5 sources from checkpoint 0, past the chain in between
+      assert(c.history(5).referencedCheckpoints.collect().map(_.getInt(0)).contains(0),
+        s"$name: no shift onto checkpoint 0")
+      for (cid <- steps.indices)
+        assert(restarted(c.restart(cid)) == steps(cid), s"$name restart($cid)")
+    }
+  }
+}
