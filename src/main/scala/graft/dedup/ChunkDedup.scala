@@ -25,15 +25,17 @@ import graft.functions.gf
   *     a left-anti join + union (SURVEY.md §2.4 J1).
   *
   * Restart (tree_approach.cpp:713-1128) is the inverse: reconstruct any
-  * checkpoint from stored first-occurrence bytes + shift metadata via joins
-  * against prior reconstructions (§2.8: per-step left-anti fall-through).
+  * checkpoint from stored first-occurrence bytes + shift metadata by
+  * resolving every position's claim newest → oldest (§2.8: per-step
+  * left-anti fall-through).
   *
   * Scale note: up to Chain.LOCAL_SWEEP_MAX chunks a checkpoint collects
-  * only its 16-byte leaf digests to the driver. Beyond it the level sweep is
-  * O(log n) shuffles of geometrically shrinking node sets; the distinct map
-  * is partitioned by digest and grows with distinct content only. At web
-  * scale the per-leaf tables dominate and partition freely; nothing is
-  * collected to the driver.
+  * only its 16-byte leaf digests to the driver, and a restart only the
+  * FIRST positions and shift regions of the checkpoints it visits. Beyond
+  * it the level sweep is O(log n) shuffles of geometrically shrinking node
+  * sets; the distinct map is partitioned by digest and grows with distinct
+  * content only. At web scale the per-leaf tables dominate and partition
+  * freely; nothing is collected to the driver.
   */
 object ChunkDedup {
 
@@ -120,6 +122,16 @@ object ChunkDedup {
           .getField("chunk")).cast("binary")))
       .head().getString(0)
 
+  /** [[fullBufferMd5]] of chunks already in position order, streamed on
+    * one thread: the UTF-8 bytes of each non-null chunk, as `concat_ws`
+    * concatenates them.
+    */
+  private[dedup] def md5Hex(chunksInOrder: Iterator[String]): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    chunksInOrder.foreach(c => if (c != null) md.update(c.getBytes(StandardCharsets.UTF_8)))
+    md.digest().map("%02x".format(_)).mkString
+  }
+
   /** Split a text into fixed-size character chunks (ragged tail), one row per
     * chunk — the reference's P1 chunking (basic_approach.cpp:29-33).
     */
@@ -133,20 +145,198 @@ object ChunkDedup {
     * — no in-session chain state; the reference's file-only restart
     * (tree_approach.cpp:713-1128, driver restart_chkpt_files.cpp:171-195).
     *
-    * The newest→oldest loop (tree_approach.cpp:943): every position of
+    * The newest→oldest walk (tree_approach.cpp:943): every position of
     * `cid` carries a (src_chkpt, src_pos) claim; per older checkpoint the
     * claims at that checkpoint either hit its first-occurrence bytes,
     * follow its shift indirection, or fall through FIXED to the previous
-    * checkpoint at the same position (§2.8 left-anti semantics). Each round
-    * is a few joins over narrow columns; rounds = chain length.
+    * checkpoint at the same position (§2.8 left-anti semantics). Each step
+    * jumps to the NEWEST checkpoint a pending claim still references
+    * (chkpts_needed, F4 list_approach.cpp:98-110), so only referenced
+    * checkpoints are read. Two regimes, split at the checkpoint's own bound
+    * [[Chain.LOCAL_SWEEP_MAX]]:
+    *   - up to it, the walk runs on the driver over metadata only: one job
+    *     per visited checkpoint collects its FIRST positions (never the
+    *     content) and its shift region rows. The content is then ONE narrow
+    *     pass — each checkpoint holding a hit projects its chunk_first
+    *     through a broadcast src_pos → positions index, and the union is
+    *     checkpointed once (no join, no exchange) — and one single-task
+    *     pass counts and hashes it. Jobs: visited checkpoints + 2. Driver
+    *     footprint at 2²⁰ chunks: 28 MB of per-position arrays (claim and
+    *     shift 12 B each, a 4 B count), the src_pos → positions index
+    *     (≤ 20 B per position, ≈ 20 MB, plus its serialized broadcast
+    *     copy) and, transiently, one visited checkpoint's collected
+    *     metadata rows (≤ 2 per position);
+    *   - above it, the walk is a Spark loop: per visited checkpoint a few
+    *     joins over narrow columns, two localCheckpoints and a max
+    *     aggregate; then a count and the [[fullBufferMd5]] aggregate.
+    * Both regimes gate the row count (every position resolved exactly once;
+    * this also catches a duplicated FIRST row) and the full-buffer MD5
+    * committed with the checkpoint.
     */
   def restartFromStore(spark: SparkSession, store: graft.state.SnapshotStore,
-                       cid: Int): DataFrame = {
+                       cid: Int): DataFrame =
+    restartFromStore(spark, store, cid, Chain.LOCAL_SWEEP_MAX)
+
+  /** [[restartFromStore]] with the regime bound as a parameter, so specs
+    * can force the Spark loop (`localSweepMax = 0`).
+    */
+  private[graft] def restartFromStore(spark: SparkSession,
+                                      store: graft.state.SnapshotStore, cid: Int,
+                                      localSweepMax: Long): DataFrame = {
+    val manifest = store.manifestJson("chunk_first", cid)
     val numChunks =
-      """"num_chunks":\s*"(\d+)"""".r
-        .findFirstMatchIn(store.manifestJson("chunk_first", cid))
+      """"num_chunks":\s*"(\d+)"""".r.findFirstMatchIn(manifest)
         .map(_.group(1).toLong)
         .getOrElse(sys.error("chunk_first manifest lacks num_chunks"))
+    val committedMd5 =
+      """"full_md5":\s*"([0-9a-f]+)"""".r.findFirstMatchIn(manifest).map(_.group(1))
+    if (numChunks <= localSweepMax)
+      driverRestart(spark, store, cid, numChunks.toInt, committedMd5)
+    else loopRestart(spark, store, cid, numChunks, committedMd5)
+  }
+
+  /** Completeness gate: an inconsistent or truncated store (a claim whose
+    * first/shift row is missing, claims left below chkpt 0, or a duplicated
+    * FIRST row) must fail loudly, not return a silently wrong
+    * reconstruction.
+    */
+  private def requireResolved(cid: Int, got: Long, numChunks: Long): Unit =
+    require(got == numChunks,
+      s"restart($cid) resolved only $got of $numChunks positions — store is " +
+        "inconsistent (missing first/shift rows or claims fell past chkpt 0)")
+
+  /** Full-buffer digest gate (restart_chkpt_files.cpp:104-108): the
+    * reconstruction's MD5 must equal the digest recorded at commit —
+    * stronger than row counts, catches any content-level corruption.
+    */
+  private def requireMd5(cid: Int, actual: => String, committed: Option[String]): Unit =
+    for (expected <- committed) {
+      val a = actual
+      require(a == expected, s"restart($cid) full-buffer md5 $a != committed $expected")
+    }
+
+  /** Per-checkpoint restart index: the distinct src positions `keys`
+    * (ascending) that claims resolved onto this checkpoint's FIRST rows,
+    * and for `keys(i)` the destination positions dests(offs(i) until
+    * offs(i+1)) — CSR arrays, shipped to executors as one broadcast.
+    */
+  private final case class SrcIndex(keys: Array[Long], offs: Array[Int], dests: Array[Long]) {
+    def destsOf(src: Long): Array[Long] = {
+      val i = java.util.Arrays.binarySearch(keys, src)
+      if (i < 0) Array.emptyLongArray
+      else java.util.Arrays.copyOfRange(dests, offs(i), offs(i + 1))
+    }
+  }
+
+  /** The driver regime of [[restartFromStore]] (n ≤ LOCAL_SWEEP_MAX). */
+  private def driverRestart(spark: SparkSession, store: graft.state.SnapshotStore,
+                            cid: Int, n: Int, committedMd5: Option[String]): DataFrame = {
+    // claim of position p: (claimC(p), claimP(p)), `resolved` once it names
+    // a FIRST row of claimC(p); a claim that can never resolve is parked
+    // at checkpoint −1, like one that fell past checkpoint 0
+    val claimC = Array.fill(n)(cid)
+    val claimP = Array.tabulate(n)(_.toLong)
+    val resolved = new java.util.BitSet(n)
+    // the visited checkpoint's metadata, by position
+    val isFirst = new java.util.BitSet(n)
+    val shC = new Array[Int](n)
+    val shP = new Array[Long](n)
+    val firsts = scala.collection.mutable.Map.empty[Int, DataFrame]
+    var cur = cid
+    while (cur >= 0) {
+      val first = store.read("chunk_first", cur)
+      firsts(cur) = first
+      isFirst.clear()
+      java.util.Arrays.fill(shC, -1)
+      first.select(lit(true), col("pos"), lit(0), lit(0L))
+        .union(store.read("chunk_shift", cur).select(lit(false), col("node"),
+          col("src_chkpt").cast("int"), col("src_node")))
+        .collect()
+        .foreach { r =>
+          if (r.getBoolean(0)) {
+            val p = r.getLong(1)
+            if (p >= 0 && p < n) isFirst.set(p.toInt)
+          } else {
+            val (u, su) = (r.getLong(1), r.getLong(3))
+            require(u >= 0 && u < 2L * n - 1 && su >= 0 && su < 2L * n - 1,
+              s"restart($cid): checkpoint $cur shift region $u -> $su lies " +
+                s"outside the $n-leaf tree")
+            val dst = subtreeLeafPositions(u, n)
+            val src = subtreeLeafPositions(su, n)
+            require(dst.length == src.length,
+              s"region $u -> $su leaf-count mismatch (${dst.length} vs ${src.length})")
+            for (i <- dst.indices) { shC(dst(i).toInt) = r.getInt(2); shP(dst(i).toInt) = src(i) }
+          }
+        }
+      // resolve the claims on `cur` as the Spark loop does, and find the
+      // newest checkpoint any pending claim still references
+      var next = -1
+      for (p <- 0 until n if !resolved.get(p)) {
+        if (claimC(p) == cur) {
+          val sp = claimP(p).toInt
+          val sc = shC(sp)
+          if (isFirst.get(sp)) resolved.set(p)
+          else if (sc < 0) claimC(p) = cur - 1 // FIXED fall-through
+          else if (sc < cur) { claimC(p) = sc; claimP(p) = shP(sp) }
+          else if (sc == cur && isFirst.get(shP(sp).toInt)) {
+            claimP(p) = shP(sp); resolved.set(p)
+          } else claimC(p) = -1
+        }
+        if (!resolved.get(p)) next = math.max(next, claimC(p))
+      }
+      cur = next
+    }
+    requireResolved(cid, resolved.cardinality(), n)
+
+    // ---- one narrow reconstruction -----------------------------------------
+    val cnt = new Array[Int](n) // per src position: hits, then write cursor
+    val index = firsts.keys.toSeq.sorted.flatMap { c =>
+      java.util.Arrays.fill(cnt, 0)
+      var hits = 0
+      for (p <- 0 until n if claimC(p) == c) { cnt(claimP(p).toInt) += 1; hits += 1 }
+      if (hits == 0) None
+      else {
+        val keys = (0 until n).iterator.filter(cnt(_) > 0).map(_.toLong).toArray
+        val offs = new Array[Int](keys.length + 1)
+        for (i <- keys.indices) {
+          val k = keys(i).toInt
+          offs(i + 1) = offs(i) + cnt(k)
+          cnt(k) = offs(i)
+        }
+        val dests = new Array[Long](hits)
+        for (p <- 0 until n if claimC(p) == c) {
+          val k = claimP(p).toInt
+          dests(cnt(k)) = p
+          cnt(k) += 1
+        }
+        Some(c -> SrcIndex(keys, offs, dests))
+      }
+    }.toMap
+    val bc = spark.sparkContext.broadcast(index)
+    val to = udf((c: Int, src: Long) => bc.value(c).destsOf(src))
+    val out = index.keys.toSeq.sorted
+      .map(c => firsts(c).select(explode(to(lit(c), col("pos"))).as("pos"), col("chunk")))
+      .reduce(_ union _).localCheckpoint(true)
+    bc.destroy()
+
+    // ---- one verify pass: row count and full-buffer MD5 --------------------
+    import spark.implicits._
+    val (got, actual) = out.coalesce(1).sortWithinPartitions("pos")
+      .mapPartitions { rows =>
+        var k = 0L
+        val h = md5Hex(rows.map { r => k += 1; r.getString(1) })
+        Iterator((k, h))
+      }
+      .collect().headOption.getOrElse((0L, ""))
+    requireResolved(cid, got, n)
+    requireMd5(cid, actual, committedMd5)
+    out
+  }
+
+  /** The Spark-loop regime of [[restartFromStore]] (n > LOCAL_SWEEP_MAX). */
+  private def loopRestart(spark: SparkSession, store: graft.state.SnapshotStore,
+                          cid: Int, numChunks: Long,
+                          committedMd5: Option[String]): DataFrame = {
     def first(c: Int): DataFrame = store.read("chunk_first", c)
     // the stored shift section is region-compacted — expand each region
     // root back to per-leaf (pos, src_chkpt, src_pos) claims
@@ -193,23 +383,9 @@ object ChunkDedup {
       val nxt = pending.agg(max("src_chkpt")).head()
       cur = if (nxt.isNullAt(0)) -1 else nxt.getInt(0)
     }
-    // completeness gate: an inconsistent or truncated store (a claim whose
-    // first/shift row is missing, or pending claims left below chkpt 0)
-    // must fail loudly, not return a silently-shorter reconstruction
     val out = resolved.select("pos", "chunk").localCheckpoint(true)
-    val got = out.count()
-    require(got == numChunks,
-      s"restart($cid) resolved only $got of $numChunks positions — store is " +
-        "inconsistent (missing first/shift rows or claims fell past chkpt 0)")
-    // full-buffer digest verification (restart_chkpt_files.cpp:104-108):
-    // the reconstruction's MD5 must equal the digest recorded at commit —
-    // stronger than row counts, catches any content-level corruption
-    for (expected <- """"full_md5":\s*"([0-9a-f]+)"""".r
-        .findFirstMatchIn(store.manifestJson("chunk_first", cid)).map(_.group(1))) {
-      val actual = fullBufferMd5(out)
-      require(actual == expected,
-        s"restart($cid) full-buffer md5 $actual != committed $expected")
-    }
+    requireResolved(cid, out.count(), numChunks)
+    requireMd5(cid, fullBufferMd5(out), committedMd5)
     out
   }
 
@@ -221,9 +397,13 @@ object ChunkDedup {
       * the retained previous-checkpoint leaf digests (16 B × n = 16 MB),
       * the full Merkle tree's 2n−1 16-byte slots (32 MB transient), and the
       * probe frame of ≤ 2n−1 (node, digest) rows (≈ 100 MB transient) —
-      * a few hundred MB on the 8 g driver heap. Chunk CONTENT is never
-      * collected (the FIRST rows and the commits stay distributed), which
-      * is what lets this bound sit 256× above SERIAL_MAX.
+      * a few hundred MB on the 8 g driver heap. [[restartFromStore]]
+      * switches regime at the same bound; its driver walk holds 28 MB of
+      * per-position claim and shift arrays at 2²⁰ chunks, plus a broadcast
+      * src_pos → positions index of ≈ 20 MB. Chunk CONTENT is
+      * never collected (the FIRST rows, the commits and the restart's
+      * reconstruction stay distributed), which is what lets this bound sit
+      * 256× above SERIAL_MAX.
       */
     final val LOCAL_SWEEP_MAX: Long = 1L << 20
 
@@ -536,13 +716,9 @@ object ChunkDedup {
       // (parity + job count spec-gated)
       store.foreach { st =>
         if (!st.isCommitted("chunk_first", cid)) {
-          // driver-side full-buffer MD5 — byte-identical to fullBufferMd5's
-          // UTF-8 concat in position order
-          val md = java.security.MessageDigest.getInstance("MD5")
-          chunkStrs.foreach(c => md.update(c.getBytes(StandardCharsets.UTF_8)))
           st.commitLocal("chunk_first", cid, Chain.firstSchema,
             firstRows.map { case (p, c) => Row(p, c) },
-            firstMeta(md.digest().map("%02x".format(_)).mkString))
+            firstMeta(md5Hex(chunkStrs.iterator)))
         }
         st.commitLocal("chunk_shift", cid, Chain.shiftSchema, r.shiftRegions)
       }
@@ -668,6 +844,12 @@ object ChunkDedup {
         .select((col("pos") + leafBase).as("node"), col("pos"),
           gf.murmur128(col("chunk")).as("digest"), col("chunk"))
         .localCheckpoint(true)
+      // the driver paths' permutation gate (Chain.leafIndex) as one aggregate
+      val g = leaves.agg(count(lit(1)), countDistinct("pos"), min("pos"), max("pos")).head()
+      require(g.getLong(0) == nLeaves && g.getLong(1) == nLeaves &&
+          !g.isNullAt(2) && g.getLong(2) == 0 && g.getLong(3) == nLeaves - 1,
+        s"chunk positions are not a permutation of 0..${nLeaves - 1}: " +
+          s"${g.getLong(0)} rows, ${g.getLong(1)} distinct, min ${g.get(2)}, max ${g.get(3)}")
 
       // ---- leaf labeling ---------------------------------------------------
       val (fixedLeaves, restLeaves) =

@@ -169,12 +169,87 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
       val chain = new ChunkDedup.Chain(spark, n.toLong, store = Some(store))
       steps.foreach(s => chain.checkpoint(ChunkDedup.chunkify(spark, s, 1)))
     }
-    val fresh = new graft.state.SnapshotStore(spark, root) // counter at 0
-    val rows = ChunkDedup.restartFromStore(spark, fresh, 5).collect()
-    assert(rows.length == n)
-    assert(rows.sortBy(_.getLong(0)).map(_.getString(1)).mkString == steps(5))
-    assert(fresh.readCount <= 6,
-      s"restart read ${fresh.readCount} store snapshots — scan not pruned to refs")
+    // both regimes: the driver walk and the forced Spark loop
+    for (sweepMax <- Seq(ChunkDedup.Chain.LOCAL_SWEEP_MAX, 0L)) {
+      val fresh = new graft.state.SnapshotStore(spark, root) // counter at 0
+      val rows = ChunkDedup.restartFromStore(spark, fresh, 5, sweepMax).collect()
+      assert(rows.length == n)
+      assert(rows.sortBy(_.getLong(0)).map(_.getString(1)).mkString == steps(5))
+      assert(fresh.readCount <= 6, s"restart (localSweepMax $sweepMax) read " +
+        s"${fresh.readCount} store snapshots — scan not pruned to refs")
+    }
+  }
+
+  test("a duplicated + missing chunk position fails the checkpoint on all three paths") {
+    // positions 0..6 and 6 again: the row count is right, 7 is missing
+    import spark.implicits._
+    val chunks = "ABCDEFGH".zipWithIndex
+      .map { case (c, p) => (math.min(p, 6).toLong, c.toString) }.toDF("pos", "chunk")
+    for ((name, chain) <- Seq(
+        "serial" -> new ChunkDedup.Chain(spark, 8L),
+        "localsweep" -> new ChunkDedup.Chain(spark, 8L, serialMax = 0L),
+        "distributed" -> new ChunkDedup.Chain(spark, 8L, localSweepMax = 0L, serialMax = 0L))) {
+      val e = intercept[IllegalArgumentException](chain.checkpoint(chunks))
+      assert(e.getMessage.contains("chunk positions are not a permutation of 0..7"),
+        s"$name: ${e.getMessage}")
+    }
+  }
+
+  test("corrupt stores fail restart on both paths: missing or duplicated FIRST row, tampered full_md5") {
+    import java.nio.file.{Files, Path, Paths}
+    val n = 32
+    val steps = Seq("ABCDEFGH" * 4, "ABCDXYZW" * 4)
+    def build(): String = {
+      val root = Files.createTempDirectory("graft_corrupt").toString
+      val chain = new ChunkDedup.Chain(spark, n.toLong,
+        store = Some(new graft.state.SnapshotStore(spark, root)))
+      steps.foreach(s => chain.checkpoint(ChunkDedup.chunkify(spark, s, 1)))
+      root
+    }
+    def snapshot0(root: String): Path = Paths.get(root, "chunk_first", "snapshot=0")
+    // rewrite checkpoint 0's chunk_first, keeping its manifest metadata
+    def rewriteFirst(root: String)(
+        edit: Seq[org.apache.spark.sql.Row] => Seq[org.apache.spark.sql.Row]): Unit = {
+      val st = new graft.state.SnapshotStore(spark, root)
+      val df = st.read("chunk_first", 0)
+      val rows = df.collect().toSeq
+      val meta = Seq("num_chunks", "full_md5").map { k =>
+        k -> (s""""$k":\\s*"([^"]+)"""").r
+          .findFirstMatchIn(st.manifestJson("chunk_first", 0)).get.group(1)
+      }.toMap
+      Files.walk(snapshot0(root)).sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(f => Files.delete(f))
+      st.commitLocal("chunk_first", 0, df.schema, edit(rows), meta)
+    }
+    val missing = build() // position 0 is a FIRST row of checkpoint 0
+    rewriteFirst(missing)(_.filterNot(_.getLong(0) == 0L))
+    val duplicated = build()
+    rewriteFirst(duplicated)(rows => rows :+ rows.find(_.getLong(0) == 0L).get)
+    val tampered = build()
+    val zeros = "0" * 32
+    val mf = snapshot0(tampered).resolve("_MANIFEST.json")
+    Files.write(mf, new String(Files.readAllBytes(mf), "UTF-8")
+      .replaceFirst(""""full_md5":\s*"[0-9a-f]+"""", s""""full_md5": "$zeros"""")
+      .getBytes("UTF-8"))
+    val intact = build()
+    for (sweepMax <- Seq(ChunkDedup.Chain.LOCAL_SWEEP_MAX, 0L)) {
+      def restart(root: String, cid: Int) = ChunkDedup.restartFromStore(spark,
+        new graft.state.SnapshotStore(spark, root), cid, sweepMax)
+      def failure(root: String): String =
+        intercept[IllegalArgumentException](restart(root, 0)).getMessage
+      def resolvedOnly(msg: String): Option[Int] =
+        s"restart\\(0\\) resolved only (\\d+) of $n positions".r
+          .findFirstMatchIn(msg).map(_.group(1).toInt)
+      val m = failure(missing)
+      assert(resolvedOnly(m).exists(_ < n), s"localSweepMax $sweepMax, missing FIRST row: $m")
+      val d = failure(duplicated)
+      assert(resolvedOnly(d).exists(_ > n), s"localSweepMax $sweepMax, duplicated FIRST row: $d")
+      val t = failure(tampered)
+      assert(t.contains(s"!= committed $zeros"), s"localSweepMax $sweepMax, tampered md5: $t")
+      for (cid <- steps.indices)
+        assert(restart(intact, cid).collect().sortBy(_.getLong(0)).map(_.getString(1))
+          .mkString == steps(cid), s"localSweepMax $sweepMax, intact restart($cid)")
+    }
   }
 
   test("thin distributed sweep matches the local path at 4096 chunks") {
@@ -363,24 +438,27 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
 
 class ChunkDedupLocalSweepSpec extends AnyFunSuite with SparkTestBase {
 
-  /** Jobs each `chain.checkpoint` call runs, listener-counted. */
-  private def jobsPerCheckpoint(chain: ChunkDedup.Chain,
-                                steps: Seq[org.apache.spark.sql.DataFrame]): Seq[Int] = {
+  /** `f`'s result and the Spark jobs it ran, listener-counted. */
+  private def withJobs[T](f: => T): (T, Int) = {
     val jobCounter = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobCounter.incrementAndGet()
     }
+    org.apache.spark.sql.graftx.Bridge.drainListenerBus(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
-    try steps.map { chunks =>
+    try {
+      val out = f
       org.apache.spark.sql.graftx.Bridge.drainListenerBus(spark.sparkContext)
-      val before = jobCounter.get()
-      chain.checkpoint(chunks)
-      org.apache.spark.sql.graftx.Bridge.drainListenerBus(spark.sparkContext)
-      jobCounter.get() - before
+      (out, jobCounter.get())
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  /** Jobs each `chain.checkpoint` call runs. */
+  private def jobsPerCheckpoint(chain: ChunkDedup.Chain,
+                                steps: Seq[org.apache.spark.sql.DataFrame]): Seq[Int] =
+    steps.map(chunks => withJobs(chain.checkpoint(chunks))._2)
 
   /** `k` checkpoints of `n` chunks of `width` letters a–d (few distinct
     * chunks ⇒ in-checkpoint duplicates); each later one swaps two aligned
@@ -463,6 +541,51 @@ class ChunkDedupLocalSweepSpec extends AnyFunSuite with SparkTestBase {
     assert(r.numFirstOcur > 0 && r.numShiftDupl > 0)
     assert(restarted(c.restart(2)) == steps(2))
     assert(restarted(ChunkDedup.restartFromStore(spark, store, 2)) == steps(2))
+  }
+
+  /** The job-bound chain's store: 3 local-sweep checkpoints of 4,608
+    * chunks, shared by the restart tests below.
+    */
+  private lazy val sweepStore: (graft.state.SnapshotStore, Seq[Seq[String]]) = {
+    val n = 4608
+    val steps = chain(n, 3, 2, 17)
+    val root = java.nio.file.Files.createTempDirectory("graft_sweepstore").toString
+    val store = new graft.state.SnapshotStore(spark, root)
+    val c = new ChunkDedup.Chain(spark, n.toLong, store = Some(store))
+    steps.foreach(s => c.checkpoint(frame(s)))
+    (store, steps)
+  }
+
+  test("restart job bound: restartFromStore of the last 4608-chunk checkpoint runs <= 2 x referenced checkpoints + 3 jobs") {
+    val (store, steps) = sweepStore
+    val cid = steps.length - 1
+    val reads0 = store.readCount
+    val (out, jobs) = withJobs(ChunkDedup.restartFromStore(spark, store, cid))
+    assert(restarted(out) == steps(cid))
+    // the walk reads first + shift of each checkpoint it visits, and can
+    // visit at most every checkpoint up to cid
+    val visited = (store.readCount - reads0) / 2
+    assert(visited >= 1 && visited <= cid + 1, s"${store.readCount - reads0} store reads")
+    assert(jobs <= 2 * visited + 3,
+      s"restart($cid) ran $jobs jobs over $visited referenced checkpoints")
+  }
+
+  test("restart parity: the driver walk and the Spark loop return identical rows") {
+    val n = 48 // ragged, 6 checkpoints, checkpoint 5 shifts onto checkpoint 0
+    val steps48 = chain(n, 6, 2, 41)
+    val root = java.nio.file.Files.createTempDirectory("graft_restart_parity").toString
+    val store48 = new graft.state.SnapshotStore(spark, root)
+    val c = new ChunkDedup.Chain(spark, n.toLong, store = Some(store48), serialMax = 0L)
+    steps48.foreach(s => c.checkpoint(frame(s)))
+    assert(c.history(5).referencedCheckpoints.collect().map(_.getInt(0)).contains(0))
+    val (sweep, sweepSteps) = sweepStore
+    for ((store, steps) <- Seq((store48, steps48), (sweep, sweepSteps)); cid <- steps.indices) {
+      def rows(localSweepMax: Long) = ChunkDedup.restartFromStore(spark, store, cid,
+        localSweepMax).collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+      val driver = rows(ChunkDedup.Chain.LOCAL_SWEEP_MAX)
+      assert(driver == rows(0L), s"n=${steps(cid).length} restart($cid) regimes differ")
+      assert(driver.map(_._2) == steps(cid), s"n=${steps(cid).length} restart($cid) bytes")
+    }
   }
 
   test("committed-store parity: serial, local-sweep and distributed paths commit identical tables and manifest meta") {
