@@ -38,6 +38,8 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     * repartition (≈128 MB files for the narrow state rows at 100-TB scale).
     */
   private val targetRowsPerFile = 1L << 21
+  private def fileCount(rows: Long): Int =
+    math.max(1L, (rows + targetRowsPerFile - 1) / targetRowsPerFile).toInt
 
   /** Write + commit one snapshot of a table. No-op if already committed.
     *
@@ -57,7 +59,7 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     if (isCommitted(table, snap)) return
     val df = approxRows match {
       case Some(r) =>
-        val k = math.max(1L, (r + targetRowsPerFile - 1) / targetRowsPerFile).toInt
+        val k = fileCount(r)
         if (k < spark.sparkContext.defaultParallelism) df0.repartition(k) else df0
       case None => df0
     }
@@ -146,18 +148,6 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** Compute-or-reuse wrapper over [[commitLocal]] — the driver-side stage
-    * runner (rows are only materialized when the snapshot is missing, so
-    * resume skips the collect entirely).
-    */
-  def stageLocal(table: String, snap: Int,
-                 schema: org.apache.spark.sql.types.StructType,
-                 meta: Map[String, String] = Map.empty)
-                (computeRows: => Seq[org.apache.spark.sql.Row]): DataFrame = {
-    if (!isCommitted(table, snap)) commitLocal(table, snap, schema, computeRows, meta)
-    read(table, snap)
-  }
-
   def read(table: String, snap: Int): DataFrame = {
     require(isCommitted(table, snap), s"$table/snapshot=$snap not committed")
     nReads.incrementAndGet()
@@ -179,14 +169,19 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     * scans the newest compacted prefix + the per-snapshot tail, so a deep
     * chain's union fan-in is bounded by the compaction interval instead of
     * growing with chain depth. Idempotent and crash-safe like any commit.
+    *
+    * The input is a plain union of committed scans, so the file count comes
+    * from `coalesce` — no exchange: [[commit]]'s `repartition` would
+    * re-shuffle the whole prefix (signature and shingle arrays included) at
+    * every compaction.
     */
   def compactUpTo(table: String, upTo: Int): Unit =
     if (!isCommitted(compactName(table), upTo)) {
       // the rewrite's size is exactly the sum of its inputs' manifests
       val rows = (0 to upTo).filter(isCommitted(table, _))
         .map(committedRows(table, _)).sum
-      commit(compactName(table), upTo, readRange(table, 0, upTo),
-        Map("compacted_through" -> upTo.toString), Some(rows))
+      commit(compactName(table), upTo, readRange(table, 0, upTo).coalesce(fileCount(rows)),
+        Map("compacted_through" -> upTo.toString))
     }
 
   /** Read committed snapshots snapLo..snapHi of a table as one DataFrame with

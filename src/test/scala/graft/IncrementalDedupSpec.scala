@@ -25,6 +25,24 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
         .otherwise(col("text")))
   }
 
+  private def rmrf(p: Path): Unit = if (Files.exists(p))
+    Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
+
+  /** a committed snapshot's rows as sorted strings (arrays spelled out) */
+  private def tableRows(s: SnapshotStore, t: String, snap: Int): Seq[String] =
+    s.read(t, snap).collect().map(_.toSeq.map {
+      case a: scala.collection.Seq[_] => a.mkString("[", ",", "]")
+      case v => String.valueOf(v)
+    }.mkString("|")).sorted.toSeq
+
+  private def parquetFiles(root: String, t: String, snap: Int): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val ls = Files.list(Paths.get(root, t, s"snapshot=$snap"))
+    try ls.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".parquet")).toSeq.sorted
+    finally ls.close()
+  }
+
   private def mtimes(root: Path): Map[String, Long] = {
     import scala.jdk.CollectionConverters._
     Files.walk(root).iterator().asScala
@@ -88,8 +106,6 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
     assert(mtimes(Paths.get(root)) == before, "resume must not rewrite committed stages")
 
     // ---- kill/resume: drop the last two stages, rerun completes them ------
-    def rmrf(p: Path): Unit = if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
     rmrf(Paths.get(root, "assignments", "snapshot=1"))
     rmrf(Paths.get(root, "metrics", "snapshot=1"))
     val inc3 = new IncrementalDedup(spark, new SnapshotStore(spark, root), cfg)
@@ -302,8 +318,8 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
     val snap0 = normal.unionByName(floodDf(10000, 11500))
     val snap1 = snap0.unionByName(floodDf(11500, 13000))
 
-    val store = new SnapshotStore(spark,
-      Files.createTempDirectory("graft_inc_flood").toString)
+    val root = Files.createTempDirectory("graft_inc_flood").toString
+    val store = new SnapshotStore(spark, root)
     val inc = new IncrementalDedup(spark, store, cfg)
     inc.processSnapshot(0, snap0)
     val assign = inc.processSnapshot(1, snap1)
@@ -321,6 +337,18 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
     val e1 = store.committedRows("edges", 1)
     assert(e0 < 52L * 1500 * 2 && e1 < 52L * 1500 * 2,
       s"edge volume not bounded: $e0 / $e1")
+    // snapshot 0 starts as a driver pass and stops at the candidate bound
+    // (the flood's 83k star candidates exceed LOCAL_VERIFY_MAX_PAIRS): its
+    // pages_keyed and content are committed driver-direct, and the
+    // distributed pass resumes at the edges stage. Snapshot 1 stays under
+    // the bound and is one driver pass again.
+    val local = Seq("part-00000-local.parquet")
+    for (t <- Seq("pages_keyed", "content"); sn <- 0 to 1)
+      assert(parquetFiles(root, t, sn) == local,
+        s"$t/$sn not committed by the driver pass: ${parquetFiles(root, t, sn)}")
+    assert(parquetFiles(root, "edges", 0).nonEmpty && parquetFiles(root, "edges", 0) != local,
+      s"edges/0 must come from the distributed stage: ${parquetFiles(root, "edges", 0)}")
+    assert(parquetFiles(root, "edges", 1) == local)
   }
 
   test("commitLocal writes the same table Spark's writer commits (schema + rows + protocol)") {
@@ -426,11 +454,13 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
   test("small-regime snapshot job count stays at the r6.3 floor") {
     // the weather-independent cost of a toy-scale snapshot is its JOB count
     // (scheduling latency dominates; wall seconds on this host carry 1.5-4x
-    // ambient noise). r6.3 eliminated the edges/assignments/metrics write
-    // jobs (zero-job LocalParquet commits) and the content join-back
-    // exchange: 23/34 -> 13/20 jobs at bench scale. Ceilings sit just above
-    // the measured floor so any regression (a new eager action, a lost
-    // local dispatch, a reintroduced schema-inference job) fails loudly.
+    // ambient noise). On a 3-snapshot chain, each small snapshot is one
+    // driver pass: the pages_keyed
+    // collect and the fresh contents' features at snapshot 0; plus the
+    // previous (url, ckey), the accumulated contents, the old candidates'
+    // shingle sets and the prior edges later. Ceilings sit just above that
+    // floor so any regression (a new eager action, a lost dispatch, a
+    // reintroduced schema-inference job) fails loudly.
     val jobCounter = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -440,19 +470,113 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
     val (n, m) = (250, 50)
     val root = Files.createTempDirectory("graft_inc_jobs").toString
     val inc = new IncrementalDedup(spark, new SnapshotStore(spark, root), cfg)
-    val pages = Seq(0, 1).map(s => snapshotPages(s, n, m))
+    // snapshot 2 revises every 53rd page of snapshot 1 once more
+    val pages = Seq(snapshotPages(0, n, m), snapshotPages(1, n, m),
+      snapshotPages(1, n, m).withColumn("text", when(col("doc_id") % 53 === 0,
+        concat(col("text"), lit(" second wave qq7 qq8"))).otherwise(col("text"))))
     pages.foreach(_.count()) // materialize inputs outside the counted window
     spark.sparkContext.addSparkListener(listener)
     val jobs =
-      try Seq(0, 1).map { s =>
+      try pages.indices.map { s =>
         org.apache.spark.sql.graftx.Bridge.drainListenerBus(spark.sparkContext)
         val before = jobCounter.get()
         inc.processSnapshot(s, pages(s))
         org.apache.spark.sql.graftx.Bridge.drainListenerBus(spark.sparkContext)
         jobCounter.get() - before
       } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs(0) <= 16, s"snapshot 0 took ${jobs(0)} jobs (floor was 13)")
-    assert(jobs(1) <= 24, s"snapshot 1 took ${jobs(1)} jobs (floor was 20)")
+    assert(jobs(0) <= 3, s"snapshot 0 took ${jobs(0)} jobs (floor is 2)")
+    for (s <- 1 to 2) assert(jobs(s) <= 7, s"snapshot $s took ${jobs(s)} jobs (floor is 6)")
+  }
+
+  test("partial resume of a killed snapshot recommits identical tables, on both dispatches") {
+    // a run killed after `content` (or after `pages_keyed`) of snapshot 1:
+    // the rerun recomputes only the missing stages, and every committed
+    // table equals the uninterrupted run's — on the driver pass and on the
+    // forced-distributed pass alike
+    val (n, m) = (250, 50)
+    def copyTree(from: Path, to: Path): Unit = Files.walk(from).forEach { p =>
+      val q = to.resolve(from.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(q) else Files.copy(p, q)
+    }
+    val tables = Seq("pages_keyed", "content", "edges", "assignments", "metrics")
+    for (local <- Seq(true, false)) {
+      val ref = Files.createTempDirectory(s"graft_inc_resume_ref_$local")
+      val inc = new IncrementalDedup(spark, new SnapshotStore(spark, ref.toString), cfg,
+        localDispatch = local)
+      for (s <- 0 to 1) inc.processSnapshot(s, snapshotPages(s, n, m))
+      for (killed <- Seq(Seq("edges", "assignments", "metrics"),
+                         Seq("content", "edges", "assignments", "metrics"))) {
+        val root = Files.createTempDirectory(s"graft_inc_resume_$local")
+        copyTree(ref, root)
+        killed.foreach(t => rmrf(root.resolve(t).resolve("snapshot=1")))
+        val store = new SnapshotStore(spark, root.toString)
+        new IncrementalDedup(spark, store, cfg, localDispatch = local)
+          .processSnapshot(1, snapshotPages(1, n, m))
+        val refStore = new SnapshotStore(spark, ref.toString)
+        for (t <- tables; s <- 0 to 1) {
+          // metrics: identical except the wall-clock column
+          def rows(st: SnapshotStore) =
+            if (t == "metrics") tableRows(st, t, s).map(_.split('|').dropRight(1).mkString("|"))
+            else tableRows(st, t, s)
+          assert(rows(store) == rows(refStore),
+            s"$t/$s differs after resuming without ${killed.mkString(",")} (local=$local)")
+        }
+      }
+    }
+  }
+
+  test("collectAtMost: every row at the bound, None one row past it, at most max + 1 rows per task") {
+    import spark.implicits._
+    val pulled = spark.sparkContext.collectionAccumulator[Int]("rows pulled per partition")
+    val ds = spark.sparkContext.parallelize(0 until 1000, 4).map { i =>
+      pulled.add(org.apache.spark.TaskContext.getPartitionId()); i
+    }.toDS()
+    assert(IncrementalDedup.collectAtMost(ds, 1000).map(_.sorted.toSeq)
+      == Some((0 until 1000).toSeq))
+    assert(IncrementalDedup.collectAtMost(ds, 999).isEmpty)
+    pulled.reset()
+    assert(IncrementalDedup.collectAtMost(ds, 10).isEmpty)
+    import scala.jdk.CollectionConverters._
+    // the job is cancelled past the bound, so tasks it killed report nothing
+    val perPart = pulled.value.asScala.groupBy(identity).map { case (p, v) => p -> v.size }
+    assert(perPart.nonEmpty && perPart.values.forall(_ <= 11),
+      s"a task pulled more than max + 1 rows: $perPart")
+    assert(IncrementalDedup.collectAtMost(spark.emptyDataFrame, 0).map(_.length) == Some(0))
+  }
+
+  test("collectAtMost past the bound cancels its job before the results trip spark.driver.maxResultSize") {
+    import spark.implicits._
+    // 100 tasks × 501 rows × ~200 B ≈ 10 MB of task results against a 4 MB
+    // limit: a job that ran every task would abort. The limit is read when a
+    // stage is submitted, so it is set on the live context for this spec only.
+    val sc = spark.sparkContext
+    val conf = classOf[org.apache.spark.SparkContext].getMethod("conf").invoke(sc)
+      .asInstanceOf[org.apache.spark.SparkConf]
+    val key = "spark.driver.maxResultSize"
+    val saved = conf.getOption(key)
+    val ds = spark.range(0, 100000, 1, 100).map(i => "x" * 200 + i)
+    val finished = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskInfo.successful) finished.incrementAndGet()
+    }
+    conf.set(key, "4m")
+    try {
+      val err = intercept[org.apache.spark.SparkException](
+        sc.runJob(ds.rdd, (it: Iterator[String]) => it.take(501).toArray))
+      assert(err.getMessage.contains("maxResultSize"), err.getMessage)
+      org.apache.spark.sql.graftx.Bridge.drainListenerBus(sc)
+      sc.addSparkListener(listener)
+      try assert(IncrementalDedup.collectAtMost(ds, 500).isEmpty)
+      finally {
+        org.apache.spark.sql.graftx.Bridge.drainListenerBus(sc)
+        sc.removeSparkListener(listener)
+      }
+      assert(finished.get() < 100, s"all ${finished.get()} tasks ran to completion")
+    } finally saved match {
+      case Some(v) => conf.set(key, v)
+      case None => conf.remove(key)
+    }
   }
 
   test("driver cluster-relabel kernel == forced-distributed relabel (random graph)") {
