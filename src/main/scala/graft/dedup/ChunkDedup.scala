@@ -24,10 +24,13 @@ import graft.functions.gf
   *     style accumulating state table, NOT a hash table: insert-if-absent is
   *     a left-anti join + union (SURVEY.md §2.4 J1).
   *
-  * Restart (tree_approach.cpp:713-1128) is the inverse: reconstruct any
-  * checkpoint from stored first-occurrence bytes + shift metadata by
-  * resolving every position's claim newest → oldest (§2.8: per-step
-  * left-anti fall-through).
+  * Restart (tree_approach.cpp:713-1128) is the inverse, and like the
+  * reference's it reads only the incremental files: [[restartFromStore]]
+  * reconstructs any checkpoint from its store's first-occurrence bytes +
+  * shift metadata by resolving every position's claim newest → oldest
+  * (§2.8: per-step left-anti fall-through), and checks the rebuilt buffer
+  * against the full-buffer MD5 committed with the checkpoint. A chain
+  * keeps no reconstruction of its own.
   *
   * Scale note: up to Chain.LOCAL_SWEEP_MAX chunks a checkpoint collects
   * only its 16-byte leaf digests to the driver, and a restart only the
@@ -110,26 +113,77 @@ object ChunkDedup {
       .toDF("pos", "src_chkpt", "src_pos")
   }
 
-  /** MD5 of the full checkpoint buffer (chunks concatenated in position
-    * order) — the reference's whole-buffer restart digest
-    * (restart_chkpt_files.cpp:104-108). One aggregation job; a full-buffer
-    * hash is inherently sequential in ANY engine, so the sort+concat runs
-    * inside one agg rather than pretending to parallelize.
-    */
-  private[graft] def fullBufferMd5(chunks: DataFrame): String =
-    chunks.agg(md5(concat_ws("",
-        array_sort(collect_list(struct(col("pos"), col("chunk"))))
-          .getField("chunk")).cast("binary")))
-      .head().getString(0)
-
-  /** [[fullBufferMd5]] of chunks already in position order, streamed on
-    * one thread: the UTF-8 bytes of each non-null chunk, as `concat_ws`
-    * concatenates them.
+  /** MD5 of the full checkpoint buffer — the reference's whole-buffer
+    * restart digest (restart_chkpt_files.cpp:104-108) — over chunks already
+    * in position order: the UTF-8 bytes of each non-null chunk, streamed on
+    * one thread.
     */
   private[dedup] def md5Hex(chunksInOrder: Iterator[String]): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
     chunksInOrder.foreach(c => if (c != null) md.update(c.getBytes(StandardCharsets.UTF_8)))
     md.digest().map("%02x".format(_)).mkString
+  }
+
+  /** Row count and [[md5Hex]] of a (pos, chunk) frame in ONE single-task
+    * pass: `coalesce(1)` and a per-task sort by position, no exchange. A
+    * full-buffer hash is sequential in any engine; the per-leaf murmur128
+    * Merkle tree is the parallel digest.
+    */
+  private[dedup] def countAndMd5(chunks: DataFrame): (Long, String) = {
+    val spark = chunks.sparkSession
+    import spark.implicits._
+    chunks.select("pos", "chunk").coalesce(1).sortWithinPartitions("pos")
+      .mapPartitions { rows =>
+        var k = 0L
+        val h = md5Hex(rows.map { r => k += 1; r.getString(1) })
+        Iterator((k, h))
+      }
+      .collect().headOption.getOrElse((0L, md5Hex(Iterator.empty)))
+  }
+
+  /** The thin bottom-up level sweep (the Spark shape of the reference's
+    * level-by-level tree build): from the deepest heap level up, frontier
+    * siblings pair into their parent, digest murmur128(left ‖ right);
+    * `keep` filters those parents and gives them the frontier's other
+    * columns; kept parents replace their children on the frontier, and a
+    * level's unabsorbed nodes retire as region roots. Only the live
+    * frontier is materialized: O(frontier leaves) in total, not
+    * O(nodes · log n). Ragged heaps are correct: a node pairs only with its
+    * own sibling, whichever level its subtree's height puts it on.
+    * @param frontier0 (node, digest, …) rows; `keep` returns the same columns
+    * @return (region roots, every kept parent)
+    */
+  private[dedup] def thinSweep(frontier0: DataFrame, nLeaves: Long,
+                               keep: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+    var frontier = frontier0.localCheckpoint(true)
+    var roots = frontier.limit(0)
+    var internals = frontier.limit(0)
+    for (lvl <- level(2 * nLeaves - 2) to 1 by -1) {
+      // exact integer level (bin-string width): floor(log2(…)) on
+      // doubles mis-rounds near 2^k for node ids ≥ ~2^48
+      val withLvl = frontier
+        .withColumn("lvl", (length(bin(col("node") + 1)) - 1).cast("int"))
+      val lvlNodes = withLvl.filter(col("lvl") === lvl).drop("lvl")
+      val parents = keep(lvlNodes
+          .withColumn("parent", ((col("node") - 1) / 2).cast("long"))
+          .withColumn("is_left", (col("node") % 2) === 1)
+          .groupBy("parent").agg(
+            count(lit(1)).as("cnt"),
+            max(when(col("is_left"), col("digest"))).as("dl"),
+            max(when(!col("is_left"), col("digest"))).as("dr"))
+          .filter(col("cnt") === 2)
+          .select(col("parent").as("node"),
+            gf.murmur128(concat(col("dl"), col("dr"))).as("digest")))
+        .localCheckpoint(true)
+      val absorbed = parents.select((col("node") * 2 + 1).as("node"))
+        .union(parents.select((col("node") * 2 + 2).as("node")))
+      roots = roots.union(lvlNodes.join(absorbed, Seq("node"), "left_anti"))
+      internals = internals.union(parents)
+      frontier = withLvl.filter(col("lvl") =!= lvl).drop("lvl").union(parents)
+        .localCheckpoint(true)
+    }
+    // anything left (the level-0 root, single-leaf trees) is a region root
+    (roots.union(frontier), internals)
   }
 
   /** Split a text into fixed-size character chunks (ragged tail), one row per
@@ -168,10 +222,10 @@ object ChunkDedup {
     *     metadata rows (≤ 2 per position);
     *   - above it, the walk is a Spark loop: per visited checkpoint a few
     *     joins over narrow columns, two localCheckpoints and a max
-    *     aggregate; then a count and the [[fullBufferMd5]] aggregate.
+    *     aggregate; then the same count + MD5 pass.
     * Both regimes gate the row count (every position resolved exactly once;
     * this also catches a duplicated FIRST row) and the full-buffer MD5
-    * committed with the checkpoint.
+    * committed with the checkpoint, both from one [[countAndMd5]] pass.
     */
   def restartFromStore(spark: SparkSession, store: graft.state.SnapshotStore,
                        cid: Int): DataFrame =
@@ -205,15 +259,19 @@ object ChunkDedup {
       s"restart($cid) resolved only $got of $numChunks positions — store is " +
         "inconsistent (missing first/shift rows or claims fell past chkpt 0)")
 
-  /** Full-buffer digest gate (restart_chkpt_files.cpp:104-108): the
-    * reconstruction's MD5 must equal the digest recorded at commit —
-    * stronger than row counts, catches any content-level corruption.
+  /** Both gates over one [[countAndMd5]] pass of the reconstruction: the
+    * row count, then the full-buffer digest recorded at commit
+    * (restart_chkpt_files.cpp:104-108) — stronger than row counts, it
+    * catches any content-level corruption.
     */
-  private def requireMd5(cid: Int, actual: => String, committed: Option[String]): Unit =
-    for (expected <- committed) {
-      val a = actual
-      require(a == expected, s"restart($cid) full-buffer md5 $a != committed $expected")
-    }
+  private def verified(cid: Int, out: DataFrame, numChunks: Long,
+                       committed: Option[String]): DataFrame = {
+    val (got, actual) = countAndMd5(out)
+    requireResolved(cid, got, numChunks)
+    for (expected <- committed)
+      require(actual == expected, s"restart($cid) full-buffer md5 $actual != committed $expected")
+    out
+  }
 
   /** Per-checkpoint restart index: the distinct src positions `keys`
     * (ascending) that claims resolved onto this checkpoint's FIRST rows,
@@ -318,19 +376,7 @@ object ChunkDedup {
       .map(c => firsts(c).select(explode(to(lit(c), col("pos"))).as("pos"), col("chunk")))
       .reduce(_ union _).localCheckpoint(true)
     bc.destroy()
-
-    // ---- one verify pass: row count and full-buffer MD5 --------------------
-    import spark.implicits._
-    val (got, actual) = out.coalesce(1).sortWithinPartitions("pos")
-      .mapPartitions { rows =>
-        var k = 0L
-        val h = md5Hex(rows.map { r => k += 1; r.getString(1) })
-        Iterator((k, h))
-      }
-      .collect().headOption.getOrElse((0L, ""))
-    requireResolved(cid, got, n)
-    requireMd5(cid, actual, committedMd5)
-    out
+    verified(cid, out, n, committedMd5)
   }
 
   /** The Spark-loop regime of [[restartFromStore]] (n > LOCAL_SWEEP_MAX). */
@@ -383,27 +429,27 @@ object ChunkDedup {
       val nxt = pending.agg(max("src_chkpt")).head()
       cur = if (nxt.isNullAt(0)) -1 else nxt.getInt(0)
     }
-    val out = resolved.select("pos", "chunk").localCheckpoint(true)
-    requireResolved(cid, out.count(), numChunks)
-    requireMd5(cid, fullBufferMd5(out), committedMd5)
-    out
+    verified(cid, resolved.select("pos", "chunk").localCheckpoint(true), numChunks,
+      committedMd5)
   }
 
   object Chain {
     /** Checkpoints up to this many chunks take ONE driver pass each (one
-      * digest job, one distinct-map probe, one insert); larger ones use the
-      * per-level DataFrame sweep. Driver footprint at the bound: the
-      * collected (pos, digest) Rows (≈ 90 B boxed each, ≈ 95 MB transient),
-      * the retained previous-checkpoint leaf digests (16 B × n = 16 MB),
-      * the full Merkle tree's 2n−1 16-byte slots (32 MB transient), and the
-      * probe frame of ≤ 2n−1 (node, digest) rows (≈ 100 MB transient) —
-      * a few hundred MB on the 8 g driver heap. [[restartFromStore]]
-      * switches regime at the same bound; its driver walk holds 28 MB of
-      * per-position claim and shift arrays at 2²⁰ chunks, plus a broadcast
-      * src_pos → positions index of ≈ 20 MB. Chunk CONTENT is
-      * never collected (the FIRST rows, the commits and the restart's
-      * reconstruction stay distributed), which is what lets this bound sit
-      * 256× above SERIAL_MAX.
+      * ordered digest + MD5 job, one distinct-map probe, one insert, one
+      * chunk_first write); larger ones use the per-level DataFrame sweep.
+      * Driver footprint at the bound: the digest job's one task result
+      * (8 B position + 16 B digest per chunk, 24 MB), kept as the next
+      * checkpoint's leaf digests (16 MB), the full Merkle tree's 2n−1
+      * 16-byte slots (32 MB transient), the probe frame of ≤ 2n−1 (node,
+      * digest) rows (≈ 100 MB transient), and the result's per-leaf label
+      * frame, a local relation of n rows (≈ 90 MB while the caller holds
+      * the result) — a few hundred MB on the 8 g driver heap.
+      * [[restartFromStore]] switches regime at the same bound; its driver
+      * walk holds 28 MB of per-position claim and shift arrays at 2²⁰
+      * chunks, plus a broadcast src_pos → positions index of ≈ 20 MB.
+      * Chunk CONTENT is never collected (the FIRST rows, the commit and
+      * restartFromStore's reconstruction stay distributed), which is what
+      * lets this bound sit 256× above SERIAL_MAX.
       */
     final val LOCAL_SWEEP_MAX: Long = 1L << 20
 
@@ -443,6 +489,17 @@ object ChunkDedup {
         seen.set(p.toInt)
         p.toInt
       }
+    }
+
+    /** [[leafIndex]]'s gate as one aggregate over a Spark frame's `pos`
+      * column, for the paths that never collect their positions.
+      */
+    private[dedup] def requirePermutation(positions: DataFrame, n: Long): Unit = {
+      val g = positions.agg(count(lit(1)), countDistinct("pos"), min("pos"), max("pos")).head()
+      require(g.getLong(0) == n && g.getLong(1) == n &&
+          !g.isNullAt(2) && g.getLong(2) == 0 && g.getLong(3) == n - 1,
+        s"chunk positions are not a permutation of 0..${n - 1}: " +
+          s"${g.getLong(0)} rows, ${g.getLong(1)} distinct, min ${g.get(2)}, max ${g.get(3)}")
     }
 
     /** The full Merkle tree of one checkpoint as one flat array of 2n−1
@@ -626,8 +683,10 @@ object ChunkDedup {
     * incremental outputs (first-occurrence bytes + shift metadata — exactly
     * the reference's checkpoint file sections, tree_approach.cpp:593-622)
     * are committed durably, and [[ChunkDedup.restartFromStore]] reconstructs
-    * ANY checkpoint in a fresh process from files alone
-    * (restart_chkpt_files.cpp:171-195).
+    * ANY checkpoint from files alone (restart_chkpt_files.cpp:171-195). That
+    * is the only restart: the chain keeps no reconstruction and no past
+    * result, only the distinct map and the previous checkpoint's leaf
+    * digests (its FIXED probe).
     */
   final class Chain(spark: SparkSession, numChunks: Long,
                     localSweepMax: Long = Chain.LOCAL_SWEEP_MAX,
@@ -636,7 +695,6 @@ object ChunkDedup {
     require(numChunks >= 1)
     private val nLeaves = numChunks
     private val leafBase = nLeaves - 1 // chunk j ↦ node leafBase + j
-    private val maxLevel = level(2 * nLeaves - 2)
 
     /** digest → first occurrence (chkpt, node); accumulates across chkpts. */
     private var distinctMap: DataFrame = _
@@ -647,18 +705,12 @@ object ChunkDedup {
       * driver paths' FIXED probe. */
     private var prevLeaves: Array[Byte] = _
     private var curId: Int = -1
-    private val results = scala.collection.mutable.ArrayBuffer.empty[ChkptResult]
-    /** one reconstruction (pos, chunk) per checkpoint, for restart(). */
-    private val recons = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
-    // serial-mode state (toy chains, store-backed or not: one driver map per
-    // structure; commits are driver-direct — Chain.SERIAL_MAX)
+    // serial-mode state (toy chains, store-backed or not: the distinct map
+    // is a driver map; commits are driver-direct — Chain.SERIAL_MAX)
     private val serialMode = numChunks <= serialMax
     private val sDistinct =
       scala.collection.mutable.LinkedHashMap.empty[Chain.Digest, (Int, Long)]
-    private val sRecon = scala.collection.mutable.ArrayBuffer.empty[Array[String]]
-
-    def history: Seq[ChkptResult] = results.toSeq
 
     /** Process the next checkpoint; chunks = (pos: Long, chunk: String). */
     def checkpoint(chunks: DataFrame): ChkptResult =
@@ -668,6 +720,24 @@ object ChunkDedup {
 
     private def firstMeta(fullMd5: String): Map[String, String] =
       Map("num_chunks" -> numChunks.toString, "full_md5" -> fullMd5)
+
+    /** The driver paths' result: per-leaf labels and shift sources as local
+      * relations built from the driver pass — no job until a caller reads
+      * them.
+      */
+    private def driverResult(cid: Int, r: Chain.Resolved,
+                             firstLeaves: DataFrame): ChkptResult = {
+      import spark.implicits._
+      import r.{labels, srcOf}
+      ChkptResult(cid,
+        labels.indices.map(p => (leafBase + p, labels(p))).toDF("node", "label"),
+        r.counts.getOrElse(FIRST, 0L), r.counts.getOrElse(SHIFT, 0L),
+        firstLeaves,
+        labels.indices.collect {
+          case p if labels(p) == SHIFT => (p.toLong, srcOf(p)._1, srcOf(p)._2 - leafBase)
+        }.toDF("pos", "src_chkpt", "src_pos"),
+        r.regionSizes)
+    }
 
     /** Serial path: identical semantics, one collect, zero shuffles — the
       * reference's in-memory single-device execution. It shares the
@@ -690,24 +760,9 @@ object ChunkDedup {
       val r = Chain.resolve(cid, leaves, prevLeaves,
         p => sDistinct.get(Chain.key(Chain.slot(leaves, p))),
         (_, d) => sDistinct.get(d), (d, src) => sDistinct.put(d, src))
-      import r.{labels, srcOf}
-
-      // ---- outputs (tiny local DataFrames; no jobs until consumed) ---------
-      import spark.implicits._
-      val labelDf = (0 until n).map(p => ((leafBase + p).toLong, labels(p)))
-        .toDF("node", "label")
       val firstRows = (0 until n).collect {
-        case p if labels(p) == FIRST => (p.toLong, chunkStrs(p))
+        case p if r.labels(p) == FIRST => (p.toLong, chunkStrs(p))
       }
-      val shiftDf = (0 until n).collect {
-        case p if labels(p) == SHIFT =>
-          (p.toLong, srcOf(p)._1, srcOf(p)._2 - leafBase)
-      }.toDF("pos", "src_chkpt", "src_pos")
-
-      val res = ChkptResult(cid, labelDf,
-        r.counts.getOrElse(FIRST, 0L), r.counts.getOrElse(SHIFT, 0L),
-        firstRows.toDF("pos", "chunk"), shiftDf, r.regionSizes)
-      results += res
 
       // durable incremental checkpoint — the same two file sections, schema
       // and manifest metadata as the Spark paths (restartFromStore is
@@ -715,39 +770,48 @@ object ChunkDedup {
       // so the whole checkpoint is one input collect and zero write jobs
       // (parity + job count spec-gated)
       store.foreach { st =>
-        if (!st.isCommitted("chunk_first", cid)) {
-          st.commitLocal("chunk_first", cid, Chain.firstSchema,
-            firstRows.map { case (p, c) => Row(p, c) },
-            firstMeta(md5Hex(chunkStrs.iterator)))
-        }
+        st.commitLocal("chunk_first", cid, Chain.firstSchema,
+          firstRows.map { case (p, c) => Row(p, c) }, firstMeta(md5Hex(chunkStrs.iterator)))
         st.commitLocal("chunk_shift", cid, Chain.shiftSchema, r.shiftRegions)
       }
-
-      sRecon += chunkStrs
       prevLeaves = leaves
-      res
+      import spark.implicits._
+      driverResult(cid, r, firstRows.toDF("pos", "chunk"))
     }
 
     /** Local-sweep path (SERIAL_MAX < n ≤ LOCAL_SWEEP_MAX): ONE driver pass
-      * per checkpoint. One job collects the leaf digests (never the
-      * content); the driver builds the full Merkle tree and runs the serial
-      * path's pass ([[Chain.resolve]]), answering every distinct-map
-      * question from ONE probe — the non-FIXED leaves plus every internal, since
-      * Merkle digests do not depend on labels — and ONE insert. The other
-      * jobs are the outputs: the per-leaf frame, the FIRST rows, the
-      * reconstruction and the chunk_first commit (chunk_shift is written
-      * driver-direct).
+      * per checkpoint. One job streams the chunks in position order
+      * through one task and returns every leaf digest (never the content)
+      * and the full-buffer MD5; the driver builds the full Merkle tree and
+      * runs the serial path's pass ([[Chain.resolve]]), answering every
+      * distinct-map question from ONE probe — the non-FIXED leaves plus
+      * every internal, since Merkle digests do not depend on labels — and
+      * ONE insert. The only other job is the chunk_first write (chunk_shift
+      * is written driver-direct); the result's frames run nothing until
+      * read.
       */
     private def localSweepCheckpoint(chunks: DataFrame): ChkptResult = {
       curId += 1
       val cid = curId
       val n = numChunks.toInt
-      val rows = chunks.select(col("pos"), gf.murmur128(col("chunk"))).collect()
-      val leaves = new Array[Byte](16 * n)
-      Chain.leafIndex(rows.map(_.getLong(0)), n).iterator.zip(rows.iterator)
-        .foreach { case (p, r) =>
-          System.arraycopy(r.getAs[Array[Byte]](1), 0, leaves, 16 * p, 16)
-        }
+      val (positions, leaves, fullMd5) = {
+        import spark.implicits._
+        chunks.select(col("pos"), col("chunk")).coalesce(1).sortWithinPartitions("pos")
+          .mapPartitions { rows =>
+            val pos = Array.newBuilder[Long]
+            val digests = new java.io.ByteArrayOutputStream
+            val h = md5Hex(rows.map { r =>
+              pos += r.getLong(0)
+              digests.write(graft.functions.Impl.murmur128Digest(
+                r.getString(1).getBytes(StandardCharsets.UTF_8)))
+              r.getString(1)
+            })
+            Iterator((pos.result(), digests.toByteArray, h))
+          }
+          .collect().headOption.getOrElse((Array.emptyLongArray, Array.emptyByteArray, ""))
+      }
+      // sorted by position, a permutation of 0..n−1 puts each digest in its slot
+      Chain.leafIndex(positions, n)
       val tree = Chain.merkleTree(leaves)
 
       // ---- one probe of the map as it stood before this checkpoint ---------
@@ -774,7 +838,6 @@ object ChunkDedup {
       val inserts = scala.collection.mutable.LinkedHashMap.empty[Chain.Digest, (Int, Long)]
       val r = Chain.resolve(cid, leaves, prevLeaves, p => oldHit(leafBase + p),
         (u, d) => oldHit(u).orElse(inserts.get(d)), (d, src) => inserts.put(d, src))
-      import r.{labels, srcOf}
 
       // ---- one insert --------------------------------------------------------
       if (inserts.nonEmpty) {
@@ -785,57 +848,25 @@ object ChunkDedup {
           .localCheckpoint(true)
       }
 
-      // ---- outputs -------------------------------------------------------------
-      // one checkpointed per-leaf frame: every position's label and claim
-      // (FIRST → itself, FIXED → same position of cid−1, SHIFT → its
-      // source), so history pins no driver collection
-      val perLeaf = {
-        import spark.implicits._
-        (0 until n).map { p =>
-          labels(p) match {
-            case FIRST => (p.toLong, FIRST, cid, p.toLong)
-            case FIXED => (p.toLong, FIXED, cid - 1, p.toLong)
-            case _ => (p.toLong, SHIFT, srcOf(p)._1, srcOf(p)._2 - leafBase)
-          }
-        }.toDF("pos", "label", "src_chkpt", "src_pos").localCheckpoint(true)
-      }
+      // ---- outputs: the FIRST rows are a filter over the input ---------------
       val firstPos = new java.util.BitSet(n)
-      for (p <- 0 until n if labels(p) == FIRST) firstPos.set(p)
+      for (p <- 0 until n if r.labels(p) == FIRST) firstPos.set(p)
       val isFirst = udf((p: Long) => firstPos.get(p.toInt))
-      val storedFirst = chunks.filter(isFirst(col("pos")))
-        .select(col("pos"), col("chunk")).localCheckpoint(true)
-      recons += reconstruct(cid, perLeaf.select("pos", "src_chkpt", "src_pos"),
-        storedFirst, (0 until n).iterator.collect {
-          case p if labels(p) == SHIFT => srcOf(p)._1
-          case p if labels(p) == FIXED => cid - 1
-        }.toSet)
-
-      val res = ChkptResult(
-        chkptId = cid,
-        labels = perLeaf.select((col("pos") + leafBase).as("node"), col("label")),
-        numFirstOcur = r.counts.getOrElse(FIRST, 0L),
-        numShiftDupl = r.counts.getOrElse(SHIFT, 0L),
-        firstLeaves = storedFirst,
-        shiftLeafMap = perLeaf.filter(col("label") === SHIFT)
-          .select("pos", "src_chkpt", "src_pos"),
-        regionSizes = r.regionSizes)
-      results += res
-
+      val firstLeaves = chunks.filter(isFirst(col("pos"))).select(col("pos"), col("chunk"))
       store.foreach { st =>
-        if (!st.isCommitted("chunk_first", cid))
-          st.commit("chunk_first", cid, storedFirst, firstMeta(fullBufferMd5(chunks)),
-            approxRows = Some(firstPos.cardinality().toLong))
+        // one file with no exchange: coalesce, not commit's repartition
+        st.commit("chunk_first", cid, firstLeaves.coalesce(1), firstMeta(fullMd5))
         st.commitLocal("chunk_shift", cid, Chain.shiftSchema, r.shiftRegions)
       }
       prevLeaves = leaves
-      res
+      driverResult(cid, r, firstLeaves)
     }
 
     /** Distributed path (n > localSweepMax): Spark labeling and per-level
-      * THIN sweeps — log₂(n) shuffles of geometrically shrinking live
-      * frontiers; total materialized volume is O(leaves), not
-      * O(nodes · log n). Used when one checkpoint's chunk count exceeds
-      * driver-collectable size.
+      * THIN sweeps ([[ChunkDedup.thinSweep]]) — log₂(n) shuffles of
+      * geometrically shrinking live frontiers; total materialized volume is
+      * O(leaves), not O(nodes · log n). Used when one checkpoint's chunk
+      * count exceeds driver-collectable size.
       */
     private def distributedCheckpoint(chunks: DataFrame): ChkptResult = {
       curId += 1
@@ -844,12 +875,7 @@ object ChunkDedup {
         .select((col("pos") + leafBase).as("node"), col("pos"),
           gf.murmur128(col("chunk")).as("digest"), col("chunk"))
         .localCheckpoint(true)
-      // the driver paths' permutation gate (Chain.leafIndex) as one aggregate
-      val g = leaves.agg(count(lit(1)), countDistinct("pos"), min("pos"), max("pos")).head()
-      require(g.getLong(0) == nLeaves && g.getLong(1) == nLeaves &&
-          !g.isNullAt(2) && g.getLong(2) == 0 && g.getLong(3) == nLeaves - 1,
-        s"chunk positions are not a permutation of 0..${nLeaves - 1}: " +
-          s"${g.getLong(0)} rows, ${g.getLong(1)} distinct, min ${g.get(2)}, max ${g.get(3)}")
+      Chain.requirePermutation(leaves, nLeaves)
 
       // ---- leaf labeling ---------------------------------------------------
       val (fixedLeaves, restLeaves) =
@@ -895,132 +921,46 @@ object ChunkDedup {
           col("src_node"))
         .union(shiftedLocal.select(col("node"), col("digest"),
           col("src_chkpt").cast("int").as("src_chkpt"), col("src_node")))
-      // leaf-level labels are the public per-chunk classification — captured
-      // BEFORE the sweeps so all execution paths emit identical labels (the
-      // sweeps absorb nodes into regions, which only the counts report)
-      val leafLabels = st.select("node", "label")
 
       // ---- bottom-up sweeps -------------------------------------------------
       // Reference order preserved exactly: the FIRST forest is fully built
-      // (all levels, parents inserted into the map, tree_approach.cpp:372-404)
-      // BEFORE the duplicate forest probes it (:413-477). Sweeping per label
-      // also keeps ragged trees correct: equal-height subtrees can sit on
-      // different heap levels when n is not a power of two.
-
-      /** One full bottom-up sweep coalescing same-label sibling pairs —
-        * THIN: only the live frontier of this label is ever materialized
-        * (absorbed children drop out, unpaired nodes retire to a small
-        * root accumulator), so total materialized volume is O(label leaves)
-        * instead of O(all nodes · log n).
-        * @param onParents side effect before absorption (map insertion)
-        * @return number of region roots for this label
-        */
-      def thinSweep(label: String,
-                    onParents: DataFrame => Unit): Long = {
-        var frontier = st.filter(col("label") === label)
-          .select(col("node"), col("digest")).localCheckpoint(true)
-        var rootsAcc = frontier.select(col("node")).limit(0)
-        var l = maxLevel - 1
-        while (l >= 0) {
-          // exact integer level (bin-string width): floor(log2(…)) on
-          // doubles mis-rounds near 2^k for node ids ≥ ~2^48
-          val withLvl = frontier
-            .withColumn("lvl", (length(bin(col("node") + 1)) - 1).cast("int"))
-          val lvlNodes = withLvl.filter(col("lvl") === l + 1).drop("lvl")
-          val rest = withLvl.filter(col("lvl") =!= l + 1).drop("lvl")
-          val paired = lvlNodes
-            .withColumn("parent", ((col("node") - 1) / 2).cast("long"))
-            .withColumn("is_left", (col("node") % 2) === 1)
-            .groupBy("parent").agg(
-              count(lit(1)).as("cnt"),
-              max(when(col("is_left"), col("digest"))).as("dl"),
-              max(when(!col("is_left"), col("digest"))).as("dr"))
-            .filter(col("cnt") === 2)
-            .select(col("parent").as("node"),
-              gf.murmur128(concat(col("dl"), col("dr"))).as("digest"))
-          val parents = paired.select(col("node"), col("digest"))
-            .localCheckpoint(true)
-          onParents(parents)
-          val absorbed = parents.select((col("node") * 2 + 1).as("node"))
-            .union(parents.select((col("node") * 2 + 2).as("node")))
-          // nodes of this level that were NOT absorbed are region roots
-          val unpaired = lvlNodes.join(absorbed, Seq("node"), "left_anti")
-          rootsAcc = rootsAcc.union(unpaired.select("node"))
-          frontier = rest.union(parents).localCheckpoint(true)
-          l -= 1
-        }
-        // anything left (level-0 root, single-leaf trees) is a region root
-        rootsAcc.count() + frontier.count()
-      }
-
-      /** SHIFT sweep carrying SOURCES: like thinSweep, but frontier rows are
-        * (node, digest, src_chkpt, src_node); a parent coalesces two SHIFT
-        * children iff its combined digest is in the distinct map, and it
-        * inherits THAT MAP ENTRY as its source. Returns the shift REGION
-        * table (node, src_chkpt, src_node) — one row per region root, the
-        * reference's compacted metadata (tree_approach.cpp:593-622).
-        */
-      def thinSweepShift(): DataFrame = {
-        val srcCols = Seq(col("node"), col("src_chkpt"), col("src_node"))
-        var frontier = shiftLeaves.localCheckpoint(true)
-        var rootsAcc = frontier.select(srcCols: _*).limit(0)
-        var l = maxLevel - 1
-        while (l >= 0) {
-          // exact integer level (bin-string width): floor(log2(…)) on
-          // doubles mis-rounds near 2^k for node ids ≥ ~2^48
-          val withLvl = frontier
-            .withColumn("lvl", (length(bin(col("node") + 1)) - 1).cast("int"))
-          val lvlNodes = withLvl.filter(col("lvl") === l + 1).drop("lvl")
-          val rest = withLvl.filter(col("lvl") =!= l + 1).drop("lvl")
-          val paired = lvlNodes
-            .withColumn("parent", ((col("node") - 1) / 2).cast("long"))
-            .withColumn("is_left", (col("node") % 2) === 1)
-            .groupBy("parent").agg(
-              count(lit(1)).as("cnt"),
-              max(when(col("is_left"), col("digest"))).as("dl"),
-              max(when(!col("is_left"), col("digest"))).as("dr"))
-            .filter(col("cnt") === 2)
-            .select(col("parent").as("node"),
-              gf.murmur128(concat(col("dl"), col("dr"))).as("digest"))
-          val parents = paired
-            .join(mapOrEmpty(), Seq("digest")) // present in map ⇒ coalesce + src
-            .select(col("node"), col("digest"),
-              col("src_chkpt").cast("int").as("src_chkpt"), col("src_node"))
-            .localCheckpoint(true)
-          val absorbed = parents.select((col("node") * 2 + 1).as("node"))
-            .union(parents.select((col("node") * 2 + 2).as("node")))
-          val unpaired = lvlNodes.join(absorbed, Seq("node"), "left_anti")
-          rootsAcc = rootsAcc.union(unpaired.select(srcCols: _*))
-          frontier = rest.union(parents).localCheckpoint(true)
-          l -= 1
-        }
-        rootsAcc.union(frontier.select(srcCols: _*)).localCheckpoint(true)
-      }
-
-      val fo = thinSweep(FIRST, parents =>
-        insertIntoMap(parents.select(col("digest"), lit(cid).as("src_chkpt"),
-          col("node").as("src_node"))))
-      val fx = thinSweep(FIXED, _ => ())
-      val shiftRegions = thinSweepShift()
-      val counts = Map(FIRST -> fo, FIXED -> fx, SHIFT -> shiftRegions.count())
+      // and its internals inserted into the map (tree_approach.cpp:372-404)
+      // BEFORE the duplicate forest probes it (:413-477). FIRST leaves have
+      // pairwise distinct digests, so their internals do too, and one
+      // insert after the sweep equals the reference's per-node inserts.
+      // Sweeping per label also keeps ragged trees correct: equal-height
+      // subtrees can sit on different heap levels when n is not a power of
+      // two. The FIXED forest is not swept: no output reports its regions.
+      val (firstRoots, firstInternals) = thinSweep(
+        st.filter(col("label") === FIRST).select("node", "digest"), nLeaves, identity)
+      insertIntoMap(firstInternals.select(col("digest"), lit(cid).as("src_chkpt"),
+        col("node").as("src_node")))
+      // a parent coalesces two SHIFT children iff its combined digest is in
+      // the distinct map, and inherits THAT MAP ENTRY as its source; the
+      // roots are the shift REGION table (node, src_chkpt, src_node), the
+      // reference's compacted metadata (tree_approach.cpp:593-622)
+      val shiftRegions = thinSweep(shiftLeaves, nLeaves, _.join(mapOrEmpty(), Seq("digest"))
+          .select(col("node"), col("digest"),
+            col("src_chkpt").cast("int").as("src_chkpt"), col("src_node")))
+        ._1.select("node", "src_chkpt", "src_node").localCheckpoint(true)
 
       // ---- outputs ----------------------------------------------------------
-      val shiftLeafMap = shiftedGlobal.select(col("pos"), col("src_chkpt"),
-          (col("src_node") - leafBase).as("src_pos"))
-        .union(shiftedLocal.select(col("pos"), col("src_chkpt"),
-          (col("src_node") - leafBase).as("src_pos")))
-        .localCheckpoint(true)
-      val storedFirst = firstLeavesDf.select(col("pos"), col("chunk")).localCheckpoint(true)
-
+      val storedFirst = firstLeavesDf.select(col("pos"), col("chunk"))
       val res = ChkptResult(
         chkptId = cid,
-        labels = leafLabels,
-        numFirstOcur = counts.getOrElse(FIRST, 0L),
-        numShiftDupl = counts.getOrElse(SHIFT, 0L),
+        // leaf-level labels are the public per-chunk classification —
+        // captured BEFORE the sweeps so all execution paths emit identical
+        // labels (the sweeps absorb nodes into regions, which only the
+        // counts report)
+        labels = st.select("node", "label"),
+        numFirstOcur = firstRoots.count(),
+        numShiftDupl = shiftRegions.count(),
         firstLeaves = storedFirst,
-        shiftLeafMap = shiftLeafMap,
+        shiftLeafMap = shiftedGlobal.select(col("pos"), col("src_chkpt"),
+            (col("src_node") - leafBase).as("src_pos"))
+          .union(shiftedLocal.select(col("pos"), col("src_chkpt"),
+            (col("src_node") - leafBase).as("src_pos"))),
         regionSizes = Nil)
-      results += res
 
       // durable incremental checkpoint: the two file sections restart needs.
       // The shift section is REGION-COMPACTED exactly like the reference's
@@ -1035,66 +975,20 @@ object ChunkDedup {
       // the i-th leaf of its source subtree (equal digests ⇒ equal shapes).
       // The in-memory per-leaf shiftLeafMap remains the public API.
       store.foreach { st =>
-        // the digest is computed ONLY when this commit will actually happen:
-        // a resume over an already-committed checkpoint must not re-funnel
-        // the whole buffer through the single-task digest aggregation
-        // (commit() itself is a no-op then)
+        // the full-buffer MD5 that restartFromStore verifies
+        // (restart_chkpt_files.cpp:104-108) is one single-task pass, run only
+        // when this commit will happen: a resume over a committed checkpoint
+        // skips it (commit() itself is a no-op then)
         if (!st.isCommitted("chunk_first", cid))
-          st.commit("chunk_first", cid, storedFirst,
-            firstMeta(
-              // full-buffer MD5 of the checkpoint content (reference:
-              // restart_chkpt_files.cpp:104-108 hashes the restarted buffer
-              // and compares) — restartFromStore recomputes and verifies.
-              // Inherently sequential in any engine (ChunkDedup.fullBufferMd5
-              // scaladoc); a 10⁸-chunk store-backed checkpoint should prefer
-              // a Merkle-style digest — the per-leaf murmur128 tree above IS
-              // that digest, so the full-buffer MD5 stays a reference-fidelity
-              // extra, not the scale path.
-              fullBufferMd5(chunks)))
+          st.commit("chunk_first", cid, storedFirst, firstMeta(countAndMd5(chunks)._2))
         st.commit("chunk_shift", cid, shiftRegions)
       }
-
-      // every position's claim: FIRST → itself, FIXED → same position of
-      // cid−1, SHIFT → its source; the referenced checkpoints are one tiny
-      // distinct collect
-      val claims = firstLeavesDf.select(col("pos"), lit(cid).as("src_chkpt"),
-          col("pos").as("src_pos"))
-        .union(fixedLeaves.select(col("pos"), lit(cid - 1).as("src_chkpt"),
-          col("pos").as("src_pos")))
-        .union(shiftLeafMap)
-      recons += reconstruct(cid, claims, storedFirst,
-        res.referencedCheckpoints.collect().map(_.getInt(0)).toSet ++
-          (if (cid > 0) Set(cid - 1) else Set.empty[Int]))
 
       // the FIXED probe only ever compares leaves at equal positions
       // (tree_approach.cpp:326-327); FIXED parents re-derive bottom-up.
       prevTree = leaves.select(col("node"), col("digest")).localCheckpoint(true)
       res
     }
-
-    /** Reconstruction of checkpoint `cid`: every position's claim (pos,
-      * src_chkpt, src_pos) joined against `storedFirst` (claims on `cid`
-      * itself) and the reconstructions of the checkpoints the claims
-      * reference (`refs`) — O(n · |refs|) per checkpoint, never the whole
-      * chain.
-      */
-    private def reconstruct(cid: Int, claims: DataFrame, storedFirst: DataFrame,
-                            refs: Set[Int]): DataFrame = {
-      def tagged(c: Int, df: DataFrame): DataFrame =
-        df.select(lit(c).as("src_chkpt"), col("pos").as("src_pos"), col("chunk"))
-      val sources = (refs - cid).toSeq.sorted
-        .foldLeft(tagged(cid, storedFirst))((acc, c) => acc.union(tagged(c, recons(c))))
-      claims.join(sources, Seq("src_chkpt", "src_pos"))
-        .select("pos", "chunk").localCheckpoint(true)
-    }
-
-    /** Restart: full chunk content of checkpoint `cid` (pos, chunk). */
-    def restart(cid: Int): DataFrame =
-      if (serialMode) {
-        import spark.implicits._
-        sRecon(cid).zipWithIndex.map { case (c, p) => (p.toLong, c) }
-          .toSeq.toDF("pos", "chunk")
-      } else recons(cid)
 
     private def mapOrEmpty(): DataFrame =
       if (distinctMap == null) {

@@ -240,8 +240,6 @@ object TreeLowRoot {
                         localMax: Long = DistChain.LOCAL_MAX) {
     require(numChunks >= 1)
     private val leafBase = numChunks - 1
-    private val maxLevel = // level of the last node 2n-2; level(i) = ⌊log2(i+1)⌋
-      63 - java.lang.Long.numberOfLeadingZeros(2 * numChunks - 1)
     private var prevLeaves: DataFrame = _ // (node, digest)
     private var global: DataFrame = _     // (digest) — cross-checkpoint map
     private val serialFastPath: Option[Chain] =
@@ -265,6 +263,8 @@ object TreeLowRoot {
         .select((col("pos") + leafBase).as("node"),
           gf.murmur128(col("chunk")).as("digest"))
         .localCheckpoint(true)
+      ChunkDedup.Chain.requirePermutation(
+        leaves.select((col("node") - leafBase).as("pos")), numChunks)
 
       // 1. labeling (distributed): FIXED by position-equality vs previous
       // checkpoint; SHIFT by global-map semi-probe; FIRST_DUPL otherwise
@@ -280,35 +280,11 @@ object TreeLowRoot {
       val shiftedG = rest.join(g, Seq("digest"), "left_semi")
       val fresh = rest.join(g, Seq("digest"), "left_anti").localCheckpoint(true)
 
-      // 2. FIRST_DUPL forest via the thin level sweep: a parent forms iff
-      // BOTH children are forest nodes — order-free (same fixpoint as the
-      // reference's descending-node serial loop); each level is one narrow
-      // groupBy over the live frontier only
-      var frontier = fresh.select("node", "digest")
-      var internalsDf = frontier.limit(0)
-      var l = maxLevel - 1
-      while (l >= 0) {
-        // level(i) = ⌊log2(i+1)⌋ via exact integer arithmetic (bin-string
-        // width): floor(log2(…)) on doubles mis-rounds near 2^k for k ≥ ~48
-        val withLvl = frontier
-          .withColumn("lvl", (length(bin(col("node") + 1)) - 1).cast("int"))
-        val lvlNodes = withLvl.filter(col("lvl") === l + 1).drop("lvl")
-        val restF = withLvl.filter(col("lvl") =!= l + 1).drop("lvl")
-        val parents = lvlNodes
-          .withColumn("parent", ((col("node") - 1) / 2).cast("long"))
-          .withColumn("is_left", (col("node") % 2) === 1)
-          .groupBy("parent").agg(
-            count(lit(1)).as("cnt"),
-            max(when(col("is_left"), col("digest"))).as("dl"),
-            max(when(!col("is_left"), col("digest"))).as("dr"))
-          .filter(col("cnt") === 2)
-          .select(col("parent").as("node"),
-            gf.murmur128(concat(col("dl"), col("dr"))).as("digest"))
-          .localCheckpoint(true)
-        internalsDf = internalsDf.union(parents)
-        frontier = restF.union(parents).localCheckpoint(true)
-        l -= 1
-      }
+      // 2. FIRST_DUPL forest via the shared thin level sweep keeping every
+      // pair: a parent forms iff BOTH children are forest nodes — order-free
+      // (same fixpoint as the reference's descending-node serial loop)
+      val (_, internalsDf) =
+        ChunkDedup.thinSweep(fresh.select("node", "digest"), numChunks, identity)
 
       // 3+4. driver kernel over the collected FRESH forest only
       def collectPairs(df: DataFrame): Array[(Long, Digest)] =
@@ -335,12 +311,6 @@ object TreeLowRoot {
 
       val byLabel = labels.groupBy("label").count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      // fail fast on malformed input (missing/duplicate positions) — the
-      // serial Chain's require(rows.length == numChunks) equivalent, free
-      // here because the label counts were just collected
-      require(byLabel.values.sum == numChunks,
-        s"checkpoint labeled ${byLabel.values.sum} leaves, expected $numChunks " +
-          "— input chunk positions are missing or duplicated")
       LowRootResult(labels,
         byLabel.getOrElse(FIRST, 0L),
         byLabel.getOrElse(SHIFT, 0L),
@@ -359,11 +329,10 @@ object TreeLowRoot {
 
     def checkpoint(chunks: DataFrame): LowRootResult = {
       val rows = chunks
-        .select(col("pos"), gf.murmur128(col("chunk")).as("digest"))
-        .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]](1)))
-        .sortBy(_._1)
-      require(rows.length == numChunks, s"expected $numChunks chunks")
-      val leaves = rows.map(_._2)
+        .select(col("pos"), gf.murmur128(col("chunk")).as("digest")).collect()
+      val leaves = new Array[Array[Byte]](rows.length)
+      ChunkDedup.Chain.leafIndex(rows.map(_.getLong(0)), numChunks.toInt).iterator
+        .zip(rows.iterator).foreach { case (p, r) => leaves(p) = r.getAs[Array[Byte]](1) }
       val (labels, winners) = elect(leaves, prev, globalMap.contains)
       // elected digests enter the cross-checkpoint map (reference inserts
       // the selected leaf, reference_impl.hpp:396-398; single-member fresh

@@ -1,6 +1,6 @@
 package graft
 
-import graft.dedup.ChunkDedup
+import graft.dedup.{ChunkDedup, TreeLowRoot}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Port of the reference's golden unit vectors
@@ -12,17 +12,26 @@ import org.scalatest.funsuite.AnyFunSuite
 class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
 
   private def runCase(step0: String, step1: String): (Long, Long) = {
-    val chain = new ChunkDedup.Chain(spark, step0.length.toLong)
+    val (chain, store) = storeChain(step0.length.toLong)
     chain.checkpoint(ChunkDedup.chunkify(spark, step0, 1))
     val r = chain.checkpoint(ChunkDedup.chunkify(spark, step1, 1))
     // restart must reproduce both checkpoints byte-for-byte
-    assert(restartString(chain, 0, step0.length) == step0)
-    assert(restartString(chain, 1, step1.length) == step1)
+    assert(restartString(store, 0, step0.length) == step0)
+    assert(restartString(store, 1, step1.length) == step1)
     (r.numFirstOcur, r.numShiftDupl)
   }
 
-  private def restartString(chain: ChunkDedup.Chain, cid: Int, n: Int): String = {
-    val rows = chain.restart(cid).collect()
+  /** A chain committing to a store in a fresh temporary directory. */
+  private def storeChain(n: Long, localSweepMax: Long = ChunkDedup.Chain.LOCAL_SWEEP_MAX,
+                         serialMax: Long = ChunkDedup.Chain.SERIAL_MAX)
+      : (ChunkDedup.Chain, graft.state.SnapshotStore) = {
+    val store = new graft.state.SnapshotStore(spark,
+      java.nio.file.Files.createTempDirectory("graft_chunk_chain").toString)
+    (new ChunkDedup.Chain(spark, n, localSweepMax, Some(store), serialMax), store)
+  }
+
+  private def restartString(store: graft.state.SnapshotStore, cid: Int, n: Int): String = {
+    val rows = ChunkDedup.restartFromStore(spark, store, cid).collect()
     assert(rows.length == n, s"restart($cid) produced ${rows.length}/$n chunks")
     rows.sortBy(_.getLong(0)).map(_.getString(1)).mkString
   }
@@ -63,34 +72,33 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
   test("ragged (non-power-of-two) chunk counts roundtrip") {
     val step0 = "ABCDEFGHIJK" // 11 chunks
     val step1 = "ABCXYFGHIJK"
-    val chain = new ChunkDedup.Chain(spark, 11L)
+    val (chain, store) = storeChain(11L)
     chain.checkpoint(ChunkDedup.chunkify(spark, step0, 1))
     chain.checkpoint(ChunkDedup.chunkify(spark, step1, 1))
-    assert(restartString(chain, 0, 11) == step0)
-    assert(restartString(chain, 1, 11) == step1)
+    assert(restartString(store, 0, 11) == step0)
+    assert(restartString(store, 1, 11) == step1)
   }
 
   test("serial, local-sweep and distributed paths agree (labels, counts, shift sources, restart)") {
     // same inputs through all THREE execution paths ⇒ identical region
-    // counts, per-leaf labels, shift metadata and restarts. The storeless
-    // default is the serial driver path (Chain.SERIAL_MAX); serialMax = 0
-    // forces the Spark fast path; localSweepMax = 0 on top forces the
-    // per-level distributed sweep.
+    // counts, per-leaf labels, shift metadata and restarts from each path's
+    // store. The default is the serial driver path (Chain.SERIAL_MAX);
+    // serialMax = 0 forces the Spark fast path; localSweepMax = 0 on top
+    // forces the per-level distributed sweep.
     def labelMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     def shiftMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), (r.getInt(1), r.getLong(2)))).toMap
     for ((s0, s1, fo, sd, id) <- goldenVectors) {
       val variants = Seq(
-        "serial" -> new ChunkDedup.Chain(spark, 8L),
-        "localsweep" -> new ChunkDedup.Chain(spark, 8L, serialMax = 0L),
-        "distributed" -> new ChunkDedup.Chain(spark, 8L,
-          localSweepMax = 0L, serialMax = 0L))
-      val rs = variants.map { case (name, chain) =>
+        "serial" -> storeChain(8L),
+        "localsweep" -> storeChain(8L, serialMax = 0L),
+        "distributed" -> storeChain(8L, localSweepMax = 0L, serialMax = 0L))
+      val rs = variants.map { case (name, (chain, store)) =>
         chain.checkpoint(ChunkDedup.chunkify(spark, s0, 1))
         val r = chain.checkpoint(ChunkDedup.chunkify(spark, s1, 1))
         assert((r.numFirstOcur, r.numShiftDupl) == ((fo, sd)), s"case $id ($name)")
-        assert(restartString(chain, 1, 8) == s1, s"case $id ($name) restart")
+        assert(restartString(store, 1, 8) == s1, s"case $id ($name) restart")
         (name, r)
       }
       val (_, base) = rs.head
@@ -181,15 +189,19 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("a duplicated + missing chunk position fails the checkpoint on all three paths") {
-    // positions 0..6 and 6 again: the row count is right, 7 is missing
+    // positions 0..6 and 6 again: the row count is right, 7 is missing;
+    // the three ChunkDedup paths, then both TreeLowRoot chains
     import spark.implicits._
     val chunks = "ABCDEFGH".zipWithIndex
       .map { case (c, p) => (math.min(p, 6).toLong, c.toString) }.toDF("pos", "chunk")
-    for ((name, chain) <- Seq(
-        "serial" -> new ChunkDedup.Chain(spark, 8L),
-        "localsweep" -> new ChunkDedup.Chain(spark, 8L, serialMax = 0L),
-        "distributed" -> new ChunkDedup.Chain(spark, 8L, localSweepMax = 0L, serialMax = 0L))) {
-      val e = intercept[IllegalArgumentException](chain.checkpoint(chunks))
+    for ((name, checkpoint) <- Seq[(String, org.apache.spark.sql.DataFrame => Any)](
+        "serial" -> new ChunkDedup.Chain(spark, 8L).checkpoint _,
+        "localsweep" -> new ChunkDedup.Chain(spark, 8L, serialMax = 0L).checkpoint _,
+        "distributed" ->
+          new ChunkDedup.Chain(spark, 8L, localSweepMax = 0L, serialMax = 0L).checkpoint _,
+        "lowroot serial" -> new TreeLowRoot.Chain(spark, 8L).checkpoint _,
+        "lowroot distributed" -> new TreeLowRoot.DistChain(spark, 8L, localMax = 0L).checkpoint _)) {
+      val e = intercept[IllegalArgumentException](checkpoint(chunks))
       assert(e.getMessage.contains("chunk positions are not a permutation of 0..7"),
         s"$name: ${e.getMessage}")
     }
@@ -345,7 +357,7 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
     val n = 64
     val alphabet = "ABCDEFGH"
     var cur = Array.fill(n)(alphabet(rnd.nextInt(alphabet.length)))
-    val chain = new ChunkDedup.Chain(spark, n.toLong)
+    val (chain, store) = storeChain(n.toLong)
     val snapshots = scala.collection.mutable.ArrayBuffer.empty[String]
     for (step <- 0 until 4) {
       if (step > 0) {
@@ -362,7 +374,7 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
       chain.checkpoint(ChunkDedup.chunkify(spark, s, 1))
     }
     for (cid <- snapshots.indices)
-      assert(restartString(chain, cid, n) == snapshots(cid), s"checkpoint $cid")
+      assert(restartString(store, cid, n) == snapshots(cid), s"checkpoint $cid")
   }
 
   test("store-backed serial path: commits identical to the Spark path, jobs halved") {
@@ -455,11 +467,6 @@ class ChunkDedupLocalSweepSpec extends AnyFunSuite with SparkTestBase {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  /** Jobs each `chain.checkpoint` call runs. */
-  private def jobsPerCheckpoint(chain: ChunkDedup.Chain,
-                                steps: Seq[org.apache.spark.sql.DataFrame]): Seq[Int] =
-    steps.map(chunks => withJobs(chain.checkpoint(chunks))._2)
-
   /** `k` checkpoints of `n` chunks of `width` letters a–d (few distinct
     * chunks ⇒ in-checkpoint duplicates); each later one swaps two aligned
     * blocks of n/16 chunks, from step 4 on copies a block of checkpoint 0
@@ -523,23 +530,22 @@ class ChunkDedupLocalSweepSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("local-sweep checkpoint job bound: <= 12 jobs at checkpoint 0, <= 20 after (4608 chunks, store-backed)") {
+  test("local-sweep checkpoint job bound: <= 4 jobs at checkpoint 0, <= 6 after (4608 chunks, store-backed)") {
     // just above SERIAL_MAX: block swaps, fresh chunks and in-checkpoint
     // duplicates exercise every label; the single driver pass keeps each
-    // checkpoint to one digest job, one probe, one insert plus its outputs
+    // checkpoint to one digest + MD5 job, one probe, one insert and the
+    // chunk_first write
     val n = 4608
     assert(n > ChunkDedup.Chain.SERIAL_MAX)
     val steps = chain(n, 3, 2, 17)
     val root = java.nio.file.Files.createTempDirectory("graft_jobbound").toString
     val store = new graft.state.SnapshotStore(spark, root)
     val c = new ChunkDedup.Chain(spark, n.toLong, store = Some(store))
-    val jobs = jobsPerCheckpoint(c, steps.map(frame))
-    assert(jobs(0) <= 12, s"checkpoint 0 ran ${jobs(0)} jobs")
+    val (rs, jobs) = steps.map(s => withJobs(c.checkpoint(frame(s)))).unzip
+    assert(jobs(0) <= 4, s"checkpoint 0 ran ${jobs(0)} jobs")
     for (cid <- 1 until steps.length)
-      assert(jobs(cid) <= 20, s"checkpoint $cid ran ${jobs(cid)} jobs")
-    val r = c.history.last
-    assert(r.numFirstOcur > 0 && r.numShiftDupl > 0)
-    assert(restarted(c.restart(2)) == steps(2))
+      assert(jobs(cid) <= 6, s"checkpoint $cid ran ${jobs(cid)} jobs")
+    assert(rs.last.numFirstOcur > 0 && rs.last.numShiftDupl > 0)
     assert(restarted(ChunkDedup.restartFromStore(spark, store, 2)) == steps(2))
   }
 
@@ -576,8 +582,8 @@ class ChunkDedupLocalSweepSpec extends AnyFunSuite with SparkTestBase {
     val root = java.nio.file.Files.createTempDirectory("graft_restart_parity").toString
     val store48 = new graft.state.SnapshotStore(spark, root)
     val c = new ChunkDedup.Chain(spark, n.toLong, store = Some(store48), serialMax = 0L)
-    steps48.foreach(s => c.checkpoint(frame(s)))
-    assert(c.history(5).referencedCheckpoints.collect().map(_.getInt(0)).contains(0))
+    val rs = steps48.map(s => c.checkpoint(frame(s)))
+    assert(rs(5).referencedCheckpoints.collect().map(_.getInt(0)).contains(0))
     val (sweep, sweepSteps) = sweepStore
     for ((store, steps) <- Seq((store48, steps48), (sweep, sweepSteps)); cid <- steps.indices) {
       def rows(localSweepMax: Long) = ChunkDedup.restartFromStore(spark, store, cid,
@@ -588,52 +594,54 @@ class ChunkDedupLocalSweepSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("committed-store parity: serial, local-sweep and distributed paths commit identical tables and manifest meta") {
-    val n = 96 // ragged
-    val steps = chain(n, 3, 1, 29)
+  // Builds a serial, a local-sweep and a distributed store-backed chain over
+  // `steps`, checks that every checkpoint commits the same tables and
+  // manifest meta on all three, and restarts every checkpoint of each store.
+  private def storeParity(n: Int, steps: Seq[Seq[String]]): Unit = {
     def build(name: String, localSweepMax: Long, serialMax: Long) = {
       val root = java.nio.file.Files.createTempDirectory(s"graft_parity_$name").toString
       val store = new graft.state.SnapshotStore(spark, root)
       val c = new ChunkDedup.Chain(spark, n.toLong, localSweepMax = localSweepMax,
         store = Some(store), serialMax = serialMax)
-      steps.foreach(s => c.checkpoint(frame(s)))
-      name -> store
+      (name, store, steps.map(s => c.checkpoint(frame(s))))
     }
     val stores = Seq(
       build("serial", ChunkDedup.Chain.LOCAL_SWEEP_MAX, ChunkDedup.Chain.SERIAL_MAX),
       build("localsweep", ChunkDedup.Chain.LOCAL_SWEEP_MAX, 0L),
       build("distributed", 0L, 0L))
+    if (steps.length == 6)
+      for ((name, _, rs) <- stores)
+        assert(rs(5).referencedCheckpoints.collect().map(_.getInt(0)).contains(0),
+          s"$name: no shift onto checkpoint 0")
     for (cid <- steps.indices) {
       def rows(st: graft.state.SnapshotStore, t: String) =
         st.read(t, cid).collect().map(_.toSeq).toSet
       def meta(st: graft.state.SnapshotStore, k: String) =
         (s""""$k":\\s*"([^"]+)"""").r
           .findFirstMatchIn(st.manifestJson("chunk_first", cid)).map(_.group(1))
-      val (_, base) = stores.head
+      val (_, base, _) = stores.head
       assert(rows(base, "chunk_shift").nonEmpty || cid == 0)
-      for ((name, st) <- stores.tail) {
+      for ((name, st, _) <- stores.tail) {
         for (t <- Seq("chunk_first", "chunk_shift"))
-          assert(rows(st, t) == rows(base, t), s"$name $t $cid differs from serial")
+          assert(rows(st, t) == rows(base, t), s"n=$n $name $t $cid differs from serial")
         for (k <- Seq("num_chunks", "full_md5"))
           assert(meta(base, k).nonEmpty && meta(st, k) == meta(base, k),
-            s"$name manifest $k $cid differs from serial")
+            s"n=$n $name manifest $k $cid differs from serial")
       }
+      for ((name, st, _) <- stores)
+        assert(restarted(ChunkDedup.restartFromStore(spark, st, cid)) == steps(cid),
+          s"n=$n $name restart($cid)")
     }
   }
 
+  test("committed-store parity: serial, local-sweep and distributed paths commit identical tables and manifest meta") {
+    storeParity(96, chain(96, 3, 1, 29)) // 3 ragged checkpoints of one-letter chunks
+  }
+
   test("in-session restart: a 6-checkpoint chain restarts every checkpoint byte-exactly on both Spark paths") {
-    val n = 48 // ragged
-    val steps = chain(n, 6, 2, 41)
-    for ((name, localSweepMax) <- Seq(
-        "localsweep" -> ChunkDedup.Chain.LOCAL_SWEEP_MAX, "distributed" -> 0L)) {
-      val c = new ChunkDedup.Chain(spark, n.toLong, localSweepMax = localSweepMax,
-        serialMax = 0L)
-      steps.foreach(s => c.checkpoint(frame(s)))
-      // checkpoint 5 sources from checkpoint 0, past the chain in between
-      assert(c.history(5).referencedCheckpoints.collect().map(_.getInt(0)).contains(0),
-        s"$name: no shift onto checkpoint 0")
-      for (cid <- steps.indices)
-        assert(restarted(c.restart(cid)) == steps(cid), s"$name restart($cid)")
-    }
+    // 6 checkpoints of 48 two-letter chunks whose checkpoint 5 shifts onto
+    // checkpoint 0, past the chain in between; the chain commits to a store
+    // and every checkpoint restarts from it in the same session
+    storeParity(48, chain(48, 6, 2, 41))
   }
 }
