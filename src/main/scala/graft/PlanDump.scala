@@ -45,7 +45,7 @@ object PlanDump {
       docs.filter(col("lang") === "en").select(col("doc_id"), length(col("text"))))
     dump("exact-dup election (single exchange, window min)",
       graft.dedup.ExactDedup.assignments(docs))
-    dump("LSH candidates (band keys → bucket agg → capped pairs → distinct)", {
+    dump("LSH candidates (band keys → sort-and-stream bucket kernel → distinct)", {
       val cfg = graft.dedup.DedupConfig()
       graft.dedup.MinHashLSH.pairsFromKeyRows(
         graft.dedup.MinHashLSH.bandKeyRows(graft.dedup.MinHashLSH.featuresFused(docs, cfg), cfg),
@@ -53,8 +53,8 @@ object PlanDump {
     })
     dump("fused features: shingles + minhash + simhash in ONE tokenization pass",
       graft.dedup.MinHashLSH.featuresFused(docs, graft.dedup.DedupConfig()))
-    dump("bounded bucket pairs (window stats, no join; one Exchange per union " +
-      "branch, run as one shuffle by AQE stage reuse; hot keys stream star edges)",
+    dump("bounded bucket pairs (one hash exchange on the key, sort by (key, e), " +
+      "streaming per-key scan: small keys emit all pairs, hot keys stream star edges)",
       graft.dedup.MinHashLSH.boundedBucketPairs(
         docs.select(pmod(col("doc_id"), lit(50)).as("key"), col("doc_id").as("e")),
         Seq("key"), 64))
@@ -86,8 +86,8 @@ object PlanDump {
         k = 5, nCells = graft.sim.Ann.PinnedIvf.nCells,
         nProbe = graft.sim.Ann.PinnedIvf.nProbe, queryIds = 0L until 20L))
 
-    dump("long-repeat verify+extend (r5: diagonal chain-collapse lag() window " +
-      "before the per-pair anchor aggregation — one anchor per maximal span)", {
+    dump("long-repeat verify+extend (one (a, b) exchange, sort by (a, b, pa − pb, pa), " +
+      "streaming chain-head filter before the text joins — one anchor per maximal span)", {
       val norm = docs.select(col("doc_id"), lower(col("text")).as("t"))
       graft.dedup.LongRepeats.verifyAndExtend(norm,
         graft.dedup.LongRepeats.winnowCandidates(norm, 24, 12, 32), 24, 35)

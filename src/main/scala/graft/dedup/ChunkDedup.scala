@@ -440,10 +440,10 @@ object ChunkDedup {
       * Driver footprint at the bound: the digest job's one task result
       * (8 B position + 16 B digest per chunk, 24 MB), kept as the next
       * checkpoint's leaf digests (16 MB), the full Merkle tree's 2n−1
-      * 16-byte slots (32 MB transient), the probe frame of ≤ 2n−1 (node,
-      * digest) rows (≈ 100 MB transient), and the result's per-leaf label
-      * frame, a local relation of n rows (≈ 90 MB while the caller holds
-      * the result) — a few hundred MB on the 8 g driver heap.
+      * 16-byte slots (32 MB transient), the probe's broadcast set of ≤ 2n−1
+      * digests and its hits (≈ 200 MB transient), and the result's per-leaf
+      * label frame, a local relation of n rows (≈ 90 MB while the caller
+      * holds the result) — a few hundred MB on the 8 g driver heap.
       * [[restartFromStore]] switches regime at the same bound; its driver
       * walk holds 28 MB of per-position claim and shift arrays at 2²⁰
       * chunks, plus a broadcast src_pos → positions index of ≈ 20 MB.
@@ -819,17 +819,19 @@ object ChunkDedup {
       val hitChkpt = Array.fill(2 * n - 1)(-1)
       val hitNode = new Array[Long](2 * n - 1)
       if (distinctMap != null) {
-        import spark.implicits._
-        (0 until 2 * n - 1).iterator
+        // the probe digests ship as ONE broadcast set that filters the map
+        // in one job (a join with a local relation plans a separate AQE
+        // broadcast job ahead of the join's)
+        val probe = (0 until 2 * n - 1)
           .filter(u => u < leafBase || !Chain.isFixed(leaves, prevLeaves, u - leafBase.toInt))
-          .map(u => (u.toLong, Chain.slot(tree, u))).toSeq
-          .toDF("node", "digest")
-          .join(distinctMap, "digest")
-          .select("node", "src_chkpt", "src_node").collect()
-          .foreach { r =>
-            val u = r.getLong(0).toInt
-            hitChkpt(u) = r.getInt(1); hitNode(u) = r.getLong(2)
-          }
+        def digest(u: Int) = Chain.key(Chain.slot(tree, u))
+        val bc = spark.sparkContext.broadcast(probe.iterator.map(digest).toSet)
+        val probed = udf((d: Array[Byte]) => bc.value.contains(Chain.key(d)))
+        val hits = distinctMap.filter(probed(col("digest")))
+          .select("digest", "src_chkpt", "src_node").collect()
+          .map(r => Chain.key(r.getAs[Array[Byte]](0)) -> ((r.getInt(1), r.getLong(2)))).toMap
+        for (u <- probe; (c, v) <- hits.get(digest(u))) { hitChkpt(u) = c; hitNode(u) = v }
+        bc.destroy()
       }
       def oldHit(u: Long): Option[(Int, Long)] =
         if (hitChkpt(u.toInt) < 0) None else Some((hitChkpt(u.toInt), hitNode(u.toInt)))

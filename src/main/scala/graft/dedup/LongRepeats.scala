@@ -1,8 +1,9 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.LongAccumulator
 import graft.functions.gf
 
 /** Exact long-repeat detection — the engine's analogue of the reference's
@@ -10,21 +11,21 @@ import graft.functions.gf
   * re-expressed for variable-length text per the north_star's "suffix-array
   * substring pass for exact long-repeat detection".
   *
-  * Two candidate generators feed ONE verify+extend expression:
+  * Two independent passes emit rows of one form:
   *
   *   - **winnowing** (Schleimer et al.): per-doc fingerprints, grouped by
   *     hash — detects EVERY repeat of length ≥ gram+window−1 across the whole
   *     corpus regardless of partitioning (one narrow shuffle of (hash, doc,
   *     pos) triples). This is the scale path: fingerprints are ~2/window of
-  *     gram positions.
-  *   - **per-partition suffix array** (prefix doubling + Kasai LCP): exact
-  *     within a partition with no length slack; used where documents are
-  *     co-partitioned (e.g. by host) and for in-doc repeats.
+  *     gram positions. Anchors go through [[verifyAndExtend]].
+  *   - **suffix array** (SA-IS + Kasai LCP) per concatenated segment: exact
+  *     within a segment with no length slack; used where documents are
+  *     co-partitioned (e.g. by host) and for in-doc repeats. Each
+  *     left-maximal occurrence pair extends to its maximal span inside the
+  *     segment buffer, so this pass emits spans directly — no verifier.
   *
-  * Verification extends each anchor to its MAXIMAL span; anchors inside the
-  * same repeat extend to the identical span, so `distinct` replaces interval
-  * merging. Output rows: (a, b, a_start, b_start, length) with
-  * (a, a_start) < (b, b_start) lexicographically.
+  * Output rows: (a, b, a_start, b_start, length) with (a, a_start) <
+  * (b, b_start) lexicographically, one row per maximal span pair.
   */
 object LongRepeats {
 
@@ -71,77 +72,78 @@ object LongRepeats {
     */
   final val RUN_CAP = 512
 
-  /** SA candidate pairs within one concatenated segment: one LEFT-MAXIMAL
-    * anchor per occurrence PAIR with common prefix ≥ minLen. Pairs come from
-    * maximal lcp ≥ minLen RUNS of the suffix array (every suffix pair inside
-    * a run shares ≥ minLen), not just SA-adjacent entries — m occurrences of
-    * one span yield the full C(m,2) pair set, the same all-pairs contract as
-    * the winnowing pass and the LCE oracle. Left-maximality (preceding bytes
-    * differ, or a doc boundary / 0x00 separator) keeps exactly one anchor
-    * per pair-span: interior offsets of a span have equal preceding bytes.
-    * A preceding 0x00 separator is a region START, not a shared byte: two
-    * doc-start-aligned suffixes are both preceded by separators (which
-    * compare equal) yet cannot extend left — dropping them would silently
-    * miss doc-start repeats (e.g. shared boilerplate headers).
+  /** Segment size bound in bytes (docs plus one separator each): bounds a
+    * task's suffix-array memory (≈ 25 B per byte, ~26 MB at the cap).
+    * Cross-segment repeats are the winnowing pass's job; a doc that alone
+    * exceeds it is skipped here, counted in
+    * `graft.longrepeats.oversized_docs`, and still covered by winnowing.
     */
-  private def segmentPairs(docs: Array[(Long, Array[Byte])], minLen: Int,
-                           cappedRuns: org.apache.spark.util.LongAccumulator)
-    : Iterator[Row] = {
-    // concatenate with 0x00 separators (absent from normalized text)
+  final val SEGMENT_MAX: Int = (1 << 20) - 1
+
+  private val spanSchema = StructType(Seq(
+    StructField("a", LongType, false), StructField("b", LongType, false),
+    StructField("a_start", IntegerType, false), StructField("b_start", IntegerType, false),
+    StructField("length", IntegerType, false)))
+
+  /** Maximal spans ≥ minLen within one concatenated segment: one span per
+    * LEFT-MAXIMAL occurrence pair with common prefix ≥ minLen. Pairs come
+    * from maximal lcp ≥ minLen RUNS of the suffix array (every suffix pair
+    * inside a run shares ≥ minLen), not just SA-adjacent entries — m
+    * occurrences of one span yield the full C(m,2) pair set, the same
+    * all-pairs contract as the winnowing pass and the LCE oracle.
+    * Left-maximality (a doc start, or differing preceding bytes) keeps
+    * exactly one pair per span: interior offsets of a span have equal
+    * preceding bytes. A pair's span length is its buffer common prefix (the
+    * running lcp minimum over the run) cut at both docs' ends, so a prefix
+    * that runs through two 0x00 separators at the same offset never
+    * lengthens a span; cut spans below minLen are dropped.
+    */
+  private def segmentSpans(docs: Array[(Long, Array[Byte])], minLen: Int,
+                           cappedRuns: LongAccumulator): Iterator[Row] = {
+    // concatenate with 0x00 separators; a separator belongs to the doc
+    // before it
     val total = docs.map(_._2.length).sum + docs.length
     val buf = new Array[Byte](total)
-    val bounds = new Array[(Long, Int, Int)](docs.length) // (doc, start, end)
+    val start = new Array[Int](docs.length)
+    val docOf = new Array[Int](total)
     var off = 0
     for (i <- docs.indices) {
-      val (id, bytes) = docs(i)
+      val bytes = docs(i)._2
       System.arraycopy(bytes, 0, buf, off, bytes.length)
-      bounds(i) = (id, off, off + bytes.length)
-      off += bytes.length
-      buf(off) = 0; off += 1
-    }
-    def locate(p: Int): (Long, Int) = {
-      // binary search over bounds
-      var lo = 0; var hi = bounds.length - 1
-      while (lo < hi) {
-        val mid = (lo + hi + 1) >>> 1
-        if (bounds(mid)._2 <= p) lo = mid else hi = mid - 1
-      }
-      (bounds(lo)._1, p - bounds(lo)._2)
+      start(i) = off
+      java.util.Arrays.fill(docOf, off, off + bytes.length + 1, i)
+      off += bytes.length + 1
     }
     val sa = SuffixArray.build(buf)
     val lcp = SuffixArray.kasai(buf, sa)
-    // lcp may cross a separator only if one suffix starts with it — the
-    // separator byte 0 sorts first and never equals text bytes, so a common
-    // prefix of length >= minLen cannot contain it.
-    @inline def leftMaximalPair(x: Int, y: Int): Boolean =
-      x == 0 || y == 0 || buf(x - 1) == 0 || buf(y - 1) == 0 ||
-        buf(x - 1) != buf(y - 1)
-    def emit(x: Int, y: Int): Option[Row] = {
-      val (d1, p1) = locate(x)
-      val (d2, p2) = locate(y)
-      if (d1 != d2 || p1 != p2) {
-        val ((aa, pa), (bb, pb)) =
-          if (d1 < d2 || (d1 == d2 && p1 <= p2)) ((d1, p1), (d2, p2))
-          else ((d2, p2), (d1, p1))
-        Some(Row(aa, pa, bb, pb))
-      } else None
-    }
-    // maximal runs: [s, e] with every lcp in [s, e-1] >= minLen
-    var i = 0
     val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
+    // the pair (x, y) with buffer common prefix h
+    def span(x: Int, y: Int, h: Int): Unit = {
+      val dx = docOf(x); val dy = docOf(y)
+      if (x == start(dx) || y == start(dy) || buf(x - 1) != buf(y - 1)) {
+        val len = math.min(h, math.min(start(dx) + docs(dx)._2.length - x,
+          start(dy) + docs(dy)._2.length - y))
+        val (ia, ib) = (docs(dx)._1, docs(dy)._1)
+        val (px, py) = (x - start(dx), y - start(dy))
+        if (len >= minLen && (ia != ib || px != py))
+          rows += (if (ia < ib || (ia == ib && px < py)) Row(ia, ib, px, py, len)
+                   else Row(ib, ia, py, px, len))
+      }
+    }
+    // maximal runs: suffixes sa(i..e) with every lcp in [i, e-1] >= minLen
+    var i = 0
     while (i < lcp.length) {
       if (lcp(i) >= minLen) {
         var e = i
         while (e < lcp.length && lcp(e) >= minLen) e += 1
-        // suffixes sa(i..e) form the run
-        val runEnd = e
-        val size = runEnd - i + 1
-        if (size <= RUN_CAP) {
+        if (e - i + 1 <= RUN_CAP) {
           var p = i
-          while (p <= runEnd) {
+          while (p < e) {
+            var h = Int.MaxValue
             var q = p + 1
-            while (q <= runEnd) {
-              if (leftMaximalPair(sa(p), sa(q))) rows ++= emit(sa(p), sa(q))
+            while (q <= e) {
+              h = math.min(h, lcp(q - 1))
+              span(sa(p), sa(q), h)
               q += 1
             }
             p += 1
@@ -149,132 +151,114 @@ object LongRepeats {
         } else { // degenerate run: star pairs against the run head
           cappedRuns.add(1) // visible: star fallback diverges from the
                             // all-pairs C(m,2) contract (callers warn loudly)
+          var h = Int.MaxValue
           var q = i + 1
-          while (q <= runEnd) {
-            if (leftMaximalPair(sa(i), sa(q))) rows ++= emit(sa(i), sa(q))
+          while (q <= e) {
+            h = math.min(h, lcp(q - 1))
+            span(sa(i), sa(q), h)
             q += 1
           }
         }
-        i = runEnd
+        i = e
       } else i += 1
     }
     rows.iterator
   }
 
-  /** Pack docs into ≤ MAX_N-byte segments (cross-segment repeats are the
-    * winnowing pass's job); oversized docs are skipped.
+  /** Packs a stream of (group, doc_id, bytes) rows, sorted by group, into
+    * ≤ SEGMENT_MAX-byte segments that never span two groups — one segment
+    * in memory at a time. Oversized docs are counted and skipped.
     */
-  private def segmented(all: Array[(Long, Array[Byte])])
-    : Iterator[Array[(Long, Array[Byte])]] = {
-    val segments = scala.collection.mutable.ArrayBuffer.empty[Array[(Long, Array[Byte])]]
-    var cur = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Byte])]
-    var curBytes = 0L
-    for (d <- all if d._2.length + 1 < SuffixArray.MAX_N) {
-      if (curBytes + d._2.length + 1 > SuffixArray.MAX_N && cur.nonEmpty) {
-        segments += cur.toArray; cur = scala.collection.mutable.ArrayBuffer.empty
-        curBytes = 0L
+  private def segments(rows: Iterator[(Long, Long, Array[Byte])],
+                       oversized: LongAccumulator): Iterator[Array[(Long, Array[Byte])]] = {
+    val in = rows.filter { d =>
+      val fits = d._3.length + 1 < SEGMENT_MAX
+      if (!fits) oversized.add(1)
+      fits
+    }.buffered
+    new Iterator[Array[(Long, Array[Byte])]] {
+      def hasNext: Boolean = in.hasNext
+      def next(): Array[(Long, Array[Byte])] = {
+        val g = in.head._1
+        val seg = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Byte])]
+        var bytes = 0L
+        while (in.hasNext && in.head._1 == g &&
+               (seg.isEmpty || bytes + in.head._3.length + 1 <= SEGMENT_MAX)) {
+          val (_, id, t) = in.next()
+          seg += ((id, t)); bytes += t.length + 1
+        }
+        seg.toArray
       }
-      cur += d; curBytes += d._2.length + 1
     }
-    if (cur.nonEmpty) segments += cur.toArray
-    segments.iterator
   }
 
-  private val candidateSchema = StructType(Seq(
-    StructField("a", LongType, false), StructField("pa", IntegerType, false),
-    StructField("b", LongType, false), StructField("pb", IntegerType, false)))
-
-  /** Suffix-array candidates within each partition: run pairs with LCP ≥
-    * minLen spanning different docs (or different positions of one doc).
-    * Exact for co-partitioned docs; O(n log² n) per partition.
+  /** The suffix-array pass over (g, doc_id, t: binary) rows, each partition
+    * sorted by g: spans of every segment, materialized eagerly so the
+    * departure counters are read after the pass.
     */
-  def suffixArrayCandidates(normDocs: DataFrame, minLen: Int): DataFrame =
-    suffixArrayCandidatesAcc(normDocs, minLen)._1
-
-  private def suffixArrayCandidatesAcc(normDocs: DataFrame, minLen: Int)
-    : (DataFrame, org.apache.spark.util.LongAccumulator) = {
-    val spark = normDocs.sparkSession
-    val acc = cappedRunsAcc(spark)
-    val rdd = normDocs.select("doc_id", "t").rdd.mapPartitions { it =>
-      val all = it.map(r => (r.getLong(0), r.getString(1)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))).toArray
-      segmented(all).flatMap(docs => segmentPairs(docs, minLen, acc))
-    }
-    (spark.createDataFrame(rdd, candidateSchema), acc)
+  private def saSpans(rows: DataFrame, minLen: Int): DataFrame = {
+    val sc = rows.sparkSession.sparkContext
+    val capped = sc.longAccumulator("graft.longrepeats.capped_runs")
+    val oversized = sc.longAccumulator("graft.longrepeats.oversized_docs")
+    val out = rows.mapPartitions { it =>
+      segments(it.map(r => (r.getLong(0), r.getLong(1), r.getAs[Array[Byte]](2))), oversized)
+        .flatMap(seg => segmentSpans(seg, minLen, capped))
+    }(Encoders.row(spanSchema)).localCheckpoint(true)
+    warnIfDeparted(capped, oversized)
+    out
   }
 
-  /** Per-session accumulator counting lcp-runs that exceeded RUN_CAP and fell
-    * back to star pairs (diverging from the all-pairs contract — e.g. the
-    * pages_sa_repeats LCE oracle). Checked after every eager SA pass below;
-    * a nonzero count warns LOUDLY instead of silently under-emitting,
-    * mirroring how simhash_ball_gate raises maxBucket.
+  /** A nonzero `graft.longrepeats.capped_runs` (lcp runs past RUN_CAP that
+    * fell back to star pairs) or `graft.longrepeats.oversized_docs` (docs
+    * skipped by the SA pass) means the output departs from the all-pairs
+    * contract an LCE oracle checks: warn LOUDLY instead of silently
+    * under-emitting, mirroring how simhash_ball_gate raises maxBucket.
     */
-  private def cappedRunsAcc(spark: SparkSession) =
-    spark.sparkContext.longAccumulator("graft.longrepeats.capped_runs")
-
-  private def warnIfCapped(acc: org.apache.spark.util.LongAccumulator): Unit =
-    if (acc.value > 0)
-      System.err.println(s"[graft] WARNING: ${acc.value} suffix-array lcp " +
+  private def warnIfDeparted(capped: LongAccumulator, oversized: LongAccumulator): Unit = {
+    if (capped.value > 0)
+      System.err.println(s"[graft] WARNING: ${capped.value} suffix-array lcp " +
         s"run(s) exceeded RUN_CAP=$RUN_CAP and emitted star pairs only — " +
         "output diverges from the all-pairs C(m,2) contract (an LCE oracle " +
         "over this output will see missing pairs)")
+    if (oversized.value > 0)
+      System.err.println(s"[graft] WARNING: ${oversized.value} doc(s) of " +
+        s"≥ ${SEGMENT_MAX - 1} bytes skipped by the suffix-array pass — their " +
+        "repeats are covered only by the winnowing pass")
+  }
 
   /** Verify + extend candidates to maximal spans ≥ minLen.
     *
-    * Texts ship ONCE per doc PAIR, not once per anchor: anchors of one pair
-    * (a near-dup pair carries one every ~window positions — 50×+ redundancy
-    * vs distinct spans) are set-aggregated first, the two texts join against
-    * the pair row, and the anchors explode AFTER the join inside the same
-    * stage. At sf0.1 this turns an ~8 GB two-join text shuffle (3.4M anchor
-    * rows × two ~2.5 KB texts) into ~1 GB (distinct pairs only). Per-pair
-    * anchor lists are bounded by the per-doc fingerprint count
-    * (~2·len/window), never by corpus size.
+    * ONE (a, b) exchange, then a sort by (a, b, pa − pb, pa) and a streaming
+    * chain-head filter, ahead of the text joins: all anchors of ONE maximal
+    * span lie on one diagonal (pa − pb constant) with consecutive gaps <
+    * gram — winnowing selects a shared fingerprint at the same relative
+    * offset at least every `window` < gram positions inside the span.
+    * Conversely two same-diagonal anchors closer than `gram` MUST belong to
+    * the same span — their gram-length matches overlap, so the union region
+    * matches contiguously and extendMatch yields the identical maximal span
+    * from either. Keeping only chain HEADS (first anchor of each ≥gram-gapped
+    * chain) therefore preserves the exact span set while cutting the rows
+    * that ship texts and run extendMatch by the anchor redundancy
+    * (~2·len/window per near-dup pair ⇒ 30–50× at sf0.1). The sort spills;
+    * the filter ([[gf.chainHead]]) holds one row and keeps the columns, so
+    * the (a, b) partitioning also serves the final `distinct`.
+    * (Masking caveat: a chain head whose gram is a HASH-collision false
+    * anchor could suppress a real anchor behind it — a 64-bit collision
+    * between two specific nearby grams, the same risk class as the ckey
+    * content key used for exact dedup; accepted corpus-wide.)
     */
   def verifyAndExtend(normDocs: DataFrame, candidates: DataFrame,
                       gram: Int, minLen: Int): DataFrame = {
-    // ---- diagonal chain-collapse: one anchor per (pair, diagonal, span) ----
-    // All anchors of ONE maximal span lie on one diagonal (pa − pb constant)
-    // with consecutive gaps < gram: winnowing selects a shared fingerprint at
-    // the same relative offset at least every `window` < gram positions
-    // inside the span; the SA generator emits one left-maximal anchor per
-    // span to begin with. Conversely two same-diagonal anchors closer than
-    // `gram` MUST belong to the same span — their gram-length matches
-    // overlap, so the union region matches contiguously and extendMatch
-    // yields the identical maximal span from either. Keeping only chain
-    // HEADS (first anchor of each ≥gram-gapped chain) therefore preserves
-    // the exact span set while cutting extendMatch evaluations by the
-    // anchor redundancy (~2·len/window per near-dup pair ⇒ 30–50× at sf0.1)
-    // and shrinking the per-pair anchor lists the next aggregation buffers.
-    // lag() runs in a sort-based window — spillable, no hash-agg buffer of
-    // 10⁶ structs (the r4 bench's memory-pressure amplifier).
-    // (Masking caveat: a chain head whose gram is a HASH-collision false
-    // anchor could suppress a real anchor behind it — a 64-bit collision
-    // between two specific nearby grams, the same risk class as the ckey
-    // content key used for exact dedup; accepted corpus-wide.)
-    // r7 exchange fusion: hash-repartition by (a, b) ONCE — HashPartitioning
-    // on (a, b) satisfies the window's ClusteredDistribution(a, b, diag) (a
-    // subset of the clustering keys) AND the per-pair aggregation's
-    // ClusteredDistribution(a, b), so the lag window and the anchor groupBy
-    // run on one exchange instead of two (the r5 form exchanged candidates
-    // on (a, b, diag) and the collapsed heads again on (a, b)).
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("a"), col("b"), col("diag")).orderBy(col("pa"))
     val heads = candidates
-      .withColumn("diag", col("pa") - col("pb"))
+      .select(col("a"), col("b"), col("pa").cast("int").as("pa"), col("pb").cast("int").as("pb"))
       .repartition(col("a"), col("b"))
-      .withColumn("prev_pa", lag(col("pa"), 1).over(w))
-      .filter(col("prev_pa").isNull || col("pa") - col("prev_pa") >= gram)
-      .select(col("a"), col("b"), col("pa"), col("pb"))
-    val byPair = heads.groupBy(col("a"), col("b"))
-      .agg(collect_set(struct(col("pa"), col("pb"))).as("anchors"))
+      .sortWithinPartitions(col("a"), col("b"), col("pa") - col("pb"), col("pa"))
+      .filter(gf.chainHead(col("a"), col("b"), col("pa"), col("pb"), gram))
     val ta = normDocs.select(col("doc_id").as("a"), col("t").as("ta"))
     val tb = normDocs.select(col("doc_id").as("b"), col("t").as("tb"))
-    byPair
+    heads
       .join(ta, "a").join(tb, "b")
-      .select(col("a"), col("b"), col("ta"), col("tb"),
-        explode(col("anchors")).as("an"))
-      .withColumn("m", gf.extendMatch(col("ta"), col("tb"),
-        col("an.pa").cast("int"), col("an.pb").cast("int"), gram))
+      .withColumn("m", gf.extendMatch(col("ta"), col("tb"), col("pa"), col("pb"), gram))
       .filter(col("m").isNotNull && col("m.len") >= minLen)
       .filter(col("a") =!= col("b") || col("m.a_start") =!= col("m.b_start"))
       .select(col("a"), col("b"), col("m.a_start").as("a_start"),
@@ -294,43 +278,34 @@ object LongRepeats {
                 * shares the one corpus pass across repeat/decontaminate
                 * consumers). */
               precomputedFps: Option[DataFrame] = None): DataFrame = {
-    // r7: persist the normalized corpus ONLY when this call computes the
-    // fingerprint pass from it (two heavy consumers: winnow + the extend
-    // joins). With precomputed fingerprints the norm frame feeds only the
-    // two pruned text joins in verifyAndExtend — two cheap columnar scans,
-    // not worth a ~50 MB materialization + count job per call.
-    val nRaw = norm(docs, idCol, textCol)
-    val n =
-      if (precomputedFps.isEmpty)
-        nRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else nRaw
+    // not persisted: the fingerprint pass and the two text joins each read
+    // this projection of the caller's docs in their own first stage, while
+    // a persisted copy would add one cache job per consumer and a second
+    // resident copy of a corpus the caller usually holds already
+    val n = norm(docs, idCol, textCol)
     val minLen = gram + window - 1
     val cand = winnowCandidatesFromFps(
       precomputedFps.getOrElse(winnowFingerprints(n, gram, window)), maxBucket)
-    // eager output + unpersist: the span set is tiny; the persisted corpus
-    // copy must NOT outlive the call (a many-query session would otherwise
-    // accumulate one pinned corpus per repeat pass and degrade under memory
-    // pressure — the round-3 driver-bench outlier)
-    try verifyAndExtend(n, cand, gram, minLen).localCheckpoint(true)
-    finally if (precomputedFps.isEmpty) n.unpersist()
+    // eager output: the span set is tiny
+    verifyAndExtend(n, cand, gram, minLen).localCheckpoint(true)
   }
 
-  /** Full suffix-array pass over the current partitioning (gram anchors the
-    * verifier; detection is exact within partitions at exactly minLen).
+  /** Lowercased (g, doc_id, t) rows with t as its UTF-8 bytes — the byte
+    * positions extendMatch and the winnow pass use.
+    */
+  private def saInput(docs: DataFrame, groupExpr: org.apache.spark.sql.Column,
+                      idCol: String, textCol: String): DataFrame =
+    docs.select(groupExpr.cast("long").as("g"), col(idCol).as("doc_id"),
+      lower(col(textCol)).cast("binary").as("t"))
+
+  /** Full suffix-array pass over the current partitioning: exact within
+    * partitions at exactly minLen (one segment run per ≤ SEGMENT_MAX bytes
+    * of a partition, in partition order).
     */
   def repeatsWithinPartitions(docs: DataFrame, minLen: Int = 35,
                               idCol: String = "doc_id",
-                              textCol: String = "text"): DataFrame = {
-    val n = norm(docs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager + unpersist: see repeats()
-    val (cand, acc) = suffixArrayCandidatesAcc(n, minLen)
-    try {
-      val out = verifyAndExtend(n, cand, minLen, minLen).localCheckpoint(true)
-      warnIfCapped(acc)
-      out
-    } finally n.unpersist()
-  }
+                              textCol: String = "text"): DataFrame =
+    saSpans(saInput(docs, lit(0L), idCol, textCol), minLen)
 
   /** Suffix-array pass scoped to GROUPS (e.g. host buckets): docs of one
     * group are hash-shuffled together and sorted contiguously, and each
@@ -339,33 +314,12 @@ object LongRepeats {
     * partitioning-INDEPENDENT contract (the per-partition variant's output
     * depends on which groups hash-co-reside, which no SQL oracle can
     * reproduce; this one has one). One narrow shuffle on the group key;
-    * groups bigger than MAX_N bytes segment like partitions do.
+    * groups bigger than SEGMENT_MAX bytes segment in doc_id order.
     */
   def repeatsWithinGroups(docs: DataFrame, groupExpr: org.apache.spark.sql.Column,
                           minLen: Int, idCol: String = "doc_id",
-                          textCol: String = "text"): DataFrame = {
-    val spark = docs.sparkSession
-    val n = docs
-      .select(groupExpr.as("g"), col(idCol).as("doc_id"),
-        lower(col(textCol)).as("t"))
-      .repartition(spark.sparkContext.defaultParallelism, col("g"))
-      .sortWithinPartitions("g", "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val acc = cappedRunsAcc(spark)
-    val rdd = n.select("g", "doc_id", "t").rdd.mapPartitions { it =>
-      val all = it.map(r => (r.getLong(0), r.getLong(1), r.getString(2)
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))).toArray
-      all.groupBy(_._1).valuesIterator.flatMap { grp =>
-        val docsArr = grp.sortBy(_._2).map(d => (d._2, d._3))
-        segmented(docsArr).flatMap(seg => segmentPairs(seg, minLen, acc))
-      }
-    }
-    val candidates = spark.createDataFrame(rdd, candidateSchema)
-    try {
-      val out = verifyAndExtend(n.select("doc_id", "t"), candidates,
-        minLen, minLen).localCheckpoint(true)
-      warnIfCapped(acc)
-      out
-    } finally n.unpersist()
-  }
+                          textCol: String = "text"): DataFrame =
+    saSpans(saInput(docs, groupExpr, idCol, textCol)
+      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("g"))
+      .sortWithinPartitions("g", "doc_id"), minLen)
 }

@@ -1,7 +1,9 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 import graft.functions.gf
 
 /** MinHash + LSH banding near-duplicate detection (north_star core).
@@ -42,22 +44,24 @@ object MinHashLSH {
 
   /** Candidate pairs (p < q) from bucketed probe rows with BOUNDED executor
     * memory — shared by every bucket-pair source (LSH bands, SimHash block
-    * keys, winnow fingerprints, SRP buckets).
+    * keys, winnow fingerprints, SRP buckets, the incremental batch).
     *
-    * `keyRows` must have columns `keyCols :+ "e"` (element; any orderable
-    * type). Two-phase:
+    * `keyRows` must have columns `keyCols :+ "e"` (element: an orderable
+    * atomic type other than binary, or a struct of such fields — the scan
+    * compares values with `==`). One hash exchange on the key columns, one sort by (key…, e),
+    * then one streaming scan per key that buffers at most `maxBucket + 1`
+    * rows:
     *
-    *   1. per-key stats (min element + count) as WINDOW aggregates over the
-    *      key's hash partitioning — no stats aggregate joined back;
-    *   2. keys with count ≤ maxBucket aggregate their (bounded) member list
-    *      and emit all pairs (the window's partitioning feeds that groupBy
-    *      exchange-free); HOT keys emit star edges (min, member) straight
-    *      from the windowed rows — one row in, ≤ one pair out, no
-    *      aggregation buffer at all.
+    *   - a key of ≤ maxBucket rows emits every pair of its distinct sorted
+    *     member set;
+    *   - past that, the scan streams star edges (min, e) — the first element
+    *     in sort order is the min — one row in, ≤ one pair out.
     *
-    * A boilerplate flood of 10⁸ rows on one key therefore costs a streaming
-    * pass, not a 10⁸-element ObjectHashAggregate buffer; connectivity (what
-    * clustering needs) is preserved by the star.
+    * Pairs are yielded lazily. A boilerplate flood of 10⁸ rows on one key
+    * therefore costs a sort (spillable) and a streaming pass, never a
+    * per-key aggregation buffer; connectivity (what clustering needs) is
+    * preserved by the star. Rows with a null key or a null element are
+    * dropped before the scan: they emit nothing and count toward no bound.
     */
   def boundedBucketPairs(keyRows: DataFrame, keyCols: Seq[String],
                          maxBucket: Int): DataFrame = {
@@ -65,43 +69,121 @@ object MinHashLSH {
     // CONTRACT: (key, e) rows should be unique — every caller's key family
     // emits one row per (key, element) by construction (band hashes, block
     // combinations, winnow positions, SRP table buckets). A violating
-    // duplicate row can only DEMOTE its bucket to star edges early (cnt is
-    // a row count — one shuffle; count_distinct would cost a second
-    // (key,e)-keyed exchange of the full probe stream) and duplicate star
-    // edges (callers dedup pairs); it can never produce self-pairs —
-    // smallPairs aggregates a SET and the hot path filters e =!= mn.
-    //
-    // r7 (guide §2.4): per-key stats come from WINDOW aggregates over ONE
-    // exchange of the probe stream, not a stats aggregation joined back —
-    // the r6 form exchanged the full stream twice (once into the partial
-    // agg, once for the join probe side) and scanned the feature subtree
-    // twice to feed them. The window's hash partitioning on the key also
-    // feeds smallPairs' groupBy exchange-free. The committed plan still
-    // shows two Exchanges (one under each union branch); AQE's stage reuse
-    // runs them as one full-stream shuffle at run time. Flood bound:
-    // WindowExec buffers one KEY GROUP at a time in a spillable row array
-    // (heap use capped by the spill threshold, a 10⁸-row boilerplate key
-    // costs sequential disk, never executor memory) — the hot path stays
-    // one-row-in/≤one-out after it, and collect_set still only runs behind
-    // the cnt ≤ maxBucket filter.
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(k: _*)
-    // a window partition groups all null keys together; an equi-join never
-    // matches them, so they must not form a bucket
-    val joined = keyRows.filter(k.map(_.isNotNull).reduce(_ && _))
-      .withColumn("mn", min(col("e")).over(w))
-      .withColumn("cnt", count(lit(1)).over(w))
-      .filter(col("cnt") > 1)
-    val hotPairs = joined.filter(col("cnt") > maxBucket && col("e") =!= col("mn"))
-      .select(col("mn").as("p"), col("e").as("q"))
-    val smallPairsExpr =
-      """flatten(transform(ids, (x, i) ->
-        |  transform(slice(ids, i + 2, size(ids) - i - 1), y -> struct(x AS p, y AS q))))"""
-        .stripMargin
-    val smallPairs = joined.filter(col("cnt") <= maxBucket)
-      .groupBy(k: _*).agg(sort_array(collect_set(col("e"))).as("ids"))
-      .select(explode(expr(smallPairsExpr)).as("pr"))
-      .select(col("pr.p").as("p"), col("pr.q").as("q"))
-    smallPairs.union(hotPairs)
+    // duplicate row can only DEMOTE its bucket to star edges early (the
+    // bound counts rows) and duplicate star edges (callers dedup pairs); it
+    // can never produce self-pairs.
+    val rows = keyRows.select(k :+ col("e"): _*)
+      .filter((k :+ col("e")).map(_.isNotNull).reduce(_ && _))
+    // a struct element streams as its flat fields, so the scan never builds
+    // nested rows; sorting by the fields in order is the struct's own order
+    val fields = rows.schema("e").dataType match {
+      case st: StructType => st.fields.toSeq.map(f => (col("e").getField(f.name), f))
+      case t => Seq((col("e"), StructField("e", t, true)))
+    }
+    val eCols = fields.indices.map(i => col(s"e$i"))
+    val flat = rows.select(k ++ fields.zipWithIndex.map { case ((c, _), i) => c.as(s"e$i") }: _*)
+      .repartition(k: _*)
+      .sortWithinPartitions(k ++ eCols: _*)
+    val side = (s: String) => fields.zipWithIndex.map { case ((_, f), i) =>
+      StructField(s"$s$i", f.dataType, f.nullable) }
+    val (nKeys, nFields) = (keyCols.length, fields.length)
+    val pairs = flat.mapPartitions(it => new BucketPairs(it, nKeys, nFields, maxBucket))(
+      Encoders.row(StructType(side("p") ++ side("q"))))
+    def element(s: String): Column = rows.schema("e").dataType match {
+      case _: StructType =>
+        struct(fields.zipWithIndex.map { case ((_, f), i) => col(s"$s$i").as(f.name) }: _*)
+      case _ => col(s"${s}0")
+    }
+    pairs.select(element("p").as("p"), element("q").as("q"))
+  }
+
+  /** The per-key scan of [[boundedBucketPairs]] over rows (key…, element
+    * fields…) sorted by key then element: yields flat (p fields…,
+    * q fields…) pairs lazily, holding at most the current key's first
+    * `maxBucket + 1` rows. An element is its input row's field range.
+    */
+  private final class BucketPairs(rows: Iterator[Row], nKeys: Int, nFields: Int,
+                                  maxBucket: Int) extends Iterator[Row] {
+    private var ahead: Row = if (rows.hasNext) rows.next() else null
+    private var key: Row = _        // first row of the current key
+    private val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
+    private var n = 0               // small key: distinct members in buf(0 until n)
+    private var i = 0
+    private var j = 1
+    private var star = false        // current key is past maxBucket
+    private var drain = 1           // star: next buffered element to pair with buf(0)
+    private var nextPair: Row = _
+
+    private def sameKey(r: Row): Boolean = {
+      var c = 0
+      while (c < nKeys && r.get(c) == key.get(c)) c += 1
+      c == nKeys
+    }
+    private def same(x: Row, y: Row): Boolean = {
+      var c = nKeys
+      while (c < nKeys + nFields && x.get(c) == y.get(c)) c += 1
+      c == nKeys + nFields
+    }
+    private def pair(p: Row, q: Row): Row = {
+      val v = new Array[Any](2 * nFields)
+      var c = 0
+      while (c < nFields) { v(c) = p.get(nKeys + c); v(nFields + c) = q.get(nKeys + c); c += 1 }
+      new GenericRow(v)
+    }
+    private def advance(): Unit = ahead = if (rows.hasNext) rows.next() else null
+
+    /** Reads the next key's first ≤ maxBucket + 1 rows; false at the end. */
+    private def loadKey(): Boolean = {
+      if (ahead == null) return false
+      key = ahead
+      buf.clear()
+      while (ahead != null && buf.length <= maxBucket && sameKey(ahead)) {
+        buf += ahead
+        advance()
+      }
+      star = buf.length > maxBucket
+      if (star) drain = 1
+      else { // distinct members, in place (sorted: duplicates are adjacent)
+        n = 0
+        var b = 0
+        while (b < buf.length) {
+          if (n == 0 || !same(buf(n - 1), buf(b))) { buf(n) = buf(b); n += 1 }
+          b += 1
+        }
+        i = 0; j = 1
+      }
+      true
+    }
+
+    override def hasNext: Boolean = {
+      while (nextPair == null) {
+        if (star) { // buf(0) is the key's min
+          if (drain < buf.length) {
+            val e = buf(drain); drain += 1
+            if (!same(e, buf(0))) nextPair = pair(buf(0), e)
+          } else if (ahead != null && sameKey(ahead)) {
+            val e = ahead; advance()
+            if (!same(e, buf(0))) nextPair = pair(buf(0), e)
+          } else {
+            star = false
+            n = 0
+            if (!loadKey()) return false
+          }
+        } else if (i < n - 1) {
+          nextPair = pair(buf(i), buf(j))
+          j += 1
+          if (j == n) { i += 1; j = i + 1 }
+        } else if (!loadKey()) return false
+      }
+      true
+    }
+
+    override def next(): Row = {
+      if (!hasNext) throw new NoSuchElementException
+      val r = nextPair
+      nextPair = null
+      r
+    }
   }
 
   /** Incremental new-vs-accumulated candidate pairs with the SAME hot-key
@@ -143,7 +225,7 @@ object MinHashLSH {
     val tagged = oldRows.select(k :+ col("e") :+ lit(false).as("is_new"): _*)
       .unionByName(newRows.select(k :+ col("e") :+ lit(true).as("is_new"): _*))
     // r7: per-key stats as WINDOW aggregates over the one tagged exchange
-    // (see boundedBucketPairs) — the stats-agg + join-back form paid a
+    // — the stats-agg + join-back form paid a
     // second full exchange of the tagged stream and a second scan of the
     // index subtrees. Keys with no new arrival emit nothing (their old
     // pairs surfaced when the newer member registered); singleton keys

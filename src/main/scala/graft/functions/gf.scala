@@ -73,6 +73,11 @@ object gf {
                   gram: Int): Column =
     c(ExtendMatch(x(textA), x(textB), x(posA), x(posB), gram))
 
+  /** Streaming chain-head test for rows sorted by (a, b, pa − pb, pa) within
+    * each partition (see exprs.ChainHead); use only directly above that sort. */
+  def chainHead(a: Column, b: Column, pa: Column, pb: Column, gram: Int): Column =
+    c(ChainHead(x(a), x(b), x(pa), x(pb), gram))
+
   /** Cosine similarity of two array<float> columns. */
   def cosine(a: Column, b: Column): Column = c(CosineSim(x(a), x(b)))
 

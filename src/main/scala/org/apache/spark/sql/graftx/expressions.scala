@@ -4,12 +4,14 @@ import graft.functions.Impl
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Custom Catalyst expressions for the dedup engine. All are:
+/** Custom Catalyst expressions for the dedup engine. All but the stateful
+  * [[exprs.ChainHead]] filter are:
   *   - deterministic, null-intolerant, foldable-aware;
   *   - codegen'd as a single static call into [[Impl]] so they stay inside
   *     WholeStageCodegen (no UDF serialization, no interpreter fallback).
@@ -246,6 +248,41 @@ object exprs {
     override protected def withNewChildrenInternal(
         a: Expression, b: Expression, c: Expression, d: Expression): ExtendMatch =
       copy(a, b, c, d)
+  }
+
+  /** Streaming chain-head test over rows sorted by (a, b, pa − pb, pa) within
+    * each partition: true for the first row of each (a, b, pa − pb) group
+    * and for a row whose pa lies ≥ gram past the previous row's pa in that
+    * group. It keeps the previous row as per-partition state, so it is
+    * Nondeterministic: the optimizer never moves it below the sort it must
+    * sit directly above.
+    */
+  case class ChainHead(a: Expression, b: Expression, pa: Expression, pb: Expression,
+                       gram: Int)
+      extends Expression with Nondeterministic with CodegenFallback with ExpectsInputTypes {
+    override def children: Seq[Expression] = Seq(a, b, pa, pb)
+    override def inputTypes: Seq[AbstractDataType] =
+      Seq(LongType, LongType, IntegerType, IntegerType)
+    override def dataType: DataType = BooleanType
+    override def nullable: Boolean = false
+    @transient private[this] var started = false
+    @transient private[this] var prevA = 0L
+    @transient private[this] var prevB = 0L
+    @transient private[this] var prevDiag = 0
+    @transient private[this] var prevPa = 0
+    override protected def initializeInternal(partitionIndex: Int): Unit = started = false
+    override protected def evalInternal(row: InternalRow): Any = {
+      val va = a.eval(row).asInstanceOf[Long]
+      val vb = b.eval(row).asInstanceOf[Long]
+      val vpa = pa.eval(row).asInstanceOf[Int]
+      val diag = vpa - pb.eval(row).asInstanceOf[Int]
+      val head = !started || va != prevA || vb != prevB || diag != prevDiag ||
+        vpa - prevPa >= gram
+      started = true; prevA = va; prevB = vb; prevDiag = diag; prevPa = vpa
+      head
+    }
+    override protected def withNewChildrenInternal(
+        c: IndexedSeq[Expression]): ChainHead = copy(c(0), c(1), c(2), c(3))
   }
 
   /** Cosine similarity of two float vectors (deterministic double accumulation). */

@@ -49,6 +49,42 @@ class BoundedBucketSpec extends AnyFunSuite with SparkTestBase {
       }.toSet
       assert(got == naive, s"trial $trial cap $cap")
     }
+    // struct elements (doc_id, pos), the two-column key (table, bucket),
+    // null keys and null elements, at fixed caps
+    for (trial <- 0 until 2; cap <- Seq(1, 2, 32, 1024)) {
+      // hot (table, bucket) keys of up to ~1,500 rows next to tiny ones
+      val rows = (0 until 3000).map { _ =>
+        val hot = rnd.nextInt(4) == 0
+        val table = if (rnd.nextInt(50) == 0) None else Some(rnd.nextInt(3).toLong)
+        val bucket = if (rnd.nextInt(50) == 0) None
+          else Some(if (hot) 0L else 1L + rnd.nextInt(400))
+        // (doc_id, pos); None is a null element
+        val e: Option[(Long, Int)] = if (rnd.nextInt(30) == 0) None
+          else Some((rnd.nextInt(600).toLong, rnd.nextInt(3)))
+        (table, bucket, e)
+      }.distinct
+      val df = rows.toDF("table", "bucket", "e0").select(col("table"), col("bucket"),
+        when(col("e0").isNotNull,
+          struct(col("e0._1").as("doc_id"), col("e0._2").as("pos"))).as("e"))
+      val got = MinHashLSH.boundedBucketPairs(df, Seq("table", "bucket"), cap).collect()
+        .map { r =>
+          val (p, q) = (r.getStruct(0), r.getStruct(1))
+          ((p.getLong(0), p.getInt(1)), (q.getLong(0), q.getInt(1)))
+        }
+      // naive model: rows with a null key or element are dropped; per key,
+      // the bound counts rows; small keys emit every pair of the distinct
+      // sorted member set, hot keys (min, e) stars
+      val ord = Ordering.Tuple2[Long, Int]
+      val naive = rows.filter(r => r._1.isDefined && r._2.isDefined && r._3.isDefined)
+        .groupBy(r => (r._1, r._2)).values.toSeq.flatMap { grp =>
+          val ms = grp.flatMap(_._3).distinct.sorted(ord)
+          if (grp.length <= cap)
+            for (i <- ms.indices; j <- i + 1 until ms.length) yield (ms(i), ms(j))
+          else ms.drop(1).map(y => (ms.head, y))
+        }
+      assert(got.sortBy(_.toString).toSeq == naive.sortBy(_.toString),
+        s"trial $trial cap $cap: ${got.length} pairs vs naive ${naive.length}")
+    }
   }
 
   test("rows with a null key emit no pairs") {
@@ -114,18 +150,16 @@ class BoundedBucketSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("the aggregation state is O(1) per key: collect_set only runs below maxBucket") {
-    import spark.implicits._
-    // structural guarantee: the only per-key array aggregation in the plan
-    // sits behind the cnt <= maxBucket filter, so its groups are bounded by
-    // construction — assert the filter is upstream of the ObjectHashAggregate
-    val rows = spark.range(1000).select((col("id") % 10).as("key"), col("id").as("e"))
-    val plan = MinHashLSH.boundedBucketPairs(rows, Seq("key"), maxBucket = 4)
-      .queryExecution.optimizedPlan.toString
-    assert(plan.contains("collect_set"), plan)
-    // the branch feeding collect_set filters on cnt <= 4
-    val aggIdx = plan.indexOf("collect_set")
-    val filtered = plan.substring(aggIdx)
-    assert(filtered.contains("<= 4") || plan.substring(0, aggIdx).contains("<= 4"), plan)
+  test("plan shape: one hash exchange on the key columns, then a sort and a streaming scan (no window, no collect_set)") {
+    val rows = spark.range(1000).select((col("id") % 10).as("table"),
+      (col("id") % 7).as("bucket"), col("id").as("e"))
+    val plan = MinHashLSH.boundedBucketPairs(rows, Seq("table", "bucket"), maxBucket = 4)
+      .queryExecution.executedPlan.toString
+    assert("Exchange hashpartitioning".r.findAllMatchIn(plan).length == 1, plan)
+    assert(plan.contains("Exchange hashpartitioning(table#"), plan)
+    assert(plan.contains("Sort [table#"), plan)
+    assert(plan.contains("MapPartitions"), plan)
+    assert(!plan.contains("Window") && !plan.contains("collect_set") &&
+      !plan.contains("HashAggregate"), plan)
   }
 }

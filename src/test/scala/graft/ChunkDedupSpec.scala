@@ -450,23 +450,6 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
 
 class ChunkDedupLocalSweepSpec extends AnyFunSuite with SparkTestBase {
 
-  /** `f`'s result and the Spark jobs it ran, listener-counted. */
-  private def withJobs[T](f: => T): (T, Int) = {
-    val jobCounter = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobCounter.incrementAndGet()
-    }
-    org.apache.spark.sql.graftx.Bridge.drainListenerBus(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = f
-      org.apache.spark.sql.graftx.Bridge.drainListenerBus(spark.sparkContext)
-      (out, jobCounter.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   /** `k` checkpoints of `n` chunks of `width` letters a–d (few distinct
     * chunks ⇒ in-checkpoint duplicates); each later one swaps two aligned
     * blocks of n/16 chunks, from step 4 on copies a block of checkpoint 0
@@ -530,11 +513,11 @@ class ChunkDedupLocalSweepSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("local-sweep checkpoint job bound: <= 4 jobs at checkpoint 0, <= 6 after (4608 chunks, store-backed)") {
+  test("local-sweep checkpoint job bound: <= 4 jobs at every checkpoint (4608 chunks, store-backed)") {
     // just above SERIAL_MAX: block swaps, fresh chunks and in-checkpoint
     // duplicates exercise every label; the single driver pass keeps each
-    // checkpoint to one digest + MD5 job, one probe, one insert and the
-    // chunk_first write
+    // checkpoint to one digest + MD5 job, one probe job (a broadcast digest
+    // set filters the map), one insert and the chunk_first write
     val n = 4608
     assert(n > ChunkDedup.Chain.SERIAL_MAX)
     val steps = chain(n, 3, 2, 17)
@@ -544,7 +527,7 @@ class ChunkDedupLocalSweepSpec extends AnyFunSuite with SparkTestBase {
     val (rs, jobs) = steps.map(s => withJobs(c.checkpoint(frame(s)))).unzip
     assert(jobs(0) <= 4, s"checkpoint 0 ran ${jobs(0)} jobs")
     for (cid <- 1 until steps.length)
-      assert(jobs(cid) <= 6, s"checkpoint $cid ran ${jobs(cid)} jobs")
+      assert(jobs(cid) <= 4, s"checkpoint $cid ran ${jobs(cid)} jobs")
     assert(rs.last.numFirstOcur > 0 && rs.last.numShiftDupl > 0)
     assert(restarted(ChunkDedup.restartFromStore(spark, store, 2)) == steps(2))
   }

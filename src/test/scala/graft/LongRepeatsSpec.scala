@@ -13,6 +13,36 @@ class LongRepeatsSpec extends AnyFunSuite with SparkTestBase {
     assert(SuffixArray.kasai(s, sa).toSeq == Seq(1, 3, 0, 0, 2))
   }
 
+  test("SA-IS equals a naive suffix sort and Kasai a naive LCP: random, all-equal, periodic and 0x00-separated inputs") {
+    def common(s: Array[Byte], x: Int, y: Int): Int = {
+      var k = 0
+      while (x + k < s.length && y + k < s.length && s(x + k) == s(y + k)) k += 1
+      k
+    }
+    // unsigned byte order; a suffix that is a prefix of another sorts first
+    def naiveSa(s: Array[Byte]): Array[Int] = s.indices.toArray.sortWith { (x, y) =>
+      val k = common(s, x, y)
+      x + k == s.length || (y + k < s.length && (s(x + k) & 0xff) < (s(y + k) & 0xff))
+    }
+    val rnd = new scala.util.Random(4096)
+    def random(n: Int, alphabet: Int): Array[Byte] =
+      Array.fill(n)((if (alphabet == 256) rnd.nextInt(256) else 'a' + rnd.nextInt(alphabet)).toByte)
+    val randomInputs = for (alphabet <- Seq(1, 2, 4, 256);
+                            n <- Seq(0, 1, 2, 3, 4096) ++ Seq.fill(5)(rnd.nextInt(4097)))
+      yield s"random n=$n alphabet=$alphabet" -> random(n, alphabet)
+    val periodic = for (p <- Seq(2, 3, 7, 64))
+      yield s"periodic p=$p" -> Array.tabulate(4096)(i => ('a' + i % p).toByte)
+    val separated = for (k <- Seq(1, 8, 60)) yield s"0x00-separated docs=$k" ->
+      Seq.fill(k)(random(rnd.nextInt(4096 / k), 3) :+ 0.toByte).reduce(_ ++ _)
+    for ((name, s) <- randomInputs ++ periodic ++ separated ++
+         Seq("all-equal 0x00" -> Array.fill(4096)(0.toByte))) {
+      val sa = SuffixArray.build(s)
+      assert(sa.toSeq == naiveSa(s).toSeq, name)
+      assert(SuffixArray.kasai(s, sa).toSeq ==
+        (0 until s.length - 1).map(i => common(s, sa(i), sa(i + 1))), name)
+    }
+  }
+
   private def mkDocs(rows: (Long, String)*) = {
     import spark.implicits._
     rows.toSeq.toDF("doc_id", "text")
@@ -180,6 +210,67 @@ class LongRepeatsSpec extends AnyFunSuite with SparkTestBase {
     val expected = bruteSpans(Seq(0L -> ("a" * 700)), 10)
     got.foreach(row => assert(expected.contains(row), s"unsound row $row"))
     assert(got.length < 5000, s"star cap failed: ${got.length} rows")
+  }
+
+  test("SA departures are counted in named accumulators and warned: capped lcp runs and oversized docs") {
+    // doc 0: a 700-byte run of one letter (one lcp run past RUN_CAP); doc 1:
+    // a doc that alone exceeds SEGMENT_MAX (skipped by the SA pass), built
+    // on the executor rather than shipped inside a task
+    val docs = mkDocs(0L -> ("a" * 700)).union(spark.range(1).select(lit(1L).as("doc_id"),
+      expr(s"repeat('b', ${LongRepeats.SEGMENT_MAX})").as("text")))
+    val counters = scala.collection.concurrent.TrieMap.empty[String, Long]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        for (a <- e.stageInfo.accumulables.values; n <- a.name
+             if n.startsWith("graft.longrepeats."); v <- a.value)
+          counters.put(n, math.max(counters.getOrElse(n, 0L), v.toString.toLong))
+    }
+    val err = new java.io.ByteArrayOutputStream
+    val stderr = System.err
+    org.apache.spark.sql.graftx.Bridge.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    System.setErr(new java.io.PrintStream(err, true))
+    val got = try {
+      val out = LongRepeats.repeatsWithinGroups(docs, lit(0L), minLen = 10).collect()
+      org.apache.spark.sql.graftx.Bridge.drainListenerBus(spark.sparkContext)
+      out
+    } finally {
+      System.setErr(stderr)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(counters.get("graft.longrepeats.capped_runs").contains(1L), counters)
+    assert(counters.get("graft.longrepeats.oversized_docs").contains(1L), counters)
+    val warned = err.toString("UTF-8")
+    assert(warned.contains("1 suffix-array lcp run(s) exceeded RUN_CAP"), warned)
+    assert(warned.contains("1 doc(s) of"), warned)
+    // the skipped doc emits nothing; the capped doc still emits sound stars
+    assert(got.nonEmpty && got.forall(r => r.getLong(0) == 0L && r.getLong(1) == 0L))
+  }
+
+  // the 20-doc planted-repeat corpus of the winnowing-guarantee spec
+  private def plantedDocs = {
+    val rnd = new scala.util.Random(99)
+    def words(n: Int, tag: String) = (0 until n).map(_ => tag + rnd.nextInt(100000)).mkString(" ")
+    val planted = "z z z shared segment marker " + ("k9 " * 12)
+    mkDocs((0L until 20L).map { i =>
+      i -> (words(30, s"u${i}w") + " " + planted + " " + words(30, s"v${i}w"))
+    }: _*)
+  }
+
+  test("job bound: repeats runs <= 6 jobs, counting the caller's count()") {
+    val docs = plantedDocs.localCheckpoint(true)
+    val (n, jobs) = withJobs(LongRepeats.repeats(docs, 24, 12, maxBucket = 64).count())
+    assert(n >= 190, s"$n spans")
+    assert(jobs <= 6, s"repeats ran $jobs jobs")
+  }
+
+  test("job bound: repeatsWithinGroups runs <= 4 jobs, counting the caller's count()") {
+    val docs = plantedDocs.localCheckpoint(true)
+    val (n, jobs) = withJobs(
+      LongRepeats.repeatsWithinGroups(docs, (col("doc_id") / 4).cast("long"), minLen = 35).count())
+    assert(n > 0, s"$n spans")
+    assert(jobs <= 4, s"repeatsWithinGroups ran $jobs jobs")
   }
 
   test("decontamination: planted probes found at exact offsets, absent probes excluded") {
