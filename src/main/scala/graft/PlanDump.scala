@@ -25,13 +25,11 @@ object PlanDump {
     sb.append("Generated by `graft.PlanDump`. Things to check:\n")
     sb.append("`PushedFilters`/`ReadSchema` on scans, `WholeStageCodegen` spans\n")
     sb.append("around the graft expressions, broadcast vs shuffle joins, single\n")
-    sb.append("exchange in the exact election, the bounded bucket-pair kernel\n")
-    sb.append("(r7 window form: per-key stats as WINDOW aggregates, no join; the\n")
-    sb.append("plan shows an Exchange under each union branch, which AQE stage\n")
-    sb.append("reuse runs as one shuffle of the probe stream; collect_set still\n")
-    sb.append("only behind the cnt <= maxBucket filter), the partitioned two-pass\n")
-    sb.append("prefix scan, and the bounded incremental probe (one tagged\n")
-    sb.append("exchange, no unbounded join).\n")
+    sb.append("exchange in the exact election, the bounded bucket-pair kernel and\n")
+    sb.append("the bounded incremental probe (one hash exchange on the key, a sort\n")
+    sb.append("and a streaming per-key scan each; the probe's old and new rows\n")
+    sb.append("meet under that one exchange, tagged is_new, with no window, join\n")
+    sb.append("or aggregate), and the partitioned two-pass prefix scan.\n")
 
     def dump(title: String, df: org.apache.spark.sql.DataFrame): Unit = {
       sb.append(s"\n## $title\n\n```\n")
@@ -67,7 +65,9 @@ object PlanDump {
     dump("SRP threshold pairs (emb_cosine_pairs at bench scale — bucketed, never O(n²))",
       graft.sim.Ann.srpThresholdPairs(
         spark.read.parquet(s"$dataDir/embeddings.parquet"), tau = 0.4))
-    dump("bounded incremental probe (new-vs-accumulated, hot keys stream star edges)",
+    dump("bounded incremental probe (old ∪ new tagged is_new, one hash exchange on the " +
+      "key, sort by (key, is_new, e), the bucket kernel's streaming scan: pairs whose " +
+      "later row is new, hot keys stream star edges to new rows)",
       graft.dedup.MinHashLSH.boundedProbePairs(
         docs.select(pmod(col("doc_id"), lit(50)).as("key"), col("doc_id").as("e"))
           .filter(col("e") >= 400),

@@ -87,26 +87,15 @@ object ConnectedComponents {
 
   /** Cluster assignment for every node: (id, cluster) with cluster = min id
     * of the node's component (singletons map to themselves). Chooses the
-    * local or distributed path by edge count. `SPARK_GRAFT_CC_MAX` overrides
-    * the threshold (set it to 0 to force the distributed star rounds at
-    * bench scale — the once-per-round scaling evidence run).
+    * local or distributed path by edge count (`smallGraphMax = 0` forces
+    * the distributed star rounds).
     *
     * `knownEdgeCount`: callers that already know the (a ≠ b) edge count —
     * e.g. from committed store manifests — skip the eager persist+count
     * dispatch job.
     */
-  /** The env-overridable local-dispatch threshold (shared by every caller
-    * that gates a driver CC on edge count — `SPARK_GRAFT_CC_MAX=0` forces
-    * the distributed path everywhere at once).
-    */
-  def resolvedSmallMax: Long = sys.env.get("SPARK_GRAFT_CC_MAX")
-    .flatMap(v => scala.util.Try(v.trim.toLong).toOption
-      .orElse { System.err.println(
-        s"[graft] ignoring malformed SPARK_GRAFT_CC_MAX='$v'"); None })
-    .getOrElse(SMALL_GRAPH_MAX)
-
   def assignAll(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
-                smallGraphMax: Long = resolvedSmallMax,
+                smallGraphMax: Long = SMALL_GRAPH_MAX,
                 knownEdgeCount: Option[Long] = None): DataFrame = {
     val e0 = edges.select(col("a"), col("b")).filter(col("a") =!= col("b"))
     val e = knownEdgeCount match {

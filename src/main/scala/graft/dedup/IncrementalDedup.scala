@@ -292,7 +292,7 @@ final class IncrementalDedup(spark: SparkSession, store: SnapshotStore,
     // content-level clustering (union-find + min-content_id relabel) and the
     // documents' lookup, all on the driver
     val nEdges = (0 until snap).map(store.committedRows("edges", _)).sum + newEdges.length
-    if (nEdges > ConnectedComponents.resolvedSmallMax) return false
+    if (nEdges > ConnectedComponents.SMALL_GRAPH_MAX) return false
     val prior =
       if (snap == 0) Array.empty[(Long, Long)]
       else store.readRange("edges", 0, snap - 1).select("a", "b").as[(Long, Long)].collect()
@@ -394,9 +394,8 @@ final class IncrementalDedup(spark: SparkSession, store: SnapshotStore,
       approxRows = Some(math.max(1L, store.committedRows("content", snap)))) {
       val newE = keysOf(newContent).select(col("key"), col("ckey").as("e"))
       val cand = (if (snap == 0)
-          // no accumulated state yet — the plain batch kernel (one
-          // groupBy + one join) emits the identical candidate set
-          // with fewer exchanges
+          // no accumulated state yet — the batch kernel is the same scan
+          // with no old side and no is_new tag
           MinHashLSH.boundedBucketPairs(newE, Seq("key"), cfg.maxBucket)
         else MinHashLSH.boundedProbePairs(newE,
           keysOf(store.readRange("content", 0, snap - 1))

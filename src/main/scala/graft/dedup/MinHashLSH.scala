@@ -64,16 +64,64 @@ object MinHashLSH {
     * dropped before the scan: they emit nothing and count toward no bound.
     */
   def boundedBucketPairs(keyRows: DataFrame, keyCols: Seq[String],
-                         maxBucket: Int): DataFrame = {
-    val k = keyCols.map(col)
+                         maxBucket: Int): DataFrame =
     // CONTRACT: (key, e) rows should be unique — every caller's key family
     // emits one row per (key, element) by construction (band hashes, block
     // combinations, winnow positions, SRP table buckets). A violating
     // duplicate row can only DEMOTE its bucket to star edges early (the
     // bound counts rows) and duplicate star edges (callers dedup pairs); it
     // can never produce self-pairs.
-    val rows = keyRows.select(k :+ col("e"): _*)
-      .filter((k :+ col("e")).map(_.isNotNull).reduce(_ && _))
+    scanPairs(keyRows.select(keyCols.map(col) :+ col("e"): _*), keyCols, maxBucket,
+      tagged = false)
+
+  /** Incremental new-vs-accumulated candidate pairs through the SAME scan as
+    * [[boundedBucketPairs]] — the probe-side analogue for an append-only
+    * index (IncrementalDedup): emits only pairs touching a NEW element, so
+    * per-snapshot edge sets stay disjoint and no old pair is ever
+    * re-verified.
+    *
+    * `newRows` and `oldRows` carry columns `keyCols :+ "e"` and must be
+    * element-disjoint (new content is registered exactly once — the caller's
+    * invariant). Both sides are tagged `is_new` and take the one exchange;
+    * the sort puts the flag between the key and the element, so a key's old
+    * rows come first. Per key (the bound counts old and new rows):
+    *
+    *   - ≤ maxBucket rows: every pair of distinct members whose later
+    *     member in sort order is new, as (old, new) or (smaller new,
+    *     larger new); an old-only key emits nothing;
+    *   - hot keys: star edges (anchor, e_new) streamed one-in/≤one-out, where
+    *     anchor = the key's first row: the min OLD element when any exists
+    *     (so a hot bucket's new minimum still links into the component its
+    *     old members already form), else the min new element.
+    *
+    * Each unordered pair comes out once, in either orientation; callers
+    * normalize with least/greatest (IncrementalDedup's distributed pass
+    * does, then dedupes across keys). Null keys and elements are dropped
+    * like the batch kernel's; the product caller's keys are `explode`d band
+    * and SimHash hashes and its elements ckeys, neither ever null.
+    *
+    * A boilerplate band key with 10⁶ accumulated entries × 10³ new arrivals
+    * therefore emits ≤10³ candidate rows, not 10⁹.
+    */
+  def boundedProbePairs(newRows: DataFrame, oldRows: DataFrame,
+                        keyCols: Seq[String], maxBucket: Int): DataFrame = {
+    // same unique-(key, e) caller contract as boundedBucketPairs (the
+    // committed index tables hold one row per (content, key) by
+    // construction); disjointness ⇒ the row counts add exactly
+    val tag = (df: DataFrame, isNew: Boolean) =>
+      df.select(keyCols.map(col) :+ col("e") :+ lit(isNew).as("is_new"): _*)
+    scanPairs(tag(oldRows, false).unionByName(tag(newRows, true)), keyCols, maxBucket,
+      tagged = true)
+  }
+
+  /** The exchange → sort → [[BucketPairs]] plan both kernels share. `rows`
+    * has columns `keyCols :+ "e"`, plus a trailing boolean `is_new` when
+    * `tagged`; the flag sorts between the key and the element.
+    */
+  private def scanPairs(rows0: DataFrame, keyCols: Seq[String], maxBucket: Int,
+                        tagged: Boolean): DataFrame = {
+    val k = keyCols.map(col)
+    val rows = rows0.filter((k :+ col("e")).map(_.isNotNull).reduce(_ && _))
     // a struct element streams as its flat fields, so the scan never builds
     // nested rows; sorting by the fields in order is the struct's own order
     val fields = rows.schema("e").dataType match {
@@ -81,13 +129,15 @@ object MinHashLSH {
       case t => Seq((col("e"), StructField("e", t, true)))
     }
     val eCols = fields.indices.map(i => col(s"e$i"))
-    val flat = rows.select(k ++ fields.zipWithIndex.map { case ((c, _), i) => c.as(s"e$i") }: _*)
+    val flag = if (tagged) Seq(col("is_new")) else Nil
+    val flat = rows.select(k ++ fields.zipWithIndex.map { case ((c, _), i) => c.as(s"e$i") }
+        ++ flag: _*)
       .repartition(k: _*)
-      .sortWithinPartitions(k ++ eCols: _*)
+      .sortWithinPartitions(k ++ flag ++ eCols: _*)
     val side = (s: String) => fields.zipWithIndex.map { case ((_, f), i) =>
       StructField(s"$s$i", f.dataType, f.nullable) }
     val (nKeys, nFields) = (keyCols.length, fields.length)
-    val pairs = flat.mapPartitions(it => new BucketPairs(it, nKeys, nFields, maxBucket))(
+    val pairs = flat.mapPartitions(it => new BucketPairs(it, nKeys, nFields, maxBucket, tagged))(
       Encoders.row(StructType(side("p") ++ side("q"))))
     def element(s: String): Column = rows.schema("e").dataType match {
       case _: StructType =>
@@ -97,23 +147,27 @@ object MinHashLSH {
     pairs.select(element("p").as("p"), element("q").as("q"))
   }
 
-  /** The per-key scan of [[boundedBucketPairs]] over rows (key…, element
-    * fields…) sorted by key then element: yields flat (p fields…,
-    * q fields…) pairs lazily, holding at most the current key's first
-    * `maxBucket + 1` rows. An element is its input row's field range.
+  /** The per-key scan of [[scanPairs]] over rows (key…, element fields…
+    * [, is_new]) sorted by key, then the flag when `tagged` (old rows
+    * first), then element: yields flat (p fields…, q fields…) pairs lazily,
+    * holding at most the current key's first `maxBucket + 1` rows. An
+    * element is its input row's field range. A pair is emitted only when
+    * its later row is new; untagged, every row is new.
     */
   private final class BucketPairs(rows: Iterator[Row], nKeys: Int, nFields: Int,
-                                  maxBucket: Int) extends Iterator[Row] {
+                                  maxBucket: Int, tagged: Boolean) extends Iterator[Row] {
     private var ahead: Row = if (rows.hasNext) rows.next() else null
     private var key: Row = _        // first row of the current key
     private val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
     private var n = 0               // small key: distinct members in buf(0 until n)
+    private var firstNew = 0        // small key: index of its first new member
     private var i = 0
     private var j = 1
     private var star = false        // current key is past maxBucket
     private var drain = 1           // star: next buffered element to pair with buf(0)
     private var nextPair: Row = _
 
+    private def isNew(r: Row): Boolean = !tagged || r.getBoolean(nKeys + nFields)
     private def sameKey(r: Row): Boolean = {
       var c = 0
       while (c < nKeys && r.get(c) == key.get(c)) c += 1
@@ -130,6 +184,9 @@ object MinHashLSH {
       while (c < nFields) { v(c) = p.get(nKeys + c); v(nFields + c) = q.get(nKeys + c); c += 1 }
       new GenericRow(v)
     }
+    /** The star edge (anchor, e), or null when e is old or the anchor. */
+    private def starEdge(e: Row): Row =
+      if (isNew(e) && !same(e, buf(0))) pair(buf(0), e) else null
     private def advance(): Unit = ahead = if (rows.hasNext) rows.next() else null
 
     /** Reads the next key's first ≤ maxBucket + 1 rows; false at the end. */
@@ -150,29 +207,28 @@ object MinHashLSH {
           if (n == 0 || !same(buf(n - 1), buf(b))) { buf(n) = buf(b); n += 1 }
           b += 1
         }
-        i = 0; j = 1
+        firstNew = 0
+        while (firstNew < n && !isNew(buf(firstNew))) firstNew += 1
+        i = 0; j = math.max(1, firstNew)
       }
       true
     }
 
     override def hasNext: Boolean = {
       while (nextPair == null) {
-        if (star) { // buf(0) is the key's min
+        if (star) { // buf(0) is the key's first row: its min (old) element
           if (drain < buf.length) {
-            val e = buf(drain); drain += 1
-            if (!same(e, buf(0))) nextPair = pair(buf(0), e)
+            nextPair = starEdge(buf(drain)); drain += 1
           } else if (ahead != null && sameKey(ahead)) {
-            val e = ahead; advance()
-            if (!same(e, buf(0))) nextPair = pair(buf(0), e)
+            nextPair = starEdge(ahead); advance()
           } else {
             star = false
             n = 0
             if (!loadKey()) return false
           }
-        } else if (i < n - 1) {
-          nextPair = pair(buf(i), buf(j))
-          j += 1
-          if (j == n) { i += 1; j = i + 1 }
+        } else if (i < n - 1) { // pairs i < j with j ≥ firstNew
+          if (j < n) { nextPair = pair(buf(i), buf(j)); j += 1 }
+          else { i += 1; j = math.max(i + 1, firstNew) }
         } else if (!loadKey()) return false
       }
       true
@@ -186,104 +242,21 @@ object MinHashLSH {
     }
   }
 
-  /** Incremental new-vs-accumulated candidate pairs with the SAME hot-key
-    * guard as [[boundedBucketPairs]] — the probe-side analogue for an
-    * append-only index (IncrementalDedup): emits only pairs touching a NEW
-    * element, so per-snapshot edge sets stay disjoint and no old pair is
-    * ever re-verified.
-    *
-    * `newRows` and `oldRows` carry columns `keyCols :+ "e"` and must be
-    * element-disjoint (new content is registered exactly once — the caller's
-    * invariant). Per key:
-    *
-    *   - total distinct size ≤ maxBucket: plain new×(old∪new) equi-join
-    *     (the previous unbounded behavior, now gated);
-    *   - hot keys: star edges (anchor, e_new) streamed one-in/one-out, where
-    *     anchor = min OLD element when any exists (so a hot bucket's new
-    *     minimum still links into the component its old members already
-    *     form), else min new element.
-    *
-    * A boilerplate band key with 10⁶ accumulated entries × 10³ new arrivals
-    * therefore emits ≤10³ candidate rows, not 10⁹.
-    */
-  def boundedProbePairs(newRows: DataFrame, oldRows: DataFrame,
-                        keyCols: Seq[String], maxBucket: Int): DataFrame = {
-    val k = keyCols.map(col)
-    // same unique-(key, e) caller contract as boundedBucketPairs (the
-    // committed index tables hold one row per (content, key) by
-    // construction); disjointness ⇒ the counts add exactly.
-    //
-    // ONE tagged stream, ONE exchange: old∪new rows are tagged and shuffled
-    // by key once; the per-key stats aggregate, the stats join-back (same
-    // partitioning — the exchange is reused, not repeated) and the
-    // small-key pair aggregation all run on that single shuffle. The
-    // previous form shuffled the accumulated old index TWICE (stats + the
-    // new×all join) and the new side three times — ~6 exchanges of plan
-    // latency per snapshot at toy scale, and a doubled accumulated-index
-    // scan at 100 TB (the index is the side that grows forever; the fused
-    // kernel reads and shuffles it exactly once per snapshot).
-    val tagged = oldRows.select(k :+ col("e") :+ lit(false).as("is_new"): _*)
-      .unionByName(newRows.select(k :+ col("e") :+ lit(true).as("is_new"): _*))
-    // r7: per-key stats as WINDOW aggregates over the one tagged exchange
-    // — the stats-agg + join-back form paid a
-    // second full exchange of the tagged stream and a second scan of the
-    // index subtrees. Keys with no new arrival emit nothing (their old
-    // pairs surfaced when the newer member registered); singleton keys
-    // have no pair.
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(k: _*)
-    val joined = tagged
-      .withColumn("cnt", count(lit(1)).over(w))
-      .withColumn("cnt_new", sum(when(col("is_new"), 1L).otherwise(0L)).over(w))
-      .withColumn("mn_old", min(when(!col("is_new"), col("e"))).over(w))
-      .withColumn("mn_new", min(when(col("is_new"), col("e"))).over(w))
-      .filter(col("cnt_new") > 0 && col("cnt") > 1)
-    // hot keys: star edges (anchor, e_new) streamed one-in/≤one-out, anchor
-    // = min OLD element when any exists (a hot bucket's new minimum still
-    // links into the component its old members already form), else min new
-    val hot = joined
-      .filter(col("cnt") > maxBucket && col("is_new")
-        && col("e") =!= coalesce(col("mn_old"), col("mn_new")))
-      .select(coalesce(col("mn_old"), col("mn_new")).as("p"), col("e").as("q"))
-    // small keys: new×(old∪new) minus self via bounded per-key arrays
-    // (collect_set ignores the nulls the `when` leaves on old rows)
-    val pairsExpr =
-      """flatten(transform(news, x ->
-        |  transform(alls, y -> struct(x AS p, y AS q))))""".stripMargin
-    val small = joined.filter(col("cnt") <= maxBucket)
-      .groupBy(k: _*)
-      .agg(collect_set(when(col("is_new"), col("e"))).as("news"),
-        sort_array(collect_set(col("e"))).as("alls"))
-      .select(explode(expr(pairsExpr)).as("pr"))
-      .select(col("pr.p").as("p"), col("pr.q").as("q"))
-      .filter(col("p") =!= col("q"))
-    small.union(hot)
-  }
-
   /** Driver-local mirror of [[boundedProbePairs]] for SMALL key streams
-    * (the incremental toy/verify regime): identical per-key contract —
-    * keys with a new arrival and ≥2 members; small keys emit new×(old∪new)
-    * minus self; hot keys emit (anchor, e_new) stars with anchor = min old
-    * else min new. With `oldRows` empty this also reproduces
-    * [[boundedBucketPairs]]' candidate set up to pair orientation (callers
-    * normalize with least/greatest + distinct). Parity is spec-gated on
-    * randomized inputs (BoundedBucketSpec). The point: a probe over a few
-    * hundred thousand (key, e) rows costs ONE collect instead of ~6
-    * sequential AQE query stages — the same small-input dispatch the
-    * serial chunk chain and the driver union-find already use.
-    */
-  def boundedProbePairsLocal(newRows: Array[(Long, Long)],
-                             oldRows: Array[(Long, Long)],
-                             maxBucket: Int): Array[(Long, Long)] =
-    boundedProbePairsLocalP(
-      newRows.map(_._1), newRows.map(_._2),
-      oldRows.map(_._1), oldRows.map(_._2), maxBucket)
-
-  /** Primitive-parallel-array core of [[boundedProbePairsLocal]] (r6): the
-    * caller keeps keys and elements in two long arrays, so the collected
+    * (the incremental toy/verify regime), over primitive parallel arrays:
+    * the caller keeps keys and elements in two long arrays, so the collected
     * probe state really is ~16 B/row — the arithmetic
-    * IncrementalDedup.LOCAL_PROBE_MAX_CONTENTS documents — instead of boxed
-    * Tuple2 rows. The tuple form above delegates here, so the
-    * BoundedBucketSpec parity gates cover both entry points.
+    * IncrementalDedup.LOCAL_PROBE_MAX_CONTENTS documents. Same per-key
+    * contract — keys with a new arrival and ≥2 members; small keys emit
+    * new×(old∪new) minus self (in both orientations); hot keys emit
+    * (anchor, e_new) stars with anchor = min old else min new — so the two
+    * kernels agree after least/greatest + distinct. With the old side empty
+    * this also reproduces [[boundedBucketPairs]]' candidate set up to pair
+    * orientation. Parity is spec-gated on randomized inputs
+    * (BoundedBucketSpec). The point: a probe over a few hundred thousand
+    * (key, e) rows costs ONE collect instead of a chain of sequential AQE
+    * query stages — the same small-input dispatch the serial chunk chain
+    * and the driver union-find already use.
     */
   def boundedProbePairsLocalP(newKeys: Array[Long], newEs: Array[Long],
                               oldKeys: Array[Long], oldEs: Array[Long],
