@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import graft.functions.gf
 
 /** Reference-semantics incremental chunk deduplication — the Spark rebuild of
@@ -32,7 +32,7 @@ import graft.functions.gf
   * against the full-buffer MD5 committed with the checkpoint. A chain
   * keeps no reconstruction of its own.
   *
-  * Scale note: up to Chain.LOCAL_SWEEP_MAX chunks a checkpoint collects
+  * Scale note: up to [[graft.Regime.LOCAL_SWEEP_MAX]] chunks a checkpoint collects
   * only its 16-byte leaf digests to the driver, and a restart only the
   * FIRST positions and shift regions of the checkpoints it visits. Beyond
   * it the level sweep is O(log n) shuffles of geometrically shrinking node
@@ -60,9 +60,9 @@ object ChunkDedup {
       regionSizes: Seq[(String, Long)] = Nil // one (label, leaves-under-root)
                               // entry per region root — the reference's
                               // STATS histograms (tree_approach.cpp:229-256);
-                              // filled on the serial and local-sweep paths,
-                              // empty on the thin distributed sweep (whose
-                              // region info is the regionsDf it commits)
+                              // filled on the local-sweep path, empty on the
+                              // thin distributed sweep (whose region info is
+                              // the shift regions it commits)
   ) {
     /** Distinct prior checkpoints this incremental references — the
       * reference's `chkpts_needed` bitset (F4, list_approach.cpp:98-110)
@@ -206,8 +206,8 @@ object ChunkDedup {
     * checkpoint at the same position (§2.8 left-anti semantics). Each step
     * jumps to the NEWEST checkpoint a pending claim still references
     * (chkpts_needed, F4 list_approach.cpp:98-110), so only referenced
-    * checkpoints are read. Two regimes, split at the checkpoint's own bound
-    * [[Chain.LOCAL_SWEEP_MAX]]:
+    * checkpoints are read. Two regimes, split by [[graft.Regime.local]] at
+    * the checkpoint's own bound [[graft.Regime.LOCAL_SWEEP_MAX]]:
     *   - up to it, the walk runs on the driver over metadata only: one job
     *     per visited checkpoint collects its FIRST positions (never the
     *     content) and its shift region rows. The content is then ONE narrow
@@ -228,15 +228,7 @@ object ChunkDedup {
     * committed with the checkpoint, both from one [[countAndMd5]] pass.
     */
   def restartFromStore(spark: SparkSession, store: graft.state.SnapshotStore,
-                       cid: Int): DataFrame =
-    restartFromStore(spark, store, cid, Chain.LOCAL_SWEEP_MAX)
-
-  /** [[restartFromStore]] with the regime bound as a parameter, so specs
-    * can force the Spark loop (`localSweepMax = 0`).
-    */
-  private[graft] def restartFromStore(spark: SparkSession,
-                                      store: graft.state.SnapshotStore, cid: Int,
-                                      localSweepMax: Long): DataFrame = {
+                       cid: Int): DataFrame = {
     val manifest = store.manifestJson("chunk_first", cid)
     val numChunks =
       """"num_chunks":\s*"(\d+)"""".r.findFirstMatchIn(manifest)
@@ -244,7 +236,7 @@ object ChunkDedup {
         .getOrElse(sys.error("chunk_first manifest lacks num_chunks"))
     val committedMd5 =
       """"full_md5":\s*"([0-9a-f]+)"""".r.findFirstMatchIn(manifest).map(_.group(1))
-    if (numChunks <= localSweepMax)
+    if (graft.Regime.local(spark, numChunks, graft.Regime.LOCAL_SWEEP_MAX))
       driverRestart(spark, store, cid, numChunks.toInt, committedMd5)
     else loopRestart(spark, store, cid, numChunks, committedMd5)
   }
@@ -286,7 +278,7 @@ object ChunkDedup {
     }
   }
 
-  /** The driver regime of [[restartFromStore]] (n ≤ LOCAL_SWEEP_MAX). */
+  /** The driver regime of [[restartFromStore]]. */
   private def driverRestart(spark: SparkSession, store: graft.state.SnapshotStore,
                             cid: Int, n: Int, committedMd5: Option[String]): DataFrame = {
     // claim of position p: (claimC(p), claimP(p)), `resolved` once it names
@@ -379,7 +371,7 @@ object ChunkDedup {
     verified(cid, out, n, committedMd5)
   }
 
-  /** The Spark-loop regime of [[restartFromStore]] (n > LOCAL_SWEEP_MAX). */
+  /** The Spark-loop regime of [[restartFromStore]]. */
   private def loopRestart(spark: SparkSession, store: graft.state.SnapshotStore,
                           cid: Int, numChunks: Long,
                           committedMd5: Option[String]): DataFrame = {
@@ -434,39 +426,6 @@ object ChunkDedup {
   }
 
   object Chain {
-    /** Checkpoints up to this many chunks take ONE driver pass each (one
-      * ordered digest + MD5 job, one distinct-map probe, one insert, one
-      * chunk_first write); larger ones use the per-level DataFrame sweep.
-      * Driver footprint at the bound: the digest job's one task result
-      * (8 B position + 16 B digest per chunk, 24 MB), kept as the next
-      * checkpoint's leaf digests (16 MB), the full Merkle tree's 2n−1
-      * 16-byte slots (32 MB transient), the probe's broadcast set of ≤ 2n−1
-      * digests and its hits (≈ 200 MB transient), and the result's per-leaf
-      * label frame, a local relation of n rows (≈ 90 MB while the caller
-      * holds the result) — a few hundred MB on the 8 g driver heap.
-      * [[restartFromStore]] switches regime at the same bound; its driver
-      * walk holds 28 MB of per-position claim and shift arrays at 2²⁰
-      * chunks, plus a broadcast src_pos → positions index of ≈ 20 MB.
-      * Chunk CONTENT is never collected (the FIRST rows, the commit and
-      * restartFromStore's reconstruction stay distributed), which is what
-      * lets this bound sit 256× above SERIAL_MAX.
-      */
-    final val LOCAL_SWEEP_MAX: Long = 1L << 20
-
-    /** Chains up to this many chunks run fully serial on the driver (the
-      * reference's own in-memory single-device mode): one collect per
-      * checkpoint. Since r6 this includes STORE-BACKED chains — the serial
-      * path commits the same chunk_first/chunk_shift tables (identical
-      * schema + manifest metadata incl. the full-buffer MD5) straight from
-      * the driver (SnapshotStore.commitLocal), so a checkpoint costs one
-      * collect and zero write jobs; commit/restart parity with the Spark
-      * paths is spec-gated alongside the three-way label parity (serial /
-      * local-sweep / distributed). Driver footprint at the bound: 2¹²
-      * chunks of content collected — the input buffer itself, KBs to a few
-      * MB.
-      */
-    final val SERIAL_MAX: Long = 1L << 12
-
     /** A 128-bit digest as a hashable map key. */
     private[dedup] type Digest = scala.collection.immutable.ArraySeq[Byte]
     private[dedup] def key(d: Array[Byte]): Digest =
@@ -527,8 +486,6 @@ object ChunkDedup {
       tree
     }
 
-    private[dedup] val firstSchema = StructType(Seq(
-      StructField("pos", LongType), StructField("chunk", StringType)))
     private[dedup] val shiftSchema = StructType(Seq(StructField("node", LongType),
       StructField("src_chkpt", IntegerType), StructField("src_node", LongType)))
 
@@ -547,9 +504,8 @@ object ChunkDedup {
         regionSizes: Vector[(String, Long)],
         shiftRegions: Seq[Row])    // the committed shift section
 
-    /** The driver pass shared by the serial and local-sweep paths, in the
-      * reference's order (tree_approach.cpp:325-477). They differ only in
-      * where the distinct map lives: `known(p)` is the map entry of
+    /** The local-sweep path's driver pass, in the reference's order
+      * (tree_approach.cpp:325-477): `known(p)` is the map entry of
       * non-FIXED leaf p's digest (J1; whether this checkpoint's own inserts
       * show there does not matter — a fresh duplicate resolves to its
       * winner either way), `lookup(node, digest)` reads the map including
@@ -689,9 +645,7 @@ object ChunkDedup {
     * digests (its FIXED probe).
     */
   final class Chain(spark: SparkSession, numChunks: Long,
-                    localSweepMax: Long = Chain.LOCAL_SWEEP_MAX,
-                    store: Option[graft.state.SnapshotStore] = None,
-                    serialMax: Long = Chain.SERIAL_MAX) {
+                    store: Option[graft.state.SnapshotStore] = None) {
     require(numChunks >= 1)
     private val nLeaves = numChunks
     private val leafBase = nLeaves - 1 // chunk j ↦ node leafBase + j
@@ -702,28 +656,24 @@ object ChunkDedup {
       * FIXED probe. */
     private var prevTree: DataFrame = _
     /** previous checkpoint's leaf digests, 16-byte slots by position: the
-      * driver paths' FIXED probe. */
+      * local-sweep path's FIXED probe. */
     private var prevLeaves: Array[Byte] = _
     private var curId: Int = -1
 
-    // serial-mode state (toy chains, store-backed or not: the distinct map
-    // is a driver map; commits are driver-direct — Chain.SERIAL_MAX)
-    private val serialMode = numChunks <= serialMax
-    private val sDistinct =
-      scala.collection.mutable.LinkedHashMap.empty[Chain.Digest, (Int, Long)]
+    /** The chain's one regime choice, made here so that no checkpoint of
+      * the chain takes another path than its predecessors. */
+    private val localSweep = graft.Regime.local(spark, numChunks, graft.Regime.LOCAL_SWEEP_MAX)
 
     /** Process the next checkpoint; chunks = (pos: Long, chunk: String). */
     def checkpoint(chunks: DataFrame): ChkptResult =
-      if (serialMode) serialCheckpoint(chunks)
-      else if (nLeaves <= localSweepMax) localSweepCheckpoint(chunks)
-      else distributedCheckpoint(chunks)
+      if (localSweep) localSweepCheckpoint(chunks) else distributedCheckpoint(chunks)
 
     private def firstMeta(fullMd5: String): Map[String, String] =
       Map("num_chunks" -> numChunks.toString, "full_md5" -> fullMd5)
 
-    /** The driver paths' result: per-leaf labels and shift sources as local
-      * relations built from the driver pass — no job until a caller reads
-      * them.
+    /** The local-sweep path's result: per-leaf labels and shift sources as
+      * local relations built from the driver pass — no job until a caller
+      * reads them.
       */
     private def driverResult(cid: Int, r: Chain.Resolved,
                              firstLeaves: DataFrame): ChkptResult = {
@@ -739,51 +689,11 @@ object ChunkDedup {
         r.regionSizes)
     }
 
-    /** Serial path: identical semantics, one collect, zero shuffles — the
-      * reference's in-memory single-device execution. It shares the
-      * local-sweep path's driver pass ([[Chain.resolve]]); only the distinct
-      * map differs — here it is a driver map.
-      */
-    private def serialCheckpoint(chunks: DataFrame): ChkptResult = {
-      curId += 1
-      val cid = curId
-      val n = numChunks.toInt
-      val rows = chunks.select(col("pos"), col("chunk")).collect()
-      val chunkStrs = new Array[String](n)
-      Chain.leafIndex(rows.map(_.getLong(0)), n).iterator.zip(rows.iterator)
-        .foreach { case (p, r) => chunkStrs(p) = r.getString(1) }
-      val leaves = new Array[Byte](16 * n)
-      for (p <- 0 until n)
-        System.arraycopy(graft.functions.Impl.murmur128Digest(
-          chunkStrs(p).getBytes(StandardCharsets.UTF_8)), 0, leaves, 16 * p, 16)
-
-      val r = Chain.resolve(cid, leaves, prevLeaves,
-        p => sDistinct.get(Chain.key(Chain.slot(leaves, p))),
-        (_, d) => sDistinct.get(d), (d, src) => sDistinct.put(d, src))
-      val firstRows = (0 until n).collect {
-        case p if r.labels(p) == FIRST => (p.toLong, chunkStrs(p))
-      }
-
-      // durable incremental checkpoint — the same two file sections, schema
-      // and manifest metadata as the Spark paths (restartFromStore is
-      // path-agnostic), written driver-direct: every row is already here,
-      // so the whole checkpoint is one input collect and zero write jobs
-      // (parity + job count spec-gated)
-      store.foreach { st =>
-        st.commitLocal("chunk_first", cid, Chain.firstSchema,
-          firstRows.map { case (p, c) => Row(p, c) }, firstMeta(md5Hex(chunkStrs.iterator)))
-        st.commitLocal("chunk_shift", cid, Chain.shiftSchema, r.shiftRegions)
-      }
-      prevLeaves = leaves
-      import spark.implicits._
-      driverResult(cid, r, firstRows.toDF("pos", "chunk"))
-    }
-
-    /** Local-sweep path (SERIAL_MAX < n ≤ LOCAL_SWEEP_MAX): ONE driver pass
-      * per checkpoint. One job streams the chunks in position order
+    /** Local-sweep path (n ≤ [[graft.Regime.LOCAL_SWEEP_MAX]]): ONE driver
+      * pass per checkpoint. One job streams the chunks in position order
       * through one task and returns every leaf digest (never the content)
       * and the full-buffer MD5; the driver builds the full Merkle tree and
-      * runs the serial path's pass ([[Chain.resolve]]), answering every
+      * runs its pass ([[Chain.resolve]]), answering every
       * distinct-map question from ONE probe — the non-FIXED leaves plus
       * every internal, since Merkle digests do not depend on labels — and
       * ONE insert. The only other job is the chunk_first write (chunk_shift
@@ -864,11 +774,11 @@ object ChunkDedup {
       driverResult(cid, r, firstLeaves)
     }
 
-    /** Distributed path (n > localSweepMax): Spark labeling and per-level
+    /** Distributed path (past the local sweep's bound, or under
+      * `spark.graft.regime=distributed`): Spark labeling and per-level
       * THIN sweeps ([[ChunkDedup.thinSweep]]) — log₂(n) shuffles of
       * geometrically shrinking live frontiers; total materialized volume is
-      * O(leaves), not O(nodes · log n). Used when one checkpoint's chunk
-      * count exceeds driver-collectable size.
+      * O(leaves), not O(nodes · log n).
       */
     private def distributedCheckpoint(chunks: DataFrame): ChkptResult = {
       curId += 1

@@ -73,12 +73,6 @@ object ConnectedComponents {
     (r.getLong(0), r.getLong(1))
   }
 
-  /** Edge sets up to this size run as driver union-find (one collect, ~ms);
-    * beyond it the distributed star rounds run. 2M edges × 16 B ≈ 32 MB —
-    * comfortably driver-safe; at web scale the distributed path engages.
-    */
-  final val SMALL_GRAPH_MAX: Long = 2L * 1000 * 1000
-
   /** Driver union-find over a collected edge list (min-id representative). */
   def localComponents(edges: Array[(Long, Long)]): Map[Long, Long] = {
     val ids = edges.iterator.flatMap(e => Iterator(e._1, e._2)).toSeq.distinct
@@ -87,24 +81,23 @@ object ConnectedComponents {
 
   /** Cluster assignment for every node: (id, cluster) with cluster = min id
     * of the node's component (singletons map to themselves). Chooses the
-    * local or distributed path by edge count (`smallGraphMax = 0` forces
-    * the distributed star rounds).
+    * driver union-find or the distributed star rounds by edge count
+    * ([[graft.Regime.local]] at [[graft.Regime.SMALL_GRAPH_MAX]]).
     *
     * `knownEdgeCount`: callers that already know the (a ≠ b) edge count —
     * e.g. from committed store manifests — skip the eager persist+count
-    * dispatch job.
+    * dispatch job; under `spark.graft.regime=distributed` no count runs.
     */
   def assignAll(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
-                smallGraphMax: Long = SMALL_GRAPH_MAX,
                 knownEdgeCount: Option[Long] = None): DataFrame = {
     val e0 = edges.select(col("a"), col("b")).filter(col("a") =!= col("b"))
     val e = knownEdgeCount match {
       case Some(_) => e0
       case None => e0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-    val nEdges = knownEdgeCount.getOrElse(e.count())
     val comps =
-      if (nEdges <= smallGraphMax) {
+      if (graft.Regime.local(spark, knownEdgeCount.getOrElse(e.count()),
+          graft.Regime.SMALL_GRAPH_MAX)) {
         import spark.implicits._
         val local = localComponents(
           e.collect().map(r => (r.getLong(0), r.getLong(1))))

@@ -41,37 +41,6 @@ import graft.state.SnapshotStore
   * resumability; per-partition lineage lands in each stage manifest).
   */
 object IncrementalDedup {
-  /** Content bound of the driver pass: accumulated plus fresh contents.
-    * Honest JVM footprint at the bound (this number SIZES the constant;
-    * features collected with primitive encoders, keys derived driver-side,
-    * probe state in parallel long arrays, boundedProbePairsLocalP): 64k
-    * contents × 1 KB signature ≈ 70 MB for the collected (ckey,
-    * content_id, sig, sim64) rows, 64k × 52 keys × 16 B ≈ 55 MB for the
-    * two key/element long arrays, plus the LongMap bucket buffers (~55 MB
-    * of unboxed Long ArrayBuffers) and the emitted candidate tuples
-    * (bounded by candidates, not keys) — ~200 MB transient peak on the 8 g
-    * driver heap. Beyond it the snapshot runs the distributed pass (a
-    * 100-TB chain crosses this in snapshot 0).
-    */
-  final val LOCAL_PROBE_MAX_CONTENTS: Long = 1L << 16
-
-  /** Candidate-pair bound of the driver pass's exact-Jaccard verify:
-    * ≤ 2·2¹⁶ ckeys in the broadcast filter of the pruned (ckey, sh) collect
-    * of OLD candidates (~500 ints each ≈ 130 MB worst-transient, typical
-    * ≪) and ≤ 2¹⁶ sorted-merge intersections (~ms of driver CPU). Above it
-    * the driver pass stops after committing `content`, and the distributed
-    * pass resumes at the edges stage (its own probe, its own verify).
-    */
-  final val LOCAL_VERIFY_MAX_PAIRS: Int = 1 << 16
-
-  /** Page-row bound of the driver pass: the bounded `pages_keyed` collect
-    * (url, doc_id, ckey), the previous snapshot's (url, ckey) diff and the
-    * assignments lookup — 2¹⁷ rows of each ≈ 30 MB transient. Dispatch compares
-    * `expectedPages`, else the previous snapshot's row count × 6/5, against
-    * it; with neither (snapshot 0, no hint) the collect itself is the gate.
-    */
-  final val LOCAL_ASSIGN_MAX_ROWS: Long = 1L << 17
-
   /** Every row of `ds` when there are at most `max`, else None. Each task
     * returns at most max + 1 rows. Once the running total passes `max` the
     * driver drops what it holds and cancels the job, so a mis-estimated
@@ -150,22 +119,20 @@ final class IncrementalDedup(spark: SparkSession, store: SnapshotStore,
                                * into one compacted snapshot every this many
                                * snapshots — bounds readRange fan-in at chain
                                * depth (0 disables). */
-                             compactEvery: Int = 4,
-                             /** spec hook: false sends every snapshot down
-                               * the distributed pass — the parity twin the
-                               * specs compare committed tables against. */
-                             localDispatch: Boolean = true) {
+                             compactEvery: Int = 4) {
   import IncrementalDedup._
+  import graft.Regime.{LOCAL_ASSIGN_MAX_ROWS, LOCAL_PROBE_MAX_CONTENTS, LOCAL_VERIFY_MAX_PAIRS}
 
   /** Process snapshot `snap` of the pages table; returns (doc_id, cluster)
     * for this snapshot's documents. Idempotent.
     *
-    * One switch, decided from manifests with zero jobs: when the page
-    * estimate (`expectedPages`, else the previous snapshot's pages_keyed
-    * rows × 6/5 — the workload's ~10% growth, an upper bound) is within
-    * LOCAL_ASSIGN_MAX_ROWS and the accumulated contents plus that estimate
-    * are within LOCAL_PROBE_MAX_CONTENTS, the snapshot runs as ONE driver
-    * pass ([[driverPass]]). Otherwise — or when the driver pass crosses a
+    * One switch per call ([[graft.Regime.local]]), decided from manifests
+    * with zero jobs: when the accumulated contents plus the page estimate
+    * (`expectedPages`, else the previous snapshot's pages_keyed rows × 6/5
+    * — the workload's ~10% growth, an upper bound) are within
+    * LOCAL_PROBE_MAX_CONTENTS and the estimate is within
+    * LOCAL_ASSIGN_MAX_ROWS, the snapshot runs as ONE driver pass
+    * ([[driverPass]]). Otherwise — or when the driver pass crosses a
     * bound midway — the distributed pass runs. Both commit the same five
     * stages in the same order, so the distributed pass picks up after
     * whatever the driver pass committed.
@@ -176,9 +143,10 @@ final class IncrementalDedup(spark: SparkSession, store: SnapshotStore,
     val keyedApprox = expectedPages.orElse(
       if (snap == 0) None
       else Some(math.max(1L, store.committedRows("pages_keyed", snap - 1) * 6 / 5)))
-    val nAcc = (0 until snap).map(store.committedRows("content", _)).sum
-    val small = localDispatch && keyedApprox.forall(_ <= LOCAL_ASSIGN_MAX_ROWS) &&
-      nAcc + keyedApprox.getOrElse(0L) <= LOCAL_PROBE_MAX_CONTENTS
+    val small = graft.Regime.local(spark,
+        (0 until snap).map(store.committedRows("content", _)).sum + keyedApprox.getOrElse(0L),
+        LOCAL_PROBE_MAX_CONTENTS) &&
+      keyedApprox.forall(_ <= LOCAL_ASSIGN_MAX_ROWS)
     if (!(small && driverPass(snap, pages, t0)))
       distributedPass(snap, pages, keyedApprox, t0)
 
@@ -292,7 +260,7 @@ final class IncrementalDedup(spark: SparkSession, store: SnapshotStore,
     // content-level clustering (union-find + min-content_id relabel) and the
     // documents' lookup, all on the driver
     val nEdges = (0 until snap).map(store.committedRows("edges", _)).sum + newEdges.length
-    if (nEdges > ConnectedComponents.SMALL_GRAPH_MAX) return false
+    if (nEdges > graft.Regime.SMALL_GRAPH_MAX) return false
     val prior =
       if (snap == 0) Array.empty[(Long, Long)]
       else store.readRange("edges", 0, snap - 1).select("a", "b").as[(Long, Long)].collect()

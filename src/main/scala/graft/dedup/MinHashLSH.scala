@@ -246,7 +246,7 @@ object MinHashLSH {
     * (the incremental toy/verify regime), over primitive parallel arrays:
     * the caller keeps keys and elements in two long arrays, so the collected
     * probe state really is ~16 B/row — the arithmetic
-    * IncrementalDedup.LOCAL_PROBE_MAX_CONTENTS documents. Same per-key
+    * graft.Regime.LOCAL_PROBE_MAX_CONTENTS documents. Same per-key
     * contract — keys with a new arrival and ≥2 members; small keys emit
     * new×(old∪new) minus self (in both orientations); hot keys emit
     * (anchor, e_new) stars with anchor = min old else min new — so the two
@@ -255,8 +255,8 @@ object MinHashLSH {
     * orientation. Parity is spec-gated on randomized inputs
     * (BoundedBucketSpec). The point: a probe over a few hundred thousand
     * (key, e) rows costs ONE collect instead of a chain of sequential AQE
-    * query stages — the same small-input dispatch the serial chunk chain
-    * and the driver union-find already use.
+    * query stages — the same small-input dispatch ([[graft.Regime]]) the
+    * local-sweep chunk chain and the driver union-find use.
     */
   def boundedProbePairsLocalP(newKeys: Array[Long], newEs: Array[Long],
                               oldKeys: Array[Long], oldEs: Array[Long],

@@ -210,16 +210,6 @@ object TreeLowRoot {
     }
   }
 
-  object DistChain {
-    /** Checkpoints up to this many chunks dispatch to the serial [[Chain]]
-      * (output-identical, spec-gated): the distributed sweep pays ~log n
-      * rounds of eager tiny jobs — pure stage latency at toy scale, the
-      * right shape only when one checkpoint's chunk count exceeds
-      * driver-collectable size. Mirrors ChunkDedup.Chain.LOCAL_SWEEP_MAX.
-      */
-    final val LOCAL_MAX: Long = 1L << 16
-  }
-
   /** DISTRIBUTED low-root chain — the Spark shape of the reference's device
     * kernel (tree_low_root_approach.cpp:55-214): leaf hashing, FIXED/SHIFT/
     * fresh labeling and the FIRST_DUPL forest build (root pointers carried
@@ -232,18 +222,19 @@ object TreeLowRoot {
     * asserts parity at 4096 chunks); a checkpoint with 10⁸ chunks and a few
     * 10⁵ fresh ones never materializes the leaf set on the driver.
     *
-    * Below `localMax` chunks the whole checkpoint dispatches to the serial
-    * [[Chain]] (identical output; the spec forces the distributed path with
-    * localMax = 0).
+    * Up to [[graft.Regime.LOW_ROOT_LOCAL_MAX]] chunks every checkpoint
+    * runs the serial [[Chain]] (identical output), decided once when the
+    * chain is built ([[graft.Regime.local]]).
     */
-  final class DistChain(spark: SparkSession, numChunks: Long,
-                        localMax: Long = DistChain.LOCAL_MAX) {
+  final class DistChain(spark: SparkSession, numChunks: Long) {
     require(numChunks >= 1)
     private val leafBase = numChunks - 1
     private var prevLeaves: DataFrame = _ // (node, digest)
     private var global: DataFrame = _     // (digest) — cross-checkpoint map
     private val serialFastPath: Option[Chain] =
-      if (numChunks <= localMax) Some(new Chain(spark, numChunks)) else None
+      if (graft.Regime.local(spark, numChunks, graft.Regime.LOW_ROOT_LOCAL_MAX))
+        Some(new Chain(spark, numChunks))
+      else None
 
     private def globalOrEmpty(): DataFrame =
       if (global == null) {

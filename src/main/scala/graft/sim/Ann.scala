@@ -30,12 +30,6 @@ object Ann {
   final case class IvfConfig(nCells: Int, nProbe: Int)
   val PinnedIvf: IvfConfig = IvfConfig(nCells = 16, nProbe = 6)
 
-  /** Corpora up to this many vectors train the IVF quantizer driver-local
-    * (≤ 64k × 128-dim floats ≈ 32 MB collected once); larger corpora use
-    * the distributed assign/mean iteration.
-    */
-  final val LOCAL_KMEANS_MAX: Int = 1 << 16
-
   // ---- pure IVF kernels, shared by ivfTopK's execution paths AND the
   // driver-pure oracle replication (SparkEntry ann_topk_ivf dump): the same
   // JVM functions produce byte-identical floats, so only the EXECUTION
@@ -171,29 +165,26 @@ object Ann {
                 * per-qid results are independent); probes are generated for
                 * the restricted set only, so candidate volume scales with
                 * the query count, not the corpus. */
-              queryIds: Seq[Long] = Nil,
-              /** local-quantizer dispatch threshold — overridden to 0 by
-                * the parity spec to force the distributed training path. */
-              localKmeansMax: Int = LOCAL_KMEANS_MAX): DataFrame = {
+              queryIds: Seq[Long] = Nil): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     val vecs = emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
       .as[(Long, Array[Float])]
 
-    // Quantizer training. Small corpora (≤ LOCAL_KMEANS_MAX vectors) train
-    // driver-local: ONE collect replaces 2 jobs × iters of assign/mean
+    // Quantizer training. Small corpora (≤ Regime.LOCAL_KMEANS_MAX vectors)
+    // train driver-local: ONE collect replaces 2 jobs × iters of assign/mean
     // latency — probed with limit(MAX+1) so the decision itself costs at
-    // most the bounded collect (the small-input dispatch pattern shared
-    // with the serial chunk chain and the incremental probe kernel). The
-    // 1e-4 rounding keeps both paths' centroids identical up to float
-    // summation order, exactly as it absorbs Spark's partial-agg jitter.
+    // most the bounded collect, and not at all under
+    // spark.graft.regime=distributed (Regime.local). The 1e-4 rounding
+    // keeps both paths' centroids identical up to float summation order,
+    // exactly as it absorbs Spark's partial-agg jitter.
     // An EMPTY corpus short-circuits to zero centroids (the distributed
     // branch degrades the same way through empty aggregations) — the
     // assign/probe lambdas below then never run because there are no rows,
     // and the result is an empty frame, not an exception.
-    val localProbe = vecs.limit(localKmeansMax + 1).collect()
+    lazy val localProbe = vecs.limit(graft.Regime.LOCAL_KMEANS_MAX + 1).collect()
     val centroids: Array[Array[Float]] =
-      if (localProbe.length <= localKmeansMax) {
+      if (graft.Regime.local(spark, localProbe.length, graft.Regime.LOCAL_KMEANS_MAX)) {
         trainLocalKmeans(localProbe, nCells, iters)
       } else {
         // deterministic seeding: the nCells vectors with the smallest ids

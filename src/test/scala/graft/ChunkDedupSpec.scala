@@ -22,12 +22,10 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   /** A chain committing to a store in a fresh temporary directory. */
-  private def storeChain(n: Long, localSweepMax: Long = ChunkDedup.Chain.LOCAL_SWEEP_MAX,
-                         serialMax: Long = ChunkDedup.Chain.SERIAL_MAX)
-      : (ChunkDedup.Chain, graft.state.SnapshotStore) = {
+  private def storeChain(n: Long): (ChunkDedup.Chain, graft.state.SnapshotStore) = {
     val store = new graft.state.SnapshotStore(spark,
       java.nio.file.Files.createTempDirectory("graft_chunk_chain").toString)
-    (new ChunkDedup.Chain(spark, n, localSweepMax, Some(store), serialMax), store)
+    (new ChunkDedup.Chain(spark, n, store = Some(store)), store)
   }
 
   private def restartString(store: graft.state.SnapshotStore, cid: Int, n: Int): String = {
@@ -79,11 +77,10 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
     assert(restartString(store, 1, 11) == step1)
   }
 
-  test("serial, local-sweep and distributed paths agree (labels, counts, shift sources, restart)") {
-    // same inputs through all THREE execution paths ⇒ identical region
-    // counts, per-leaf labels, shift metadata and restarts from each path's
-    // store. The default is the serial driver path (Chain.SERIAL_MAX);
-    // serialMax = 0 forces the Spark fast path; localSweepMax = 0 on top
+  test("local-sweep and distributed paths agree (labels, counts, shift sources, restart)") {
+    // same inputs through both execution paths ⇒ identical region counts,
+    // per-leaf labels, shift metadata and restarts from each path's store.
+    // The default is the local-sweep driver pass; the distributed regime
     // forces the per-level distributed sweep.
     def labelMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -91,9 +88,8 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
       df.collect().map(r => (r.getLong(0), (r.getInt(1), r.getLong(2)))).toMap
     for ((s0, s1, fo, sd, id) <- goldenVectors) {
       val variants = Seq(
-        "serial" -> storeChain(8L),
-        "localsweep" -> storeChain(8L, serialMax = 0L),
-        "distributed" -> storeChain(8L, localSweepMax = 0L, serialMax = 0L))
+        "localsweep" -> storeChain(8L),
+        "distributed" -> withRegime("distributed")(storeChain(8L)))
       val rs = variants.map { case (name, (chain, store)) =>
         chain.checkpoint(ChunkDedup.chunkify(spark, s0, 1))
         val r = chain.checkpoint(ChunkDedup.chunkify(spark, s1, 1))
@@ -107,19 +103,13 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
         assert(shiftMap(r.shiftLeafMap) == shiftMap(base.shiftLeafMap),
           s"case $id $name shift sources")
       }
-      // region-size histograms (r5, reference STATS): serial and local-sweep
-      // agree exactly; their per-label totals equal the region counts
-      def hist(r: ChunkDedup.ChkptResult) =
-        r.regionSizes.groupBy(identity).view.mapValues(_.size).toMap
-      val serialR = rs(0)._2; val localR = rs(1)._2
-      assert(hist(localR) == hist(serialR), s"case $id region-size histograms")
-      for ((r, name) <- Seq((serialR, "serial"), (localR, "localsweep"))) {
-        val byLabel = r.regionSizes.groupBy(_._1).view.mapValues(_.size.toLong).toMap
-        assert(byLabel.getOrElse(ChunkDedup.FIRST, 0L) == r.numFirstOcur,
-          s"case $id $name FIRST root count vs histogram")
-        assert(byLabel.getOrElse(ChunkDedup.SHIFT, 0L) == r.numShiftDupl,
-          s"case $id $name SHIFT root count vs histogram")
-      }
+      // region-size histogram (r5, reference STATS): its per-label totals
+      // equal the region counts
+      val byLabel = base.regionSizes.groupBy(_._1).view.mapValues(_.size.toLong).toMap
+      assert(byLabel.getOrElse(ChunkDedup.FIRST, 0L) == base.numFirstOcur,
+        s"case $id FIRST root count vs histogram")
+      assert(byLabel.getOrElse(ChunkDedup.SHIFT, 0L) == base.numShiftDupl,
+        s"case $id SHIFT root count vs histogram")
     }
   }
 
@@ -178,29 +168,28 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
       steps.foreach(s => chain.checkpoint(ChunkDedup.chunkify(spark, s, 1)))
     }
     // both regimes: the driver walk and the forced Spark loop
-    for (sweepMax <- Seq(ChunkDedup.Chain.LOCAL_SWEEP_MAX, 0L)) {
+    for (regime <- Seq("auto", "distributed")) {
       val fresh = new graft.state.SnapshotStore(spark, root) // counter at 0
-      val rows = ChunkDedup.restartFromStore(spark, fresh, 5, sweepMax).collect()
+      val rows = withRegime(regime)(ChunkDedup.restartFromStore(spark, fresh, 5)).collect()
       assert(rows.length == n)
       assert(rows.sortBy(_.getLong(0)).map(_.getString(1)).mkString == steps(5))
-      assert(fresh.readCount <= 6, s"restart (localSweepMax $sweepMax) read " +
+      assert(fresh.readCount <= 6, s"restart (regime $regime) read " +
         s"${fresh.readCount} store snapshots — scan not pruned to refs")
     }
   }
 
-  test("a duplicated + missing chunk position fails the checkpoint on all three paths") {
+  test("a duplicated + missing chunk position fails the checkpoint on every path") {
     // positions 0..6 and 6 again: the row count is right, 7 is missing;
-    // the three ChunkDedup paths, then both TreeLowRoot chains
+    // both ChunkDedup paths, then both TreeLowRoot chains
     import spark.implicits._
     val chunks = "ABCDEFGH".zipWithIndex
       .map { case (c, p) => (math.min(p, 6).toLong, c.toString) }.toDF("pos", "chunk")
     for ((name, checkpoint) <- Seq[(String, org.apache.spark.sql.DataFrame => Any)](
-        "serial" -> new ChunkDedup.Chain(spark, 8L).checkpoint _,
-        "localsweep" -> new ChunkDedup.Chain(spark, 8L, serialMax = 0L).checkpoint _,
-        "distributed" ->
-          new ChunkDedup.Chain(spark, 8L, localSweepMax = 0L, serialMax = 0L).checkpoint _,
+        "localsweep" -> new ChunkDedup.Chain(spark, 8L).checkpoint _,
+        "distributed" -> withRegime("distributed")(new ChunkDedup.Chain(spark, 8L)).checkpoint _,
         "lowroot serial" -> new TreeLowRoot.Chain(spark, 8L).checkpoint _,
-        "lowroot distributed" -> new TreeLowRoot.DistChain(spark, 8L, localMax = 0L).checkpoint _)) {
+        "lowroot distributed" ->
+          withRegime("distributed")(new TreeLowRoot.DistChain(spark, 8L)).checkpoint _)) {
       val e = intercept[IllegalArgumentException](checkpoint(chunks))
       assert(e.getMessage.contains("chunk positions are not a permutation of 0..7"),
         s"$name: ${e.getMessage}")
@@ -244,23 +233,23 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
       .replaceFirst(""""full_md5":\s*"[0-9a-f]+"""", s""""full_md5": "$zeros"""")
       .getBytes("UTF-8"))
     val intact = build()
-    for (sweepMax <- Seq(ChunkDedup.Chain.LOCAL_SWEEP_MAX, 0L)) {
-      def restart(root: String, cid: Int) = ChunkDedup.restartFromStore(spark,
-        new graft.state.SnapshotStore(spark, root), cid, sweepMax)
+    for (regime <- Seq("auto", "distributed")) {
+      def restart(root: String, cid: Int) = withRegime(regime)(
+        ChunkDedup.restartFromStore(spark, new graft.state.SnapshotStore(spark, root), cid))
       def failure(root: String): String =
         intercept[IllegalArgumentException](restart(root, 0)).getMessage
       def resolvedOnly(msg: String): Option[Int] =
         s"restart\\(0\\) resolved only (\\d+) of $n positions".r
           .findFirstMatchIn(msg).map(_.group(1).toInt)
       val m = failure(missing)
-      assert(resolvedOnly(m).exists(_ < n), s"localSweepMax $sweepMax, missing FIRST row: $m")
+      assert(resolvedOnly(m).exists(_ < n), s"regime $regime, missing FIRST row: $m")
       val d = failure(duplicated)
-      assert(resolvedOnly(d).exists(_ > n), s"localSweepMax $sweepMax, duplicated FIRST row: $d")
+      assert(resolvedOnly(d).exists(_ > n), s"regime $regime, duplicated FIRST row: $d")
       val t = failure(tampered)
-      assert(t.contains(s"!= committed $zeros"), s"localSweepMax $sweepMax, tampered md5: $t")
+      assert(t.contains(s"!= committed $zeros"), s"regime $regime, tampered md5: $t")
       for (cid <- steps.indices)
         assert(restart(intact, cid).collect().sortBy(_.getLong(0)).map(_.getString(1))
-          .mkString == steps(cid), s"localSweepMax $sweepMax, intact restart($cid)")
+          .mkString == steps(cid), s"regime $regime, intact restart($cid)")
     }
   }
 
@@ -278,7 +267,7 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
         a(i) = alphabet(rnd.nextInt(alphabet.length))
       new String(a)
     }
-    val dist = new ChunkDedup.Chain(spark, n.toLong, localSweepMax = 0L)
+    val dist = withRegime("distributed")(new ChunkDedup.Chain(spark, n.toLong))
     dist.checkpoint(ChunkDedup.chunkify(spark, s0, 1))
     val rd = dist.checkpoint(ChunkDedup.chunkify(spark, s1, 1))
     val loc = new ChunkDedup.Chain(spark, n.toLong)
@@ -321,16 +310,16 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
           cur(i) = alphabet(rnd.nextInt(alphabet.length))
       steps += new String(cur)
     }
-    def buildStore(sweepMax: Long): (graft.state.SnapshotStore, Seq[ChunkDedup.ChkptResult]) = {
-      val root = java.nio.file.Files.createTempDirectory("graft_regions").toString
-      val store = new graft.state.SnapshotStore(spark, root)
-      val chain = new ChunkDedup.Chain(spark, n.toLong, localSweepMax = sweepMax,
-        store = Some(store))
-      val rs = steps.map(s => chain.checkpoint(ChunkDedup.chunkify(spark, s, 1)))
-      (store, rs.toSeq)
-    }
-    val (localStore, localRs) = buildStore(Chain_localMax)
-    val (distStore, _) = buildStore(0L)
+    def buildStore(regime: String): (graft.state.SnapshotStore, Seq[ChunkDedup.ChkptResult]) =
+      withRegime(regime) {
+        val root = java.nio.file.Files.createTempDirectory("graft_regions").toString
+        val store = new graft.state.SnapshotStore(spark, root)
+        val chain = new ChunkDedup.Chain(spark, n.toLong, store = Some(store))
+        val rs = steps.map(s => chain.checkpoint(ChunkDedup.chunkify(spark, s, 1)))
+        (store, rs.toSeq)
+      }
+    val (localStore, localRs) = buildStore("auto")
+    val (distStore, _) = buildStore("distributed")
     for (cid <- steps.indices) {
       // one committed row per region root (the compaction claim itself)
       assert(localStore.committedRows("chunk_shift", cid) ==
@@ -350,7 +339,6 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
       }
     }
   }
-  private val Chain_localMax = ChunkDedup.Chain.LOCAL_SWEEP_MAX
 
   test("randomized multi-checkpoint roundtrip (tree_chkpt analogue)") {
     val rnd = new scala.util.Random(1931) // reference generator seed
@@ -375,76 +363,6 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
     }
     for (cid <- snapshots.indices)
       assert(restartString(store, cid, n) == snapshots(cid), s"checkpoint $cid")
-  }
-
-  test("store-backed serial path: commits identical to the Spark path, jobs halved") {
-    // r6: store-backed chains <= SERIAL_MAX take the serial driver path and
-    // commit driver-built frames. Gate BOTH properties the promotion claims:
-    // (a) the committed chunk_first/chunk_shift tables + manifest metadata
-    // (num_chunks, full-buffer MD5) are identical to the forced Spark
-    // path's, so restartFromStore is path-agnostic; (b) the serial path
-    // runs at most HALF the Spark path's jobs per checkpoint (the ask's
-    // measured bound; in practice ~3 vs ~18).
-    val rnd = new scala.util.Random(13)
-    val n = 64
-    val alphabet = "ABCD"
-    var cur = Array.fill(n)(alphabet(rnd.nextInt(alphabet.length)))
-    val steps = (0 until 3).map { i =>
-      if (i > 0) for (j <- 0 until n if rnd.nextDouble() < 0.2)
-        cur(j) = alphabet(rnd.nextInt(alphabet.length))
-      new String(cur)
-    }
-    val jobCounter = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobCounter.incrementAndGet()
-    }
-    def run(serialMax: Long): (String, Seq[Int]) = {
-      val root = java.nio.file.Files
-        .createTempDirectory(s"graft_serialstore_$serialMax").toString
-      val store = new graft.state.SnapshotStore(spark, root)
-      val chain = new ChunkDedup.Chain(spark, n.toLong,
-        store = Some(store), serialMax = serialMax)
-      val jobs = steps.map { s =>
-        val chunks = ChunkDedup.chunkify(spark, s, 1)
-        org.apache.spark.sql.graftx.Bridge.drainListenerBus(spark.sparkContext)
-        val before = jobCounter.get()
-        chain.checkpoint(chunks)
-        org.apache.spark.sql.graftx.Bridge.drainListenerBus(spark.sparkContext)
-        jobCounter.get() - before
-      }
-      (root, jobs)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val ((serRoot, serJobs), (spkRoot, spkJobs)) =
-      try (run(ChunkDedup.Chain.SERIAL_MAX), run(0L))
-      finally spark.sparkContext.removeSparkListener(listener)
-
-    val ser = new graft.state.SnapshotStore(spark, serRoot)
-    val spk = new graft.state.SnapshotStore(spark, spkRoot)
-    for (cid <- steps.indices) {
-      def rows(st: graft.state.SnapshotStore, t: String) =
-        st.read(t, cid).collect().map(_.toSeq).toSet
-      assert(rows(ser, "chunk_first") == rows(spk, "chunk_first"),
-        s"chunk_first $cid differs")
-      assert(rows(ser, "chunk_shift") == rows(spk, "chunk_shift"),
-        s"chunk_shift $cid differs")
-      def meta(st: graft.state.SnapshotStore, k: String) =
-        (s""""$k":\\s*"([^"]+)"""").r
-          .findFirstMatchIn(st.manifestJson("chunk_first", cid)).map(_.group(1))
-      for (k <- Seq("num_chunks", "full_md5"))
-        assert(meta(ser, k).nonEmpty && meta(ser, k) == meta(spk, k),
-          s"manifest $k $cid differs")
-      // file-only restart over the serial-committed store
-      val got = ChunkDedup.restartFromStore(spark, ser, cid).collect()
-        .sortBy(_.getLong(0)).map(_.getString(1)).mkString
-      assert(got == steps(cid), s"restart($cid) from serial store")
-    }
-    for (cid <- steps.indices)
-      assert(serJobs(cid) * 2 <= spkJobs(cid),
-        s"checkpoint $cid: serial path ran ${serJobs(cid)} jobs vs Spark " +
-          s"path ${spkJobs(cid)} — not halved")
   }
 }
 
@@ -513,24 +431,23 @@ class ChunkDedupLocalSweepSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("local-sweep checkpoint job bound: <= 4 jobs at every checkpoint (4608 chunks, store-backed)") {
-    // just above SERIAL_MAX: block swaps, fresh chunks and in-checkpoint
-    // duplicates exercise every label; the single driver pass keeps each
-    // checkpoint to one digest + MD5 job, one probe job (a broadcast digest
-    // set filters the map), one insert and the chunk_first write
-    val n = 4608
-    assert(n > ChunkDedup.Chain.SERIAL_MAX)
-    val steps = chain(n, 3, 2, 17)
-    val root = java.nio.file.Files.createTempDirectory("graft_jobbound").toString
-    val store = new graft.state.SnapshotStore(spark, root)
-    val c = new ChunkDedup.Chain(spark, n.toLong, store = Some(store))
-    val (rs, jobs) = steps.map(s => withJobs(c.checkpoint(frame(s)))).unzip
-    assert(jobs(0) <= 4, s"checkpoint 0 ran ${jobs(0)} jobs")
-    for (cid <- 1 until steps.length)
-      assert(jobs(cid) <= 4, s"checkpoint $cid ran ${jobs(cid)} jobs")
-    assert(rs.last.numFirstOcur > 0 && rs.last.numShiftDupl > 0)
-    assert(restarted(ChunkDedup.restartFromStore(spark, store, 2)) == steps(2))
-  }
+  // a tiny chain and one of the perfbench warm-up's size: block swaps,
+  // fresh chunks and in-checkpoint duplicates exercise every label; the
+  // single driver pass keeps each checkpoint to one digest + MD5 job, one
+  // probe job (a broadcast digest set filters the map), one insert and the
+  // chunk_first write
+  for (n <- Seq(64, 4608))
+    test(s"local-sweep checkpoint job bound: <= 4 jobs at every checkpoint ($n chunks, store-backed)") {
+      val steps = chain(n, 3, 2, 17)
+      val root = java.nio.file.Files.createTempDirectory("graft_jobbound").toString
+      val store = new graft.state.SnapshotStore(spark, root)
+      val c = new ChunkDedup.Chain(spark, n.toLong, store = Some(store))
+      val (rs, jobs) = steps.map(s => withJobs(c.checkpoint(frame(s)))).unzip
+      for (cid <- steps.indices)
+        assert(jobs(cid) <= 4, s"checkpoint $cid ran ${jobs(cid)} jobs")
+      assert(rs.last.numFirstOcur > 0 && rs.last.numShiftDupl > 0)
+      assert(restarted(ChunkDedup.restartFromStore(spark, store, 2)) == steps(2))
+    }
 
   /** The job-bound chain's store: 3 local-sweep checkpoints of 4,608
     * chunks, shared by the restart tests below.
@@ -564,34 +481,30 @@ class ChunkDedupLocalSweepSpec extends AnyFunSuite with SparkTestBase {
     val steps48 = chain(n, 6, 2, 41)
     val root = java.nio.file.Files.createTempDirectory("graft_restart_parity").toString
     val store48 = new graft.state.SnapshotStore(spark, root)
-    val c = new ChunkDedup.Chain(spark, n.toLong, store = Some(store48), serialMax = 0L)
+    val c = new ChunkDedup.Chain(spark, n.toLong, store = Some(store48))
     val rs = steps48.map(s => c.checkpoint(frame(s)))
     assert(rs(5).referencedCheckpoints.collect().map(_.getInt(0)).contains(0))
     val (sweep, sweepSteps) = sweepStore
     for ((store, steps) <- Seq((store48, steps48), (sweep, sweepSteps)); cid <- steps.indices) {
-      def rows(localSweepMax: Long) = ChunkDedup.restartFromStore(spark, store, cid,
-        localSweepMax).collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
-      val driver = rows(ChunkDedup.Chain.LOCAL_SWEEP_MAX)
-      assert(driver == rows(0L), s"n=${steps(cid).length} restart($cid) regimes differ")
+      def rows(regime: String) = withRegime(regime)(ChunkDedup.restartFromStore(spark, store,
+        cid)).collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+      val driver = rows("auto")
+      assert(driver == rows("distributed"), s"n=${steps(cid).length} restart($cid) regimes differ")
       assert(driver.map(_._2) == steps(cid), s"n=${steps(cid).length} restart($cid) bytes")
     }
   }
 
-  // Builds a serial, a local-sweep and a distributed store-backed chain over
-  // `steps`, checks that every checkpoint commits the same tables and
-  // manifest meta on all three, and restarts every checkpoint of each store.
+  // Builds a local-sweep and a distributed store-backed chain over `steps`,
+  // checks that every checkpoint commits the same tables and manifest meta
+  // on both, and restarts every checkpoint of each store.
   private def storeParity(n: Int, steps: Seq[Seq[String]]): Unit = {
-    def build(name: String, localSweepMax: Long, serialMax: Long) = {
-      val root = java.nio.file.Files.createTempDirectory(s"graft_parity_$name").toString
+    def build(regime: String) = withRegime(regime) {
+      val root = java.nio.file.Files.createTempDirectory(s"graft_parity_$regime").toString
       val store = new graft.state.SnapshotStore(spark, root)
-      val c = new ChunkDedup.Chain(spark, n.toLong, localSweepMax = localSweepMax,
-        store = Some(store), serialMax = serialMax)
-      (name, store, steps.map(s => c.checkpoint(frame(s))))
+      val c = new ChunkDedup.Chain(spark, n.toLong, store = Some(store))
+      (regime, store, steps.map(s => c.checkpoint(frame(s))))
     }
-    val stores = Seq(
-      build("serial", ChunkDedup.Chain.LOCAL_SWEEP_MAX, ChunkDedup.Chain.SERIAL_MAX),
-      build("localsweep", ChunkDedup.Chain.LOCAL_SWEEP_MAX, 0L),
-      build("distributed", 0L, 0L))
+    val stores = Seq(build("auto"), build("distributed"))
     if (steps.length == 6)
       for ((name, _, rs) <- stores)
         assert(rs(5).referencedCheckpoints.collect().map(_.getInt(0)).contains(0),
@@ -606,10 +519,10 @@ class ChunkDedupLocalSweepSpec extends AnyFunSuite with SparkTestBase {
       assert(rows(base, "chunk_shift").nonEmpty || cid == 0)
       for ((name, st, _) <- stores.tail) {
         for (t <- Seq("chunk_first", "chunk_shift"))
-          assert(rows(st, t) == rows(base, t), s"n=$n $name $t $cid differs from serial")
+          assert(rows(st, t) == rows(base, t), s"n=$n $name $t $cid differs from the local sweep")
         for (k <- Seq("num_chunks", "full_md5"))
           assert(meta(base, k).nonEmpty && meta(st, k) == meta(base, k),
-            s"n=$n $name manifest $k $cid differs from serial")
+            s"n=$n $name manifest $k $cid differs from the local sweep")
       }
       for ((name, st, _) <- stores)
         assert(restarted(ChunkDedup.restartFromStore(spark, st, cid)) == steps(cid),
@@ -617,7 +530,7 @@ class ChunkDedupLocalSweepSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("committed-store parity: serial, local-sweep and distributed paths commit identical tables and manifest meta") {
+  test("committed-store parity: local-sweep and distributed paths commit identical tables and manifest meta") {
     storeParity(96, chain(96, 3, 1, 29)) // 3 ragged checkpoints of one-letter chunks
   }
 

@@ -15,8 +15,8 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
     val n = nodes.toDF("id")
     val local = ConnectedComponents.assignAll(spark, n, e)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = ConnectedComponents.assignAll(spark, n, e, smallGraphMax = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val dist = withRegime("distributed")(ConnectedComponents.assignAll(spark, n, e).collect())
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(local == dist, "local and distributed CC paths disagree")
     local
   }
@@ -52,7 +52,7 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
 
   test("distributed star rounds match union-find on REAL pipeline edges (8k docs)") {
     // the bench-scale flagship short-circuits to driver union-find (edge
-    // count under SMALL_GRAPH_MAX); this pins the distributed path against
+    // count under Regime.SMALL_GRAPH_MAX); this pins the distributed path against
     // the same real edge distribution (exact-dup stars + near-dup pairs)
     val docs = graft.pages.PagesGen.pages(spark, 8000, 42L, 8).select("doc_id", "text")
     val res = graft.dedup.NearDupPipeline.run(spark, docs, graft.dedup.DedupConfig())
@@ -61,8 +61,8 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
     val nodes = docs.select(col("doc_id").as("id"))
     val local = ConnectedComponents.assignAll(spark, nodes, edges)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = ConnectedComponents.assignAll(spark, nodes, edges, smallGraphMax = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val dist = withRegime("distributed")(ConnectedComponents.assignAll(spark, nodes, edges)
+      .collect()).map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(local.size == 8000 && local == dist)
     edges.unpersist()
   }

@@ -426,15 +426,15 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
     // distributed path on the same two snapshots: committed edges,
     // assignments and metrics must be row-identical
     val (n, m) = (250, 50)
-    def run(local: Boolean): SnapshotStore = {
-      val root = Files.createTempDirectory(s"graft_inc_twin_$local").toString
+    def run(regime: String): SnapshotStore = withRegime(regime) {
+      val root = Files.createTempDirectory(s"graft_inc_twin_$regime").toString
       val store = new SnapshotStore(spark, root)
-      val inc = new IncrementalDedup(spark, store, cfg, localDispatch = local)
+      val inc = new IncrementalDedup(spark, store, cfg)
       inc.processSnapshot(0, snapshotPages(0, n, m))
       inc.processSnapshot(1, snapshotPages(1, n, m))
       store
     }
-    val (ls, ds) = (run(true), run(false))
+    val (ls, ds) = (run("auto"), run("distributed"))
     for (snapId <- 0 to 1) {
       def tbl(s: SnapshotStore, t: String): Seq[Seq[Any]] =
         s.read(t, snapId).collect().map(_.toSeq).toSeq
@@ -461,12 +461,6 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
     // shingle sets and the prior edges later. Ceilings sit just above that
     // floor so any regression (a new eager action, a lost dispatch, a
     // reintroduced schema-inference job) fails loudly.
-    val jobCounter = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobCounter.incrementAndGet()
-    }
     val (n, m) = (250, 50)
     val root = Files.createTempDirectory("graft_inc_jobs").toString
     val inc = new IncrementalDedup(spark, new SnapshotStore(spark, root), cfg)
@@ -475,15 +469,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
       snapshotPages(1, n, m).withColumn("text", when(col("doc_id") % 53 === 0,
         concat(col("text"), lit(" second wave qq7 qq8"))).otherwise(col("text"))))
     pages.foreach(_.count()) // materialize inputs outside the counted window
-    spark.sparkContext.addSparkListener(listener)
-    val jobs =
-      try pages.indices.map { s =>
-        org.apache.spark.sql.graftx.Bridge.drainListenerBus(spark.sparkContext)
-        val before = jobCounter.get()
-        inc.processSnapshot(s, pages(s))
-        org.apache.spark.sql.graftx.Bridge.drainListenerBus(spark.sparkContext)
-        jobCounter.get() - before
-      } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = pages.indices.map(s => withJobs(inc.processSnapshot(s, pages(s)))._2)
     assert(jobs(0) <= 3, s"snapshot 0 took ${jobs(0)} jobs (floor is 2)")
     for (s <- 1 to 2) assert(jobs(s) <= 7, s"snapshot $s took ${jobs(s)} jobs (floor is 6)")
   }
@@ -499,19 +485,17 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
       if (Files.isDirectory(p)) Files.createDirectories(q) else Files.copy(p, q)
     }
     val tables = Seq("pages_keyed", "content", "edges", "assignments", "metrics")
-    for (local <- Seq(true, false)) {
-      val ref = Files.createTempDirectory(s"graft_inc_resume_ref_$local")
-      val inc = new IncrementalDedup(spark, new SnapshotStore(spark, ref.toString), cfg,
-        localDispatch = local)
+    for (regime <- Seq("auto", "distributed")) withRegime(regime) {
+      val ref = Files.createTempDirectory(s"graft_inc_resume_ref_$regime")
+      val inc = new IncrementalDedup(spark, new SnapshotStore(spark, ref.toString), cfg)
       for (s <- 0 to 1) inc.processSnapshot(s, snapshotPages(s, n, m))
       for (killed <- Seq(Seq("edges", "assignments", "metrics"),
                          Seq("content", "edges", "assignments", "metrics"))) {
-        val root = Files.createTempDirectory(s"graft_inc_resume_$local")
+        val root = Files.createTempDirectory(s"graft_inc_resume_$regime")
         copyTree(ref, root)
         killed.foreach(t => rmrf(root.resolve(t).resolve("snapshot=1")))
         val store = new SnapshotStore(spark, root.toString)
-        new IncrementalDedup(spark, store, cfg, localDispatch = local)
-          .processSnapshot(1, snapshotPages(1, n, m))
+        new IncrementalDedup(spark, store, cfg).processSnapshot(1, snapshotPages(1, n, m))
         val refStore = new SnapshotStore(spark, ref.toString)
         for (t <- tables; s <- 0 to 1) {
           // metrics: identical except the wall-clock column
@@ -519,7 +503,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
             if (t == "metrics") tableRows(st, t, s).map(_.split('|').dropRight(1).mkString("|"))
             else tableRows(st, t, s)
           assert(rows(store) == rows(refStore),
-            s"$t/$s differs after resuming without ${killed.mkString(",")} (local=$local)")
+            s"$t/$s differs after resuming without ${killed.mkString(",")} (regime $regime)")
         }
       }
     }
@@ -593,8 +577,8 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
     val local = IncrementalDedup.localClusterLabels(reg, edges).toMap
     val regDf = reg.toSeq.toDF("ckey", "content_id")
     val eDf = edges.toSeq.toDF("a", "b")
-    val comps = ConnectedComponents.assignAll(spark, regDf.select("ckey"), eDf,
-      smallGraphMax = 0) // force the distributed star rounds
+    val comps = withRegime("distributed")( // force the distributed star rounds
+      ConnectedComponents.assignAll(spark, regDf.select("ckey"), eDf))
     val labels = comps.join(regDf, comps("id") === regDf("ckey"))
       .groupBy(comps("cluster")).agg(min("content_id").as("cc"))
     val dist = comps.join(labels, "cluster").select(col("id"), col("cc"))

@@ -27,4 +27,18 @@ trait SparkTestBase { self: AnyFunSuite =>
       (out, jobCounter.get())
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  /** `f` under `spark.graft.regime=regime`, the previous value restored
+    * afterwards. The forked test JVM runs its suites one at a time, so a
+    * session conf scoped this way reaches only `f`.
+    */
+  protected def withRegime[T](regime: String)(f: => T): T = {
+    val saved = spark.conf.getOption(Regime.Key)
+    spark.conf.set(Regime.Key, regime)
+    try f
+    finally saved match {
+      case Some(v) => spark.conf.set(Regime.Key, v)
+      case None => spark.conf.unset(Regime.Key)
+    }
+  }
 }

@@ -121,11 +121,11 @@ class TextMultimodalAnnSpec extends AnyFunSuite with SparkTestBase {
       .filter(org.apache.spark.sql.functions.col("qid") < 15)
     assert(topkRows(ivfRestricted) == topkRows(ivfFiltered))
 
-    // the DISTRIBUTED quantizer-training branch (forced via
-    // localKmeansMax = 0) produces the identical index: the 1e-4 centroid
-    // rounding makes local and partial-agg float summation agree
-    val ivfDistributed = Ann.ivfTopK(emb, k = 5, nCells = 16, nProbe = 4,
-      localKmeansMax = 0)
+    // the DISTRIBUTED quantizer-training branch (forced by the distributed
+    // regime) produces the identical index: the 1e-4 centroid rounding
+    // makes local and partial-agg float summation agree
+    val ivfDistributed = withRegime("distributed")(
+      Ann.ivfTopK(emb, k = 5, nCells = 16, nProbe = 4))
     val ivfLocal = Ann.ivfTopK(emb, k = 5, nCells = 16, nProbe = 4)
     assert(topkRows(ivfDistributed) == topkRows(ivfLocal))
   }

@@ -71,7 +71,7 @@ class TreeLowRootSpec extends AnyFunSuite with SparkTestBase {
     for (steps <- Seq(Seq("aycd", "xyxw"), Seq("abcd", "xbxd"),
       Seq("qrst", "xyxx"), Seq("aycd", "xyxw", "xxxx"))) {
       val serial = new TreeLowRoot.Chain(spark, 4L)
-      val dist = new TreeLowRoot.DistChain(spark, 4L, localMax = 0) // force distributed
+      val dist = withRegime("distributed")(new TreeLowRoot.DistChain(spark, 4L))
       for (t <- steps) {
         val rs = serial.checkpoint(ChunkDedup.chunkify(spark, t, 1))
         val rd = dist.checkpoint(ChunkDedup.chunkify(spark, t, 1))
@@ -94,7 +94,7 @@ class TreeLowRootSpec extends AnyFunSuite with SparkTestBase {
       cp1(off + k) = block(k)
     for (i <- 0 until n by 97) cp1(i) = ('0' + (i % 10)).toChar
     val serial = new TreeLowRoot.Chain(spark, n.toLong)
-    val dist = new TreeLowRoot.DistChain(spark, n.toLong, localMax = 0) // force distributed
+    val dist = withRegime("distributed")(new TreeLowRoot.DistChain(spark, n.toLong))
     for (t <- Seq(new String(cp0), new String(cp1))) {
       val rs = serial.checkpoint(ChunkDedup.chunkify(spark, t, 1))
       val rd = dist.checkpoint(ChunkDedup.chunkify(spark, t, 1))

@@ -6,7 +6,9 @@
 # first in every other pair (a fixed order biases a drifting host).
 #
 # Bench mode: spark-submit graft.Bench from each side's `sbt package` jar;
-# prints per-run totals and the min/median per side.
+# prints per-run totals and the min/median per side, and the same for each
+# query leaf named in LEAVES (space-separated, e.g.
+# LEAVES="chunk_dedup_labels region_size_histogram").
 # Perfbench mode: `python3 perfbench/run.py --workload <w> --seed <i>
 # --seconds 10 --trace 0` in each side's own tree (pair i runs seed i on both
 # sides); prints every end-to-end metric of BENCHMARK.json per run, then per
@@ -91,27 +93,42 @@ export SPARK_SCALA_VERSION=2.13 SPARK_GRAFT_SF_DIR="$SFDIR" SPARK_GRAFT_CPUS="$C
 JAR_A=$(ls "$WT"/target/scala-2.13/*.jar)
 JAR_B=$(ls "$REPO"/target/scala-2.13/*.jar)
 
-run() { # $1=jar  -> prints total seconds (or FAIL)
+OUT="$WT.runs/bench"
+rm -rf "$OUT"; mkdir -p "$OUT"
+run() { # $1=jar $2=result file -> prints "total=<s> <leaf>=<s>..." (or FAIL)
   /opt/spark/bin/spark-submit --master "local[$CPUS]" --driver-memory 8g \
-    --class graft.Bench "$1" 2>/dev/null \
-    | grep '^{"metric"' | python3 -c 'import sys,json
-try: print(round(json.loads(sys.stdin.readline())["value"],2))
-except Exception: print("FAIL")'
+    --class graft.Bench "$1" 2>/dev/null | grep '^{"metric"' > "$2"
+  python3 - "$2" "${LEAVES:-}" <<'PY'
+import sys, json
+try:
+    r = json.load(open(sys.argv[1]))
+    print(" ".join([f"total={r['value']:.2f}"] +
+                   [f"{q}={r['queries'][q]:.2f}" for q in sys.argv[2].split()]))
+except Exception:
+    print("FAIL")
+PY
 }
 
-A=(); B=()
-run_a() { a=$(run "$JAR_A"); echo "pair $i  A($SHA) total=$a  load=$(cut -d' ' -f1 </proc/loadavg)"; }
-run_b() { b=$(run "$JAR_B"); echo "pair $i  B(HEAD) total=$b  load=$(cut -d' ' -f1 </proc/loadavg)"; }
+load() { cut -d' ' -f1 </proc/loadavg; }
+run_a() { echo "pair $i  A($SHA) $(run "$JAR_A" "$OUT/A_$i.json")  load=$(load)"; }
+run_b() { echo "pair $i  B(HEAD) $(run "$JAR_B" "$OUT/B_$i.json")  load=$(load)"; }
 for i in $(seq 1 "$PAIRS"); do
   if [ $((i % 2)) -eq 1 ]; then run_a; run_b; else run_b; run_a; fi
-  A+=("$a"); B+=("$b")
 done
-python3 - "${A[*]}" "${B[*]}" <<'PY'
-import sys, statistics
-a = [float(x) for x in sys.argv[1].split() if x != "FAIL"]
-b = [float(x) for x in sys.argv[2].split() if x != "FAIL"]
-if a and b:
-    print(f"A: min={min(a):.1f} med={statistics.median(a):.1f}  runs={a}")
-    print(f"B: min={min(b):.1f} med={statistics.median(b):.1f}  runs={b}")
-    print(f"B/A min ratio: {min(b)/min(a):.3f}")
+python3 - "$OUT" "$PAIRS" "${LEAVES:-}" <<'PY'
+import sys, json, statistics
+out, pairs, leaves = sys.argv[1], int(sys.argv[2]), sys.argv[3].split()
+def load(side, i):
+    try:
+        r = json.load(open(f"{out}/{side}_{i}.json"))
+        return dict(r["queries"], total=r["value"])
+    except Exception:
+        return None
+runs = {s: [r for r in (load(s, i) for i in range(1, pairs + 1)) if r] for s in "AB"}
+for name in ["total"] + leaves:
+    a = [r[name] for r in runs["A"]]
+    b = [r[name] for r in runs["B"]]
+    if a and b:
+        print(f"{name}  A: min={min(a):.2f} med={statistics.median(a):.2f}  "
+              f"B: min={min(b):.2f} med={statistics.median(b):.2f}  B/A min ratio {min(b)/min(a):.3f}")
 PY
