@@ -27,7 +27,8 @@ object Regime {
     * the per-level DataFrame sweep. Driver footprint at the bound: the
     * digest job's one task result (8 B position + 16 B digest per chunk,
     * 24 MB), kept as the next checkpoint's leaf digests (16 MB), the full
-    * Merkle tree's 2n−1 16-byte slots (32 MB transient), the probe's
+    * Merkle tree's 2n−1 16-byte slots (32 MB transient) with its label
+    * pass's code and size arrays (10 MB), the probe's
     * broadcast set of ≤ 2n−1 digests and its hits (≈ 200 MB transient), and
     * the result's per-leaf label frame, a local relation of n rows (≈ 90 MB
     * while the caller holds the result) — a few hundred MB on the 8 g
@@ -73,14 +74,16 @@ object Regime {
     */
   final val LOCAL_ASSIGN_MAX_ROWS: Long = 1L << 17
 
-  /** Low-root checkpoints (`TreeLowRoot.DistChain`) up to this many chunks
-    * run the driver `TreeLowRoot.Chain` (output-identical, spec-gated); the
+  /** Low-root checkpoints (`TreeLowRoot.Chain`) up to this many chunks run
+    * the election on the driver (output-identical, spec-gated); the
     * distributed sweep pays ~log n rounds of eager tiny jobs, the right
     * shape only past driver-collectable size. 16× below [[LOCAL_SWEEP_MAX]]
-    * because that driver chain holds one object per leaf where the chunk
-    * chain holds flat 16-byte slots: a collected (pos, digest) Row and a
-    * 16-byte array per chunk, the previous checkpoint's digest arrays and a
-    * hash set of wrapped elected digests.
+    * because the driver side still holds objects per node where the chunk
+    * chain holds flat arrays: besides the flat leaf digests, the 2n−1-slot
+    * Merkle tree and the label pass's code and size arrays, it keeps a
+    * collected (pos, digest) Row and a 16-byte array per chunk, a boxed
+    * member map over the fresh forest (up to 2n−1 entries at checkpoint 0)
+    * and a hash set of wrapped elected digests.
     */
   final val LOW_ROOT_LOCAL_MAX: Long = 1L << 16
 

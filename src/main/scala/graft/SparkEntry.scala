@@ -657,17 +657,18 @@ object SparkEntry {
     }),
 
     // J3 TreeLowRoot election over the same derived checkpoint pair, run on
-    // the DISTRIBUTED chain (Spark labeling + thin-sweep forest; driver
-    // pruning over the fresh forest only). Oracle (promoted r6): the
-    // order-sensitive pruning fixpoint is not SQL-expressible, but the
-    // chain is replayed DRIVER-PURE (TreeLowRoot.replayChain — pure-JVM
-    // murmur digests + the serial elect core, no Spark in the path) and
-    // dumped; DuckDB compares every (node, label) row. Distributed-vs-serial
-    // parity at 4096 chunks is additionally spec-gated (TreeLowRootSpec).
+    // the chain the regime selects (driver election, or Spark labeling +
+    // thin-sweep forest with driver pruning over the fresh forest only).
+    // Oracle (promoted r6): the order-sensitive pruning fixpoint is not
+    // SQL-expressible, but the chain is replayed DRIVER-PURE
+    // (TreeLowRoot.replayChain — pure-JVM murmur digests + the serial elect
+    // core, no Spark in the path) and dumped; DuckDB compares every (node,
+    // label) row. Distributed-vs-driver parity at 4096 chunks is
+    // additionally spec-gated (TreeLowRootSpec).
     "chunk_lowroot_labels" -> ((s, dir) => {
       dumpLowRootOnce(s, dir)
       val (step0, step1) = lowrootSteps(s, dir)
-      val chain = new graft.dedup.TreeLowRoot.DistChain(s, step0.length.toLong)
+      val chain = new graft.dedup.TreeLowRoot.Chain(s, step0.length.toLong)
       chain.checkpoint(graft.dedup.ChunkDedup.chunkify(s, step0, 1))
       chain.checkpoint(graft.dedup.ChunkDedup.chunkify(s, step1, 1)).labels
     }),
@@ -691,7 +692,14 @@ object SparkEntry {
       chain.checkpoint(graft.dedup.ChunkDedup.chunkify(s, step0, 1))
       val r1 = chain.checkpoint(graft.dedup.ChunkDedup.chunkify(s, step1, 1))
       import s.implicits._
-      r1.regionSizes.toDF("label", "region_size")
+      // region sizes exist on the local sweep only: under the distributed
+      // regime this query fails loudly instead of emitting an empty frame
+      r1.regionSizes.getOrElse(throw new UnsupportedOperationException(
+          s"${graft.Regime.Key}=${s.conf.get(graft.Regime.Key, "auto")} sent this " +
+            "128-chunk chain down the distributed sweep, which keeps no region " +
+            "sizes (under auto the local sweep runs up to Regime.LOCAL_SWEEP_MAX = " +
+            s"${graft.Regime.LOCAL_SWEEP_MAX} chunks)"))
+        .toDF("label", "region_size")
         .groupBy("label", "region_size")
         .agg(count(lit(1)).as("n_regions"))
     }),

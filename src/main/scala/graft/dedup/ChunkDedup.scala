@@ -57,12 +57,13 @@ object ChunkDedup {
       numShiftDupl: Long,     // count of shifted-duplicate region roots
       firstLeaves: DataFrame, // (pos, chunk) bytes stored in the incremental chkpt
       shiftLeafMap: DataFrame, // (pos, src_chkpt, src_pos) duplicate metadata
-      regionSizes: Seq[(String, Long)] = Nil // one (label, leaves-under-root)
-                              // entry per region root — the reference's
-                              // STATS histograms (tree_approach.cpp:229-256);
-                              // filled on the local-sweep path, empty on the
-                              // thin distributed sweep (whose region info is
-                              // the shift regions it commits)
+      regionSizes: Option[Seq[(String, Long)]] // one (label, leaves-under-
+                              // root) entry per region root — the
+                              // reference's STATS histograms
+                              // (tree_approach.cpp:229-256); Some on the
+                              // local-sweep path, None on the thin
+                              // distributed sweep (which sweeps no FIXED
+                              // forest and keeps no region sizes)
   ) {
     /** Distinct prior checkpoints this incremental references — the
       * reference's `chkpts_needed` bitset (F4, list_approach.cpp:98-110)
@@ -489,12 +490,51 @@ object ChunkDedup {
     private[dedup] val shiftSchema = StructType(Seq(StructField("node", LongType),
       StructField("src_chkpt", IntegerType), StructField("src_node", LongType)))
 
-    /** Leaf `p` is FIXED: same digest as the previous checkpoint at the same
-      * position (tree_approach.cpp:326-327); `prev` is null at checkpoint 0.
+    /** Leaf `p` of a checkpoint's Merkle tree ([[merkleTree]]) is FIXED:
+      * same digest as the previous checkpoint's leaf `p`
+      * (tree_approach.cpp:326-327). `prev` holds that checkpoint's n leaf
+      * digests by position, or is null at checkpoint 0.
       */
-    private[dedup] def isFixed(leaves: Array[Byte], prev: Array[Byte], p: Int): Boolean =
-      prev != null &&
-        java.util.Arrays.equals(leaves, 16 * p, 16 * p + 16, prev, 16 * p, 16 * p + 16)
+    private[dedup] def isFixed(tree: Array[Byte], prev: Array[Byte], p: Int): Boolean =
+      prev != null && {
+        val at = prev.length - 16 + 16 * p // tree slot n−1+p
+        java.util.Arrays.equals(tree, at, at + 16, prev, 16 * p, 16 * p + 16)
+      }
+
+    /** [[labelPass]]'s code of a node whose leaves do not all share one code. */
+    private[graft] final val MIXED: Byte = -1
+
+    /** The chunk chain's leaf labels as [[labelPass]] codes. */
+    private final val FirstCode: Byte = 0
+    private final val FixedCode: Byte = 1
+    private final val ShiftCode: Byte = 2
+    private val labelOf = Array(FIRST, FIXED, SHIFT) // by code
+
+    /** The flat tree's one label pass — the reference's per-node label array
+      * (utils.hpp:51-57) over the same 2n−1 heap slots as [[merkleTree]],
+      * in one descending loop, so children 2u+1 and 2u+2 come before u. A
+      * leaf keeps its code from `leafCodes` (by position); an internal node
+      * takes its children's code when the two agree, else [[MIXED]]. So
+      * node u has code L iff every leaf under it has code L, i.e. u is a
+      * node of label L's uniform forest, and `size(u)` counts those leaves.
+      * @return (code, size) by node
+      */
+    private[graft] def labelPass(leafCodes: Array[Byte]): (Array[Byte], Array[Int]) = {
+      val leafBase = leafCodes.length - 1
+      val code = new Array[Byte](2 * leafBase + 1)
+      val size = new Array[Int](2 * leafBase + 1)
+      var u = 2 * leafBase
+      while (u >= 0) {
+        if (u >= leafBase) { code(u) = leafCodes(u - leafBase); size(u) = 1 }
+        else {
+          val l = code(2 * u + 1)
+          code(u) = if (l == code(2 * u + 2)) l else MIXED
+          size(u) = size(2 * u + 1) + size(2 * u + 2)
+        }
+        u -= 1
+      }
+      (code, size)
+    }
 
     /** One checkpoint's driver-side resolution. */
     private[dedup] final case class Resolved(
@@ -504,7 +544,8 @@ object ChunkDedup {
         regionSizes: Vector[(String, Long)],
         shiftRegions: Seq[Row])    // the committed shift section
 
-    /** The local-sweep path's driver pass, in the reference's order
+    /** The local-sweep path's driver pass over one checkpoint's full Merkle
+      * tree `tree` ([[merkleTree]]), in the reference's order
       * (tree_approach.cpp:325-477): `known(p)` is the map entry of
       * non-FIXED leaf p's digest (J1; whether this checkpoint's own inserts
       * show there does not matter — a fresh duplicate resolves to its
@@ -514,121 +555,59 @@ object ChunkDedup {
       *      else fresh: the lowest position of each fresh digest wins FIRST
       *      (J2 atomic_min) and is inserted, and its other positions SHIFT
       *      onto it;
-      *   2. the FIRST forest's internals are inserted if absent, lowest node
-      *      first (:372-404);
-      *   3. a SHIFT-candidate internal coalesces iff the map holds its
-      *      digest, and inherits that entry as its source (:413-477).
-      * `leaves` holds the 16-byte leaf digests by position. The shift
-      * section has one (node, src_chkpt, src_node) row per SHIFT region
-      * ROOT — a SHIFT leaf or coalesced internal whose parent did not
-      * coalesce (:593-622).
+      *   2. one [[labelPass]]; the FIRST forest's internals are inserted if
+      *      absent, lowest node first (:372-404);
+      *   3. a pure-SHIFT internal coalesces iff the map holds its digest,
+      *      and inherits that entry as its source (:413-477).
+      * A region root is a member whose parent is not one: FIRST and FIXED
+      * members are their label's forest, SHIFT members the SHIFT leaves and
+      * coalesced internals. Each root reports (label, leaves under it), and
+      * the shift section has one (node, src_chkpt, src_node) row per SHIFT
+      * root (:593-622). Every digest is a slot of `tree`.
       */
-    private[dedup] def resolve(cid: Int, leaves: Array[Byte], prev: Array[Byte],
+    private[dedup] def resolve(cid: Int, tree: Array[Byte], prev: Array[Byte],
                                known: Int => Option[(Int, Long)],
                                lookup: (Long, Digest) => Option[(Int, Long)],
                                insert: (Digest, (Int, Long)) => Unit): Resolved = {
-      val n = leaves.length / 16
-      val leafBase = n - 1L
-      val labels = new Array[String](n)
-      val srcOf = new Array[(Int, Long)](n)
+      val n = (tree.length / 16 + 1) / 2
+      val leafBase = n - 1
+      val leafCode = new Array[Byte](n)
+      val src = new Array[(Int, Long)](2 * n - 1) // of each SHIFT member
       val winner = scala.collection.mutable.HashMap.empty[Digest, (Int, Long)]
       for (p <- 0 until n) {
-        if (isFixed(leaves, prev, p)) labels(p) = FIXED
+        if (isFixed(tree, prev, p)) leafCode(p) = FixedCode
         else {
-          val d = key(slot(leaves, p))
+          val d = key(slot(tree, leafBase + p))
           known(p).orElse(winner.get(d)) match {
-            case Some(src) => labels(p) = SHIFT; srcOf(p) = src
+            case Some(s) => leafCode(p) = ShiftCode; src(leafBase + p) = s
             case None =>
-              labels(p) = FIRST
-              winner(d) = (cid, leafBase + p)
+              leafCode(p) = FirstCode
+              winner(d) = (cid, leafBase.toLong + p)
               insert(d, winner(d))
           }
         }
       }
-      val leafEntries = Array.tabulate(n)(p => (leafBase + p, slot(leaves, p), labels(p)))
-      val (firstInt, fixedInt, shiftCand) = localForests(leafEntries)
-      firstInt.sortBy(_._1).foreach { case (u, d) =>
-        if (lookup(u, key(d)).isEmpty) insert(key(d), (cid, u))
+      val (code, size) = labelPass(leafCode)
+      for (u <- 0 until leafBase if code(u) == FirstCode) {
+        val d = key(slot(tree, u))
+        if (lookup(u, d).isEmpty) insert(d, (cid, u.toLong))
       }
-      val shiftIntSrc = shiftCand.iterator
-        .flatMap { case (u, d) => lookup(u, key(d)).map(u -> _) }.toMap
-      val sizes = regionRootSizes(leafEntries, firstInt, fixedInt, shiftCand,
-        shiftIntSrc.keySet, n)
-      val shiftLeafSrc = (0 until n).iterator.collect {
-        case p if labels(p) == SHIFT => (leafBase + p, srcOf(p))
-      }
-      Resolved(labels, srcOf,
-        sizes.groupBy(_._1).map { case (l, v) => l -> v.size.toLong },
-        sizes,
-        (shiftLeafSrc ++ shiftIntSrc.iterator).collect {
-          case (u, (sc, sn)) if u == 0 || !shiftIntSrc.contains((u - 1) / 2) =>
-            Row(u, sc, sn)
-        }.toSeq)
-    }
-
-    /** Build the three uniform-label forests in memory. Returns the internal
-      * nodes of (first, fixed, shift-candidate) forests as (node, digest).
-      * Pure index arithmetic — correct for ragged heaps.
-      */
-    def localForests(leaves: Array[(Long, Array[Byte], String)])
-      : (Vector[(Long, Array[Byte])], Vector[(Long, Array[Byte])], Vector[(Long, Array[Byte])]) = {
-      def forest(label: String): Vector[(Long, Array[Byte])] = {
-        val active = scala.collection.mutable.HashMap.empty[Long, Array[Byte]]
-        leaves.foreach { case (n, d, l) => if (l == label) active(n) = d }
-        val internals = Vector.newBuilder[(Long, Array[Byte])]
-        // max-first order: children always pop before their parent could
-        val queue = scala.collection.mutable.PriorityQueue.empty[Long]
-        active.keys.foreach(queue.enqueue(_))
-        while (queue.nonEmpty) {
-          val n = queue.dequeue()
-          if (n > 0 && active.contains(n)) {
-            val sib = if (n % 2 == 1) n + 1 else n - 1
-            if (active.contains(sib)) {
-              val l = math.min(n, sib); val r = math.max(n, sib)
-              val pd = graft.functions.Impl.murmur128Digest(active(l) ++ active(r))
-              active.remove(l); active.remove(r)
-              val p = (n - 1) / 2
-              active(p) = pd
-              internals += ((p, pd))
-              queue.enqueue(p)
-            }
-          }
+      // a pure-SHIFT internal the map misses is no region member
+      for (u <- 0 until leafBase if code(u) == ShiftCode)
+        lookup(u, key(slot(tree, u))) match {
+          case Some(s) => src(u) = s
+          case None => code(u) = MIXED
         }
-        internals.result()
+      val sizes = Vector.newBuilder[(String, Long)]
+      val shiftRoots = Seq.newBuilder[Row]
+      for (u <- 0 until 2 * n - 1 if code(u) != MIXED && (u == 0 || code((u - 1) / 2) != code(u))) {
+        sizes += ((labelOf(code(u)), size(u).toLong))
+        if (code(u) == ShiftCode) shiftRoots += Row(u.toLong, src(u)._1, src(u)._2)
       }
-      (forest(FIRST), forest(FIXED), forest(SHIFT))
-    }
-    /** One entry per region ROOT: (label, region size in leaves). A node is
-      * a region root iff it is not absorbed by a coalescing parent
-      * (FIRST/FIXED: parent in the forest; SHIFT: parent's digest present in
-      * the distinct map). Region size = leaves under the root — the
-      * reference's STATS region-size histograms
-      * (tree_approach.cpp:229-256 `first/shift_region_sizes`).
-      */
-    def regionRootSizes(leaves: Array[(Long, Array[Byte], String)],
-                        firstInt: Vector[(Long, Array[Byte])],
-                        fixedInt: Vector[(Long, Array[Byte])],
-                        shiftCand: Vector[(Long, Array[Byte])],
-                        presentShift: Set[Long],
-                        nLeaves: Long): Vector[(String, Long)] = {
-      @inline def parent(n: Long): Long = (n - 1) / 2
-      val firstSet = firstInt.map(_._1).toSet
-      val fixedSet = fixedInt.map(_._1).toSet
-      def roots(leafLabel: String, internals: Vector[(Long, Array[Byte])],
-                inForest: Long => Boolean): Vector[(String, Long)] = {
-        val leafRoots = leaves.iterator.collect {
-          case (n, _, l) if l == leafLabel && (n == 0 || !inForest(parent(n))) =>
-            (leafLabel, 1L)
-        }.toVector
-        val intRoots = internals.collect {
-          case (n, _) if inForest(n) && (n == 0 || !inForest(parent(n))) =>
-            (leafLabel, subtreeLeafPositions(n, nLeaves).length.toLong)
-        }
-        leafRoots ++ intRoots
-      }
-      roots(FIRST, firstInt, firstSet.contains) ++
-        roots(FIXED, fixedInt, fixedSet.contains) ++
-        roots(SHIFT, shiftCand, presentShift.contains)
+      val regionSizes = sizes.result()
+      Resolved(leafCode.map(labelOf(_)), java.util.Arrays.copyOfRange(src, leafBase, 2 * n - 1),
+        regionSizes.groupBy(_._1).map { case (l, v) => l -> v.size.toLong },
+        regionSizes, shiftRoots.result())
     }
   }
 
@@ -686,7 +665,7 @@ object ChunkDedup {
         labels.indices.collect {
           case p if labels(p) == SHIFT => (p.toLong, srcOf(p)._1, srcOf(p)._2 - leafBase)
         }.toDF("pos", "src_chkpt", "src_pos"),
-        r.regionSizes)
+        Some(r.regionSizes))
     }
 
     /** Local-sweep path (n ≤ [[graft.Regime.LOCAL_SWEEP_MAX]]): ONE driver
@@ -733,7 +712,7 @@ object ChunkDedup {
         // in one job (a join with a local relation plans a separate AQE
         // broadcast job ahead of the join's)
         val probe = (0 until 2 * n - 1)
-          .filter(u => u < leafBase || !Chain.isFixed(leaves, prevLeaves, u - leafBase.toInt))
+          .filter(u => u < leafBase || !Chain.isFixed(tree, prevLeaves, u - leafBase.toInt))
         def digest(u: Int) = Chain.key(Chain.slot(tree, u))
         val bc = spark.sparkContext.broadcast(probe.iterator.map(digest).toSet)
         val probed = udf((d: Array[Byte]) => bc.value.contains(Chain.key(d)))
@@ -748,7 +727,7 @@ object ChunkDedup {
 
       // ---- driver resolution: the old map's hits + this checkpoint's inserts
       val inserts = scala.collection.mutable.LinkedHashMap.empty[Chain.Digest, (Int, Long)]
-      val r = Chain.resolve(cid, leaves, prevLeaves, p => oldHit(leafBase + p),
+      val r = Chain.resolve(cid, tree, prevLeaves, p => oldHit(leafBase + p),
         (u, d) => oldHit(u).orElse(inserts.get(d)), (d, src) => inserts.put(d, src))
 
       // ---- one insert --------------------------------------------------------
@@ -872,7 +851,7 @@ object ChunkDedup {
             (col("src_node") - leafBase).as("src_pos"))
           .union(shiftedLocal.select(col("pos"), col("src_chkpt"),
             (col("src_node") - leafBase).as("src_pos"))),
-        regionSizes = Nil)
+        regionSizes = None)
 
       // durable incremental checkpoint: the two file sections restart needs.
       // The shift section is REGION-COMPACTED exactly like the reference's

@@ -334,21 +334,15 @@ final class IncrementalDedup(spark: SparkSession, store: SnapshotStore,
       }
     val registry = store.readRange("content", 0, snap).select("ckey", "content_id")
 
-    // ONE unified probe-key stream, exactly like the batch pipeline's
-    // unioned key stream (NearDupPipeline): LSH band hashes (band index
-    // already folded into each 64-bit hash) + SimHash block-combination
-    // keys share the key space and the bounded probe. Keys are DERIVED from
-    // the committed content table, never stored: banding a signature is a
-    // few hashes per row, while a committed key table is ~52 rows per
-    // content — deriving keeps the store's state linear in CONTENTS and
-    // stays resume-safe because the input is itself a committed stage.
-    def keysOf(features: DataFrame): DataFrame =
-      features.select(col("ckey"),
-          explode(gf.bands(col("sig"), cfg.bands)).as("key"))
-        .unionByName(features.select(col("ckey"),
-          explode(gf.simhashKeys(col("sim64"), cfg.simhashBlocks,
-            cfg.simhashMaxHamming)).as("key")))
-
+    // ONE unified probe-key stream (MinHashLSH.probeKeyRows): LSH band
+    // hashes (band index already folded into each 64-bit hash) + SimHash
+    // block-combination keys share the key space and the bounded probe.
+    // Keys are DERIVED from the committed content table, never stored:
+    // banding a signature is a few hashes per row, while a committed key
+    // table is ~52 rows per content — deriving keeps the store's state
+    // linear in CONTENTS and stays resume-safe because the input is itself
+    // a committed stage.
+    //
     // near-dup edges between content nodes — per-snapshot sets are disjoint
     // (a pair surfaces exactly when its newer member arrives, via either
     // probe family), so only the new edges are committed. Bounded
@@ -360,13 +354,14 @@ final class IncrementalDedup(spark: SparkSession, store: SnapshotStore,
       // file sizer only: verified edge count is near-linear in this
       // snapshot's new contents (bounded probes; star caps on hot keys)
       approxRows = Some(math.max(1L, store.committedRows("content", snap)))) {
-      val newE = keysOf(newContent).select(col("key"), col("ckey").as("e"))
+      val newE = MinHashLSH.probeKeyRows(newContent, cfg, "ckey")
+        .select(col("key"), col("ckey").as("e"))
       val cand = (if (snap == 0)
           // no accumulated state yet — the batch kernel is the same scan
           // with no old side and no is_new tag
           MinHashLSH.boundedBucketPairs(newE, Seq("key"), cfg.maxBucket)
         else MinHashLSH.boundedProbePairs(newE,
-          keysOf(store.readRange("content", 0, snap - 1))
+          MinHashLSH.probeKeyRows(store.readRange("content", 0, snap - 1), cfg, "ckey")
             .select(col("key"), col("ckey").as("e")),
           Seq("key"), cfg.maxBucket))
         .filter(col("p") =!= col("q"))
@@ -431,8 +426,8 @@ final class IncrementalDedup(spark: SparkSession, store: SnapshotStore,
 
   /** Driver-side probe keys of (ckey, sig, sim64) rows as two parallel long
     * arrays (key, ckey), through the same Impl kernels the distributed
-    * keysOf evaluates (a codegen-vs-driver drift is pinned by their KAT
-    * gates). NULL features contribute zero keys on both passes.
+    * MinHashLSH.probeKeyRows evaluates (a codegen-vs-driver drift is
+    * pinned by their KAT gates). NULL features contribute zero keys on both passes.
     */
   private def probeKeys(rows: Iterator[(Long, Option[Array[Long]], Option[Long])])
       : (Array[Long], Array[Long]) = {

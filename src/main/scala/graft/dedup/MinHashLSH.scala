@@ -42,6 +42,17 @@ object MinHashLSH {
   def bandKeyRows(features: DataFrame, cfg: DedupConfig): DataFrame =
     features.select(col("doc_id"), explode(gf.bands(col("sig"), cfg.bands)).as("key"))
 
+  /** LSH band hashes and SimHash block-combination keys as ONE probe-key
+    * stream over a (…, sig, sim64) feature frame: the `cols` columns, then
+    * `key`, one row per key. Both families share the 64-bit key space and
+    * the bounded probe. One explode over the concatenated key arrays reads
+    * the frame once, where a union of two explodes scans it twice; NULL
+    * features give zero keys either way.
+    */
+  def probeKeyRows(features: DataFrame, cfg: DedupConfig, cols: String*): DataFrame =
+    features.select(cols.map(col) :+ explode(concat(gf.bands(col("sig"), cfg.bands),
+      gf.simhashKeys(col("sim64"), cfg.simhashBlocks, cfg.simhashMaxHamming))).as("key"): _*)
+
   /** Candidate pairs (p < q) from bucketed probe rows with BOUNDED executor
     * memory — shared by every bucket-pair source (LSH bands, SimHash block
     * keys, winnow fingerprints, SRP buckets, the incremental batch).

@@ -27,17 +27,21 @@ import graft.functions.gf
   *      SHIFT_DUPL. This is `groupBy(digest).agg(min_by(leaf, root))` once
   *      roots are known — the Spark shape of the final step.
   *
-  * Execution shape: steps 1 and 4's relabel are Spark projections/joins;
-  * steps 2–3 are a per-checkpoint TREE fixpoint over the fresh-duplicated
-  * digest table, which is bounded by the checkpoint's chunk count (the
-  * reference's whole approach is per-checkpoint, tree = one buffer) — run
-  * on the driver over collected (node, digest) pairs like the Chain's local
-  * fast path. At web scale the engine's unit of parallelism is documents,
+  * Execution shape: one [[Chain]] class, whose regime is decided once at
+  * construction like [[ChunkDedup.Chain]]'s. On the driver path, [[elect]]
+  * runs steps 1–4 over the checkpoint's flat Merkle tree and one label
+  * pass; on the distributed path, steps 1–2 and step 4's relabel are Spark
+  * projections, joins and a thin level sweep, and only the order-sensitive
+  * steps 3–4 ([[pruneAndElect]]) run on the driver, over the collected
+  * fresh-duplicated forest. Both are bounded by the checkpoint's chunk
+  * count (the reference's whole approach is per-checkpoint, tree = one
+  * buffer); at web scale the engine's unit of parallelism is documents,
   * not intra-checkpoint tree nodes.
   */
 object TreeLowRoot {
 
   import ChunkDedup.{FIRST, FIXED, SHIFT}
+  import ChunkDedup.Chain.{Digest, isFixed, key, labelPass, merkleTree, slot}
 
   /** One checkpoint's election result. */
   case class LowRootResult(
@@ -46,69 +50,37 @@ object TreeLowRoot {
       numShiftDupl: Long,
       numFixedDupl: Long)
 
-  private type Digest = scala.collection.immutable.ArraySeq[Byte]
-  private def key(d: Array[Byte]): Digest =
-    scala.collection.immutable.ArraySeq.unsafeWrapArray(d)
-
-  /** Serial election core over one checkpoint's leaf digests (by position).
-    * @param prev    previous checkpoint's leaf digests (None = baseline)
+  /** Driver election core over one checkpoint's leaf digests, 16-byte
+    * slots by position like the chunk chain's. The FIRST_DUPL forest and
+    * its digests come from the checkpoint's Merkle tree
+    * ([[ChunkDedup.Chain.merkleTree]]) and one [[ChunkDedup.Chain.labelPass]]:
+    * a node is in the forest iff every leaf under it is FIRST_DUPL.
+    * @param prev    previous checkpoint's leaf digests (null = baseline)
     * @param global  digests already in the cross-checkpoint first-occurrence
     *                map (probe)
     * @return (labels by position, winners: digest -> elected node)
     */
-  def elect(leaves: Array[Array[Byte]],
-            prev: Option[Array[Array[Byte]]],
-            global: Digest => Boolean): (Array[String], Map[Digest, Long]) = {
-    val n = leaves.length
+  private[dedup] def elect(leaves: Array[Byte], prev: Array[Byte],
+                           global: Digest => Boolean): (Array[String], Map[Digest, Long]) = {
+    val tree = merkleTree(leaves)
+    val n = leaves.length / 16
     val leafBase = n - 1
-    val numNodes = 2 * n - 1
-    // digest per built node (leaves + FIRST_DUPL forest internals)
-    val nodeDigest = new java.util.HashMap[Long, Digest]()
     val labels = new Array[String](n) // leaf labels by position
-    val firstDupl = new java.util.HashMap[Digest, java.util.ArrayList[Long]]()
-    def addMember(d: Digest, node: Long): Unit =
-      firstDupl.computeIfAbsent(d, _ => new java.util.ArrayList[Long]()).add(node)
-
-    val isFirstDupl = new java.util.HashSet[Long]()
-    val freshLeaves = Array.newBuilder[(Long, Digest)]
+    val fresh = new Array[Byte](n)    // 1 = FIRST_DUPL
     for (pos <- 0 until n) {
-      val node = leafBase + pos
-      val d = key(leaves(pos))
-      nodeDigest.put(node, d)
-      if (prev.exists(p => java.util.Arrays.equals(p(pos), leaves(pos)))) {
-        labels(pos) = FIXED
-      } else if (global(d)) {
-        labels(pos) = SHIFT
-      } else {
-        labels(pos) = "FIRST_DUPL"
-        addMember(d, node)
-        isFirstDupl.add(node)
-        freshLeaves += ((node.toLong, d))
-      }
+      if (isFixed(tree, prev, pos)) labels(pos) = FIXED
+      else if (global(key(slot(leaves, pos)))) labels(pos) = SHIFT
+      else fresh(pos) = 1
     }
+    val (code, _) = labelPass(fresh)
+    def members(nodes: Range) =
+      nodes.iterator.filter(code(_) == 1).map(u => (u.toLong, key(slot(tree, u)))).toArray
 
-    // 2. FIRST_DUPL forest, bottom-up in DESCENDING node order
-    // (reference_impl.hpp:329-345)
-    val internals = Array.newBuilder[(Long, Digest)]
-    var node = n - 2
-    while (node >= 0) {
-      val l = 2L * node + 1; val r = 2L * node + 2
-      if (isFirstDupl.contains(l) && isFirstDupl.contains(r)) {
-        val pd = key(graft.functions.Impl.murmur128Digest(
-          nodeDigest.get(l).toArray ++ nodeDigest.get(r).toArray))
-        nodeDigest.put(node.toLong, pd)
-        isFirstDupl.add(node.toLong)
-        internals += ((node.toLong, pd))
-      }
-      node -= 1
-    }
-
-    // 3+4. shared driver kernel (order-sensitive pruning + election)
-    val winners = pruneAndElect(freshLeaves.result(), internals.result())
-    for (pos <- 0 until n if labels(pos) == "FIRST_DUPL") {
-      val d = nodeDigest.get((leafBase + pos).toLong)
-      labels(pos) = if (winners(d) == leafBase + pos) FIRST else SHIFT
-    }
+    // 3+4. shared driver kernel (order-sensitive pruning + election) over
+    // the fresh leaves and the forest's internals
+    val winners = pruneAndElect(members(leafBase until 2 * n - 1), members(0 until leafBase))
+    for (pos <- 0 until n if fresh(pos) == 1)
+      labels(pos) = if (winners(key(slot(leaves, pos))) == leafBase + pos) FIRST else SHIFT
     (labels, winners)
   }
 
@@ -200,41 +172,73 @@ object TreeLowRoot {
     */
   def replayChain(steps: Seq[Array[Array[Byte]]]): Seq[Array[String]] = {
     val global = new java.util.HashSet[Digest]()
-    var prev: Option[Array[Array[Byte]]] = None
+    var prev: Array[Byte] = null
     steps.map { chunkBytes =>
-      val ds = chunkBytes.map(graft.functions.Impl.murmur128Digest)
+      val ds = chunkBytes.flatMap(graft.functions.Impl.murmur128Digest)
       val (labels, winners) = elect(ds, prev, global.contains)
       winners.keysIterator.foreach(global.add)
-      prev = Some(ds)
+      prev = ds
       labels
     }
   }
 
-  /** DISTRIBUTED low-root chain — the Spark shape of the reference's device
-    * kernel (tree_low_root_approach.cpp:55-214): leaf hashing, FIXED/SHIFT/
-    * fresh labeling and the FIRST_DUPL forest build (root pointers carried
-    * level-by-level through a thin sweep, geometrically shrinking frontier)
-    * all run as Spark jobs over (node, digest) rows; only the
-    * order-sensitive root-pruning fixpoint + election run on the driver,
-    * over the COLLECTED fresh-duplicated forest — O(#fresh nodes), which an
-    * incremental chain keeps ≪ checkpoint size (checkpoint 0 is the worst
-    * case). Output-identical to the serial [[Chain]] (TreeLowRootSpec
-    * asserts parity at 4096 chunks); a checkpoint with 10⁸ chunks and a few
-    * 10⁵ fresh ones never materializes the leaf set on the driver.
-    *
-    * Up to [[graft.Regime.LOW_ROOT_LOCAL_MAX]] chunks every checkpoint
-    * runs the serial [[Chain]] (identical output), decided once when the
-    * chain is built ([[graft.Regime.local]]).
+  /** Stateful low-root dedup chain (like [[ChunkDedup.Chain]], with the J3
+    * election). Its regime is decided once, when the chain is built
+    * ([[graft.Regime.local]] at [[graft.Regime.LOW_ROOT_LOCAL_MAX]]
+    * chunks), and the labels are the same either way (TreeLowRootSpec
+    * asserts parity at 4096 chunks):
+    *   - driver: one job collects the leaf digests by position, and
+    *     [[elect]] runs over the flat tree;
+    *   - distributed: the Spark shape of the reference's device kernel
+    *     (tree_low_root_approach.cpp:55-214). Leaf hashing, FIXED/SHIFT/
+    *     fresh labeling and the FIRST_DUPL forest build (a thin level sweep,
+    *     geometrically shrinking frontier) run as Spark jobs over (node,
+    *     digest) rows; only the order-sensitive root-pruning fixpoint +
+    *     election run on the driver, over the COLLECTED fresh-duplicated
+    *     forest — O(#fresh nodes), which an incremental chain keeps ≪
+    *     checkpoint size (checkpoint 0 is the worst case). A checkpoint
+    *     with 10⁸ chunks and a few 10⁵ fresh ones never materializes the
+    *     leaf set on the driver.
     */
-  final class DistChain(spark: SparkSession, numChunks: Long) {
+  final class Chain(spark: SparkSession, numChunks: Long) {
     require(numChunks >= 1)
     private val leafBase = numChunks - 1
-    private var prevLeaves: DataFrame = _ // (node, digest)
-    private var global: DataFrame = _     // (digest) — cross-checkpoint map
-    private val serialFastPath: Option[Chain] =
-      if (graft.Regime.local(spark, numChunks, graft.Regime.LOW_ROOT_LOCAL_MAX))
-        Some(new Chain(spark, numChunks))
-      else None
+    /** previous checkpoint's leaf digests, 16-byte slots by position, and
+      * the elected digests: the driver path's FIXED probe and map. */
+    private var prevDigests: Array[Byte] = _
+    private val elected = new java.util.HashSet[Digest]()
+    /** previous checkpoint's leaves (node, digest) and the elected digests
+      * (digest): the distributed path's FIXED probe and map. */
+    private var prevLeaves: DataFrame = _
+    private var global: DataFrame = _
+
+    /** The chain's one regime choice. */
+    private val driverElection =
+      graft.Regime.local(spark, numChunks, graft.Regime.LOW_ROOT_LOCAL_MAX)
+
+    def checkpoint(chunks: DataFrame): LowRootResult =
+      if (driverElection) driverCheckpoint(chunks) else distributedCheckpoint(chunks)
+
+    private def driverCheckpoint(chunks: DataFrame): LowRootResult = {
+      val n = numChunks.toInt
+      val rows = chunks
+        .select(col("pos"), gf.murmur128(col("chunk")).as("digest")).collect()
+      val leaves = new Array[Byte](16 * n)
+      ChunkDedup.Chain.leafIndex(rows.map(_.getLong(0)), n).iterator.zip(rows.iterator)
+        .foreach { case (p, r) => System.arraycopy(r.getAs[Array[Byte]](1), 0, leaves, 16 * p, 16) }
+      val (labels, winners) = elect(leaves, prevDigests, elected.contains)
+      // elected digests enter the cross-checkpoint map (reference inserts
+      // the selected leaf, reference_impl.hpp:396-398; single-member fresh
+      // digests elect themselves). Internal forest digests matter only for
+      // restart reconstruction, which ChunkDedup.Chain provides.
+      winners.keysIterator.foreach(elected.add)
+      prevDigests = leaves
+      import spark.implicits._
+      LowRootResult(labels.indices.map(p => (leafBase + p, labels(p))).toDF("node", "label"),
+        labels.count(_ == FIRST).toLong,
+        labels.count(_ == SHIFT).toLong,
+        labels.count(_ == FIXED).toLong)
+    }
 
     private def globalOrEmpty(): DataFrame =
       if (global == null) {
@@ -242,13 +246,7 @@ object TreeLowRoot {
         Seq.empty[Array[Byte]].toDF("digest")
       } else global
 
-    def checkpoint(chunks: DataFrame): LowRootResult =
-      serialFastPath match {
-        case Some(c) => c.checkpoint(chunks)
-        case None    => distCheckpoint(chunks)
-      }
-
-    private def distCheckpoint(chunks: DataFrame): LowRootResult = {
+    private def distributedCheckpoint(chunks: DataFrame): LowRootResult = {
       import spark.implicits._
       val leaves = chunks
         .select((col("pos") + leafBase).as("node"),
@@ -306,39 +304,6 @@ object TreeLowRoot {
         byLabel.getOrElse(FIRST, 0L),
         byLabel.getOrElse(SHIFT, 0L),
         byLabel.getOrElse(FIXED, 0L))
-    }
-  }
-
-  /** Stateful low-root dedup chain (chunk-size-1 style golden harness, like
-    * ChunkDedup.Chain but with the J3 election). Leaf hashing runs through
-    * the same murmur128 kernel/expressions; the per-checkpoint tree fixpoint
-    * runs on the driver (bounded by the checkpoint's chunk count).
-    */
-  final class Chain(spark: SparkSession, numChunks: Long) {
-    private var prev: Option[Array[Array[Byte]]] = None
-    private val globalMap = new java.util.HashSet[Digest]()
-
-    def checkpoint(chunks: DataFrame): LowRootResult = {
-      val rows = chunks
-        .select(col("pos"), gf.murmur128(col("chunk")).as("digest")).collect()
-      val leaves = new Array[Array[Byte]](rows.length)
-      ChunkDedup.Chain.leafIndex(rows.map(_.getLong(0)), numChunks.toInt).iterator
-        .zip(rows.iterator).foreach { case (p, r) => leaves(p) = r.getAs[Array[Byte]](1) }
-      val (labels, winners) = elect(leaves, prev, globalMap.contains)
-      // elected digests enter the cross-checkpoint map (reference inserts
-      // the selected leaf, reference_impl.hpp:396-398; single-member fresh
-      // digests elect themselves). Internal forest digests matter only for
-      // restart reconstruction, which ChunkDedup.Chain provides.
-      winners.keysIterator.foreach(globalMap.add)
-      prev = Some(leaves)
-      import spark.implicits._
-      val labelDf = labels.zipWithIndex
-        .map { case (l, pos) => (numChunks - 1 + pos, l) }.toSeq
-        .toDF("node", "label")
-      LowRootResult(labelDf,
-        labels.count(_ == FIRST).toLong,
-        labels.count(_ == SHIFT).toLong,
-        labels.count(_ == FIXED).toLong)
     }
   }
 }

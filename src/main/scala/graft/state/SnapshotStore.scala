@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Parquet-backed versioned table store — the Iceberg stand-in (no Iceberg
   * jars ship in this sandbox; the layout mirrors Iceberg's snapshot dirs +
@@ -63,53 +64,29 @@ final class SnapshotStore(spark: SparkSession, root: String) {
         if (k < spark.sparkContext.defaultParallelism) df0.repartition(k) else df0
       case None => df0
     }
-    val target = dir(table, snap)
-    val tmp = Paths.get(target.toString + ".tmp")
-    deleteRec(tmp); deleteRec(target)
-    val t0 = System.nanoTime()
-    df.write.mode("overwrite").parquet(tmp.toString)
-    // per-partition lineage of what was just written (parquet file =
-    // partition) from the parquet FOOTERS — metadata-only, no re-scan of the
-    // data pages (the previous read-back + groupBy(input_file_name) re-read
-    // every committed byte once more)
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val listing = Files.list(tmp)
-    val files =
-      try listing.iterator().asScala.filter(_.toString.endsWith(".parquet"))
-        .toArray.sortBy(_.toString)
-      finally listing.close()
-    // footer reads are independent per file — read them in parallel (a
-    // 60-file commit costs one footer's latency, not sixty sequential ones;
-    // order is restored by the files sort above)
-    val parts = java.util.Arrays.stream(files).parallel().map { p =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p.toString), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try (p.getFileName.toString, r.getRecordCount) finally r.close()
-    }.toArray(n => new Array[(String, Long)](n))
-    val rows = parts.map(_._2).sum
-    val lineage = parts.map { case (f, n) => s"""{"file": ${q(f)}, "rows": $n}""" }
-    val ms = (System.nanoTime() - t0) / 1000000
-    val metaJson = meta.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString(", ")
-    val json =
-      s"""{"table": ${q(table)}, "snapshot": $snap, "rows": $rows,
-         | "num_partitions": ${lineage.length}, "write_ms": $ms,
-         | "partitions": [${lineage.mkString(", ")}],
-         | "meta": {$metaJson}}""".stripMargin
-    // schema travels with the snapshot (Iceberg keeps it in table metadata):
-    // read() supplies it explicitly, so no committed snapshot ever pays a
-    // parquet schema-inference JOB — at toy scale those listing jobs were
-    // ~25% of the incremental path's job count (by job call site), and at
-    // scale a footer-sampling job per read is pure waste. asNullable:
-    // the writer may relax nullability; a nullable reader schema is always
-    // safe to project.
-    val nullableSchema = org.apache.spark.sql.types.StructType(
-      df.schema.fields.map(_.copy(nullable = true)))
-    Files.write(tmp.resolve("_SCHEMA.json"),
-      nullableSchema.json.getBytes(StandardCharsets.UTF_8))
-    Files.write(tmp.resolve("_MANIFEST.json"), json.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+    publish(table, snap, df.schema, meta) { tmp =>
+      df.write.mode("overwrite").parquet(tmp.toString)
+      // per-partition lineage of what was just written (parquet file =
+      // partition) from the parquet FOOTERS — metadata-only, no re-scan of
+      // the data pages (the previous read-back + groupBy(input_file_name)
+      // re-read every committed byte once more)
+      import scala.jdk.CollectionConverters._
+      val conf = spark.sparkContext.hadoopConfiguration
+      val listing = Files.list(tmp)
+      val files =
+        try listing.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+          .toArray.sortBy(_.toString)
+        finally listing.close()
+      // footer reads are independent per file — read them in parallel (a
+      // 60-file commit costs one footer's latency, not sixty sequential
+      // ones; order is restored by the files sort above)
+      java.util.Arrays.stream(files).parallel().map { p =>
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(p.toString), conf)
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try (p.getFileName.toString, r.getRecordCount) finally r.close()
+      }.toArray(n => new Array[(String, Long)](n)).toSeq
+    }
   }
 
   /** Driver-direct commit of a TINY frame whose rows already live on the
@@ -121,29 +98,52 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     * small-dispatch sites only; every row set is bounded by construction.
     */
   def commitLocal(table: String, snap: Int,
-                  schema: org.apache.spark.sql.types.StructType,
+                  schema: StructType,
                   rows: Seq[org.apache.spark.sql.Row],
                   meta: Map[String, String] = Map.empty): Unit = {
     if (isCommitted(table, snap)) return
+    publish(table, snap, schema, meta) { tmp =>
+      Files.createDirectories(tmp)
+      val fname = "part-00000-local.parquet"
+      val n = org.apache.spark.sql.graftx.LocalParquet.write(spark,
+        tmp.resolve(fname).toString, nullable(schema), rows)
+      Seq(fname -> n)
+    }
+  }
+
+  private def nullable(schema: StructType) =
+    StructType(schema.fields.map(_.copy(nullable = true)))
+
+  /** The crash-safe commit protocol both writers share: `write` fills the
+    * snapshot's tmp dir and returns its (file, rows) lineage; the schema
+    * and the manifest are written INSIDE the tmp dir, which is then
+    * atomically renamed into place.
+    *
+    * The schema travels with the snapshot (Iceberg keeps it in table
+    * metadata): read() supplies it explicitly, so no committed snapshot
+    * ever pays a parquet schema-inference JOB — at toy scale those listing
+    * jobs were ~25% of the incremental path's job count (by job call site),
+    * and at scale a footer-sampling job per read is pure waste. asNullable:
+    * the writer may relax nullability; a nullable reader schema is always
+    * safe to project.
+    */
+  private def publish(table: String, snap: Int, schema: StructType,
+                      meta: Map[String, String])(write: Path => Seq[(String, Long)]): Unit = {
     val target = dir(table, snap)
     val tmp = Paths.get(target.toString + ".tmp")
     deleteRec(tmp); deleteRec(target)
-    Files.createDirectories(tmp)
     val t0 = System.nanoTime()
-    val nullableSchema = org.apache.spark.sql.types.StructType(
-      schema.fields.map(_.copy(nullable = true)))
-    val fname = "part-00000-local.parquet"
-    val n = org.apache.spark.sql.graftx.LocalParquet.write(
-      spark, tmp.resolve(fname).toString, nullableSchema, rows)
+    val parts = write(tmp)
     val ms = (System.nanoTime() - t0) / 1000000
+    val lineage = parts.map { case (f, n) => s"""{"file": ${q(f)}, "rows": $n}""" }
     val metaJson = meta.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString(", ")
     val json =
-      s"""{"table": ${q(table)}, "snapshot": $snap, "rows": $n,
-         | "num_partitions": 1, "write_ms": $ms,
-         | "partitions": [{"file": ${q(fname)}, "rows": $n}],
+      s"""{"table": ${q(table)}, "snapshot": $snap, "rows": ${parts.map(_._2).sum},
+         | "num_partitions": ${lineage.length}, "write_ms": $ms,
+         | "partitions": [${lineage.mkString(", ")}],
          | "meta": {$metaJson}}""".stripMargin
     Files.write(tmp.resolve("_SCHEMA.json"),
-      nullableSchema.json.getBytes(StandardCharsets.UTF_8))
+      nullable(schema).json.getBytes(StandardCharsets.UTF_8))
     Files.write(tmp.resolve("_MANIFEST.json"), json.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
   }
@@ -156,7 +156,7 @@ final class SnapshotStore(spark: SparkSession, root: String) {
       if (Files.exists(schemaFile)) // committed schema ⇒ zero-job read
         spark.read.schema(org.apache.spark.sql.types.DataType.fromJson(
           new String(Files.readAllBytes(schemaFile), StandardCharsets.UTF_8))
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
+          .asInstanceOf[StructType])
       else spark.read // pre-schema store layout: infer as before
     reader.parquet(dir(table, snap).toString)
   }

@@ -162,8 +162,10 @@ object StreamNearDup {
       .select(col("doc_id"), col("ckey"),
         col("f.sig").as("sig"), col("f.sim64").as("sim64"))
     // unified probe-key stream — band hashes and simhash block-combination
-    // keys share the 64-bit key space, exactly like the batch union
-    val keyRows = unifiedKeys(feats, cfg)
+    // keys share the 64-bit key space, exactly like the batch union; one
+    // explode, so the stream source (which has no cache) is scanned and
+    // tokenized once per arriving doc
+    val keyRows = MinHashLSH.probeKeyRows(feats, cfg, "ckey", "doc_id")
       .select(col("key"), col("ckey"), col("doc_id"))
       .as[(Long, Long, Long)]
 
@@ -177,21 +179,6 @@ object StreamNearDup {
       }
       .toDF("p", "q")
   }
-
-  /** Band-hash ∪ simhash-block probe rows over the streaming feature frame
-    * (mirrors NearDupPipeline's keyRows union — one shuffle feeds both
-    * candidate families). r7: ONE explode over the concatenated key arrays —
-    * the unionByName form planned two scans of the streaming source, so the
-    * featureStruct tokenization ran twice per arriving doc (the batch
-    * pipeline's union reads a persisted feature table, where a double scan
-    * is a cache hit; a stream source has no such cache). Row multiset is
-    * identical: bands ++ simhashKeys per doc, exploded.
-    */
-  private def unifiedKeys(feats: DataFrame, cfg: DedupConfig): DataFrame =
-    feats.select(col("ckey"), col("doc_id"),
-      explode(concat(gf.bands(col("sig"), cfg.bands),
-        gf.simhashKeys(col("sim64"), cfg.simhashBlocks,
-          cfg.simhashMaxHamming))).as("key"))
 
   /** One bucket, one micro-batch: register unseen ckeys (rep = min doc_id in
     * this batch), emit new×old + new×new candidate pairs. Registered ckeys

@@ -105,7 +105,7 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
       }
       // region-size histogram (r5, reference STATS): its per-label totals
       // equal the region counts
-      val byLabel = base.regionSizes.groupBy(_._1).view.mapValues(_.size.toLong).toMap
+      val byLabel = base.regionSizes.get.groupBy(_._1).view.mapValues(_.size.toLong).toMap
       assert(byLabel.getOrElse(ChunkDedup.FIRST, 0L) == base.numFirstOcur,
         s"case $id FIRST root count vs histogram")
       assert(byLabel.getOrElse(ChunkDedup.SHIFT, 0L) == base.numShiftDupl,
@@ -187,9 +187,9 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
     for ((name, checkpoint) <- Seq[(String, org.apache.spark.sql.DataFrame => Any)](
         "localsweep" -> new ChunkDedup.Chain(spark, 8L).checkpoint _,
         "distributed" -> withRegime("distributed")(new ChunkDedup.Chain(spark, 8L)).checkpoint _,
-        "lowroot serial" -> new TreeLowRoot.Chain(spark, 8L).checkpoint _,
+        "lowroot driver" -> new TreeLowRoot.Chain(spark, 8L).checkpoint _,
         "lowroot distributed" ->
-          withRegime("distributed")(new TreeLowRoot.DistChain(spark, 8L)).checkpoint _)) {
+          withRegime("distributed")(new TreeLowRoot.Chain(spark, 8L)).checkpoint _)) {
       val e = intercept[IllegalArgumentException](checkpoint(chunks))
       assert(e.getMessage.contains("chunk positions are not a permutation of 0..7"),
         s"$name: ${e.getMessage}")
@@ -407,26 +407,33 @@ class ChunkDedupLocalSweepSpec extends AnyFunSuite with SparkTestBase {
   private def restarted(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().sortBy(_.getLong(0)).map(_.getString(1)).toSeq
 
-  test("full Merkle tree: every forest internal localForests builds is a slot of it, on any labeling") {
+  test("flat label pass: a node has label L iff every leaf under it does, with their count; Merkle slots hash their children") {
     val rnd = new scala.util.Random(5)
-    val labels = Seq(ChunkDedup.FIRST, ChunkDedup.FIXED, ChunkDedup.SHIFT)
     for (n <- Seq(1, 2, 5, 8, 11, 96, 1000)) {
-      // few distinct chunks ⇒ deep uniform-label subtrees
+      // few distinct chunks ⇒ repeated digests, as in a deduplicated tree
       val leafDigests = Array.fill(n)(graft.functions.Impl.murmur128Digest(
         Array[Byte](rnd.nextInt(3).toByte)))
       val tree = ChunkDedup.Chain.merkleTree(leafDigests.flatten)
       assert(tree.length == 16 * (2 * n - 1))
       for (p <- 0 until n)
         assert(ChunkDedup.Chain.slot(tree, n - 1 + p).toSeq == leafDigests(p).toSeq)
+      for (u <- 0 until n - 1)
+        assert(ChunkDedup.Chain.slot(tree, u).toSeq == graft.functions.Impl.murmur128Digest(
+          ChunkDedup.Chain.slot(tree, 2 * u + 1) ++ ChunkDedup.Chain.slot(tree, 2 * u + 2)).toSeq,
+          s"n=$n node $u")
       for (uniform <- Seq(false, true)) {
-        // random labels, then one label everywhere: the whole tree is a forest
-        val leaves = Array.tabulate(n)(p => ((n - 1 + p).toLong, leafDigests(p),
-          if (uniform) ChunkDedup.FIRST else labels(rnd.nextInt(3))))
-        val (fi, fx, sh) = ChunkDedup.Chain.localForests(leaves)
-        for ((u, d) <- fi ++ fx ++ sh)
-          assert(ChunkDedup.Chain.slot(tree, u.toInt).toSeq == d.toSeq, s"n=$n node $u")
-        if (uniform)
-          assert(fi.map(_._1).sorted == (0L until n - 1L), s"n=$n full forest")
+        // random codes over three labels, then one code everywhere: the
+        // whole tree is one forest
+        val codes = Array.fill(n)((if (uniform) 1 else rnd.nextInt(3)).toByte)
+        val (code, size) = ChunkDedup.Chain.labelPass(codes)
+        assert(code.length == 2 * n - 1 && size.length == 2 * n - 1)
+        for (u <- 0 until 2 * n - 1) {
+          val under = ChunkDedup.subtreeLeafPositions(u, n).map(p => codes(p.toInt)).distinct
+          val expect = if (under.length == 1) under.head else ChunkDedup.Chain.MIXED
+          assert(code(u) == expect, s"n=$n uniform=$uniform node $u")
+          assert(size(u) == ChunkDedup.subtreeLeafPositions(u, n).length, s"n=$n node $u size")
+        }
+        if (uniform) assert(code.forall(_ == 1), s"n=$n full forest")
       }
     }
   }

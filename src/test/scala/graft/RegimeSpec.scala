@@ -53,9 +53,10 @@ class RegimeSpec extends AnyFunSuite with SparkTestBase {
     val (restartLocal, restartDist) = (restartJobs("auto"), restartJobs("distributed"))
     assert(restartDist > restartLocal, s"restart: $restartDist jobs vs $restartLocal")
 
-    // TreeLowRoot.DistChain: the thin sweep runs more jobs than the serial core
+    // TreeLowRoot.Chain: the thin sweep runs more jobs than the driver
+    // election
     def lowRootJobs(regime: String) = {
-      val c = withRegime(regime)(new TreeLowRoot.DistChain(spark, 8L))
+      val c = withRegime(regime)(new TreeLowRoot.Chain(spark, 8L))
       steps.map(s => withJobs(c.checkpoint(chunks(s)))._2).sum
     }
     val (lowRootLocal, lowRootDist) = (lowRootJobs("auto"), lowRootJobs("distributed"))

@@ -5,6 +5,7 @@ con = duckdb.connect()
 for t in ['documents','embeddings','lineitem','orders','customer','events','part','supplier','nation','region']:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
 oracle = json.load(open(f'{out}/oracle_sql.json'))
+ok = 0
 for name, sql in sorted(oracle.items()):
     try:
         res = con.execute(sql).df()
@@ -26,5 +27,9 @@ for name, sql in sorted(oracle.items()):
             print(r[idx].head(3)); print(g[idx].head(3))
         else:
             print(f"{name}: OK rows={len(r)}")
+            ok += 1
     except Exception as e:
         print(f"{name}: ERROR {e}")
+# one status for the whole gate: every oracle must be OK
+print(f"{ok}/{len(oracle)} OK")
+sys.exit(0 if ok == len(oracle) else 1)
