@@ -50,8 +50,11 @@ object Regime {
     * two key/element long arrays, plus the LongMap bucket buffers (~55 MB
     * of unboxed Long ArrayBuffers) and the emitted candidate tuples
     * (bounded by candidates, not keys) — ~200 MB transient peak on the 8 g
-    * driver heap. Beyond it the snapshot runs the distributed pass (a
-    * 100-TB chain crosses this in snapshot 0).
+    * driver heap. The instance also keeps its content rows resident between
+    * snapshots, for its whole life: ≈ 70 MB of signatures plus ≈ 130 MB of
+    * shingle sets (~500 ints each) at the bound. Beyond it the snapshot
+    * runs the distributed pass and the resident state is dropped (a 100-TB
+    * chain crosses this in snapshot 0).
     */
   final val LOCAL_PROBE_MAX_CONTENTS: Long = 1L << 16
 
@@ -68,7 +71,8 @@ object Regime {
   /** Page-row bound of the incremental driver pass: the bounded
     * `pages_keyed` collect (url, doc_id, ckey), the previous snapshot's
     * (url, ckey) diff and the assignments lookup — 2¹⁷ rows of each
-    * ≈ 30 MB transient. Dispatch compares `expectedPages`, else the previous
+    * ≈ 30 MB transient; the instance keeps the last snapshot's url → ckeys
+    * resident for the next diff. Dispatch compares `expectedPages`, else the previous
     * snapshot's row count × 6/5, against it; with neither (snapshot 0, no
     * hint) the collect itself is the gate.
     */
@@ -91,7 +95,8 @@ object Regime {
     * (`ConnectedComponents.assignAll`: one collect, ~ms); beyond it the
     * distributed star rounds run. 2M edges × 16 B ≈ 32 MB — comfortably
     * driver-safe; at web scale the distributed path engages. The
-    * incremental driver pass stops at the same edge count.
+    * incremental driver pass stops at the same edge count, which also
+    * bounds the edges it keeps resident (≈ 64 MB of (a, b) pairs).
     */
   final val SMALL_GRAPH_MAX: Long = 2L * 1000 * 1000
 

@@ -30,10 +30,9 @@ object ConnectedComponents {
       .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
       .distinct()
       .localCheckpoint(true)
-    var sig = checksum(e)
-    val nEdges = sig._1
+    val nEdges = e.count()
 
-    var converged = e.isEmpty
+    var converged = nEdges == 0 || isStarForest(e)
     var iter = 0
     while (!converged && iter < maxIter) {
       // large-star: every neighbor v > u links to m(u) = min(N(u) ∪ {u})
@@ -45,17 +44,13 @@ object ConnectedComponents {
         .select(col("v").as("u"), col("m").as("v")) // u > v by construction
       // small-star: every (smaller) neighbor of u links to min(N(u)); u too
       val mins2 = large.groupBy("u").agg(min("v").as("m"))
-      val small = large.join(mins2, "u")
+      e = large.join(mins2, "u")
         .filter(col("v") =!= col("m"))
         .select(col("v").as("u"), col("m").as("v"))
         .union(mins2.select(col("u"), col("m").as("v")))
         .distinct()
         .localCheckpoint(true)
-
-      val newSig = checksum(small) // one aggregate per round; prior sig cached
-      converged = newSig == sig
-      sig = newSig
-      e = small
+      converged = isStarForest(e) // one aggregate job per round
       iter += 1
     }
     if (!converged) throw new IllegalStateException(
@@ -66,17 +61,86 @@ object ConnectedComponents {
     members.union(roots).distinct()
   }
 
-  private def checksum(e: DataFrame): (Long, Long) = {
-    val r = e.agg(
-      count(lit(1)),
-      coalesce(sum(hash(col("u"), col("v")).cast("long")), lit(0L))).collect()(0)
-    (r.getLong(0), r.getLong(1))
+  /** The exact stop condition: `e` (oriented u > v) is a star forest — no
+    * node is both a member (u) and a root (v), and every member has exactly
+    * one root. Rounds preserve connectivity, so each star is then a whole
+    * component, and its root, smaller than every member, is the component's
+    * min id. One aggregate over the node roles, no hash of the edge set: a
+    * checksum that merely repeats could stop early on a collision.
+    */
+  private[graft] def isStarForest(e: DataFrame): Boolean =
+    e.select(col("u").as("n"), lit(1).as("member"))
+      .union(e.select(col("v").as("n"), lit(0).as("member")))
+      .groupBy("n").agg(sum("member").as("n_roots"), min("member").as("only_member"))
+      .filter(col("n_roots") > 1 || (col("n_roots") === 1 && col("only_member") === 0))
+      .isEmpty
+
+  /** Union-find over long node ids that keeps each component's min label
+    * (a node's own id, or a content_id it carries): path halving, union by
+    * size, parent/size/label in parallel primitive arrays behind one
+    * LongMap index. [[add]] and [[union]] only grow it, so a caller may keep
+    * one instance and fold each batch of new nodes and edges into it.
+    */
+  final class UnionFind {
+    private val index = scala.collection.mutable.LongMap.empty[Int]
+    private var parent = new Array[Int](64)
+    private var size = new Array[Int](64)
+    private var label = new Array[Long](64)
+    private var n = 0
+
+    def contains(id: Long): Boolean = index.contains(id)
+
+    /** Add `id` with label `l`, or lower an existing node's label to `l`. */
+    def add(id: Long, l: Long): Unit = {
+      val i = node(id, l)
+      val r = find(i)
+      if (l < label(r)) label(r) = l
+    }
+
+    /** Join the components of `a` and `b`; a node not yet added joins with
+      * no label of its own (Long.MaxValue).
+      */
+    def union(a: Long, b: Long): Unit = {
+      var ra = find(node(a, Long.MaxValue))
+      var rb = find(node(b, Long.MaxValue))
+      if (ra != rb) {
+        if (size(ra) < size(rb)) { val t = ra; ra = rb; rb = t }
+        parent(rb) = ra
+        size(ra) += size(rb)
+        if (label(rb) < label(ra)) label(ra) = label(rb)
+      }
+    }
+
+    /** The min label over `id`'s component. */
+    def labelOf(id: Long): Long = label(find(index(id)))
+
+    def ids: Iterator[Long] = index.keysIterator
+
+    private def node(id: Long, l: Long): Int = index.getOrElseUpdate(id, {
+      if (n == parent.length) {
+        parent = java.util.Arrays.copyOf(parent, 2 * n)
+        size = java.util.Arrays.copyOf(size, 2 * n)
+        label = java.util.Arrays.copyOf(label, 2 * n)
+      }
+      parent(n) = n; size(n) = 1; label(n) = l
+      n += 1
+      n - 1
+    })
+
+    private def find(i0: Int): Int = {
+      var i = i0
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
   }
 
-  /** Driver union-find over a collected edge list (min-id representative). */
-  def localComponents(edges: Array[(Long, Long)]): Map[Long, Long] = {
-    val ids = edges.iterator.flatMap(e => Iterator(e._1, e._2)).toSeq.distinct
-    SerialOracle.clusters(ids, edges)
+  /** Driver union-find over a collected edge list: (id, min id of its
+    * component) for every endpoint.
+    */
+  def localComponents(edges: Array[(Long, Long)]): Array[(Long, Long)] = {
+    val uf = new UnionFind
+    for ((a, b) <- edges) { uf.add(a, a); uf.add(b, b); uf.union(a, b) }
+    uf.ids.map(id => (id, uf.labelOf(id))).toArray
   }
 
   /** Cluster assignment for every node: (id, cluster) with cluster = min id

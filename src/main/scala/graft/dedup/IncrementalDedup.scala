@@ -70,11 +70,77 @@ object IncrementalDedup {
     else { Await.result(job, Duration.Inf); Some(parts.flatten) }
   }
 
-  /** accumulated content as the driver pass collects it: (ckey,
-    * content_id, sig, sim64) — no shingle sets */
-  private type Acc = (Long, Long, Option[Array[Long]], Option[Long])
   /** one content row: (ckey, content_id, sh, sig, sim64) */
   private type Content = (Long, Long, Option[Array[Int]], Option[Array[Long]], Option[Long])
+
+  /** a content row as committed, followed by `extra` fields */
+  private def contentRow(c: Content, extra: Any*): Row =
+    Row.fromSeq(Seq(c._1, c._2, c._3.orNull, c._4.orNull, c._5.map(Long.box).orNull) ++ extra)
+
+  /** A url → ckeys multimap of one snapshot's pages_keyed rows (a url
+    * repeated in the snapshot keeps every ckey); NULL urls are left out.
+    */
+  private def urlCkeys(rows: Iterator[(String, java.lang.Long)])
+      : scala.collection.Map[String, List[java.lang.Long]] = {
+    val m = scala.collection.mutable.HashMap.empty[String, List[java.lang.Long]]
+    for ((url, ck) <- rows if url != null) m(url) = ck :: m.getOrElse(url, Nil)
+    m
+  }
+
+  /** What the driver passes of snapshots 0..`last` computed, held by the
+    * instance for the next snapshot — the reference keeps `first_ocur_d` and
+    * its previous tree resident across checkpoints the same way
+    * (dedup_files.cpp:65-105). `prev` is snapshot `last`'s url → ckeys,
+    * `content` and `edges` hold every committed row by snapshot id (`sh`
+    * included, so the verify and a compaction need no read), `byCkey`
+    * indexes the content rows, and `uf` is the union-find over every edge
+    * with each component's min content_id. `folded` is the commit_id of
+    * each committed snapshot the state was built from.
+    */
+  private final class Resident(
+      val last: Int,
+      val prev: scala.collection.Map[String, List[java.lang.Long]],
+      val content: scala.collection.mutable.ArrayBuffer[Array[Content]],
+      val byCkey: scala.collection.mutable.LongMap[Content],
+      val edges: scala.collection.mutable.ArrayBuffer[Array[(Long, Long)]],
+      val uf: ConnectedComponents.UnionFind,
+      val folded: Seq[(String, Int, Option[String])]) {
+
+    def nEdges: Long = edges.iterator.map(_.length.toLong).sum
+
+    /** Whether the store still holds every commit this state folded — zero
+      * jobs, one manifest read per folded snapshot.
+      */
+    def matches(store: SnapshotStore): Boolean =
+      folded.forall { case (t, s, id) => store.commitId(t, s) == id }
+
+    /** Rows of `content__compacted` / `edges__compacted` through `last`. */
+    def contentRows: Iterator[Row] = content.iterator.zipWithIndex.flatMap { case (cs, s) =>
+      cs.iterator.map(contentRow(_, s))
+    }
+    def edgeRows: Iterator[Row] = edges.iterator.zipWithIndex.flatMap { case (es, s) =>
+      es.iterator.map(e => Row(e._1, e._2, s))
+    }
+  }
+
+  private object Resident {
+    /** A state over `content` and `edges`, with their index and union-find. */
+    def apply(last: Int, prev: scala.collection.Map[String, List[java.lang.Long]],
+              content: scala.collection.mutable.ArrayBuffer[Array[Content]],
+              edges: scala.collection.mutable.ArrayBuffer[Array[(Long, Long)]],
+              folded: Seq[(String, Int, Option[String])]): Resident = {
+      val byCkey = scala.collection.mutable.LongMap.empty[Content]
+      val uf = new ConnectedComponents.UnionFind
+      for (cs <- content; c <- cs) { byCkey(c._1) = c; uf.add(c._1, c._2) }
+      for (es <- edges; (a, b) <- es) uf.union(a, b)
+      new Resident(last, prev, content, byCkey, edges, uf, folded)
+    }
+
+    /** The commit_ids of what a state through `last` is built from. */
+    def foldedIds(store: SnapshotStore, last: Int): Seq[(String, Int, Option[String])] =
+      (("pages_keyed", last) +: (0 to last).flatMap(s => Seq(("content", s), ("edges", s))))
+        .map { case (t, s) => (t, s, store.commitId(t, s)) }
+  }
 
   private[graft] val edgesSchema = StructType(Seq(
     StructField("a", LongType, nullable = false),
@@ -90,27 +156,6 @@ object IncrementalDedup {
   private[graft] val assignSchema = StructType(Seq(
     StructField("doc_id", LongType, nullable = false),
     StructField("cluster", LongType, nullable = false)))
-
-  /** Driver relabel kernel for the small regime: union-find components over
-    * the edge list, then min content_id per component — the pure form of
-    * the distributed comps⋈registry→groupBy(min)→join-back relabel
-    * (parity spec-gated in IncrementalDedupSpec against the forced
-    * distributed star rounds). Returns (ckey, cluster) for every registry
-    * row; singleton ckeys (no edges) label with their own content_id.
-    */
-  private[graft] def localClusterLabels(reg: Array[(Long, Long)],
-                                        edges: Array[(Long, Long)]): Array[(Long, Long)] = {
-    val comp = ConnectedComponents.localComponents(edges)
-    val minCid = new java.util.HashMap[Long, Long]()
-    for ((ck, cid) <- reg) {
-      val root = comp.getOrElse(ck, ck)
-      val cur = minCid.getOrDefault(root, Long.MaxValue)
-      if (cid < cur) minCid.put(root, cid)
-    }
-    reg.map { case (ck, _) =>
-      (ck, minCid.get(comp.getOrElse(ck, ck)).longValue)
-    }
-  }
 }
 
 final class IncrementalDedup(spark: SparkSession, store: SnapshotStore,
@@ -122,6 +167,19 @@ final class IncrementalDedup(spark: SparkSession, store: SnapshotStore,
                              compactEvery: Int = 4) {
   import IncrementalDedup._
   import graft.Regime.{LOCAL_ASSIGN_MAX_ROWS, LOCAL_PROBE_MAX_CONTENTS, LOCAL_VERIFY_MAX_PAIRS}
+
+  /** What this instance's driver passes folded through the last snapshot
+    * (see [[IncrementalDedup.Resident]]): None until a driver pass completes,
+    * and again once a snapshot runs or resumes on the distributed pass or a
+    * driver pass stops at a bound.
+    */
+  private var resident: Option[Resident] = None
+
+  /** The resident state through `last`, if the store still holds every
+    * commit it folded — zero jobs.
+    */
+  private def held(last: Int): Option[Resident] =
+    resident.filter(r => r.last == last && r.matches(store))
 
   /** Process snapshot `snap` of the pages table; returns (doc_id, cluster)
     * for this snapshot's documents. Idempotent.
@@ -147,25 +205,35 @@ final class IncrementalDedup(spark: SparkSession, store: SnapshotStore,
         (0 until snap).map(store.committedRows("content", _)).sum + keyedApprox.getOrElse(0L),
         LOCAL_PROBE_MAX_CONTENTS) &&
       keyedApprox.forall(_ <= LOCAL_ASSIGN_MAX_ROWS)
-    if (!(small && driverPass(snap, pages, t0)))
+    if (!(small && driverPass(snap, pages, t0))) {
+      resident = None
       distributedPass(snap, pages, keyedApprox, t0)
+    }
 
     // Iceberg-style maintenance: periodically rewrite each append-only
     // table's 0..snap prefix into one compacted snapshot, so a depth-100
     // chain's readRange unions ≤ compactEvery scans instead of 100
-    // (SnapshotStore.compactUpTo is idempotent — resume-safe like a stage)
-    if (compactEvery > 0 && (snap + 1) % compactEvery == 0)
-      Seq("content", "edges").foreach(t => store.compactUpTo(t, snap))
+    // (SnapshotStore.compactUpTo is idempotent — resume-safe like a stage).
+    // A resident state through `snap` holds the prefix's rows already: they
+    // commit from the driver, with no job.
+    if (compactEvery > 0 && (snap + 1) % compactEvery == 0) {
+      val rows = held(snap)
+      store.compactUpTo("content", snap, rows.map(_.contentRows))
+      store.compactUpTo("edges", snap, rows.map(_.edgeRows))
+    }
     store.read("assignments", snap)
   }
 
-  /** The small regime as ONE driver pass: each stage is one bounded collect,
-    * a driver computation and a zero-job [[SnapshotStore.commitLocal]]. Its
-    * jobs: the pages_keyed collect, the previous snapshot's (url, ckey), the
-    * accumulated (ckey, content_id, sig, sim64), the fresh contents'
-    * features, the OLD candidates' shingle sets and the prior edges. Each
-    * collect is sized before it runs, by a manifest row count or a
-    * driver-known key count, or bounded by [[IncrementalDedup.collectAtMost]].
+  /** The small regime as ONE driver pass: each stage is a driver
+    * computation and a zero-job [[SnapshotStore.commitLocal]]. On an
+    * instance whose previous snapshot was a driver pass, still held by the
+    * store ([[held]]), its jobs are the pages_keyed collect and the fresh
+    * contents' features: the previous snapshot's url → ckeys, the
+    * accumulated contents with their shingle sets, and the union-find over
+    * the prior edges are resident. Otherwise [[load]] first collects those
+    * from the store, three more jobs. Each collect is sized before it runs,
+    * by a manifest row count or a driver-known key count, or bounded by
+    * [[IncrementalDedup.collectAtMost]].
     *
     * Returns false when a bound is crossed: more pages or contents than the
     * estimate said, more than LOCAL_VERIFY_MAX_PAIRS candidates, or more
@@ -179,6 +247,10 @@ final class IncrementalDedup(spark: SparkSession, store: SnapshotStore,
     if (store.isCommitted("metrics", snap)) return true
     if (Seq("pages_keyed", "content", "edges", "assignments").exists(store.isCommitted(_, snap)))
       return false
+    // the state is folded in place below and put back only once metrics
+    // commit, so a pass that stops midway leaves none behind
+    val kept = held(snap - 1)
+    resident = None
 
     val keyed: Array[Row] = collectAtMost(keyedOf(pages), LOCAL_ASSIGN_MAX_ROWS.toInt) match {
       case Some(rows) => rows
@@ -189,40 +261,28 @@ final class IncrementalDedup(spark: SparkSession, store: SnapshotStore,
     if (keyed.exists(r => r.isNullAt(1) || r.isNullAt(2))) return false
     store.commitLocal("pages_keyed", snap, keyedOf(pages).schema, keyed.toIndexedSeq)
 
+    val st = kept.orElse(load(snap)) match {
+      case Some(r) => r
+      case None => return false
+    }
+
     // F1/F2 fixed fast path: the distributed pass's left join on url +
     // "previous ckey NULL or different" filter, multiplicity included (a url
     // repeated in the previous snapshot counts once per differing row)
-    if (snap > 0 && store.committedRows("pages_keyed", snap - 1) > LOCAL_ASSIGN_MAX_ROWS)
-      return false
-    val prev = scala.collection.mutable.HashMap.empty[String, List[java.lang.Long]]
-    if (snap > 0)
-      for (r <- store.read("pages_keyed", snap - 1).select("url", "ckey").collect()
-           if !r.isNullAt(0))
-        prev(r.getString(0)) =
-          r.get(1).asInstanceOf[java.lang.Long] :: prev.getOrElse(r.getString(0), Nil)
     var nChanged = 0L
     val changed = keyed.filter { r =>
-      val ps = if (r.isNullAt(0)) Nil else prev.getOrElse(r.getString(0), Nil)
+      val ps = if (r.isNullAt(0)) Nil else st.prev.getOrElse(r.getString(0), Nil)
       val n = if (ps.isEmpty) 1 else ps.count(p => p == null || p.longValue != r.getLong(2))
       nChanged += n
       n > 0
     }
 
-    // ONE collect of the accumulated contents serves the registration
-    // anti-join, the probe's old side and the relabel registry; its size is
-    // the manifest sum the dispatch checked
-    val acc =
-      if (snap == 0) Array.empty[Acc]
-      else store.readRange("content", 0, snap - 1)
-        .select("ckey", "content_id", "sig", "sim64").as[Acc].collect()
-
     // registration (J1 insert-if-absent): a changed ckey not yet registered
     // elects its min doc_id among this snapshot's changed docs
-    val registered = acc.iterator.map(_._1).toSet
     val elected = scala.collection.mutable.LongMap.empty[Long] // ckey → content_id
-    for (r <- changed; ck = r.getLong(2) if !registered(ck))
+    for (r <- changed; ck = r.getLong(2) if !st.byCkey.contains(ck))
       elected(ck) = math.min(r.getLong(1), elected.getOrElse(ck, Long.MaxValue))
-    if (acc.length + elected.size > LOCAL_PROBE_MAX_CONTENTS) return false
+    if (st.byCkey.size + elected.size > LOCAL_PROBE_MAX_CONTENTS) return false
 
     // (ckey, content_id, sh, sig, sim64) of this snapshot's contents: ONE
     // job — `pages` filtered by the elected doc ids, features for those rows
@@ -234,48 +294,70 @@ final class IncrementalDedup(spark: SparkSession, store: SnapshotStore,
       case Some(cs) => cs
       case None => return false
     }
-    store.commitLocal("content", snap, content(pages).schema, fresh.toIndexedSeq.map(c =>
-      Row(c._1, c._2, c._3.orNull, c._4.orNull, c._5.map(Long.box).orNull)))
+    store.commitLocal("content", snap, content(pages).schema, fresh.iterator.map(contentRow(_)))
 
     val (nks, nes) = probeKeys(fresh.iterator.map(f => (f._1, f._4, f._5)))
-    val (oks, oes) = probeKeys(acc.iterator.map(a => (a._1, a._3, a._4)))
+    val (oks, oes) = probeKeys(st.content.iterator.flatten.map(a => (a._1, a._4, a._5)))
     val cands = MinHashLSH.normalizedDistinctPairsLocal(
       MinHashLSH.boundedProbePairsLocalP(nks, nes, oks, oes, cfg.maxBucket))
     if (cands.length > LOCAL_VERIFY_MAX_PAIRS) return false
-    // exact-Jaccard verify: the new side's shingle sets are on the driver
-    // already; one pruned collect fetches the OLD candidates'
+    // exact-Jaccard verify: both sides' shingle sets are on the driver
+    st.content += fresh
+    for (f <- fresh) st.byCkey(f._1) = f
     val sh = scala.collection.mutable.LongMap.empty[Array[Int]]
-    for (f <- fresh; s <- f._3) sh(f._1) = s
-    val isNew = fresh.iterator.map(_._1).toSet
-    val oldCk = cands.iterator.flatMap(p => Iterator(p._1, p._2))
-      .filterNot(isNew).toArray.distinct
-    collectIn(oldCk)(in => store.readRange("content", 0, snap - 1)
-        .filter(in(col("ckey"))).select("ckey", "sh").as[(Long, Option[Array[Int]])]) match {
-      case Some(rs) => for ((ck, s) <- rs; a <- s) sh(ck) = a
-      case None => return false
-    }
+    for ((a, b) <- cands; ck <- Iterator(a, b); s <- st.byCkey(ck)._3) sh(ck) = s
     val newEdges = MinHashLSH.verifiedPairsLocal(sh, cands, cfg.tau)
-    store.commitLocal("edges", snap, edgesSchema, newEdges.toIndexedSeq.map(p => Row(p._1, p._2)))
+    store.commitLocal("edges", snap, edgesSchema, newEdges.iterator.map(p => Row(p._1, p._2)))
 
-    // content-level clustering (union-find + min-content_id relabel) and the
-    // documents' lookup, all on the driver
-    val nEdges = (0 until snap).map(store.committedRows("edges", _)).sum + newEdges.length
-    if (nEdges > graft.Regime.SMALL_GRAPH_MAX) return false
-    val prior =
-      if (snap == 0) Array.empty[(Long, Long)]
-      else store.readRange("edges", 0, snap - 1).select("a", "b").as[(Long, Long)].collect()
-    val labels = scala.collection.mutable.LongMap.empty[Long]
-    for ((ck, cl) <- localClusterLabels(
-           acc.map(a => (a._1, a._2)) ++ fresh.map(f => (f._1, f._2)), prior ++ newEdges))
-      labels(ck) = cl
-    // a ckey missing from the labels would be a broken registration
+    // content-level clustering: the new contents and edges fold into the
+    // resident union-find, whose labels are min content_ids; the documents'
+    // lookup runs on the driver too
+    if (st.nEdges + newEdges.length > graft.Regime.SMALL_GRAPH_MAX) return false
+    st.edges += newEdges
+    for (f <- fresh) st.uf.add(f._1, f._2)
+    for ((a, b) <- newEdges) st.uf.union(a, b)
+    // a ckey missing from the union-find would be a broken registration
     // invariant: fail loudly rather than drop the document
-    store.commitLocal("assignments", snap, assignSchema, keyed.toIndexedSeq.map { r =>
+    store.commitLocal("assignments", snap, assignSchema, keyed.iterator.map { r =>
       val (d, ck) = (r.getLong(1), r.getLong(2))
-      Row(d, labels.getOrElse(ck, sys.error(s"ckey $ck of doc $d has no cluster label")))
+      if (!st.uf.contains(ck)) sys.error(s"ckey $ck of doc $d has no cluster label")
+      Row(d, st.uf.labelOf(ck))
     })
     commitMetrics(snap, nChanged, t0)
+    resident = Some(new Resident(snap,
+      urlCkeys(keyed.iterator.map(r => (r.getString(0), Long.box(r.getLong(2))))),
+      st.content, st.byCkey, st.edges, st.uf, Resident.foldedIds(store, snap)))
     true
+  }
+
+  /** The resident state through snapshot `snap` − 1, collected from the
+    * store: the previous (url, ckey), the accumulated content rows with
+    * their shingle sets, and the prior edges — one job each; none at
+    * snapshot 0. None when the previous snapshot has more pages than
+    * LOCAL_ASSIGN_MAX_ROWS or the chain more edges than SMALL_GRAPH_MAX
+    * (manifest counts, checked before any collect); the accumulated
+    * contents were bounded by the dispatch.
+    */
+  private def load(snap: Int): Option[Resident] = {
+    import spark.implicits._
+    val content = scala.collection.mutable.ArrayBuffer.fill(snap)(Array.empty[Content])
+    val edges = scala.collection.mutable.ArrayBuffer.fill(snap)(Array.empty[(Long, Long)])
+    if (snap == 0) return Some(Resident(-1, Map.empty, content, edges, Nil))
+    val folded = Resident.foldedIds(store, snap - 1)
+    if (store.committedRows("pages_keyed", snap - 1) > LOCAL_ASSIGN_MAX_ROWS ||
+        (0 until snap).map(store.committedRows("edges", _)).sum > graft.Regime.SMALL_GRAPH_MAX)
+      return None
+    val prev = urlCkeys(store.read("pages_keyed", snap - 1).select("url", "ckey").collect()
+      .iterator.map(r => (r.getString(0), r.get(1).asInstanceOf[java.lang.Long])))
+    for ((s, rows) <- store.readRange("content", 0, snap - 1)
+           .select("snapshot_id", "ckey", "content_id", "sh", "sig", "sim64")
+           .as[(Int, Long, Long, Option[Array[Int]], Option[Array[Long]], Option[Long])]
+           .collect().groupBy(_._1))
+      content(s) = rows.map(r => (r._2, r._3, r._4, r._5, r._6))
+    for ((s, rows) <- store.readRange("edges", 0, snap - 1).select("snapshot_id", "a", "b")
+           .as[(Int, Long, Long)].collect().groupBy(_._1))
+      edges(s) = rows.map(r => (r._2, r._3))
+    Some(Resident(snap - 1, prev, content, edges, folded))
   }
 
   /** The same five stages as Spark jobs, for snapshots past the driver

@@ -19,6 +19,11 @@ import org.apache.spark.sql.types.StructType
   * resumable: rerunning a job skips every committed (table, snapshot) and
   * recomputes only what is missing — the reference's checkpoint-chain restart
   * contract (tree_approach.cpp:943) generalized to stages.
+  *
+  * Every manifest also carries a random `commit_id`, fresh at each commit:
+  * a reader that folded a snapshot into memory can tell, with zero jobs,
+  * whether the store still holds that very commit. Row counts cannot — a
+  * recommit of different rows may keep every count.
   */
 final class SnapshotStore(spark: SparkSession, root: String) {
 
@@ -99,7 +104,7 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     */
   def commitLocal(table: String, snap: Int,
                   schema: StructType,
-                  rows: Seq[org.apache.spark.sql.Row],
+                  rows: IterableOnce[org.apache.spark.sql.Row],
                   meta: Map[String, String] = Map.empty): Unit = {
     if (isCommitted(table, snap)) return
     publish(table, snap, schema, meta) { tmp =>
@@ -138,7 +143,9 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     val lineage = parts.map { case (f, n) => s"""{"file": ${q(f)}, "rows": $n}""" }
     val metaJson = meta.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString(", ")
     val json =
-      s"""{"table": ${q(table)}, "snapshot": $snap, "rows": ${parts.map(_._2).sum},
+      s"""{"table": ${q(table)}, "snapshot": $snap,
+         | "commit_id": ${q(java.util.UUID.randomUUID().toString)},
+         | "rows": ${parts.map(_._2).sum},
          | "num_partitions": ${lineage.length}, "write_ms": $ms,
          | "partitions": [${lineage.mkString(", ")}],
          | "meta": {$metaJson}}""".stripMargin
@@ -151,14 +158,19 @@ final class SnapshotStore(spark: SparkSession, root: String) {
   def read(table: String, snap: Int): DataFrame = {
     require(isCommitted(table, snap), s"$table/snapshot=$snap not committed")
     nReads.incrementAndGet()
-    val schemaFile = dir(table, snap).resolve("_SCHEMA.json")
-    val reader =
-      if (Files.exists(schemaFile)) // committed schema ⇒ zero-job read
-        spark.read.schema(org.apache.spark.sql.types.DataType.fromJson(
-          new String(Files.readAllBytes(schemaFile), StandardCharsets.UTF_8))
-          .asInstanceOf[StructType])
-      else spark.read // pre-schema store layout: infer as before
+    val reader = committedSchema(table, snap) match {
+      case Some(s) => spark.read.schema(s) // committed schema ⇒ zero-job read
+      case None => spark.read // pre-schema store layout: infer as before
+    }
     reader.parquet(dir(table, snap).toString)
+  }
+
+  private def committedSchema(table: String, snap: Int): Option[StructType] = {
+    val schemaFile = dir(table, snap).resolve("_SCHEMA.json")
+    if (!Files.exists(schemaFile)) None
+    else Some(org.apache.spark.sql.types.DataType.fromJson(
+      new String(Files.readAllBytes(schemaFile), StandardCharsets.UTF_8))
+      .asInstanceOf[StructType])
   }
 
   private def compactName(table: String): String = table + "__compacted"
@@ -174,14 +186,28 @@ final class SnapshotStore(spark: SparkSession, root: String) {
     * from `coalesce` — no exchange: [[commit]]'s `repartition` would
     * re-shuffle the whole prefix (signature and shingle arrays included) at
     * every compaction.
+    *
+    * `rows`: a caller that already holds the prefix on the driver passes its
+    * rows (each a row of `table` followed by its `snapshot_id`), and they
+    * commit through [[commitLocal]] with zero jobs — the same schema, row
+    * set and `compacted_through` meta as the Spark rewrite.
     */
-  def compactUpTo(table: String, upTo: Int): Unit =
+  def compactUpTo(table: String, upTo: Int,
+                  rows: Option[Iterator[org.apache.spark.sql.Row]] = None): Unit =
     if (!isCommitted(compactName(table), upTo)) {
-      // the rewrite's size is exactly the sum of its inputs' manifests
-      val rows = (0 to upTo).filter(isCommitted(table, _))
-        .map(committedRows(table, _)).sum
-      commit(compactName(table), upTo, readRange(table, 0, upTo).coalesce(fileCount(rows)),
-        Map("compacted_through" -> upTo.toString))
+      val meta = Map("compacted_through" -> upTo.toString)
+      rows match {
+        case Some(rs) =>
+          val schema = committedSchema(table, upTo)
+            .getOrElse(sys.error(s"$table/snapshot=$upTo has no committed schema"))
+            .add("snapshot_id", org.apache.spark.sql.types.IntegerType, nullable = false)
+          commitLocal(compactName(table), upTo, schema, rs, meta)
+        case None =>
+          // the rewrite's size is exactly the sum of its inputs' manifests
+          val n = (0 to upTo).filter(isCommitted(table, _))
+            .map(committedRows(table, _)).sum
+          commit(compactName(table), upTo, readRange(table, 0, upTo).coalesce(fileCount(n)), meta)
+      }
     }
 
   /** Read committed snapshots snapLo..snapHi of a table as one DataFrame with
@@ -220,6 +246,14 @@ final class SnapshotStore(spark: SparkSession, root: String) {
 
   def manifestJson(table: String, snap: Int): String =
     new String(Files.readAllBytes(manifest(table, snap)), StandardCharsets.UTF_8)
+
+  /** The `commit_id` of a committed snapshot's manifest (None for a store
+    * written before manifests carried one) — zero jobs.
+    */
+  def commitId(table: String, snap: Int): Option[String] =
+    if (!isCommitted(table, snap)) None
+    else """"commit_id":\s*"([^"]+)"""".r.findFirstMatchIn(manifestJson(table, snap))
+      .map(_.group(1))
 
   /** Row count of a committed snapshot, from its manifest — zero jobs. */
   def committedRows(table: String, snap: Int): Long =

@@ -32,7 +32,7 @@ class AggAndSessionSpec extends AnyFunSuite with SparkTestBase {
 
   test("sessionize: gap semantics, ordering, microsecond precision") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess").toString
+    val dir = tempDir("graft_sess").toString
     val base = 1700000000000000L // µs
     val min = 60000000L
     val rows = Seq(
@@ -63,7 +63,7 @@ class AggAndSessionSpec extends AnyFunSuite with SparkTestBase {
   test("sessionizeSorted == sessionize on a randomized multi-user stream " +
     "(users split across partitions, duplicate timestamps, empty partitions)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sess_rand").toString
+    val dir = tempDir("graft_sess_rand").toString
     val rnd = new scala.util.Random(11)
     val base = 1700000000000000L
     val rows = (0 until 5000).map { _ =>

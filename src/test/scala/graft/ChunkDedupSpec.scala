@@ -24,7 +24,7 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
   /** A chain committing to a store in a fresh temporary directory. */
   private def storeChain(n: Long): (ChunkDedup.Chain, graft.state.SnapshotStore) = {
     val store = new graft.state.SnapshotStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_chunk_chain").toString)
+      tempDir("graft_chunk_chain").toString)
     (new ChunkDedup.Chain(spark, n, store = Some(store)), store)
   }
 
@@ -118,7 +118,7 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
     // in-memory chain state (restart_chkpt_files.cpp:171-195) — here: build
     // a chain against a SnapshotStore, drop the chain, reconstruct every
     // checkpoint via restartFromStore (reads only committed parquet)
-    val root = java.nio.file.Files.createTempDirectory("graft_chunk_store").toString
+    val root = tempDir("graft_chunk_store").toString
     val store = new graft.state.SnapshotStore(spark, root)
     val rnd = new scala.util.Random(7)
     val n = 32
@@ -156,7 +156,7 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
     // pruning (list_approach.cpp:98-110) — never touching 4..1. The store's
     // read counter proves it: 5 reads (init + first/shift of 5 and of 0)
     // instead of 13 with an unpruned walk.
-    val root = java.nio.file.Files.createTempDirectory("graft_chunk_prune").toString
+    val root = tempDir("graft_chunk_prune").toString
     val store = new graft.state.SnapshotStore(spark, root)
     val n = 32
     def rep(s: String) = (s * (n / s.length + 1)).take(n)
@@ -201,7 +201,7 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
     val n = 32
     val steps = Seq("ABCDEFGH" * 4, "ABCDXYZW" * 4)
     def build(): String = {
-      val root = Files.createTempDirectory("graft_corrupt").toString
+      val root = tempDir("graft_corrupt").toString
       val chain = new ChunkDedup.Chain(spark, n.toLong,
         store = Some(new graft.state.SnapshotStore(spark, root)))
       steps.foreach(s => chain.checkpoint(ChunkDedup.chunkify(spark, s, 1)))
@@ -312,7 +312,7 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
     }
     def buildStore(regime: String): (graft.state.SnapshotStore, Seq[ChunkDedup.ChkptResult]) =
       withRegime(regime) {
-        val root = java.nio.file.Files.createTempDirectory("graft_regions").toString
+        val root = tempDir("graft_regions").toString
         val store = new graft.state.SnapshotStore(spark, root)
         val chain = new ChunkDedup.Chain(spark, n.toLong, store = Some(store))
         val rs = steps.map(s => chain.checkpoint(ChunkDedup.chunkify(spark, s, 1)))
@@ -446,7 +446,7 @@ class ChunkDedupLocalSweepSpec extends AnyFunSuite with SparkTestBase {
   for (n <- Seq(64, 4608))
     test(s"local-sweep checkpoint job bound: <= 4 jobs at every checkpoint ($n chunks, store-backed)") {
       val steps = chain(n, 3, 2, 17)
-      val root = java.nio.file.Files.createTempDirectory("graft_jobbound").toString
+      val root = tempDir("graft_jobbound").toString
       val store = new graft.state.SnapshotStore(spark, root)
       val c = new ChunkDedup.Chain(spark, n.toLong, store = Some(store))
       val (rs, jobs) = steps.map(s => withJobs(c.checkpoint(frame(s)))).unzip
@@ -462,7 +462,7 @@ class ChunkDedupLocalSweepSpec extends AnyFunSuite with SparkTestBase {
   private lazy val sweepStore: (graft.state.SnapshotStore, Seq[Seq[String]]) = {
     val n = 4608
     val steps = chain(n, 3, 2, 17)
-    val root = java.nio.file.Files.createTempDirectory("graft_sweepstore").toString
+    val root = tempDir("graft_sweepstore").toString
     val store = new graft.state.SnapshotStore(spark, root)
     val c = new ChunkDedup.Chain(spark, n.toLong, store = Some(store))
     steps.foreach(s => c.checkpoint(frame(s)))
@@ -486,7 +486,7 @@ class ChunkDedupLocalSweepSpec extends AnyFunSuite with SparkTestBase {
   test("restart parity: the driver walk and the Spark loop return identical rows") {
     val n = 48 // ragged, 6 checkpoints, checkpoint 5 shifts onto checkpoint 0
     val steps48 = chain(n, 6, 2, 41)
-    val root = java.nio.file.Files.createTempDirectory("graft_restart_parity").toString
+    val root = tempDir("graft_restart_parity").toString
     val store48 = new graft.state.SnapshotStore(spark, root)
     val c = new ChunkDedup.Chain(spark, n.toLong, store = Some(store48))
     val rs = steps48.map(s => c.checkpoint(frame(s)))
@@ -506,7 +506,7 @@ class ChunkDedupLocalSweepSpec extends AnyFunSuite with SparkTestBase {
   // on both, and restarts every checkpoint of each store.
   private def storeParity(n: Int, steps: Seq[Seq[String]]): Unit = {
     def build(regime: String) = withRegime(regime) {
-      val root = java.nio.file.Files.createTempDirectory(s"graft_parity_$regime").toString
+      val root = tempDir(s"graft_parity_$regime").toString
       val store = new graft.state.SnapshotStore(spark, root)
       val c = new ChunkDedup.Chain(spark, n.toLong, store = Some(store))
       (regime, store, steps.map(s => c.checkpoint(frame(s))))

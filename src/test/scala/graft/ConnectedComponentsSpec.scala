@@ -77,6 +77,15 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestBase {
     assert(got == (1L to 20L).map(_ -> 1L).toMap)
   }
 
+  test("star rounds stop on the exact star-forest property") {
+    import spark.implicits._
+    def star(e: (Long, Long)*): Boolean = ConnectedComponents.isStarForest(e.toDF("u", "v"))
+    assert(!star((3L, 2L), (2L, 1L)), "the path 3→2→1 is no star: 2 is a member and a root")
+    assert(star((2L, 1L), (3L, 1L), (5L, 4L), (6L, 4L)), "two stars rooted at 1 and 4")
+    assert(!star((3L, 1L), (3L, 2L)), "3 is a member of two stars")
+    assert(star())
+  }
+
   test("empty edge set → all singletons") {
     val got = runCC(Seq.empty, Seq(5L, 6L))
     assert(got == Map(5L -> 5L, 6L -> 6L))

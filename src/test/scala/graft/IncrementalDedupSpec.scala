@@ -25,8 +25,27 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
         .otherwise(col("text")))
   }
 
+  /** snapshot 1's pages with every 53rd page revised once more */
+  private def secondWave(n: Int, m: Int): DataFrame =
+    snapshotPages(1, n, m).withColumn("text", when(col("doc_id") % 53 === 0,
+      concat(col("text"), lit(" second wave qq7 qq8"))).otherwise(col("text")))
+
+  private val tables = Seq("pages_keyed", "content", "edges", "assignments", "metrics")
+
   private def rmrf(p: Path): Unit = if (Files.exists(p))
     Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
+
+  private def copyTree(from: Path, to: Path): Unit = Files.walk(from).forEach { p =>
+    val q = to.resolve(from.relativize(p).toString)
+    if (Files.isDirectory(p)) Files.createDirectories(q) else Files.copy(p, q)
+  }
+
+  /** a committed snapshot's rows as sorted strings; metrics without its
+    * wall-clock column
+    */
+  private def stageRows(s: SnapshotStore, t: String, snap: Int): Seq[String] =
+    if (t == "metrics") tableRows(s, t, snap).map(_.split('|').dropRight(1).mkString("|"))
+    else tableRows(s, t, snap)
 
   /** a committed snapshot's rows as sorted strings (arrays spelled out) */
   private def tableRows(s: SnapshotStore, t: String, snap: Int): Seq[String] =
@@ -52,7 +71,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("incremental dedup across snapshots matches accumulated-content oracle; resume is a no-op") {
-    val root = Files.createTempDirectory("graft_inc").toString
+    val root = tempDir("graft_inc").toString
     val store = new SnapshotStore(spark, root)
     val inc = new IncrementalDedup(spark, store, cfg)
 
@@ -145,7 +164,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
             concat(col("text"), lit(" second wave qq7 qq8")))
             .otherwise(col("text")))
     }
-    val root = Files.createTempDirectory("graft_inc3").toString
+    val root = tempDir("graft_inc3").toString
     val inc = new IncrementalDedup(spark, new SnapshotStore(spark, root), cfg)
     val s1 = snapshotPages(1, n, m).persist()
     val s2 = snap2Pages.persist()
@@ -186,7 +205,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
       "deduplication engines and their checkpoint restart protocols ") * 4
     val tB0 = ("url b original body before reverting to the shared " +
       "content with its own distinct vocabulary of terms ") * 4
-    val root = Files.createTempDirectory("graft_inc_represent").toString
+    val root = tempDir("graft_inc_represent").toString
     val store = new SnapshotStore(spark, root)
     val inc = new IncrementalDedup(spark, store, cfg)
 
@@ -232,7 +251,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
     val all = PagesGen.pages(spark, 360, seed = 42L, partitions = 4)
       .select("url", "doc_id", "text").persist()
     val store = new SnapshotStore(spark,
-      Files.createTempDirectory("graft_inc_parity").toString)
+      tempDir("graft_inc_parity").toString)
     val inc = new IncrementalDedup(spark, store, cfg)
     inc.processSnapshot(0, all.filter(col("doc_id") < 120))
     inc.processSnapshot(1, all.filter(col("doc_id") < 240))
@@ -263,7 +282,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
           concat(col("text"), lit(s" rev${s / 2}"))).otherwise(col("text")))
     }
     def run(compactEvery: Int): (Map[Long, Long], String) = {
-      val root = Files.createTempDirectory(s"graft_inc_deep$compactEvery").toString
+      val root = tempDir(s"graft_inc_deep$compactEvery").toString
       val inc = new IncrementalDedup(spark, new SnapshotStore(spark, root), cfg,
         compactEvery)
       var last: Map[Long, Long] = Map.empty
@@ -272,25 +291,37 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
           .map(r => (r.getLong(0), r.getLong(1))).toMap
       (last, root)
     }
-    val (aOff, _) = run(0)
-    val (aOn, root) = run(3)
-    assert(aOn == aOff, "compaction changed cluster assignments")
-    val store = new SnapshotStore(spark, root)
-    assert(store.isCommitted("content__compacted", 5))
-    assert(store.isCommitted("edges__compacted", 5))
-    // compacted prefix holds exactly the union it replaced
-    val viaCompact = store.readRange("content", 0, 5)
-      .select("ckey", "content_id", "snapshot_id").collect().toSet // reads compacted(5)
-    val direct = (0 to 5).map(s => store.read("content", s)
-        .withColumn("snapshot_id", lit(s)))
-      .reduce(_ unionByName _)
-      .select("ckey", "content_id", "snapshot_id").collect().toSet
-    assert(viaCompact == direct)
-    // fan-in: a fresh handle reading the full 8-snapshot prefix touches the
-    // compacted snapshot + the 2-snapshot tail = 3 scans, not 8
-    val fresh = new SnapshotStore(spark, root)
-    fresh.readRange("content", 0, 7).count()
-    assert(fresh.readCount == 3, s"fan-in not bounded: ${fresh.readCount} reads")
+    val compacted = for (regime <- Seq("auto", "distributed")) yield withRegime(regime) {
+      val (aOff, _) = run(0)
+      val (aOn, root) = run(3)
+      assert(aOn == aOff, "compaction changed cluster assignments")
+      val store = new SnapshotStore(spark, root)
+      assert(store.isCommitted("content__compacted", 5))
+      assert(store.isCommitted("edges__compacted", 5))
+      // compacted prefix holds exactly the union it replaced
+      val viaCompact = store.readRange("content", 0, 5)
+        .select("ckey", "content_id", "snapshot_id").collect().toSet // reads compacted(5)
+      val direct = (0 to 5).map(s => store.read("content", s)
+          .withColumn("snapshot_id", lit(s)))
+        .reduce(_ unionByName _)
+        .select("ckey", "content_id", "snapshot_id").collect().toSet
+      assert(viaCompact == direct)
+      // fan-in: a fresh handle reading the full 8-snapshot prefix touches the
+      // compacted snapshot + the 2-snapshot tail = 3 scans, not 8
+      val fresh = new SnapshotStore(spark, root)
+      fresh.readRange("content", 0, 7).count()
+      assert(fresh.readCount == 3, s"fan-in not bounded: ${fresh.readCount} reads")
+      (root, store)
+    }
+    // the auto chain's compactions commit from the resident rows, the
+    // distributed chain's through Spark: same schema, same rows
+    val Seq((localRoot, local), (sparkRoot, viaSpark)) = compacted
+    for (t <- Seq("content__compacted", "edges__compacted"); s <- Seq(2, 5)) {
+      assert(parquetFiles(localRoot, t, s) == Seq("part-00000-local.parquet"))
+      assert(parquetFiles(sparkRoot, t, s) != Seq("part-00000-local.parquet"))
+      assert(local.read(t, s).schema == viaSpark.read(t, s).schema, s"$t/$s schema differs")
+      assert(tableRows(local, t, s) == tableRows(viaSpark, t, s), s"$t/$s rows differ")
+    }
   }
 
   test("incremental probe path: hot-key flood stays bounded and coalesces into one cluster") {
@@ -318,7 +349,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
     val snap0 = normal.unionByName(floodDf(10000, 11500))
     val snap1 = snap0.unionByName(floodDf(11500, 13000))
 
-    val root = Files.createTempDirectory("graft_inc_flood").toString
+    val root = tempDir("graft_inc_flood").toString
     val store = new SnapshotStore(spark, root)
     val inc = new IncrementalDedup(spark, store, cfg)
     inc.processSnapshot(0, snap0)
@@ -365,7 +396,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
       Row(1, 10L, "alpha", Seq(1L, 2L, 3L), 1.5, true),
       Row(2, 20L, null, Seq.empty[Long], -0.25, false),
       Row(3, 30L, "γüñ", null, 0.0, true))
-    val root = Files.createTempDirectory("graft_commit_local").toString
+    val root = tempDir("graft_commit_local").toString
     val store = new SnapshotStore(spark, root)
     store.commitLocal("t_local", 0, schema, rows)
     store.commit("t_spark", 0,
@@ -427,7 +458,7 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
     // assignments and metrics must be row-identical
     val (n, m) = (250, 50)
     def run(regime: String): SnapshotStore = withRegime(regime) {
-      val root = Files.createTempDirectory(s"graft_inc_twin_$regime").toString
+      val root = tempDir(s"graft_inc_twin_$regime").toString
       val store = new SnapshotStore(spark, root)
       val inc = new IncrementalDedup(spark, store, cfg)
       inc.processSnapshot(0, snapshotPages(0, n, m))
@@ -455,23 +486,76 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
     // the weather-independent cost of a toy-scale snapshot is its JOB count
     // (scheduling latency dominates; wall seconds on this host carry 1.5-4x
     // ambient noise). On a 3-snapshot chain, each small snapshot is one
-    // driver pass: the pages_keyed
-    // collect and the fresh contents' features at snapshot 0; plus the
-    // previous (url, ckey), the accumulated contents, the old candidates'
-    // shingle sets and the prior edges later. Ceilings sit just above that
-    // floor so any regression (a new eager action, a lost dispatch, a
-    // reintroduced schema-inference job) fails loudly.
+    // driver pass: the pages_keyed collect and the fresh contents' features;
+    // the live instance holds everything else resident. A fresh instance
+    // first reloads the previous (url, ckey), the accumulated contents and
+    // the prior edges. Ceilings sit just above that floor so any regression
+    // (a new eager action, a lost dispatch, a reintroduced schema-inference
+    // job) fails loudly.
     val (n, m) = (250, 50)
-    val root = Files.createTempDirectory("graft_inc_jobs").toString
+    val root = tempDir("graft_inc_jobs").toString
     val inc = new IncrementalDedup(spark, new SnapshotStore(spark, root), cfg)
     // snapshot 2 revises every 53rd page of snapshot 1 once more
-    val pages = Seq(snapshotPages(0, n, m), snapshotPages(1, n, m),
-      snapshotPages(1, n, m).withColumn("text", when(col("doc_id") % 53 === 0,
-        concat(col("text"), lit(" second wave qq7 qq8"))).otherwise(col("text"))))
+    val pages = Seq(snapshotPages(0, n, m), snapshotPages(1, n, m), secondWave(n, m))
     pages.foreach(_.count()) // materialize inputs outside the counted window
     val jobs = pages.indices.map(s => withJobs(inc.processSnapshot(s, pages(s)))._2)
     assert(jobs(0) <= 3, s"snapshot 0 took ${jobs(0)} jobs (floor is 2)")
-    for (s <- 1 to 2) assert(jobs(s) <= 7, s"snapshot $s took ${jobs(s)} jobs (floor is 6)")
+    for (s <- 1 to 2) assert(jobs(s) <= 3, s"snapshot $s took ${jobs(s)} jobs (floor is 2)")
+    val reloadRoot = tempDir("graft_inc_jobs_reload").toString
+    val first = new IncrementalDedup(spark, new SnapshotStore(spark, reloadRoot), cfg)
+    for (s <- 0 to 1) first.processSnapshot(s, pages(s))
+    val reload = withJobs(new IncrementalDedup(spark, new SnapshotStore(spark, reloadRoot), cfg)
+      .processSnapshot(2, pages(2)))._2
+    assert(reload <= 7, s"a fresh instance's snapshot 2 took $reload jobs (floor is 5)")
+  }
+
+  test("a live instance reloads its resident state when another instance recommits a folded snapshot") {
+    // instance A folds snapshots 0-1; snapshot 1's stages are then dropped
+    // and instance B recommits snapshot 1 from pages with the same urls,
+    // page count and new-content count but other text. Row counts cannot
+    // tell A that its state is stale; the manifests' commit_ids do.
+    val (n, m) = (250, 50)
+    val other1 = snapshotPages(0, n, m).unionByName(snapshotPages(1, n, m).filter(col("doc_id") >= n))
+      .withColumn("text", when(col("doc_id") % 37 === 0 && col("doc_id") < n,
+        concat(col("text"), lit(" another revision yy1 yy2 yy3"))).otherwise(col("text")))
+    val root = tempDir("graft_inc_recommit")
+    val store = new SnapshotStore(spark, root.toString)
+    val a = new IncrementalDedup(spark, store, cfg)
+    for (s <- 0 to 1) a.processSnapshot(s, snapshotPages(s, n, m))
+    val counts = Seq("pages_keyed", "content").map(store.committedRows(_, 1))
+    tables.foreach(t => rmrf(root.resolve(t).resolve("snapshot=1")))
+    new IncrementalDedup(spark, new SnapshotStore(spark, root.toString), cfg)
+      .processSnapshot(1, other1)
+    assert(Seq("pages_keyed", "content").map(store.committedRows(_, 1)) == counts,
+      "the recommit must keep the page and content counts")
+    // snapshot 2 re-presents A's snapshot 1: against the store every
+    // revised url changed again; against A's stale state nothing did
+    val twin = tempDir("graft_inc_recommit_twin")
+    copyTree(root, twin)
+    val twinStore = new SnapshotStore(spark, twin.toString)
+    a.processSnapshot(2, snapshotPages(1, n, m))
+    new IncrementalDedup(spark, twinStore, cfg).processSnapshot(2, snapshotPages(1, n, m))
+    for (t <- tables)
+      assert(stageRows(store, t, 2) == stageRows(twinStore, t, 2), s"$t/2 differs")
+    assert(store.committedRows("content", 2) > 0, "snapshot 2 must register contents")
+  }
+
+  test("a distributed snapshot between driver passes: auto, distributed, auto matches all-auto") {
+    val (n, m) = (250, 50)
+    val pages = Seq(snapshotPages(0, n, m), snapshotPages(1, n, m), secondWave(n, m))
+    def run(regimes: Seq[String]): (String, SnapshotStore) = {
+      val root = tempDir("graft_inc_mixed").toString
+      val store = new SnapshotStore(spark, root)
+      val inc = new IncrementalDedup(spark, store, cfg)
+      for ((r, s) <- regimes.zipWithIndex) withRegime(r)(inc.processSnapshot(s, pages(s)))
+      (root, store)
+    }
+    val (mixedRoot, mixed) = run(Seq("auto", "distributed", "auto"))
+    val (_, auto) = run(Seq("auto", "auto", "auto"))
+    assert(parquetFiles(mixedRoot, "edges", 1) != Seq("part-00000-local.parquet"),
+      "snapshot 1 must run on the distributed pass")
+    for (t <- tables; s <- 0 to 2)
+      assert(stageRows(mixed, t, s) == stageRows(auto, t, s), s"$t/$s differs")
   }
 
   test("partial resume of a killed snapshot recommits identical tables, on both dispatches") {
@@ -480,18 +564,13 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
     // table equals the uninterrupted run's — on the driver pass and on the
     // forced-distributed pass alike
     val (n, m) = (250, 50)
-    def copyTree(from: Path, to: Path): Unit = Files.walk(from).forEach { p =>
-      val q = to.resolve(from.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(q) else Files.copy(p, q)
-    }
-    val tables = Seq("pages_keyed", "content", "edges", "assignments", "metrics")
     for (regime <- Seq("auto", "distributed")) withRegime(regime) {
-      val ref = Files.createTempDirectory(s"graft_inc_resume_ref_$regime")
+      val ref = tempDir(s"graft_inc_resume_ref_$regime")
       val inc = new IncrementalDedup(spark, new SnapshotStore(spark, ref.toString), cfg)
       for (s <- 0 to 1) inc.processSnapshot(s, snapshotPages(s, n, m))
       for (killed <- Seq(Seq("edges", "assignments", "metrics"),
                          Seq("content", "edges", "assignments", "metrics"))) {
-        val root = Files.createTempDirectory(s"graft_inc_resume_$regime")
+        val root = tempDir(s"graft_inc_resume_$regime")
         copyTree(ref, root)
         killed.foreach(t => rmrf(root.resolve(t).resolve("snapshot=1")))
         val store = new SnapshotStore(spark, root.toString)
@@ -564,8 +643,8 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("driver cluster-relabel kernel == forced-distributed relabel (random graph)") {
-    // the small-regime contentClusters dispatch (union-find + min-content_id
-    // relabel on the driver) must agree with the distributed star-rounds +
+    // the small regime's resident union-find (min content_id per component,
+    // folded the way the driver pass folds it) must agree with the distributed star-rounds +
     // join/groupBy relabel on an adversarial fixture: multi-node components,
     // singletons, duplicate content_ids across components
     import spark.implicits._
@@ -574,7 +653,10 @@ class IncrementalDedupSpec extends AnyFunSuite with SparkTestBase {
     val reg = Array.tabulate(n)(i => (1000L + i, rnd.nextInt(120).toLong))
     val edges = Array.fill(300)(
       (1000L + rnd.nextInt(n), 1000L + rnd.nextInt(n))).filter(e => e._1 != e._2)
-    val local = IncrementalDedup.localClusterLabels(reg, edges).toMap
+    val uf = new ConnectedComponents.UnionFind
+    for ((ck, cid) <- reg) uf.add(ck, cid)
+    for ((a, b) <- edges) uf.union(a, b)
+    val local = reg.map { case (ck, _) => ck -> uf.labelOf(ck) }.toMap
     val regDf = reg.toSeq.toDF("ckey", "content_id")
     val eDf = edges.toSeq.toDF("a", "b")
     val comps = withRegime("distributed")( // force the distributed star rounds

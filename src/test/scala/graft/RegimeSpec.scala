@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class RegimeSpec extends AnyFunSuite with SparkTestBase {
 
-  private def tmp(prefix: String): String = Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String): String = tempDir(prefix).toString
 
   private def chunks(s: String) = ChunkDedup.chunkify(spark, s, 1)
 

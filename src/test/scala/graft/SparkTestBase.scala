@@ -1,6 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for suites (one per JVM; sbt forks a single test JVM). */
@@ -8,8 +11,29 @@ object SparkTestBase {
   lazy val spark: SparkSession = GraftSession.get("local[4]", shufflePartitions = 4)
 }
 
-trait SparkTestBase { self: AnyFunSuite =>
+trait SparkTestBase extends BeforeAndAfterAll { self: AnyFunSuite =>
   lazy val spark: SparkSession = SparkTestBase.spark
+
+  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[Path]
+
+  /** A fresh directory under the JVM's temp dir, deleted with everything in
+    * it when the suite ends.
+    */
+  protected def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.synchronized(tempDirs += d)
+    d
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.synchronized {
+      for (d <- tempDirs if Files.exists(d)) {
+        val walk = Files.walk(d)
+        try walk.sorted(java.util.Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
+        finally walk.close()
+      }
+      tempDirs.clear()
+    } finally super.afterAll()
 
   /** `f`'s result and the Spark jobs it ran, listener-counted. */
   protected def withJobs[T](f: => T): (T, Int) = {

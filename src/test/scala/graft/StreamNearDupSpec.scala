@@ -22,7 +22,7 @@ class StreamNearDupSpec extends AnyFunSuite with SparkTestBase {
 
   test("drained stream pairs == batch pipeline pairs (single batch)") {
     val docs = corpus(600).cache()
-    val dir = java.nio.file.Files.createTempDirectory("graft_snd").toString
+    val dir = tempDir("graft_snd").toString
     docs.write.mode("overwrite").parquet(s"$dir/pages")
 
     val streamed = pairSet(graft.streaming.StreamNearDup.pairs(
@@ -40,7 +40,7 @@ class StreamNearDupSpec extends AnyFunSuite with SparkTestBase {
 
   test("multi-batch arrival (1 file per trigger, doc_id-ordered) emits the same set") {
     val docs = corpus(600).cache()
-    val dir = java.nio.file.Files.createTempDirectory("graft_snd_mb").toString
+    val dir = tempDir("graft_snd_mb").toString
     // three doc_id-range files = three crawl snapshots; mod-times spaced so
     // the file source (ordered by timestamp) replays them as three
     // micro-batches in snapshot order — the frozen-rep invariant's regime
@@ -53,7 +53,7 @@ class StreamNearDupSpec extends AnyFunSuite with SparkTestBase {
     }
     // flatten: the file source lists recursively only with a glob — stage a
     // single dir of the three part files
-    val flat = java.nio.file.Files.createTempDirectory("graft_snd_flat")
+    val flat = tempDir("graft_snd_flat")
     var k = 0
     for (i <- 0 until 3) {
       val src = new java.io.File(s"$dir/pages/part$i")
@@ -79,7 +79,7 @@ class StreamNearDupSpec extends AnyFunSuite with SparkTestBase {
 
   test("durable checkpoint: a restarted drain resumes bucket state, never re-emits") {
     val docs = corpus(600).cache()
-    val stage = java.nio.file.Files.createTempDirectory("graft_snd_res")
+    val stage = tempDir("graft_snd_res")
     val streamDir = stage.resolve("stream"); java.nio.file.Files.createDirectory(streamDir)
     val outDir = stage.resolve("out").toString
     val ckpt = stage.resolve("ckpt").toString

@@ -12,7 +12,9 @@
 # Perfbench mode: `python3 perfbench/run.py --workload <w> --seed <i>
 # --seconds 10 --trace 0` in each side's own tree (pair i runs seed i on both
 # sides); prints every end-to-end metric of BENCHMARK.json per run, then per
-# side its median and quartiles and the number of pairs B won.
+# side its median and quartiles and the number of pairs B won, and per side
+# the median of each timer's samples (bootstrap, snapshot, compaction, ...)
+# from the run records, copied next to each result as <side>_<i>.record.json.
 #
 # Usage: tools/ab_bench.sh <baseline-sha> [pairs=3] [sfDir] [cpus]
 #        tools/ab_bench.sh <baseline-sha> perfbench <workload> [pairs=10]
@@ -32,9 +34,16 @@ if [ "${2:-}" = perfbench ]; then
   PAIRS="${4:-10}"
   OUT="$WT.runs/$W"
   rm -rf "$OUT"; mkdir -p "$OUT"
-  prun() { # $1=tree $2=seed $3=result file: the run's last stdout line
+  prun() { # $1=tree $2=seed $3=result file: the run's last stdout line;
+           # the run's own record goes next to it as <result>.record.json
+    local start="${3%.json}.start" runs
+    touch "$start"
     ( cd "$1" && python3 perfbench/run.py --workload "$W" --seed "$2" \
         --seconds 10 --trace 0 2>/dev/null | tail -n 1 ) > "$3"
+    runs="$(cd "$1" && realpath -m "${CARGO_TARGET_DIR:-.bench_build}/perfbench/runs")"
+    find "$runs" -maxdepth 1 -name "record-$W-$2-t0-*.json" -newer "$start" 2>/dev/null \
+      | sort | tail -n 1 | xargs -r -I{} cp {} "${3%.json}.record.json"
+    rm -f "$start"
   }
   show() { # $1=label $2=result file
     python3 - "$1" "$2" "$REPO/BENCHMARK.json" <<'PY'
@@ -80,6 +89,19 @@ for m in json.load(open(bench))["end_to_end"]:
     wins = sum(1 for x, y in both if (y > x if higher else y < x))
     print(f"{n} ({m['unit']}, {m['better']} is better): A {stats(a)}  B {stats(b)}"
           f"  B better in {wins}/{len(both)} pairs")
+# per-operation layer: every timer's samples over the side's run records
+for side in "AB":
+    timers = {}
+    for i in range(1, pairs + 1):
+        try:
+            rec = json.load(open(f"{out}/{side}_{i}.record.json"))
+        except Exception:
+            continue
+        for t, xs in rec["samples"].items():
+            timers.setdefault(t, []).extend(xs)
+    print(f"{side} timer medians (s): " + ("  ".join(
+        f"{t}={statistics.median(xs):.4g} (n={len(xs)})" for t, xs in timers.items())
+        or "no run records"))
 PY
   exit 0
 fi
