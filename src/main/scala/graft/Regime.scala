@@ -59,12 +59,12 @@ object Regime {
   final val LOCAL_PROBE_MAX_CONTENTS: Long = 1L << 16
 
   /** Candidate-pair bound of the incremental driver pass's exact-Jaccard
-    * verify: ≤ 2·2¹⁶ ckeys in the broadcast filter of the pruned (ckey, sh)
-    * collect of OLD candidates (~500 ints each ≈ 130 MB worst-transient,
-    * typical ≪) and ≤ 2¹⁶ sorted-merge intersections (~ms of driver CPU).
-    * Above it the driver pass stops after committing `content`, and the
-    * distributed pass resumes at the edges stage (its own probe, its own
-    * verify).
+    * verify: the driver's normalized candidate tuples (≤ 2¹⁶ (ckey, ckey)
+    * pairs, a few MB), the ckey → shingle-set map over their ≤ 2·2¹⁶
+    * endpoints (references into the resident content rows, no copies) and
+    * ≤ 2¹⁶ sorted-merge intersections (~ms of driver CPU). Above it the
+    * driver pass stops after committing `content`, and the distributed pass
+    * resumes at the edges stage (its own probe, its own verify).
     */
   final val LOCAL_VERIFY_MAX_PAIRS: Int = 1 << 16
 
@@ -77,19 +77,6 @@ object Regime {
     * hint) the collect itself is the gate.
     */
   final val LOCAL_ASSIGN_MAX_ROWS: Long = 1L << 17
-
-  /** Low-root checkpoints (`TreeLowRoot.Chain`) up to this many chunks run
-    * the election on the driver (output-identical, spec-gated); the
-    * distributed sweep pays ~log n rounds of eager tiny jobs, the right
-    * shape only past driver-collectable size. 16× below [[LOCAL_SWEEP_MAX]]
-    * because the driver side still holds objects per node where the chunk
-    * chain holds flat arrays: besides the flat leaf digests, the 2n−1-slot
-    * Merkle tree and the label pass's code and size arrays, it keeps a
-    * collected (pos, digest) Row and a 16-byte array per chunk, a boxed
-    * member map over the fresh forest (up to 2n−1 entries at checkpoint 0)
-    * and a hash set of wrapped elected digests.
-    */
-  final val LOW_ROOT_LOCAL_MAX: Long = 1L << 16
 
   /** Edge sets up to this size cluster by driver union-find
     * (`ConnectedComponents.assignAll`: one collect, ~ms); beyond it the

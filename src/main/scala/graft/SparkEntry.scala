@@ -238,6 +238,14 @@ object SparkEntry {
     * LONGEST-FIRST (probe-measured at sf0.1): the concurrent pool's critical
     * path is the slowest build, so the heavy ones must enter the pool in the
     * first wave, not after the small ones drain.
+    *
+    * Contract: no build's output may depend on the shuffle-partition count.
+    * The builds share one session and run concurrently, and while
+    * `stream_neardup_pairs` drains it pins the session's
+    * `spark.sql.shuffle.partitions` to its state-partition count
+    * (`EventStream.withStatePartitions`), so the other builds plan their
+    * shuffles under whichever value is set at that moment. A build may vary
+    * in speed with it, never in its rows.
     */
   private def prepBuilds(s: SparkSession, dir: String)
     : Seq[(String, () => Any)] = Seq(

@@ -154,8 +154,8 @@ object ChunkDedup {
     * @param frontier0 (node, digest, …) rows; `keep` returns the same columns
     * @return (region roots, every kept parent)
     */
-  private[dedup] def thinSweep(frontier0: DataFrame, nLeaves: Long,
-                               keep: DataFrame => DataFrame): (DataFrame, DataFrame) = {
+  private def thinSweep(frontier0: DataFrame, nLeaves: Long,
+                       keep: DataFrame => DataFrame): (DataFrame, DataFrame) = {
     var frontier = frontier0.localCheckpoint(true)
     var roots = frontier.limit(0)
     var internals = frontier.limit(0)

@@ -298,23 +298,14 @@ object LongRepeats {
     docs.select(groupExpr.cast("long").as("g"), col(idCol).as("doc_id"),
       lower(col(textCol)).cast("binary").as("t"))
 
-  /** Full suffix-array pass over the current partitioning: exact within
-    * partitions at exactly minLen (one segment run per ≤ SEGMENT_MAX bytes
-    * of a partition, in partition order).
-    */
-  def repeatsWithinPartitions(docs: DataFrame, minLen: Int = 35,
-                              idCol: String = "doc_id",
-                              textCol: String = "text"): DataFrame =
-    saSpans(saInput(docs, lit(0L), idCol, textCol), minLen)
-
   /** Suffix-array pass scoped to GROUPS (e.g. host buckets): docs of one
     * group are hash-shuffled together and sorted contiguously, and each
     * group builds its own suffix array — the output is EXACTLY the maximal
     * repeats ≥ minLen whose two occurrences share a group, a deterministic,
-    * partitioning-INDEPENDENT contract (the per-partition variant's output
-    * depends on which groups hash-co-reside, which no SQL oracle can
-    * reproduce; this one has one). One narrow shuffle on the group key;
-    * groups bigger than SEGMENT_MAX bytes segment in doc_id order.
+    * partitioning-INDEPENDENT contract (a pass over the current
+    * partitioning would depend on which groups hash-co-reside, which no SQL
+    * oracle can reproduce; this one has one). One narrow shuffle on the
+    * group key; groups bigger than SEGMENT_MAX bytes segment in doc_id order.
     */
   def repeatsWithinGroups(docs: DataFrame, groupExpr: org.apache.spark.sql.Column,
                           minLen: Int, idCol: String = "doc_id",

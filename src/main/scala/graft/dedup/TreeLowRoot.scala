@@ -27,16 +27,12 @@ import graft.functions.gf
   *      SHIFT_DUPL. This is `groupBy(digest).agg(min_by(leaf, root))` once
   *      roots are known — the Spark shape of the final step.
   *
-  * Execution shape: one [[Chain]] class, whose regime is decided once at
-  * construction like [[ChunkDedup.Chain]]'s. On the driver path, [[elect]]
-  * runs steps 1–4 over the checkpoint's flat Merkle tree and one label
-  * pass; on the distributed path, steps 1–2 and step 4's relabel are Spark
-  * projections, joins and a thin level sweep, and only the order-sensitive
-  * steps 3–4 ([[pruneAndElect]]) run on the driver, over the collected
-  * fresh-duplicated forest. Both are bounded by the checkpoint's chunk
-  * count (the reference's whole approach is per-checkpoint, tree = one
-  * buffer); at web scale the engine's unit of parallelism is documents,
-  * not intra-checkpoint tree nodes.
+  * Execution shape: like the reference's, single-device. [[Chain]] collects
+  * the checkpoint's leaf digests and [[elect]] runs steps 1–4 on the
+  * driver over the flat Merkle tree and one label pass. The reference's
+  * whole approach is per-checkpoint (tree = one buffer); at web scale the
+  * engine's unit of parallelism is documents, not intra-checkpoint tree
+  * nodes.
   */
 object TreeLowRoot {
 
@@ -76,8 +72,8 @@ object TreeLowRoot {
     def members(nodes: Range) =
       nodes.iterator.filter(code(_) == 1).map(u => (u.toLong, key(slot(tree, u)))).toArray
 
-    // 3+4. shared driver kernel (order-sensitive pruning + election) over
-    // the fresh leaves and the forest's internals
+    // 3+4. order-sensitive pruning + election over the fresh leaves and
+    // the forest's internals
     val winners = pruneAndElect(members(leafBase until 2 * n - 1), members(0 until leafBase))
     for (pos <- 0 until n if fresh(pos) == 1)
       labels(pos) = if (winners(key(slot(leaves, pos))) == leafBase + pos) FIRST else SHIFT
@@ -85,8 +81,7 @@ object TreeLowRoot {
   }
 
   /** Root-pruning fixpoint + lowest-root election over one checkpoint's
-    * fresh-duplicated forest — the ONLY serial piece of the distributed
-    * path, bounded by the number of FRESH nodes (not the checkpoint size).
+    * fresh-duplicated forest.
     *
     * @param leafMembers fresh leaves (node, digest) — any order
     * @param internals   forest internal nodes (node, digest) — any order
@@ -97,8 +92,8 @@ object TreeLowRoot {
     * order (the bottom-up build loop) — the pruning scan is sensitive to it
     * (reference_impl.hpp:329-345).
     */
-  private[dedup] def pruneAndElect(leafMembers: Array[(Long, Digest)],
-                                   internals: Array[(Long, Digest)]): Map[Digest, Long] = {
+  private def pruneAndElect(leafMembers: Array[(Long, Digest)],
+                            internals: Array[(Long, Digest)]): Map[Digest, Long] = {
     val nodeDigest = new java.util.HashMap[Long, Digest]()
     val firstDupl = new java.util.HashMap[Digest, java.util.ArrayList[Long]]()
     def addMember(d: Digest, node: Long): Unit =
@@ -167,8 +162,8 @@ object TreeLowRoot {
     * labels via [[elect]]'s serial core). Returns each checkpoint's leaf
     * labels by position. SparkEntry dumps the replay so the DuckDB oracle
     * can pin `chunk_lowroot_labels` row-exactly: a drift anywhere in the
-    * query's path (codegen murmur128, chunkify, chain wiring, the
-    * distributed sweep when it engages) turns the driver row red.
+    * query's path (codegen murmur128, chunkify, chain wiring) turns the
+    * driver row red.
     */
   def replayChain(steps: Seq[Array[Array[Byte]]]): Seq[Array[String]] = {
     val global = new java.util.HashSet[Digest]()
@@ -183,43 +178,24 @@ object TreeLowRoot {
   }
 
   /** Stateful low-root dedup chain (like [[ChunkDedup.Chain]], with the J3
-    * election). Its regime is decided once, when the chain is built
-    * ([[graft.Regime.local]] at [[graft.Regime.LOW_ROOT_LOCAL_MAX]]
-    * chunks), and the labels are the same either way (TreeLowRootSpec
-    * asserts parity at 4096 chunks):
-    *   - driver: one job collects the leaf digests by position, and
-    *     [[elect]] runs over the flat tree;
-    *   - distributed: the Spark shape of the reference's device kernel
-    *     (tree_low_root_approach.cpp:55-214). Leaf hashing, FIXED/SHIFT/
-    *     fresh labeling and the FIRST_DUPL forest build (a thin level sweep,
-    *     geometrically shrinking frontier) run as Spark jobs over (node,
-    *     digest) rows; only the order-sensitive root-pruning fixpoint +
-    *     election run on the driver, over the COLLECTED fresh-duplicated
-    *     forest — O(#fresh nodes), which an incremental chain keeps ≪
-    *     checkpoint size (checkpoint 0 is the worst case). A checkpoint
-    *     with 10⁸ chunks and a few 10⁵ fresh ones never materializes the
-    *     leaf set on the driver.
+    * election): one collect gathers the leaf digests by position, and
+    * [[elect]] runs over the flat tree. Like the reference's, the election
+    * holds the whole checkpoint on the driver: O(n) at a chain's first
+    * checkpoint, where every leaf is fresh and the forest can reach all
+    * 2n−1 nodes (≈ 0.8 KB of driver heap per chunk there, measured at 2¹⁸
+    * chunks: the collected rows, the tree and the boxed member map). A later
+    * checkpoint holds no more: its forest spans only the leaves that are
+    * neither FIXED nor SHIFT.
     */
   final class Chain(spark: SparkSession, numChunks: Long) {
     require(numChunks >= 1)
     private val leafBase = numChunks - 1
-    /** previous checkpoint's leaf digests, 16-byte slots by position, and
-      * the elected digests: the driver path's FIXED probe and map. */
+    /** previous checkpoint's leaf digests, 16-byte slots by position (the
+      * FIXED probe), and the elected digests (the cross-checkpoint map). */
     private var prevDigests: Array[Byte] = _
     private val elected = new java.util.HashSet[Digest]()
-    /** previous checkpoint's leaves (node, digest) and the elected digests
-      * (digest): the distributed path's FIXED probe and map. */
-    private var prevLeaves: DataFrame = _
-    private var global: DataFrame = _
 
-    /** The chain's one regime choice. */
-    private val driverElection =
-      graft.Regime.local(spark, numChunks, graft.Regime.LOW_ROOT_LOCAL_MAX)
-
-    def checkpoint(chunks: DataFrame): LowRootResult =
-      if (driverElection) driverCheckpoint(chunks) else distributedCheckpoint(chunks)
-
-    private def driverCheckpoint(chunks: DataFrame): LowRootResult = {
+    def checkpoint(chunks: DataFrame): LowRootResult = {
       val n = numChunks.toInt
       val rows = chunks
         .select(col("pos"), gf.murmur128(col("chunk")).as("digest")).collect()
@@ -238,72 +214,6 @@ object TreeLowRoot {
         labels.count(_ == FIRST).toLong,
         labels.count(_ == SHIFT).toLong,
         labels.count(_ == FIXED).toLong)
-    }
-
-    private def globalOrEmpty(): DataFrame =
-      if (global == null) {
-        import spark.implicits._
-        Seq.empty[Array[Byte]].toDF("digest")
-      } else global
-
-    private def distributedCheckpoint(chunks: DataFrame): LowRootResult = {
-      import spark.implicits._
-      val leaves = chunks
-        .select((col("pos") + leafBase).as("node"),
-          gf.murmur128(col("chunk")).as("digest"))
-        .localCheckpoint(true)
-      ChunkDedup.Chain.requirePermutation(
-        leaves.select((col("node") - leafBase).as("pos")), numChunks)
-
-      // 1. labeling (distributed): FIXED by position-equality vs previous
-      // checkpoint; SHIFT by global-map semi-probe; FIRST_DUPL otherwise
-      val (fixed, rest) =
-        if (prevLeaves == null) (leaves.limit(0), leaves)
-        else {
-          val p = prevLeaves.select(col("node"), col("digest").as("pd"))
-          val j = leaves.join(p, Seq("node"), "left")
-          (j.filter(col("pd") === col("digest")).drop("pd"),
-            j.filter(col("pd").isNull || col("pd") =!= col("digest")).drop("pd"))
-        }
-      val g = globalOrEmpty()
-      val shiftedG = rest.join(g, Seq("digest"), "left_semi")
-      val fresh = rest.join(g, Seq("digest"), "left_anti").localCheckpoint(true)
-
-      // 2. FIRST_DUPL forest via the shared thin level sweep keeping every
-      // pair: a parent forms iff BOTH children are forest nodes — order-free
-      // (same fixpoint as the reference's descending-node serial loop)
-      val (_, internalsDf) =
-        ChunkDedup.thinSweep(fresh.select("node", "digest"), numChunks, identity)
-
-      // 3+4. driver kernel over the collected FRESH forest only
-      def collectPairs(df: DataFrame): Array[(Long, Digest)] =
-        df.select("node", "digest") // USING-joins reorder columns upstream
-          .collect().map(r => (r.getLong(0), key(r.getAs[Array[Byte]](1))))
-      val winners = pruneAndElect(collectPairs(fresh), collectPairs(internalsDf))
-
-      // relabel fresh leaves by the election (one broadcast-sized join)
-      val winnersDf = winners.toSeq.map { case (d, n) => (d.toArray, n) }
-        .toDF("digest", "win_node")
-      val freshLab = fresh.join(winnersDf, Seq("digest"))
-        .select(col("node"),
-          when(col("node") === col("win_node"), FIRST).otherwise(SHIFT).as("label"))
-      val labels = freshLab
-        .union(fixed.select(col("node"), lit(FIXED).as("label")))
-        .union(shiftedG.select(col("node"), lit(SHIFT).as("label")))
-        .localCheckpoint(true)
-
-      // elected digests enter the cross-checkpoint map (= all fresh leaf
-      // digests; reference_impl.hpp:396-398)
-      global = globalOrEmpty().unionByName(fresh.select("digest").distinct())
-        .distinct().localCheckpoint(true)
-      prevLeaves = leaves
-
-      val byLabel = labels.groupBy("label").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      LowRootResult(labels,
-        byLabel.getOrElse(FIRST, 0L),
-        byLabel.getOrElse(SHIFT, 0L),
-        byLabel.getOrElse(FIXED, 0L))
     }
   }
 }

@@ -19,11 +19,13 @@ object Ann {
   /** Recall-VALIDATED configs — the single source of truth shared by the
     * driver's `ann_topk_lsh`/`ann_topk_ivf` queries and the oracle-pinned
     * `ann_*_recall` gates, so the benched scale path is always the validated
-    * one. AnnRecallProbe on the driver's random-ish embedding corpora
-    * (n = 500..2000): SRP bits must track log2(n) — bits=10 collapses to
-    * recall ≈ 0.02 at this density, bits=4 × 12 tables measures 0.80–0.87;
-    * IVF 16 cells × 6 probes measures 0.90–0.94. Re-run AnnRecallProbe
-    * before changing either config at a different corpus density.
+    * one. Recall against [[exactTopK]] on the driver's random-ish embedding
+    * corpora (n = 500..2000; measured in round 3 by a since-deleted probe):
+    * SRP bits must track log2(n) — bits=10 collapses to recall ≈ 0.02 at
+    * this density, bits=4 × 12 tables measures 0.80–0.87; IVF 16 cells ×
+    * 6 probes measures 0.90–0.94. The `ann_*_recall` oracles gate both
+    * configs; re-measure recall against [[exactTopK]] before changing either
+    * at a different corpus density.
     */
   final case class LshConfig(bits: Int, tables: Int, seed: Long)
   val PinnedLsh: LshConfig = LshConfig(bits = 4, tables = 12, seed = 7L)
@@ -112,14 +114,14 @@ object Ann {
   }
 
   /** SRP bits as a function of corpus size — bits must track log2(n):
-    * too many bits shatter true neighborhoods (AnnRecallProbe: bits=10 →
-    * recall 0.02–0.07; even bits=6 × 12 tables drops to 0.49–0.53 on the
-    * driver's modest-cosine embeddings), too few flood buckets past the
-    * star cap. The probe's anchor is ≈ 125 vectors/bucket, which holds
-    * recall 0.80–0.87 at BOTH measured corpus sizes (n=500 and n=2000 →
-    * bits=4, the pinned config). Callers with larger corpora should use
-    * this with PinnedLsh.tables/seed and re-probe before trusting a new
-    * density regime.
+    * too many bits shatter true neighborhoods (round-3 recall against
+    * [[exactTopK]]: bits=10 → recall 0.02–0.07; even bits=6 × 12 tables
+    * drops to 0.49–0.53 on the driver's modest-cosine embeddings), too few
+    * flood buckets past the star cap. The anchor is ≈ 125 vectors/bucket,
+    * which holds recall 0.80–0.87 at BOTH measured corpus sizes (n=500 and
+    * n=2000 → bits=4, the pinned config). Callers with larger corpora should
+    * use this with PinnedLsh.tables/seed and re-measure recall before
+    * trusting a new density regime.
     */
   def lshBitsFor(n: Long): Int =
     math.max(4, math.ceil(math.log(math.max(1L, n) / 125.0) / math.log(2)).toInt)

@@ -18,8 +18,13 @@ object EventStream {
     * 32 partitions cost 33.8 s of summed commit time for 16k keys vs 0.7 s
     * at 8), so the count should track STATE volume, not core count — on a
     * real cluster a 100-TB stream sizes this in the thousands, a toy drain
-    * in the single digits. Restored afterwards (queries in one session run
-    * serially through the bench/verify harness).
+    * in the single digits. Restored afterwards. The key is session-wide, not
+    * per-query: queries do not always run serially — the stream drain of
+    * `SparkEntry.prepareSessionFramesConcurrent` runs beside eight other
+    * session_prep builds, and any shuffle they plan meanwhile gets `n`
+    * partitions too. That is sound only because no such build's output
+    * depends on the shuffle-partition count (the contract stated at
+    * `SparkEntry.prepBuilds`).
     */
   private[streaming] def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
@@ -67,31 +72,34 @@ object EventStream {
   def windowedAgg(spark: SparkSession, eventsDir: String): DataFrame = {
     val schema = graft.GraftSession.readParquet(spark, eventsDir).schema
     // the streaming file source wants a DIRECTORY of files; testdata tables
-    // are single parquet files — stage a symlink dir (zero copy)
+    // are single parquet files — stage a symlink dir (zero copy) under the
+    // scratch root, dropped once the drain has filled the memory sink
     val srcPath = java.nio.file.Paths.get(eventsDir)
-    val streamDir =
-      if (java.nio.file.Files.isDirectory(srcPath)) eventsDir
+    val staged =
+      if (java.nio.file.Files.isDirectory(srcPath)) None
       else {
-        val d = java.nio.file.Files.createTempDirectory("graft_stream_src")
+        val d = graft.GraftSession.scratchDir("stream_src")
         java.nio.file.Files.createSymbolicLink(
-          d.resolve(srcPath.getFileName.toString), srcPath)
-        d.toString
+          java.nio.file.Paths.get(d, srcPath.getFileName.toString), srcPath.toAbsolutePath)
+        Some(d)
       }
-    val stream = spark.readStream.schema(schema).parquet(streamDir)
-    val agg = stream
-      // parquet timestamps are NTZ; event-time processing needs TIMESTAMP
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        // exact decimal accumulation, DOUBLE on the wire: decimal output
-        // columns surface as decimal.Decimal objects on the compare side
-        // while the oracle yields float64 — same values, dtype hash mismatch
-        sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"))
-      // epoch seconds: timezone-free oracle comparison
-      .select(unix_timestamp(col("window.start")).as("ws"),
-        col("event_type"), col("n"), col("sum_value"))
-    drainToMemory(spark, agg, s"events_win_${System.nanoTime()}", 8)
+    try {
+      val stream = spark.readStream.schema(schema).parquet(staged.getOrElse(eventsDir))
+      val agg = stream
+        // parquet timestamps are NTZ; event-time processing needs TIMESTAMP
+        .withColumn("ts", col("ts").cast("timestamp"))
+        .withWatermark("ts", "10 minutes")
+        .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          // exact decimal accumulation, DOUBLE on the wire: decimal output
+          // columns surface as decimal.Decimal objects on the compare side
+          // while the oracle yields float64 — same values, dtype hash mismatch
+          sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"))
+        // epoch seconds: timezone-free oracle comparison
+        .select(unix_timestamp(col("window.start")).as("ws"),
+          col("event_type"), col("n"), col("sum_value"))
+      drainToMemory(spark, agg, s"events_win_${System.nanoTime()}", 8)
+    } finally staged.foreach(graft.GraftSession.dropScratch)
   }
 
   /** Streaming exact-dedup: a stateful streaming aggregation electing the

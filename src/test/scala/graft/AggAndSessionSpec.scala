@@ -85,4 +85,35 @@ class AggAndSessionSpec extends AnyFunSuite with SparkTestBase {
     assert(a == b)
     assert(a.nonEmpty)
   }
+
+  test("windowedAgg over a single parquet file: exact window counts and sums, no staging dir left") {
+    import java.nio.file.{Files, Path, Paths}
+    import spark.implicits._
+    def staged(root: String, prefix: String): Set[Path] = {
+      import scala.jdk.CollectionConverters._
+      val ls = Files.list(Paths.get(root))
+      try ls.iterator().asScala.filter(_.getFileName.toString.startsWith(prefix)).toSet
+      finally ls.close()
+    }
+    def leftovers() = staged(sys.props("java.io.tmpdir"), "graft_stream_src") ++
+      staged(GraftSession.scratchRoot, "stream_src")
+    // a single parquet FILE, the shape of the testdata events table
+    val dir = tempDir("graft_events")
+    val t0 = 1700000100L // a 5-minute boundary
+    Seq((t0 + 60, "click", 1.0), (t0 + 180, "click", 2.5), (t0 + 240, "view", 1.0),
+      (t0 + 420, "view", 4.0))
+      .toDF("secs", "event_type", "value")
+      .select(timestamp_seconds(col("secs")).as("ts"), col("event_type"), col("value"))
+      .coalesce(1).write.parquet(dir.resolve("w").toString)
+    val part = Files.list(dir.resolve("w"))
+    val file = try part.filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
+      finally part.close()
+    val events = Files.move(file, dir.resolve("events.parquet"))
+
+    val before = leftovers()
+    val got = graft.streaming.EventStream.windowedAgg(spark, events.toString).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
+    assert(got == Set((t0, "click", 2L, 3.5), (t0, "view", 1L, 1.0), (t0 + 300, "view", 1L, 4.0)))
+    assert(leftovers() == before, s"staging dirs left: ${leftovers() -- before}")
+  }
 }

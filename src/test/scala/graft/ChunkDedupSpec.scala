@@ -180,16 +180,14 @@ class ChunkDedupSpec extends AnyFunSuite with SparkTestBase {
 
   test("a duplicated + missing chunk position fails the checkpoint on every path") {
     // positions 0..6 and 6 again: the row count is right, 7 is missing;
-    // both ChunkDedup paths, then both TreeLowRoot chains
+    // both ChunkDedup paths, then the TreeLowRoot chain
     import spark.implicits._
     val chunks = "ABCDEFGH".zipWithIndex
       .map { case (c, p) => (math.min(p, 6).toLong, c.toString) }.toDF("pos", "chunk")
     for ((name, checkpoint) <- Seq[(String, org.apache.spark.sql.DataFrame => Any)](
         "localsweep" -> new ChunkDedup.Chain(spark, 8L).checkpoint _,
         "distributed" -> withRegime("distributed")(new ChunkDedup.Chain(spark, 8L)).checkpoint _,
-        "lowroot driver" -> new TreeLowRoot.Chain(spark, 8L).checkpoint _,
-        "lowroot distributed" ->
-          withRegime("distributed")(new TreeLowRoot.Chain(spark, 8L)).checkpoint _)) {
+        "lowroot" -> new TreeLowRoot.Chain(spark, 8L).checkpoint _)) {
       val e = intercept[IllegalArgumentException](checkpoint(chunks))
       assert(e.getMessage.contains("chunk positions are not a permutation of 0..7"),
         s"$name: ${e.getMessage}")

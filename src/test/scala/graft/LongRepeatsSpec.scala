@@ -103,7 +103,7 @@ class LongRepeatsSpec extends AnyFunSuite with SparkTestBase {
     val docs = mkDocs(
       10L -> (filler1 + short + " xxx"),
       11L -> (filler2 + short + " yyy")).repartition(1)
-    val sa = LongRepeats.repeatsWithinPartitions(docs, minLen = 20).collect()
+    val sa = LongRepeats.repeatsWithinGroups(docs, lit(0L), minLen = 20).collect()
     assert(sa.exists { r =>
       r.getLong(0) == 10L && r.getLong(1) == 11L && r.getInt(4) >= short.length
     })
@@ -122,7 +122,7 @@ class LongRepeatsSpec extends AnyFunSuite with SparkTestBase {
       20L -> (prefix + filler1),
       21L -> (prefix + filler2),
       22L -> (prefix + (0 until 40).map(i => s"gamma$i").mkString(" "))).repartition(1)
-    val got = LongRepeats.repeatsWithinPartitions(docs, minLen = 40).collect()
+    val got = LongRepeats.repeatsWithinGroups(docs, lit(0L), minLen = 40).collect()
     val pairs = got.map(r => (r.getLong(0), r.getLong(1))).toSet
     // run-pair emission (r4) yields the FULL C(3,2) clique over the m
     // sharers — the same all-pairs contract as winnowing and the LCE

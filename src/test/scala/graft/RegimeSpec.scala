@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.dedup.{ChunkDedup, ConnectedComponents, DedupConfig, IncrementalDedup, TreeLowRoot}
+import graft.dedup.{ChunkDedup, ConnectedComponents, DedupConfig, IncrementalDedup}
 import graft.sim.Ann
 import graft.state.SnapshotStore
 import org.scalatest.funsuite.AnyFunSuite
@@ -27,7 +27,7 @@ class RegimeSpec extends AnyFunSuite with SparkTestBase {
     finally ls.close()
   }
 
-  test("spark.graft.regime=distributed sends all six sites down their distributed path; a malformed value fails") {
+  test("spark.graft.regime=distributed sends all five sites down their distributed path; a malformed value fails") {
     import spark.implicits._
     val steps = Seq("ABCDEFGH", "IJABCDEK")
 
@@ -52,15 +52,6 @@ class RegimeSpec extends AnyFunSuite with SparkTestBase {
     }
     val (restartLocal, restartDist) = (restartJobs("auto"), restartJobs("distributed"))
     assert(restartDist > restartLocal, s"restart: $restartDist jobs vs $restartLocal")
-
-    // TreeLowRoot.Chain: the thin sweep runs more jobs than the driver
-    // election
-    def lowRootJobs(regime: String) = {
-      val c = withRegime(regime)(new TreeLowRoot.Chain(spark, 8L))
-      steps.map(s => withJobs(c.checkpoint(chunks(s)))._2).sum
-    }
-    val (lowRootLocal, lowRootDist) = (lowRootJobs("auto"), lowRootJobs("distributed"))
-    assert(lowRootDist > lowRootLocal, s"low-root chain: $lowRootDist jobs vs $lowRootLocal")
 
     // ConnectedComponents.assignAll: the star rounds run more jobs than the
     // driver union-find, with the same clusters

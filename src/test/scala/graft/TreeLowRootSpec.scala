@@ -67,43 +67,6 @@ class TreeLowRootSpec extends AnyFunSuite with SparkTestBase {
     assert((r1.numFirstOcur, r1.numShiftDupl) == ((2L, 2L)))
   }
 
-  test("distributed chain matches the serial core label-for-label (golden scenarios)") {
-    for (steps <- Seq(Seq("aycd", "xyxw"), Seq("abcd", "xbxd"),
-      Seq("qrst", "xyxx"), Seq("aycd", "xyxw", "xxxx"))) {
-      val serial = new TreeLowRoot.Chain(spark, 4L)
-      val dist = withRegime("distributed")(new TreeLowRoot.Chain(spark, 4L))
-      for (t <- steps) {
-        val rs = serial.checkpoint(ChunkDedup.chunkify(spark, t, 1))
-        val rd = dist.checkpoint(ChunkDedup.chunkify(spark, t, 1))
-        assert(labelsOf(rd) == labelsOf(rs), s"steps=$steps t=$t")
-        assert((rd.numFirstOcur, rd.numShiftDupl, rd.numFixedDupl) ==
-          ((rs.numFirstOcur, rs.numShiftDupl, rs.numFixedDupl)), s"steps=$steps t=$t")
-      }
-    }
-  }
-
-  test("distributed chain parity at 4096 chunks (repeated blocks exercise forest + pruning)") {
-    val n = 4096
-    val cp0 = Array.tabulate(n)(i => ('a' + (i * 31 + 7) % 26).toChar)
-    // cp1: mostly FIXED; a fresh 64-char block stamped at aligned and
-    // unaligned offsets (multi-member digests, shared subtree roots → the
-    // pruning fixpoint actually fires), plus scattered fresh singles
-    val cp1 = cp0.clone()
-    val block = Array.tabulate(64)(i => ('A' + (i * 17 + 3) % 26).toChar)
-    for (off <- Seq(128, 512, 700, 2048, 2112, 3111); k <- 0 until 64)
-      cp1(off + k) = block(k)
-    for (i <- 0 until n by 97) cp1(i) = ('0' + (i % 10)).toChar
-    val serial = new TreeLowRoot.Chain(spark, n.toLong)
-    val dist = withRegime("distributed")(new TreeLowRoot.Chain(spark, n.toLong))
-    for (t <- Seq(new String(cp0), new String(cp1))) {
-      val rs = serial.checkpoint(ChunkDedup.chunkify(spark, t, 1))
-      val rd = dist.checkpoint(ChunkDedup.chunkify(spark, t, 1))
-      assert(labelsOf(rd) == labelsOf(rs))
-      assert((rd.numFirstOcur, rd.numShiftDupl, rd.numFixedDupl) ==
-        ((rs.numFirstOcur, rs.numShiftDupl, rs.numFixedDupl)))
-    }
-  }
-
   test("driver-pure replayChain matches the Spark chain label-for-label (oracle soundness)") {
     // the dump oracle for chunk_lowroot_labels rests on this parity: the
     // pure-JVM replay (Impl.murmur128Digest + serial elect, zero Spark)
